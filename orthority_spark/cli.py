@@ -313,7 +313,7 @@ def cmd_ortho(args) -> int:
     write_table(out, args.out, overwrite=args.overwrite)
     w = spark.read.parquet(args.out)
     n_tiles = w.count()  # metadata count, no recompute
-    # masked pixels arrive as NULL (pandas->Arrow maps the NaN nodata to
+    # masked pixels arrive as NULL (remap_tiles writes the NaN nodata as
     # null) and isnan(NULL) is FALSE — test both
     valid = w.selectExpr(
         "sum(size(filter(block, v -> v IS NOT NULL AND NOT isnan(v)))) AS v"

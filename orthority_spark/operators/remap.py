@@ -1,22 +1,36 @@
 """Distributed remap: the reference's core gather (J6) as a tiled
-applyInPandas operator.
+``mapInArrow`` kernel.
 
 The reference remaps each ortho tile by (1) building the tile's world
 (x, y) grid from the output transform, (2) sampling DEM z, (3) projecting
 world -> source pixel via the camera model, and (4) gathering source
 pixels with interpolation, under a thread pool with a write lock
-(/root/reference/orthority/ortho.py:345-482, camera.py:368-395).
+(orthority/ortho.py:345-482, camera.py:368-395).
 
 Spark restatement:
 - the tile list is a DataFrame (tile_id, row_off, col_off, height, width)
   — pure metadata, generated by ``tile_windows`` (the block_windows S18
-  analogue, /root/reference/orthority/common.py:568-583);
+  analogue, orthority/common.py:568-583);
 - each task builds its own grid from the broadcast transform + offsets
   (the reference's template-grid offset trick W2, ortho.py:362-376 —
   nothing but 6 affine coefficients ships to executors);
 - the camera model + source image ride a closure broadcast;
-- gather is numpy fancy-indexing (nearest) or bilinear weights inside an
-  Arrow pandas UDF; the write lock disappears — each task owns its tile.
+- the kernel is Arrow in, Arrow out: it reads the tile windows from each
+  record batch, gathers with flat-index ``take`` (nearest, bilinear,
+  cubic or lanczos weights), and writes every tile's block of the batch
+  into one float64 buffer that becomes the ``block`` list column — no
+  pandas frame or per-tile row object crosses the boundary. NaN pixels
+  (nodata, and any NaN the gather produced) leave as SQL NULL elements,
+  never as NaN. The write lock disappears — each task owns its tile.
+
+The stage keeps ``repartition("tile_id")`` and its Python task count:
+measured on a 4-core host with pyspark 4.1, every extra Python task
+costs 0.2-0.3 CPU-s, because the worker calls
+``importlib.invalidate_caches()`` per task, which re-reads the directory
+of pyspark.zip for each of its ~100 cached zipimporters (a no-op
+``mapInArrow`` over 1 -> 8 tasks cost 0.9 -> 2.5-3.1 CPU-s; this remap
+at 4 partitions cost 36% more CPU). Widening the stage trades that CPU
+for wall time.
 
 Nodata semantics follow the reference: out-of-frame pixels get nodata,
 and the nodata mask is dilated by a kernel sized from the GSD ratio
@@ -26,10 +40,8 @@ apron so tiling cannot change the result (SURVEY §7 hard part 5).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from ..sources.local import local_table
 
@@ -51,8 +63,15 @@ def tile_windows(spark: SparkSession, width: int, height: int, tile: int = TILE)
     )
 
 
+# The gathers below read ``src`` through one flat index (row * w + col)
+# per stencil tap; the values and their arithmetic order are those of the
+# 2-D ``src[r, c]`` reference twins in tests/test_remap_kernels.py, which
+# the DuckDB remap gates mirror term for term.
+
+
 def _bilinear(src: np.ndarray, jj: np.ndarray, ii: np.ndarray, nodata: float):
     h, w = src.shape
+    flat = src.ravel()
     j0 = np.floor(jj).astype("int64")
     i0 = np.floor(ii).astype("int64")
     valid = (j0 >= 0) & (i0 >= 0) & (j0 < w - 1) & (i0 < h - 1)
@@ -60,11 +79,12 @@ def _bilinear(src: np.ndarray, jj: np.ndarray, ii: np.ndarray, nodata: float):
     i0c = np.clip(i0, 0, h - 2)
     fj = jj - j0c
     fi = ii - i0c
+    k = i0c * w + j0c
     v = (
-        src[i0c, j0c] * (1 - fi) * (1 - fj)
-        + src[i0c, j0c + 1] * (1 - fi) * fj
-        + src[i0c + 1, j0c] * fi * (1 - fj)
-        + src[i0c + 1, j0c + 1] * fi * fj
+        flat.take(k) * (1 - fi) * (1 - fj)
+        + flat.take(k + 1) * (1 - fi) * fj
+        + flat.take(k + w) * fi * (1 - fj)
+        + flat.take(k + (w + 1)) * fi * fj
     )
     return np.where(valid, v, nodata), valid
 
@@ -95,6 +115,7 @@ def _cubic_weights(f: np.ndarray, a: float = _CUBIC_A):
 
 def _cubic(src: np.ndarray, jj: np.ndarray, ii: np.ndarray, nodata: float):
     h, w = src.shape
+    flat = src.ravel()
     j0 = np.floor(jj).astype("int64")
     i0 = np.floor(ii).astype("int64")
     # the full 4x4 stencil must sit inside the source frame
@@ -105,16 +126,17 @@ def _cubic(src: np.ndarray, jj: np.ndarray, ii: np.ndarray, nodata: float):
     fi = ii - i0c
     wj = _cubic_weights(fj)
     wi = _cubic_weights(fi)
+    k = i0c * w + j0c
     rows = []
-    for k in range(4):
-        r = i0c + (k - 1)
+    for r in range(4):
+        kr = k + (r - 1) * w
         rows.append(
-            wi[k]
+            wi[r]
             * (
-                wj[0] * src[r, j0c - 1]
-                + wj[1] * src[r, j0c]
-                + wj[2] * src[r, j0c + 1]
-                + wj[3] * src[r, j0c + 2]
+                wj[0] * flat.take(kr - 1)
+                + wj[1] * flat.take(kr)
+                + wj[2] * flat.take(kr + 1)
+                + wj[3] * flat.take(kr + 2)
             )
         )
     v = rows[0] + rows[1] + rows[2] + rows[3]
@@ -126,6 +148,7 @@ def _lanczos(src: np.ndarray, jj: np.ndarray, ii: np.ndarray, nodata: float):
     SQL-exact-friendly (sin of irrational arguments); correctness is held
     by the tiled == whole-image pytest parity instead of a DuckDB gate."""
     h, w = src.shape
+    flat = src.ravel()
     j0 = np.floor(jj).astype("int64")
     i0 = np.floor(ii).astype("int64")
     valid = (j0 >= 3) & (i0 >= 3) & (j0 < w - 4) & (i0 < h - 4)
@@ -149,12 +172,13 @@ def _lanczos(src: np.ndarray, jj: np.ndarray, ii: np.ndarray, nodata: float):
 
     wj = weights(fj)
     wi = weights(fi)
+    k = i0c * w + j0c
     v = np.zeros_like(jj, dtype="float64")
     for ki in range(8):
-        r = i0c + (ki - 3)
+        kr = k + (ki - 3) * w
         row = np.zeros_like(jj, dtype="float64")
         for kj in range(8):
-            row = row + wj[kj] * src[r, j0c + (kj - 3)]
+            row = row + wj[kj] * flat.take(kr + (kj - 3))
         v = v + wi[ki] * row
     return np.where(valid, v, nodata), valid
 
@@ -164,7 +188,7 @@ def _nearest(src: np.ndarray, jj: np.ndarray, ii: np.ndarray, nodata: float):
     j = np.round(jj).astype("int64")
     i = np.round(ii).astype("int64")
     valid = (j >= 0) & (i >= 0) & (j < w) & (i < h)
-    v = src[np.clip(i, 0, h - 1), np.clip(j, 0, w - 1)]
+    v = src.ravel().take(np.clip(i, 0, h - 1) * w + np.clip(j, 0, w - 1))
     return np.where(valid, v, nodata), valid
 
 
@@ -186,24 +210,44 @@ def _gather_fn(interp: str):
 
 def _dilate(mask: np.ndarray, k: int) -> np.ndarray:
     """Binary dilation of the nodata mask with a (2k+1)^2 kernel, numpy-only
-    (cv2.dilate analogue, camera.py:1102-1115)."""
+    (cv2.dilate analogue, camera.py:1102-1115). The square kernel is
+    separable: OR-shift over rows, then over columns."""
     if k <= 0:
         return mask
-    out = mask.copy()
-    for dr in range(-k, k + 1):
-        for dc in range(-k, k + 1):
-            sh = np.roll(np.roll(mask, dr, axis=0), dc, axis=1)
-            # roll wraps; kill wrapped rows/cols
-            if dr > 0:
-                sh[:dr, :] = False
-            elif dr < 0:
-                sh[dr:, :] = False
-            if dc > 0:
-                sh[:, :dc] = False
-            elif dc < 0:
-                sh[:, dc:] = False
-            out |= sh
+    rows = mask.copy()
+    for d in range(1, k + 1):
+        rows[d:] |= mask[:-d]
+        rows[:-d] |= mask[d:]
+    out = rows.copy()
+    for d in range(1, k + 1):
+        out[:, d:] |= rows[:, :-d]
+        out[:, :-d] |= rows[:, d:]
     return out
+
+
+def _render(project, src, transform, r0, r1, c0, c1, dem_fn, nodata, gather, dilate):
+    """Remap output rows [r0, r1) x cols [c0, c1) and mask the dilated
+    nodata pixels; ``project(x, y, z) -> (jj, ii)`` on flat arrays."""
+    a, b, c, d, e, f = transform
+    # pixel-center convention: +0.5 (camera.py:123, ortho.py:425)
+    cols = np.arange(c0, c1)[None, :] + 0.5
+    rows = np.arange(r0, r1)[:, None] + 0.5
+    x = a * cols + b * rows + c
+    y = d * cols + e * rows + f
+    z = dem_fn(x, y)
+    jj, ii = project(x.ravel(), y.ravel(), z.ravel())
+    v, valid = gather(src, jj, ii, nodata)
+    shape = (r1 - r0, c1 - c0)
+    mask = _dilate(~valid.reshape(shape), dilate)
+    return np.where(mask, nodata, v.reshape(shape))
+
+
+def _camera_project(model):
+    def project(x, y, z):
+        ji = model.world_to_pixel(np.vstack([x, y, z]))
+        return ji[0], ji[1]
+
+    return project
 
 
 def remap_oracle(
@@ -219,17 +263,10 @@ def remap_oracle(
 ) -> np.ndarray:
     """Single-process whole-image remap (the oracle the tiled operator must
     match bit-for-bit — the reference's per_band equivalence recast)."""
-    a, b, c, d, e, f = transform
-    cols, rows = np.meshgrid(np.arange(width), np.arange(height))
-    # pixel-center convention: +0.5 (camera.py:123, ortho.py:425)
-    x = a * (cols + 0.5) + b * (rows + 0.5) + c
-    y = d * (cols + 0.5) + e * (rows + 0.5) + f
-    z = dem_fn(x, y)
-    ji = model.world_to_pixel(np.vstack([x.ravel(), y.ravel(), z.ravel()]))
-    v, valid = _gather_fn(interp)(src, ji[0], ji[1], nodata)
-    block = v.reshape(height, width)
-    mask = _dilate(~valid.reshape(height, width), dilate)
-    return np.where(mask, nodata, block)
+    return _render(
+        _camera_project(model), src, transform, 0, height, 0, width,
+        dem_fn, nodata, _gather_fn(interp), dilate,
+    )
 
 
 def remap_tiles(
@@ -245,6 +282,11 @@ def remap_tiles(
 ) -> DataFrame:
     """Tiled distributed remap returning (tile_id, row_off, col_off, block).
 
+    A ``mapInArrow`` kernel: each record batch of tile windows yields one
+    record batch whose ``block`` list column is built from a single
+    float64 buffer holding every tile's cropped block (row-major), with
+    each NaN pixel — nodata included — as a NULL element.
+
     Each tile renders with a ``dilate``-pixel halo apron and crops it off,
     so the dilated nodata mask is identical to the whole-image oracle's
     regardless of tiling (halo exchange without any shuffle — the apron is
@@ -259,53 +301,40 @@ def remap_tiles(
     to pin an explicit left-to-right float op order the SQL twin mirrors
     (np matmul's summation order is an implementation detail).
     """
-    a, b, c, d, e, f = transform
+    project = project_fn if project_fn is not None else _camera_project(model)
+    gather = _gather_fn(interp)
 
-    def render(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for t in pdf.itertuples():
-                h0, w0 = t.height, t.width
+    def render(it):
+        for batch in it:
+            wins = list(zip(*(
+                batch.column(n).to_pylist()
+                for n in ("row_off", "col_off", "height", "width",
+                          "img_height", "img_width")
+            )))
+            offsets = np.cumsum([0] + [w[2] * w[3] for w in wins]).astype("int32")
+            vals = np.empty(int(offsets[-1]), dtype="float64")
+            for k, (ro, co, h0, w0, img_h, img_w) in enumerate(wins):
                 # halo apron clamped to the output image: the whole-image
                 # oracle has no pixels (hence no dilation sources) beyond
                 # the image border
-                r0 = max(t.row_off - dilate, 0)
-                c0 = max(t.col_off - dilate, 0)
-                r1 = min(t.row_off + h0 + dilate, t.img_height)
-                c1 = min(t.col_off + w0 + dilate, t.img_width)
-                hh = r1 - r0
-                ww = c1 - c0
-                cols, rows = np.meshgrid(
-                    np.arange(c0, c0 + ww), np.arange(r0, r0 + hh)
+                r0, c0 = max(ro - dilate, 0), max(co - dilate, 0)
+                r1 = min(ro + h0 + dilate, img_h)
+                c1 = min(co + w0 + dilate, img_w)
+                block = _render(project, src, transform, r0, r1, c0, c1,
+                                dem_fn, nodata, gather, dilate)
+                vals[offsets[k]:offsets[k + 1]].reshape(h0, w0)[...] = (
+                    block[ro - r0:ro - r0 + h0, co - c0:co - c0 + w0]
                 )
-                x = a * (cols + 0.5) + b * (rows + 0.5) + c
-                y = d * (cols + 0.5) + e * (rows + 0.5) + f
-                z = dem_fn(x, y)
-                if project_fn is not None:
-                    jj, ii = project_fn(x.ravel(), y.ravel(), z.ravel())
-                else:
-                    ji = model.world_to_pixel(
-                        np.vstack([x.ravel(), y.ravel(), z.ravel()])
-                    )
-                    jj, ii = ji[0], ji[1]
-                v, valid = _gather_fn(interp)(src, jj, ii, nodata)
-                block = v.reshape(hh, ww)
-                mask = _dilate(~valid.reshape(hh, ww), dilate)
-                block = np.where(mask, nodata, block)
-                tr = t.row_off - r0
-                tc = t.col_off - c0
-                core = block[tr : tr + h0, tc : tc + w0]
-                out.append(
-                    {
-                        "tile_id": t.tile_id,
-                        "row_off": t.row_off,
-                        "col_off": t.col_off,
-                        "block": core.ravel().astype("float64"),
-                    }
-                )
-            yield pd.DataFrame(out)
+            blocks = pa.ListArray.from_arrays(
+                pa.array(offsets), pa.array(vals, mask=np.isnan(vals))
+            )
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("tile_id"), batch.column("row_off"),
+                 batch.column("col_off"), blocks],
+                names=["tile_id", "row_off", "col_off", "block"],
+            )
 
-    return tiles.repartition("tile_id").mapInPandas(
+    return tiles.repartition("tile_id").mapInArrow(
         render,
         schema="tile_id string, row_off int, col_off int, block array<double>",
     )

@@ -215,8 +215,8 @@ def _rm_pixels_df(out: DataFrame) -> DataFrame:
             (F.col("col_off") + F.col("idx") % w0).cast("int").alias("c"),
             "v",
         )
-        # masked pixels arrive as NULL (pandas->Arrow maps the NaN nodata
-        # to null) — and isnan(NULL) is false, so test both
+        # masked pixels arrive as NULL (remap_tiles writes the NaN nodata
+        # as null) — and isnan(NULL) is false, so test both
         .where(F.col("v").isNotNull() & ~F.isnan("v"))
     )
 
@@ -475,8 +475,8 @@ def q_remap_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     transform = (2.0, 0.0, 19900.0, 0.0, -2.0, 30080.0)
     tiles = tile_windows(spark, 96, 80, tile=64)
     out = remap_tiles(tiles, model, src, transform, dem_plane)
-    # masked pixels arrive as NULL (pandas->Arrow) and isnan(NULL) is
-    # FALSE — the valid filter must test both
+    # masked pixels arrive as NULL (remap_tiles writes NaN as null) and
+    # isnan(NULL) is FALSE — the valid filter must test both
     valid = "filter(block, v -> v IS NOT NULL AND NOT isnan(v))"
     return out.select(
         "tile_id",

@@ -703,6 +703,15 @@ def _score_pairs_broadcast(
             vb = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
             ia = np.searchsorted(ids_b, va)
             ib = np.searchsorted(ids_b, vb)
+            # a pair id absent from the corpus would otherwise score the
+            # row at its insertion point
+            last = len(ids_b) - 1
+            for v, i in ((va, ia), (vb, ib)):
+                miss = ids_b[np.clip(i, 0, last)] != v
+                if miss.any():
+                    raise ValueError(
+                        f"pair ids not in the corpus: {v[miss][:5].tolist()}"
+                    )
             dots = np.einsum("ij,ij->i", M_b[ia], M_b[ib])
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = dots / (sq_b[ia] * sq_b[ib])

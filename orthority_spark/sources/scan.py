@@ -16,19 +16,23 @@ constant tuned for local mode.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 
-#: (applicationId, path) -> natural scan partition count. The probe
-#: (`.rdd.getNumPartitions()`) costs a full JVM analysis + RDD
+#: (applicationId, path, st_mtime_ns) -> natural scan partition count.
+#: The probe (`.rdd.getNumPartitions()`) costs a full JVM analysis + RDD
 #: conversion (~0.15 s) per call, and the text/vector gate families
-#: re-probe the same fixture path many times per bench sweep. The file
-#: layout of a path is stable within a session, so one probe per
-#: (session, path) suffices. This memoizes PLAN METADATA (how many
-#: splits a scan yields), never data or results — the guard decision is
-#: a performance choice and both branches are row-identical by
-#: construction.
-_SCAN_PARTITIONS_MEMO: dict[tuple[str, str], int] = {}
+#: re-probe the same fixture path many times per bench sweep. The local
+#: path's modification time is part of the key, so a path rewritten
+#: within a session (a different file count) is probed again; paths
+#: ``os.stat`` cannot see (remote URIs) are never memoized. Only the
+#: current application's entries are kept. This memoizes PLAN METADATA
+#: (how many splits a scan yields), never data or results — the guard
+#: decision is a performance choice and both branches are row-identical
+#: by construction.
+_SCAN_PARTITIONS_MEMO: dict[tuple[str, str, int], int] = {}
 
 
 def ensure_parallelism(
@@ -60,13 +64,21 @@ def parallel_read(
 ) -> DataFrame:
     """Parquet read whose map stage has at least ``min_partitions``
     tasks — :func:`ensure_parallelism` over a parquet scan, with the
-    partition-count probe memoized per (session, path)."""
+    partition-count probe memoized per (session, path, mtime)."""
     if min_partitions is None:
         min_partitions = spark.sparkContext.defaultParallelism
     df = spark.read.parquet(path)
-    key = (spark.sparkContext.applicationId, path)
-    n = _SCAN_PARTITIONS_MEMO.get(key)
-    if n is None:
+    try:
+        mtime = os.stat(path).st_mtime_ns
+    except OSError:
         n = df.rdd.getNumPartitions()
-        _SCAN_PARTITIONS_MEMO[key] = n
+    else:
+        app = spark.sparkContext.applicationId
+        key = (app, path, mtime)
+        n = _SCAN_PARTITIONS_MEMO.get(key)
+        if n is None:
+            n = df.rdd.getNumPartitions()
+            for k in [k for k in _SCAN_PARTITIONS_MEMO if k[0] != app or k[1] == path]:
+                del _SCAN_PARTITIONS_MEMO[k]
+            _SCAN_PARTITIONS_MEMO[key] = n
     return df.repartition(min_partitions) if n < min_partitions else df

@@ -421,6 +421,25 @@ def test_score_pairs_broadcast_equals_join_fallback(spark, monkeypatch):
     assert fast == slow and len(fast) > 0
 
 
+def test_score_pairs_broadcast_rejects_pair_id_missing_from_corpus(spark):
+    """A pair id absent from the broadcast corpus raises instead of
+    scoring the row at its searchsorted insertion point."""
+    import numpy as np
+    from pyspark.errors import PythonException
+
+    from orthority_spark.queries_vec import _score_pairs_broadcast
+
+    ids = np.array([10, 20, 30], dtype=np.int64)
+    M = np.array([[1, 0], [0, 1], [1, 1]], dtype=np.int64)
+    ok = spark.createDataFrame([(10, 30)], "vec_a bigint, vec_b bigint")
+    got = _score_pairs_broadcast(ok, ids, M).collect()
+    assert [(r.vec_a, r.vec_b) for r in got] == [(10, 30)]
+    for pair in [(10, 25), (5, 20), (10, 99)]:
+        bad = spark.createDataFrame([pair], "vec_a bigint, vec_b bigint")
+        with pytest.raises(PythonException, match="pair ids not in the corpus"):
+            _score_pairs_broadcast(bad, ids, M).collect()
+
+
 def test_pair_dot_equals_jvm_fold_on_ragged_nulls(spark):
     """r6: the Arrow-vectorized pair dot must equal the _DOT zip_with
     fold bit-for-bit, including ragged lengths and NULL elements (both

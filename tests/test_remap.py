@@ -4,8 +4,14 @@
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from orthority_spark.geom.dem import dem_plane, dem_sinusoid
 from orthority_spark.operators.remap import remap_oracle, remap_tiles, tile_windows
@@ -80,3 +86,40 @@ def test_cubic_kernel_matches_cv2_table_and_catmull_rom_linearity():
     np.testing.assert_allclose(-c0 + c2 + 2 * c3, f, atol=1e-12)
     m = -w0 + w2 + 2 * w3
     assert np.max(np.abs(m - f)) > 0.01
+
+
+def test_remap_tiles_output_contract(spark, setup):
+    """Nodata crosses as SQL NULL elements (never NaN), at exactly the
+    oracle's NaN pixels, under the unchanged output schema."""
+    model, src, transform = setup
+    out = remap_tiles(tile_windows(spark, W, H), model, src, transform, dem_plane)
+    assert out.schema.simpleString() == (
+        "struct<tile_id:string,row_off:int,col_off:int,block:array<double>>"
+    )
+    counts = out.select(
+        F.sum(F.size(F.filter("block", lambda v: F.isnan(v)))).alias("nan"),
+        F.sum(F.size(F.filter("block", lambda v: v.isNull()))).alias("null"),
+    ).first()
+    oracle = remap_oracle(model, src, transform, W, H, dem_plane)
+    assert counts.nan == 0
+    assert counts.null == np.isnan(oracle).sum() > 0
+
+
+def test_remap_tiles_empty_input(spark, setup):
+    model, src, transform = setup
+    tiles = tile_windows(spark, W, H).where("false")
+    assert remap_tiles(tiles, model, src, transform, dem_plane).collect() == []
+
+
+def test_perfbench_raster_ortho_toy_is_correct():
+    """The benchmark's own output check (sampled tiles bit-identical to
+    remap_oracle, every tile present) on its toy-size raster workload."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "perfbench/run.py", "--workload", "raster_ortho",
+         "--size", "toy", "--seed", "1", "--seconds", "0", "--trace", "0"],
+        cwd=root, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    last = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert last["correct"] is True and last["failed"] == 0, last
