@@ -1,9 +1,9 @@
-"""Multimodal columns: image/audio/video as opaque BINARY + typed metadata.
+"""Multimodal columns: image/video as opaque BINARY + typed metadata.
 
 Task-brief family: the Spark-side plumbing (schema, partitioning, Arrow
-batch shape, UDF signatures) is real and tested; the codec kernels are
-STUBBED behind ``fake=True`` deterministic implementations because no
-image/audio libraries ship in this container (brief: "STUB the decode
+batch shape, UDF signatures) is real and tested; the codec kernel is
+STUBBED behind a ``fake=True`` deterministic implementation because the
+package depends on no image codec library (brief: "STUB the decode
 step ... make the Spark-side plumbing real").
 
 Shapes:
@@ -78,50 +78,6 @@ def image_decode(df: DataFrame, binary_col: str = "html", fake: bool = True) -> 
 
     return df.select("url", binary_col).mapInPandas(
         decode, schema=IMAGE_META_SCHEMA
-    )
-
-
-AUDIO_META_SCHEMA = (
-    "doc_id long, n_bytes long, n_samples long, n_channels int, rms_ppm long"
-)
-
-
-def audio_decode(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    binary_col: str = "audio",
-    fake: bool = True,
-    sample_width: int = 2,
-) -> DataFrame:
-    """binary audio -> typed metadata via Arrow batches (the audio twin of
-    :func:`image_decode`).
-
-    ``fake=False`` is the real-codec slot (NotImplementedError — no audio
-    library ships here). The fake decode derives every feature as an
-    EXACT integer function of the payload bytes (length, parity, md5
-    prefix), so the whole distributed path is oracle-checkable end to end
-    in SQL — unlike the image stub whose floats are pytest-held."""
-
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not fake:
-                raise NotImplementedError(
-                    "real audio codec not available in this environment; "
-                    "use fake=True (deterministic stub)"
-                )
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[binary_col]):
-                b = bytes(payload)
-                n = len(b)
-                rms_ppm = int(hashlib.md5(b).hexdigest()[:15], 16) % 1_000_000
-                rows.append((i, n, n // sample_width, 1 + n % 2, rms_ppm))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_bytes", "n_samples", "n_channels", "rms_ppm"],
-            )
-
-    return df.select(F.col(id_col).alias("doc_id"), binary_col).mapInPandas(
-        decode, schema=AUDIO_META_SCHEMA
     )
 
 

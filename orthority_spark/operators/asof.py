@@ -1,65 +1,18 @@
-"""As-of joins (J6's positional/nearest semantics, SURVEY §2.3).
+"""As-of join (J6's positional/nearest semantics, SURVEY §2.3).
 
-Two implementations with identical semantics (equivalence-tested):
-
-- :func:`asof_join_cogroup` — the Arrow cogroup + pd.merge_asof pattern
-  (SNIPPETS.md [1]); per-key pandas merge. Simple, but ships both sides
-  through Python workers.
-- :func:`asof_join_window` — pure JVM: union the two streams tagged by
-  side, order by (ts, side) per key, carry the last right-side value with
-  last(..., ignoreNulls) over an unbounded-preceding window, keep left
-  rows. No Python, one shuffle, whole-stage codegen — the default at
-  scale (~an order of magnitude faster in the bench).
+:func:`asof_join_window` is pure JVM: union the two streams tagged by
+side, order by (ts, side) per key, carry the last right-side value with
+last(..., ignoreNulls) over an unbounded-preceding window, keep left
+rows. No Python, one shuffle, whole-stage codegen.
 
 Tie rule: a right row at exactly ts == left ts matches (backward
-inclusive, pd.merge_asof default / DuckDB ASOF >=) — the union path
-sorts right rows before left rows at equal ts to reproduce it.
+inclusive, DuckDB ASOF >=) — the union sorts right rows before left rows
+at equal ts to reproduce it.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
-
-
-def asof_join_cogroup(
-    left: DataFrame, right: DataFrame, key: str, ts: str,
-    left_cols: list[str], right_col: str, n_buckets: int | None = None,
-) -> DataFrame:
-    """Cogrouped merge_asof: for each left row, latest right row with
-    right.ts <= left.ts within the same key.
-
-    r6: cogroups on a deterministic HASH BUCKET of the key
-    (pmod(xxhash64(key), n_buckets), default = spark.sql.shuffle
-    .partitions) and merges per key inside each bucket with
-    ``pd.merge_asof(..., by=key)`` — one Python call per bucket instead
-    of one per key (a high-cardinality key paid per-group Arrow + pandas
-    overhead ~10^4 times; identical per-key backward-inclusive result)."""
-    if n_buckets is None:
-        n_buckets = int(
-            left.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    out_schema = ", ".join(
-        [f"{c} long" for c in left_cols] + [f"{right_col} long"]
-    )
-    bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))
-    lb = left.withColumn("_b", bucket)
-    rb = right.withColumn("_b", bucket)
-
-    def asof(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = lpdf.sort_values(ts)
-        rpdf = rpdf.sort_values(ts)
-        merged = pd.merge_asof(
-            lpdf, rpdf, on=ts, by=key, direction="backward",
-            suffixes=("", "_r"),
-        )
-        return merged[left_cols + [right_col]]
-
-    return (
-        lb.groupBy("_b")
-        .cogroup(rb.groupBy("_b"))
-        .applyInPandas(asof, schema=out_schema)
-    )
 
 
 def asof_join_window(

@@ -1,7 +1,7 @@
 """Distributed connected components over an edge list (DataFrame-only).
 
-Why it exists: the dedup keep-rules in this repo (`embedding_dedup_keep`,
-corpus_clean's text path) are PAIR-based — drop the higher id of every
+Why it exists: the dedup keep-rule in this repo (corpus_clean's text
+path) is PAIR-based — drop the higher id of every
 detected near-dup pair. That rule is not transitive: with detected pairs
 (1,3) and (2,3) it keeps BOTH 1 and 2 even though they are connected
 through 3. A training pipeline that wants one canonical document per
@@ -32,6 +32,11 @@ plan every round and the analyzer, not the data, becomes the bottleneck.
 On a long-lived cluster job prefer a reliable ``checkpoint`` directory
 (localCheckpoint does not survive executor loss); a gate query run is
 short-lived, so the local variant is the right default here.
+
+No registry gate calls it: the two cluster gates built on it were
+twins of the pair gates and are gone. ``tests/test_cc.py`` builds the
+same plans over the `embedding_neardups_bucketed` and
+`jaccard_neardups_lsh` pair graphs.
 """
 
 from __future__ import annotations
@@ -69,8 +74,8 @@ def connected_components(
     ``nodes``: one column ``node`` (every vertex, including isolated
     ones — they come back labelled with themselves; ``nodes`` is the
     vertex universe, so an edge endpoint missing from it is silently
-    ignored — both gate callers derive edges from the same corpus scan,
-    which guarantees containment). ``edges``: columns
+    ignored — callers must derive edges from the same corpus scan as
+    the nodes, which guarantees containment). ``edges``: columns
     ``src``/``dst``, undirected (direction and duplicates don't matter).
     Returns (node, comp) with comp = min id of the node's component —
     deterministic, so oracle-checkable exactly.
@@ -83,7 +88,7 @@ def connected_components(
     executor storage (~20 copies on a web-scale graph). Checkpoint ids
     are tracked via the persistent-RDD map, which assumes no concurrent
     job persists RDDs between two statements of this loop (true for the
-    gate/bench callers; a busy shared session at worst skips a free).
+    short test/query callers; a busy shared session at worst skips a free).
     ``checkpoint_dir``: when set, uses RELIABLE checkpoints there
     instead of localCheckpoint (survives executor loss — the right mode
     for long cluster jobs; files are left for the caller/cluster GC).

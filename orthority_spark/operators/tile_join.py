@@ -1,4 +1,4 @@
-"""Point-in-polygon tile joins: broadcast, salted-shuffle, and Arrow-UDF.
+"""Point-in-polygon tile joins: broadcast and salted-shuffle.
 
 This is the engine's flagship operator — the recast of the reference's
 ortho polygon ∩ DEM mask containment join (SURVEY.md §2.3 J3; the
@@ -13,8 +13,7 @@ Plan shape (designed for 10^12 pages vs a small footprint catalog):
 3. exact PIP: ray-casting decided entirely with Column arithmetic — the
    8 polygon edges are broadcast-joined, per-edge crossing flags are
    map-side expressions, and the odd-crossings vote is one partial-agg
-   groupBy on (url, filename). Alternatively the Arrow pandas-UDF variant
-   runs the numpy ray-caster per batch (no shuffle at all).
+   groupBy on (url, filename).
 
 Skew: one mega-cell can hold ~10^6x the median page count. The salted
 variant splits each page's candidate lookup across N_SALT replicas of the
@@ -26,10 +25,6 @@ assert salted == unsalted == broadcast row sets and checksums.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .. import config, grid
@@ -190,56 +185,3 @@ def pip_join_salted(
     )
     return _pip_filter(cand, list(keep))
 
-
-def pip_join_arrow(
-    pages_cells: DataFrame,
-    footprint_cells: DataFrame,
-    polygons: dict[str, np.ndarray],
-    keep: list[str] = (),
-) -> DataFrame:
-    """Arrow pandas-UDF path: exact numpy ray-caster per record batch.
-
-    This is the mandated vectorized-UDF expression of the reference's
-    fillPoly mask (BASELINE.json:15 'vectorized pandas/Arrow UDFs');
-    the polygon dict rides the UDF closure (broadcast by Spark's task
-    serializer — a handful of 2x8 float arrays).
-    """
-    # (M,4) edge arrays per filename, precomputed once on the driver
-    edges = {
-        name: np.column_stack(
-            [poly[0], poly[1], np.roll(poly[0], -1), np.roll(poly[1], -1)]
-        )
-        for name, poly in polygons.items()
-    }
-
-    cand = pages_cells.join(F.broadcast(footprint_cells), "cell").select(
-        "url", "filename", "px", "py", *keep
-    )
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in cand.schema.fields
-    )
-
-    def pip_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not len(pdf):
-                continue
-            inside = np.zeros(len(pdf), dtype=bool)
-            px = pdf["px"].to_numpy(dtype="float64")
-            py = pdf["py"].to_numpy(dtype="float64")
-            for name, e in edges.items():
-                sel = (pdf["filename"] == name).to_numpy()
-                if not sel.any():
-                    continue
-                x, y = px[sel], py[sel]
-                hit = np.zeros(sel.sum(), dtype=bool)
-                for x1, y1, x2, y2 in e:
-                    cond = (y1 > y) != (y2 > y)
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        xc = x1 + (x2 - x1) * (y - y1) / (y2 - y1)
-                    hit ^= cond & (x < xc)
-                inside[sel] = hit
-            yield pdf[inside]
-
-    return cand.mapInPandas(pip_batches, schema=out_schema).select(
-        "url", "filename", *keep
-    )

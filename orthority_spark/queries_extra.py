@@ -1,9 +1,8 @@
-"""Additional driver-gate queries: grouping sets / set ops / semi joins
-(SURVEY §2.4/2.6 gaps) and rows-only entries for the Arrow-kernel
-operators whose semantics are not ANSI-SQL-expressible (remap gather,
-ray-DEM intersection, multimodal decode, pan-sharpen) — the driver
-records a weaker rows-only check for those, and pytest holds their exact
-oracles (numpy single-process twins)."""
+"""Additional gate queries: grouping sets (SURVEY §2.4) and the
+Arrow-kernel operators (DEM tile assignment and sampling, remap gather,
+undistortion, ray-DEM intersection, multimodal decode, pan-sharpen,
+exterior fit), each paired with a DuckDB oracle that unrolls the same
+arithmetic as SQL."""
 
 from __future__ import annotations
 
@@ -11,7 +10,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .oracle import dlit
-from .queries_geo import pages_cte, pages_cells, _pip_oracle
+from .queries_geo import pages_cte, pages_cells
 from .queries_rel import _CENTS
 from .sources import footprints as fp
 from .sources.local import local_table
@@ -38,67 +37,6 @@ def o_rollup_pricing() -> str:
 SELECT l_returnflag, l_linestatus, CAST(SUM({qty}) AS BIGINT) AS sum_qty_c,
        COUNT(*) AS n
 FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)"""
-
-
-def q_distinct_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact distinct aggregation per group."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return o.groupBy("o_orderpriority").agg(
-        F.countDistinct("o_custkey").alias("n_customers"),
-        F.count(F.lit(1)).alias("n_orders"),
-    )
-
-
-def o_distinct_customers() -> str:
-    return (
-        "SELECT o_orderpriority, COUNT(DISTINCT o_custkey) AS n_customers, "
-        "COUNT(*) AS n_orders FROM orders GROUP BY o_orderpriority"
-    )
-
-
-def q_semi_join_active(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-semi join: customers holding at least one high-value order."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").where(
-        F.col("o_totalprice") > 400000
-    )
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    return customer.join(
-        orders, customer.c_custkey == orders.o_custkey, "left_semi"
-    ).select("c_custkey", "c_name")
-
-
-def o_semi_join_active() -> str:
-    return (
-        "SELECT c_custkey, c_name FROM customer WHERE c_custkey IN "
-        "(SELECT o_custkey FROM orders WHERE o_totalprice > 400000)"
-    )
-
-
-def q_overlap_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set op: pages inside BOTH img_0000 and img_0001 footprints
-    (INTERSECT) — the cross-image overlap-consistency construct
-    (/root/reference/tests/test_ortho.py:44-80 recast)."""
-    recs = fp.footprint_records()
-    from .operators import tile_join
-
-    j = tile_join.pip_join_broadcast(
-        pages_cells(spark, sf_dir),
-        fp.footprint_catalog_flat_df(spark, recs),
-        fp.footprint_edges_df(spark, recs),
-    )
-    a = j.where(F.col("filename") == "img_0000").select("url")
-    b = j.where(F.col("filename") == "img_0001").select("url")
-    return a.intersect(b)
-
-
-def o_overlap_pages() -> str:
-    # one WITH chain, two filtered selects joined by INTERSECT
-    base = _pip_oracle(select="url, filename")
-    with_part, _sep, _final = base.rpartition("SELECT url, filename FROM votes WHERE n % 2 = 1")
-    return f"""{with_part}
-SELECT url FROM votes WHERE n % 2 = 1 AND filename = 'img_0000'
-INTERSECT
-SELECT url FROM votes WHERE n % 2 = 1 AND filename = 'img_0001'"""
 
 
 def q_dem_tile_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -134,7 +72,7 @@ FROM cells"""
 
 
 # ---------------------------------------------------------------------------
-# remap (J6/W2/W3) — oracle-gated per-pixel variant + rows-only checksums
+# remap (J6/W2/W3) — oracle-gated per-pixel variants
 # ---------------------------------------------------------------------------
 
 # ortho grid + source-image parameters shared by the Spark kernel and the
@@ -463,30 +401,6 @@ WHERE NOT EXISTS (
 )"""
 
 
-def q_remap_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tiled remap (J6) per-tile block sums — deterministic; exact
-    whole-image parity is pytest-asserted (tests/test_remap.py)."""
-    from .geom.dem import dem_plane
-    from .operators.remap import remap_tiles, tile_windows
-
-    model = fp.fixture_models()["img_0000"]
-    rng = np.random.RandomState(3)
-    src = ((np.indices((150, 200)).sum(axis=0) % 2) * 100.0) + rng.rand(150, 200)
-    transform = (2.0, 0.0, 19900.0, 0.0, -2.0, 30080.0)
-    tiles = tile_windows(spark, 96, 80, tile=64)
-    out = remap_tiles(tiles, model, src, transform, dem_plane)
-    # masked pixels arrive as NULL (remap_tiles writes NaN as null) and
-    # isnan(NULL) is FALSE — the valid filter must test both
-    valid = "filter(block, v -> v IS NOT NULL AND NOT isnan(v))"
-    return out.select(
-        "tile_id",
-        F.expr(
-            f"aggregate({valid}, CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-        ).alias("block_sum"),
-        F.expr(f"size({valid})").alias("n_valid"),
-    )
-
-
 # ray-march gate constants: min_z / max_z / step -> 11 linspace samples,
 # trig quantized to float32 on BOTH engines (playbook: absorbs 1-ulp
 # cross-engine sin/cos differences; every other op is exact IEEE double)
@@ -643,8 +557,8 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     The gate deliberately runs the REAL mapInPandas Arrow-batch decode
     path; the stub's integer metadata (width/height/channels from the
     payload's md5 bytes) is an exact SQL contract, so the distributed
-    plumbing is oracle-gated end to end like the audio twin. The float
-    features stay pytest-held (tests/test_multimodal.py)."""
+    plumbing is oracle-gated end to end. The float features stay
+    pytest-held (tests/test_multimodal.py)."""
     from .multimodal.binary import image_decode
     from .queries_geo import derived_pages
 
@@ -889,29 +803,6 @@ def _fit_gcp_grid(m) -> "np.ndarray":
     return np.vstack([jg.ravel(), ig.ravel()])
 
 
-def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal audio plumbing over a binary column, fully oracle-gated:
-    the fake codec's features are exact integer functions of the payload
-    bytes (length, parity, md5 prefix), so the distributed Arrow decode
-    path is SQL-checkable end to end."""
-    from .multimodal.binary import audio_decode
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").withColumn(
-        "audio", F.encode(F.col("text"), "utf-8")
-    )
-    return audio_decode(docs, id_col="doc_id", binary_col="audio")
-
-
-def o_audio_features() -> str:
-    return """
-SELECT doc_id,
-       CAST(strlen(text) AS BIGINT) AS n_bytes,
-       CAST(strlen(text) // 2 AS BIGINT) AS n_samples,
-       CAST(1 + strlen(text) % 2 AS INTEGER) AS n_channels,
-       ('0x' || substr(md5(text), 1, 15))::BIGINT % 1000000 AS rms_ppm
-FROM documents"""
-
-
 def q_fit_exterior(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed exterior pose solve (cv2.solvePnP recast, reference
     fit.py:299-360): a deterministic GCP grid per fixture image, one
@@ -982,19 +873,14 @@ def o_fit_exterior() -> str:
 
 QUERIES = {
     "rollup_pricing": (q_rollup_pricing, o_rollup_pricing),
-    "distinct_customers": (q_distinct_customers, o_distinct_customers),
-    "semi_join_active": (q_semi_join_active, o_semi_join_active),
-    "overlap_pages": (q_overlap_pages, o_overlap_pages),
     "dem_tile_assign": (q_dem_tile_assign, o_dem_tile_assign),
     "dem_z_sample": (q_dem_z_sample, o_dem_z_sample),
     "remap_pixels": (q_remap_pixels, o_remap_pixels),
     "remap_pixels_cubic": (q_remap_pixels_cubic, o_remap_pixels_cubic),
     "undistort_pixels": (q_undistort_pixels, o_undistort_pixels),
-    "remap_checksums": (q_remap_checksums, None),
     "ray_dem_footprints": (q_ray_dem_footprints, o_ray_dem_footprints),
     "image_features": (q_image_features, o_image_features),
     "pan_sharpen_stats": (q_pan_sharpen_stats, o_pan_sharpen_stats),
     "pan_sharpen_rows": (q_pan_sharpen_rows, o_pan_sharpen_rows),
     "fit_exterior": (q_fit_exterior, o_fit_exterior),
-    "audio_features": (q_audio_features, o_audio_features),
 }

@@ -1,51 +1,12 @@
-"""Scalar-function surface queries (SURVEY §2.7): date/time handling of
-``warc_ts``-style event time, JSON extraction from string props, EXCEPT
-set op, exact percentiles — all oracle-gated."""
+"""Set-op, gap-fill and RPC-camera gate queries: the EXCEPT set
+op over footprint joins, a dense per-day rollup with last-observation
+carry-forward, and the RPC-footprint PIP join — all oracle-gated."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .queries_geo import pages_cells, pages_cte, _pip_oracle
-
-
-def q_events_by_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time handling (the warc_ts surface): hourly truncation +
-    per-type counts (date_trunc / hour / dayofweek built-ins)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (
-        ev.withColumn("hour_ts", F.date_trunc("hour", F.col("ts")))
-        .withColumn("dow", F.dayofweek("ts"))
-        .groupBy("hour_ts", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("dow").alias("dow"),
-        )
-    )
-
-
-def o_events_by_hour() -> str:
-    # DuckDB dayofweek: 0=Sunday; Spark dayofweek: 1=Sunday -> +1 aligns
-    return """
-SELECT date_trunc('hour', ts) AS hour_ts, event_type, COUNT(*) AS n,
-       CAST(MIN(dayofweek(ts) + 1) AS INT) AS dow
-FROM events GROUP BY 1, 2"""
-
-
-def q_json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON scalar extraction from the props string column."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.select(
-        "event_id",
-        F.get_json_object("props", "$.k").cast("long").alias("k"),
-    )
-
-
-def o_json_extract_props() -> str:
-    return (
-        "SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT)"
-        " AS k FROM events"
-    )
 
 
 def q_except_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -73,24 +34,6 @@ def o_except_pages() -> str:
 SELECT url FROM votes WHERE n % 2 = 1 AND filename = 'img_0000'
 EXCEPT
 SELECT url FROM votes WHERE n % 2 = 1 AND filename = 'img_0001'"""
-
-
-def q_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles per event type (A3 median analogue,
-    exact at gate scale per SURVEY §2.4)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.groupBy("event_type").agg(
-        F.expr("percentile(value, 0.5)").alias("p50"),
-        F.expr("percentile(value, 0.9)").alias("p90"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-def o_value_percentiles() -> str:
-    return """
-SELECT event_type, quantile_cont(value, 0.5) AS p50,
-       quantile_cont(value, 0.9) AS p90, COUNT(*) AS n
-FROM events GROUP BY event_type"""
 
 
 def q_events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -168,11 +111,8 @@ FROM j"""
 
 
 QUERIES = {
-    "events_by_hour": (q_events_by_hour, o_events_by_hour),
     "events_gapfill": (q_events_gapfill, o_events_gapfill),
-    "json_extract_props": (q_json_extract_props, o_json_extract_props),
     "except_pages": (q_except_pages, o_except_pages),
-    "value_percentiles": (q_value_percentiles, o_value_percentiles),
 }
 
 

@@ -13,7 +13,6 @@ through the extracted-text geotag (regexp parse), exactly like production.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import config, grid
@@ -129,19 +128,6 @@ def o_cell_assign() -> str:
     return f"{pages_cte()} SELECT url, cell FROM cells"
 
 
-def q_tile_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-tile page counts (W1 block iteration analogue)."""
-    return (
-        pages_cells(spark, sf_dir)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n_pages"))
-    )
-
-
-def o_tile_counts() -> str:
-    return f"{pages_cte()} SELECT cell, COUNT(*) AS n_pages FROM cells GROUP BY cell"
-
-
 def q_tile_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-independent per-tile checksums over (url, lang) — the per-band
     remap-equivalence recast (BASELINE.json:6)."""
@@ -184,21 +170,6 @@ def q_pip_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_pip_join_salted() -> str:
-    return _pip_oracle()
-
-
-def q_pip_join_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same rows via the vectorized Arrow pandas-UDF ray-caster
-    (BASELINE.json:15 mandated path)."""
-    recs = fp.footprint_records()
-    return tile_join.pip_join_arrow(
-        pages_cells(spark, sf_dir),
-        fp.footprint_cells_df(spark, recs),
-        recs["polygons"],
-    )
-
-
-def o_pip_join_arrow() -> str:
     return _pip_oracle()
 
 
@@ -315,53 +286,9 @@ def o_rollup_pyramid() -> str:
     return f"{pages_cte()} " + " UNION ALL ".join(selects)
 
 
-def q_world_to_pixel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-camera world->pixel projection (P1) as an Arrow batch kernel.
-
-    Projects every page's world point into img_0000's pinhole camera; the
-    oracle unrolls the identical R^T(x-T) matmul + K as SQL arithmetic.
-
-    r6: mapInArrow instead of mapInPandas — the url string column passes
-    through the Python boundary as the original Arrow buffer (zero-copy
-    both ways) instead of being materialised twice as a pandas object
-    array; px/py arrive as float64 numpy views (nulls -> NaN, exactly the
-    pandas conversion) and j/i go back with from_pandas=True so NaN maps
-    to NULL precisely like the old pandas output path.
-    """
-    import pyarrow as pa
-
-    m = fp.fixture_models()["img_0000"]
-    R, T, K = m.R, m.T, m.K
-
-    def project(batches):
-        for b in batches:
-            if not b.num_rows:
-                continue
-            x = b.column(1).to_numpy(zero_copy_only=False) - T[0, 0]
-            y = b.column(2).to_numpy(zero_copy_only=False) - T[1, 0]
-            z = np.float64(config.DEM_Z) - T[2, 0]
-            # explicit left-to-right expressions — same rounding as SQL twin
-            cx = R[0, 0] * x + R[1, 0] * y + R[2, 0] * z
-            cy = R[0, 1] * x + R[1, 1] * y + R[2, 1] * z
-            cz = R[0, 2] * x + R[1, 2] * y + R[2, 2] * z
-            j = K[0, 0] * (cx / cz) + K[0, 2]
-            i = K[1, 1] * (cy / cz) + K[1, 2]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(0),
-                    pa.array(j, type=pa.float64(), from_pandas=True),
-                    pa.array(i, type=pa.float64(), from_pandas=True),
-                ],
-                names=["url", "j", "i"],
-            )
-
-    pc = pages_cells(spark, sf_dir).select("url", "px", "py")
-    return pc.mapInArrow(project, schema="url string, j double, i double")
-
-
 def _wtp_exprs() -> tuple[str, str]:
     """(j, i) projection SQL expressions for img_0000 — shared verbatim by
-    the DuckDB oracle AND the JVM-expression Spark twin."""
+    the DuckDB oracle and the Spark query."""
     m = fp.fixture_models()["img_0000"]
     R, T, K = m.R, m.T, m.K
     x = f"(px - {dlit(T[0, 0])})"
@@ -375,17 +302,11 @@ def _wtp_exprs() -> tuple[str, str]:
     return j, i
 
 
-def o_world_to_pixel() -> str:
-    j, i = _wtp_exprs()
-    return f"{pages_cte()} SELECT url, {j} AS j, {i} AS i FROM cells"
-
-
 def q_world_to_pixel_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same projection as a pure JVM Column expression — zero Python
-    in the hot path, whole-stage codegen end to end. This is the plan a
-    pinhole projection SHOULD run at 100 TB; the Arrow twin above stays
-    as the general-camera (distortion) surface and the two share one
-    oracle, so the driver proves them equal."""
+    """Frame-camera world->pixel projection (P1) as a pure JVM Column
+    expression: every page's world point into img_0000's pinhole camera,
+    zero Python in the hot path, whole-stage codegen end to end. The
+    oracle unrolls the identical R^T(x-T) matmul + K as SQL arithmetic."""
     j, i = _wtp_exprs()
     return pages_cells(spark, sf_dir).select(
         "url", F.expr(j).alias("j"), F.expr(i).alias("i")
@@ -393,7 +314,8 @@ def q_world_to_pixel_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_world_to_pixel_jvm() -> str:
-    return o_world_to_pixel()
+    j, i = _wtp_exprs()
+    return f"{pages_cte()} SELECT url, {j} AS j, {i} AS i FROM cells"
 
 
 def q_footprint_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -419,15 +341,12 @@ def o_footprint_bounds() -> str:
 QUERIES = {
     "geotag_extract": (q_geotag_extract, o_geotag_extract),
     "cell_assign": (q_cell_assign, o_cell_assign),
-    "tile_counts": (q_tile_counts, o_tile_counts),
     "tile_checksums": (q_tile_checksums, o_tile_checksums),
     "pip_join": (q_pip_join, o_pip_join),
     "pip_join_salted": (q_pip_join_salted, o_pip_join_salted),
-    "pip_join_arrow": (q_pip_join_arrow, o_pip_join_arrow),
     "knn": (q_knn, o_knn),
     "knn_kring": (q_knn_kring, o_knn_kring),
     "rollup_pyramid": (q_rollup_pyramid, o_rollup_pyramid),
-    "world_to_pixel": (q_world_to_pixel, o_world_to_pixel),
     "world_to_pixel_jvm": (q_world_to_pixel_jvm, o_world_to_pixel_jvm),
     "footprint_bounds": (q_footprint_bounds, o_footprint_bounds),
 }

@@ -3,9 +3,9 @@
 These exercise the engine surface SURVEY.md §2.3-2.6 maps onto plain
 Catalyst operators: broadcast equi-joins (J1), partial+final aggregation
 (A1 — the Schubert-Gertz parallel covariance as exact integer partial
-sums), window top-k (W4), the as-of positional join (J6, expressed as the
-cogrouped merge_asof Arrow UDF with a DuckDB ASOF JOIN oracle), and
-gap-based sessionization.
+sums), window top-k (W4), the as-of positional join (J6, a union + window
+carry-forward with a DuckDB ASOF JOIN oracle), and gap-based
+sessionization.
 
 Exactness policy: money/quantity doubles are converted to integer cents
 with floor(x * 100.0 + 0.5) — identical arithmetic in both engines — so
@@ -18,37 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 _CENTS = "CAST(floor({col} * 100.0 + 0.5) AS BIGINT)"
-
-
-def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-style pricing summary with exact integer-cents sums."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.withColumn("qty_c", F.expr(_CENTS.format(col="l_quantity")))
-        .withColumn("price_c", F.expr(_CENTS.format(col="l_extendedprice")))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("qty_c").alias("sum_qty_c"),
-            F.sum("price_c").alias("sum_price_c"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .withColumn(
-            "avg_qty",
-            F.col("sum_qty_c").cast("double") / F.col("n_rows") / F.lit(100.0),
-        )
-    )
-
-
-def o_pricing_summary() -> str:
-    qty = _CENTS.format(col="l_quantity")
-    price = _CENTS.format(col="l_extendedprice")
-    return f"""
-SELECT l_returnflag, l_linestatus,
-       CAST(SUM({qty}) AS BIGINT) AS sum_qty_c,
-       CAST(SUM({price}) AS BIGINT) AS sum_price_c,
-       COUNT(*) AS n_rows,
-       CAST(SUM({qty}) AS DOUBLE) / COUNT(*) / 100.0 AS avg_qty
-FROM lineitem GROUP BY l_returnflag, l_linestatus"""
 
 
 def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,36 +67,10 @@ SELECT user_id, CAST(rank AS INT) AS rank, event_id FROM (
 ) WHERE rank <= 3"""
 
 
-def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (J6): for each purchase, the latest view at-or-before it
-    by the same user — the cogrouped merge_asof Arrow-UDF pattern (r6:
-    hash-bucketed cogroup + merge_asof(by=user_id), one Python call per
-    bucket instead of one per user — operators/asof.py)."""
-    from .operators.asof import asof_join_cogroup
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "event_id"
-    )
-    views = ev.where(F.col("event_type") == "view").select(
-        "user_id", "ts", F.col("event_id").alias("view_event_id")
-    )
-    return asof_join_cogroup(
-        purchases, views, "user_id", "ts", ["event_id"], "view_event_id"
-    )
-
-
-def o_asof_join() -> str:
-    return """
-SELECT p.event_id, v.event_id AS view_event_id
-FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') v
-  ON p.user_id = v.user_id AND p.ts >= v.ts"""
-
-
 def q_asof_join_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same as-of semantics via the pure-JVM union+window carry-forward
-    (operators/asof.py — the at-scale default; ~10x the cogroup path)."""
+    """As-of join (J6): for each purchase, the latest view at-or-before it
+    by the same user, via the pure-JVM union+window carry-forward
+    (operators/asof.py)."""
     from .operators.asof import asof_join_window
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -143,7 +86,11 @@ def q_asof_join_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_asof_join_window() -> str:
-    return o_asof_join()
+    return """
+SELECT p.event_id, v.event_id AS view_event_id
+FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') v
+  ON p.user_id = v.user_id AND p.ts >= v.ts"""
 
 
 def q_covar_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -249,10 +196,8 @@ def o_anti_join_unmatched() -> str:
 
 
 QUERIES = {
-    "pricing_summary": (q_pricing_summary, o_pricing_summary),
     "revenue_by_nation": (q_revenue_by_nation, o_revenue_by_nation),
     "window_topk_events": (q_window_topk_events, o_window_topk_events),
-    "asof_join": (q_asof_join, o_asof_join),
     "asof_join_window": (q_asof_join_window, o_asof_join_window),
     "covar_partials": (q_covar_partials, o_covar_partials),
     "sessionize": (q_sessionize, o_sessionize),

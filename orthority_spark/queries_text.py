@@ -13,8 +13,7 @@ Scale notes (the 100 TB story):
   map-side combine collapses each partition to |perms| rows per doc;
 - LSH banding turns near-dup search from O(n^2) into an equi-join on
   (band, band_sig) — the only pairwise work is within buckets;
-- the exact-Jaccard verifier joins only LSH candidates at scale; the
-  all-pairs oracle here is for the small driver gate.
+- the exact-Jaccard verifier joins only LSH candidates, never all pairs.
 """
 
 from __future__ import annotations
@@ -292,48 +291,6 @@ def o_lsh_candidates() -> str:
 SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b
 FROM bands a JOIN bands c
   ON a.band = c.band AND a.band_sig = c.band_sig AND a.doc_id < c.doc_id"""
-
-
-def q_jaccard_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact shingle-Jaccard near-dup pairs (>= tau) — the verifier stage
-    of the MinHash pipeline, run all-pairs at gate scale."""
-    sh = _shingles(spark, sf_dir)
-    counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(b, "sh")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    na = counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    nb = counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    return (
-        common.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("common")
-            / (F.col("na") + F.col("nb") - F.col("common")).cast("double"),
-        )
-        .where(F.col("jaccard") >= JACCARD_TAU)
-        .select("doc_a", "doc_b", "common", "jaccard")
-    )
-
-
-def o_jaccard_neardups() -> str:
-    return f"""{_SHINGLES_CTE},
-counts AS (SELECT doc_id, COUNT(*) AS n FROM shingles GROUP BY doc_id),
-common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS common
-  FROM shingles a JOIN shingles b ON a.sh = b.sh AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b, common,
-       common / CAST(na.n + nb.n - common AS DOUBLE) AS jaccard
-FROM common JOIN counts na ON doc_a = na.doc_id
-            JOIN counts nb ON doc_b = nb.doc_id
-WHERE common / CAST(na.n + nb.n - common AS DOUBLE) >= {JACCARD_TAU}"""
 
 
 def q_jaccard_neardups_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -964,55 +921,10 @@ SELECT regexp_extract(url, 'https://([^/]+)/', 1) AS host,
 FROM pages GROUP BY host"""
 
 
-def q_text_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TRANSITIVE dup-cluster canonicalization for the TEXT corpus:
-    every document labelled with the minimum doc_id of its connected
-    component in the jaccard-verified LSH near-dup pair graph — the
-    text twin of embedding_dup_clusters. The pair-based drop rule in
-    corpus_clean is not transitive (pairs (1,3),(2,3) keep both 1 and
-    2); this closure canonicalizes the whole chain to one survivor.
-    Plan: LSH candidates -> candidates-only Jaccard verify (never
-    all-pairs) -> O(log diameter) min-label + pointer-jump equi-join
-    iterations (operators/cc.py); O(N) output rows regardless of
-    dup-cluster size."""
-    from .operators.cc import connected_components
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    nodes = docs.select(F.col("doc_id").alias("node"))
-    pairs = q_jaccard_neardups_lsh(spark, sf_dir)
-    lab = connected_components(
-        nodes, pairs.select("doc_a", "doc_b"), src="doc_a", dst="doc_b"
-    )
-    return lab.select(
-        F.col("node").alias("doc_id"),
-        F.col("comp").alias("canonical_id"),
-    )
-
-
-def o_text_dup_clusters() -> str:
-    # same recursive min-ancestor closure as o_embedding_dup_clusters:
-    # reach holds every (node, reachable node) pair of the undirected
-    # near-dup graph (UNION dedups, so it terminates); MIN over the
-    # closure is the component minimum. Isolated docs reach themselves.
-    return f"""
-WITH RECURSIVE pair_edges AS (
-  SELECT doc_a AS n, doc_b AS m FROM ({o_jaccard_neardups_lsh()}) p
-  UNION
-  SELECT doc_b AS n, doc_a AS m FROM ({o_jaccard_neardups_lsh()}) p
-),
-reach(n, anc) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.n, r.anc FROM pair_edges e JOIN reach r ON r.n = e.m
-)
-SELECT n AS doc_id, MIN(anc) AS canonical_id FROM reach GROUP BY n"""
-
-
 QUERIES = {
     "dedup_exact": (q_dedup_exact, o_dedup_exact),
     "minhash_signatures": (q_minhash_signatures, o_minhash_signatures),
     "lsh_candidates": (q_lsh_candidates, o_lsh_candidates),
-    "jaccard_neardups": (q_jaccard_neardups, o_jaccard_neardups),
     "jaccard_neardups_lsh": (q_jaccard_neardups_lsh, o_jaccard_neardups_lsh),
     "corpus_clean": (q_corpus_clean, o_corpus_clean),
     "simhash": (q_simhash, o_simhash),
@@ -1027,5 +939,4 @@ QUERIES = {
     "stream_dedup": (q_stream_dedup, o_stream_dedup),
     "repetition_ratio": (q_repetition_ratio, o_repetition_ratio),
     "host_stats": (q_host_stats, o_host_stats),
-    "text_dup_clusters": (q_text_dup_clusters, o_text_dup_clusters),
 }

@@ -50,12 +50,6 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# pair dot product — SINGLE definition shared with the ANN operators (a
-# prior round maintained two identical copies and a NULL-padding fix had
-# to be hand-duplicated into both)
-from .operators.ann import _DOT  # noqa: E402
-
-
 def _query_matrix(spark: SparkSession, sf_dir: str):
     """(q_ids, Mq, sqq): the N_QUERIES query vectors collected once and
     quantised in numpy (exact _QUANT twin); Mq/sqq are None when the
@@ -183,88 +177,6 @@ dots AS (
 )
 SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, cosine
 FROM ranked WHERE rank <= {TOP_K}"""
-
-
-# two fixed +/-1 hyperplanes (deterministic, index-pattern based)
-_H1 = "CASE WHEN (i - 1) % 2 = 0 THEN v ELSE -v END"
-_H2 = "CASE WHEN (i - 1) % 3 = 0 THEN v ELSE -v END"
-
-
-def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH/IVF bucketing: 2 sign-hash bits from fixed +/-1 hyperplanes.
-
-    Map-side only (no shuffle): bucket = 2*(dot_h1 > 0) + (dot_h2 > 0).
-    The scale path restricts ANN scoring to same-bucket candidates.
-    """
-    qz = _quantized(spark, sf_dir)
-    d1 = (
-        "aggregate(zip_with(qe, sequence(1, size(qe)), "
-        "(v, i) -> coalesce(CASE WHEN (i - 1) % 2 = 0 THEN v ELSE -v END, "
-        "CAST(0 AS BIGINT))), "
-        "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    )
-    d2 = (
-        "aggregate(zip_with(qe, sequence(1, size(qe)), "
-        "(v, i) -> coalesce(CASE WHEN (i - 1) % 3 = 0 THEN v ELSE -v END, "
-        "CAST(0 AS BIGINT))), "
-        "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    )
-    return qz.select(
-        "vec_id",
-        (
-            F.when(F.expr(d1) > 0, F.lit(2)).otherwise(F.lit(0))
-            + F.when(F.expr(d2) > 0, F.lit(1)).otherwise(F.lit(0))
-        ).cast("int").alias("bucket"),
-    )
-
-
-def o_ann_lsh_buckets() -> str:
-    return f"""
-WITH {_DUCK_UNNEST},
-proj AS (
-  SELECT vec_id, SUM({_H1}) AS d1, SUM({_H2}) AS d2 FROM u GROUP BY vec_id
-)
-SELECT vec_id,
-       CAST((CASE WHEN d1 > 0 THEN 2 ELSE 0 END)
-          + (CASE WHEN d2 > 0 THEN 1 ELSE 0 END) AS INT) AS bucket
-FROM proj"""
-
-
-def q_embedding_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs (dedup family, cosine >= tau)."""
-    qz = _quantized(spark, sf_dir)
-    a, b = qz.alias("a"), qz.alias("b")
-    return (
-        a.join(b, F.expr("a.vec_id < b.vec_id"))
-        .withColumn("dot", F.expr(_DOT))
-        .withColumn(
-            "cosine",
-            F.col("dot")
-            / (F.sqrt(F.col("a.nn").cast("double")) * F.sqrt(F.col("b.nn").cast("double"))),
-        )
-        .where(F.col("cosine") >= NEARDUP_TAU)
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            "cosine",
-        )
-    )
-
-
-def o_embedding_neardups() -> str:
-    return f"""
-WITH {_DUCK_UNNEST},
-dots AS (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, SUM(a.v * b.v) AS dot
-  FROM u a JOIN u b ON a.i = b.i AND a.vec_id < b.vec_id
-  GROUP BY 1, 2
-), scored AS (
-  SELECT vec_a, vec_b,
-         dot / (sqrt(CAST(na.nn AS DOUBLE)) * sqrt(CAST(nb.nn AS DOUBLE))) AS cosine
-  FROM dots JOIN norms na ON vec_a = na.vec_id
-            JOIN norms nb ON vec_b = nb.vec_id
-)
-SELECT vec_a, vec_b, cosine FROM scored WHERE cosine >= {NEARDUP_TAU}"""
 
 
 # --- banded sign-LSH with DATA-DRIVEN bucket cardinality -----------------
@@ -581,14 +493,30 @@ def q_embedding_neardups_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+def _floor_int64(x: "np.ndarray") -> "np.ndarray":
+    """``floor(x)`` as int64 with Spark's (Java's saturating ``(long)``)
+    conversion: NaN -> 0, values past either end of int64 (including
+    +-Inf) clamp to INT64_MAX / INT64_MIN. A bare ``astype(np.int64)``
+    gives INT64_MIN for all of them."""
+    import numpy as np
+
+    q = np.floor(x)
+    hi = q >= 2.0 ** 63
+    lo = q < -(2.0 ** 63)
+    out = np.where(np.isnan(q) | hi | lo, 0.0, q).astype(np.int64)
+    out[hi] = np.iinfo(np.int64).max
+    out[lo] = np.iinfo(np.int64).min
+    return out
+
+
 def _quantize_matrix_arrow(ecol, dim: int) -> "np.ndarray":
     """Arrow ``list<float>`` embeddings -> dense (n, dim) int64 quantised
     matrix — the bit-exact numpy twin of ``_QUANT``: float32 -> float64
-    is exact, the * 1e6 double product rounds identically, floor and the
-    BIGINT cast match np.floor + int64. Ragged rows zero-pad and NULL
-    rows/elements count 0 (a NULL element quantises to NULL and every
-    consumer counts NULL as 0, so materialising the 0 directly is
-    identical)."""
+    is exact, the * 1e6 double product rounds identically, and floor +
+    the BIGINT cast match ``_floor_int64`` (non-finite and out-of-range
+    products included). Ragged rows zero-pad and NULL rows/elements
+    count 0 (a NULL element quantises to NULL and every consumer counts
+    NULL as 0, so materialising the 0 directly is identical)."""
     import numpy as np
 
     n = len(ecol)
@@ -603,7 +531,7 @@ def _quantize_matrix_arrow(ecol, dim: int) -> "np.ndarray":
         V = vals[offs[0]: offs[0] + n * dim].astype(np.float64).reshape(
             n, dim
         )
-        return np.floor(V * 1e6).astype(np.int64)
+        return _floor_int64(V * 1e6)
     M = np.zeros((n, dim), dtype=np.int64)
     for i, v in enumerate(ecol.to_pylist()):
         if v is None:
@@ -611,7 +539,7 @@ def _quantize_matrix_arrow(ecol, dim: int) -> "np.ndarray":
         a = np.asarray(
             [0.0 if x is None else float(x) for x in v], dtype=np.float64
         )
-        M[i, : len(a)] = np.floor(a * 1e6).astype(np.int64)
+        M[i, : len(a)] = _floor_int64(a * 1e6)
     return M
 
 
@@ -826,7 +754,12 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot / (sqrt(nn_a) * sqrt(nn_b)) op sequence; NaN rows flow through
     unfiltered exactly as in the JVM plan). Nothing corpus-sized is ever
     collected or broadcast, so the shape holds at any corpus size;
-    dedup + the per-query rank window are unchanged."""
+    dedup + the per-query rank window are unchanged.
+
+    Ragged queries: the driver-side nprobe=2 assignment counts a missing
+    (past the query's length) or NULL query component as 0. The JVM form
+    it replaced (``assign_buckets``' nprobe=2 struct sort) null-poisoned
+    a short query vector instead."""
     import numpy as np
     import pyarrow as pa
 
@@ -966,113 +899,11 @@ SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, cosine
 FROM ranked WHERE rank <= {TOP_K}"""
 
 
-def q_label_centroid_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label quantised centroid sums (IVF coarse-quantiser training
-    analogue — exact integer partial sums, order-independent)."""
-    qz = _quantized(spark, sf_dir)
-    return (
-        qz.select("label", F.posexplode("qe").alias("i", "v"))
-        .groupBy("label")
-        .agg(
-            F.count(F.lit(1)).alias("n_components"),
-            F.sum("v").alias("sum_v"),
-            F.sum(F.col("v") * F.col("v")).alias("sum_v2"),
-        )
-    )
-
-
-def o_label_centroid_norms() -> str:
-    return f"""
-WITH q AS (SELECT vec_id, label, {_QUANT_DUCK} AS qe FROM embeddings),
-u AS (SELECT vec_id, label, unnest(qe) AS v FROM q)
-SELECT label, COUNT(*) AS n_components, CAST(SUM(v) AS BIGINT) AS sum_v, CAST(SUM(v * v) AS BIGINT) AS sum_v2
-FROM u GROUP BY label"""
-
-
-def q_embedding_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-level embedding dedup with the keep-canonical rule: a
-    vector survives unless it has a banded-LSH-detected near-dup with a
-    SMALLER vec_id (the same drop-the-higher-id convention as
-    corpus_clean's text path). This is the O(N)-OUTPUT shape a training
-    pipeline actually consumes — the pairs gate
-    (embedding_neardups_bucketed) is the verifier, but its output is
-    inherently quadratic in dup-cluster size; the survivor set is not,
-    and every downstream stage (sampling, mixing, training) reads O(N)
-    rows. Plan: the bucketed pair detection (never all-pairs), losers =
-    distinct higher ids, one left-anti join back to the corpus."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id")
-    losers = (
-        q_embedding_neardups_bucketed(spark, sf_dir)
-        .select(F.col("vec_b").alias("vec_id"))
-        .distinct()
-    )
-    return emb.join(losers, "vec_id", "left_anti")
-
-
-def o_embedding_dedup_keep() -> str:
-    return f"""
-SELECT e.vec_id FROM embeddings e
-WHERE e.vec_id NOT IN (
-  SELECT vec_b FROM ({o_embedding_neardups_bucketed()}) pairs
-)"""
-
-
-def q_embedding_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TRANSITIVE dup-cluster canonicalization: every corpus vector
-    labelled with the minimum vec_id of its connected component in the
-    banded-LSH near-dup pair graph. This is the closure the pair-based
-    keep-rule (embedding_dedup_keep) does not compute: with detected
-    pairs (1,3) and (2,3), the pair rule keeps both 1 and 2; the cluster
-    rule canonicalizes 2 -> 1 because they are connected through 3.
-    Plan: bucketed pair detection (never all-pairs) -> O(log diameter)
-    min-label + pointer-jump iterations of equi-joins (operators/cc.py);
-    output is O(N) rows regardless of dup-cluster size."""
-    from .operators.cc import connected_components
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    nodes = emb.select(F.col("vec_id").alias("node"))
-    pairs = q_embedding_neardups_bucketed(spark, sf_dir)
-    lab = connected_components(
-        nodes, pairs.select("vec_a", "vec_b"), src="vec_a", dst="vec_b"
-    )
-    return lab.select(
-        F.col("node").alias("vec_id"),
-        F.col("comp").alias("canonical_id"),
-    )
-
-
-def o_embedding_dup_clusters() -> str:
-    # transitive closure by recursive min-ancestor reachability: reach
-    # holds every (node, reachable node) pair of the undirected pair
-    # graph (UNION dedups, so it terminates); MIN over the closure is
-    # the component minimum. Isolated vectors reach only themselves.
-    return f"""
-WITH RECURSIVE edges AS (
-  SELECT vec_a AS n, vec_b AS m FROM ({o_embedding_neardups_bucketed()}) p
-  UNION
-  SELECT vec_b AS n, vec_a AS m FROM ({o_embedding_neardups_bucketed()}) p
-),
-reach(n, anc) AS (
-  SELECT vec_id, vec_id FROM embeddings
-  UNION
-  SELECT e.n, r.anc FROM edges e JOIN reach r ON r.n = e.m
-)
-SELECT n AS vec_id, MIN(anc) AS canonical_id FROM reach GROUP BY n"""
-
-
 QUERIES = {
     "ann_topk": (q_ann_topk, o_ann_topk),
-    "ann_lsh_buckets": (q_ann_lsh_buckets, o_ann_lsh_buckets),
-    "embedding_neardups": (q_embedding_neardups, o_embedding_neardups),
     "embedding_neardups_bucketed": (
         q_embedding_neardups_bucketed,
         o_embedding_neardups_bucketed,
     ),
-    "label_centroid_norms": (q_label_centroid_norms, o_label_centroid_norms),
     "ann_ivf": (q_ann_ivf, o_ann_ivf),
-    "embedding_dedup_keep": (q_embedding_dedup_keep, o_embedding_dedup_keep),
-    "embedding_dup_clusters": (
-        q_embedding_dup_clusters,
-        o_embedding_dup_clusters,
-    ),
 }

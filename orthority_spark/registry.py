@@ -5,12 +5,10 @@ oracle_builder() -> SQL str | None). ``None`` oracle => driver records a
 rows-only check (genuinely non-SQL-expressible ops).
 
 The driver records at most ``DRIVER_CAP`` queries in registration order,
-so the exposed surface is an explicit ``PRIORITY`` list: every operator
-family's representative gate sits inside the cap. Redundant twins (an
-alternate join strategy, an all-pairs verifier whose bucketed scale path
-is already gated, a cogroup comparator kept for documentation) live in
-``DEMOTED``: they stay under the same oracle parity in
-tests/test_oracle_parity.py but are not driver-recorded.
+so the exposed surface is the explicit ``PRIORITY`` list: every operator
+family's representative gate sits inside the cap, and every query a
+module registers must be named in it. tests/test_oracle_parity.py holds
+each one to its oracle.
 """
 
 from __future__ import annotations
@@ -60,8 +58,7 @@ PRIORITY = [
     "ann_topk",
     "ann_ivf",
     "embedding_neardups_bucketed",
-    # -- multimodal (image_features oracle-gated since r4; audio twin
-    #    demoted — same mapInPandas decode family) --
+    # -- multimodal --
     "image_features",
     # -- LLM-training-data pipeline (r3 additions, recorded since r4:
     #    relevance ranking, corpus mixing, decontamination, gap-fill) --
@@ -69,10 +66,6 @@ PRIORITY = [
     "stratified_sample",
     "contamination_check",
     "events_gapfill",
-    # r5 rotation (VERDICT r4 #6): the r4-new training-data families get
-    # driver-recorded gates; the two built-in-dominated relational gates
-    # they displace (pricing_summary, value_percentiles) keep full DuckDB
-    # parity as DEMOTED twins
     "repetition_ratio",
     "host_stats",
     # -- relational / windows / set ops --
@@ -87,81 +80,33 @@ PRIORITY = [
     "except_pages",
 ]
 
-#: Pytest-parity-only twins (same oracle check, not driver-recorded):
-#: each has a driver-recorded representative of the same operator family.
-DEMOTED = [
-    "pip_join_arrow",        # strategy twin of pip_join / pip_join_salted
-    "world_to_pixel",        # Arrow twin of world_to_pixel_jvm
-    "jaccard_neardups",      # all-pairs verifier; LSH scale path is gated
-    "embedding_neardups",    # all-pairs verifier; bucketed path is gated
-    "asof_join",             # cogroup comparator; window twin is gated
-    "tile_counts",           # subset of tile_checksums
-    "ann_lsh_buckets",       # bucket assignment; ann_ivf gates the family
-    "label_centroid_norms",  # array-agg family covered by ann_topk/covar
-    "semi_join_active",      # semi-join also exercised in jaccard LSH path
-    "remap_checksums",       # RNG twin; remap_pixels gates per-pixel
-    # INTERSECT twin: the set-ops family keeps except_pages recorded;
-    # its slot went to stream_dedup (the only streaming-path gate)
-    "overlap_pages",
-    # r4 swap-outs (VERDICT r3 #4): slots freed for the four new
-    # training-data families above; every one keeps full DuckDB parity
-    # in tests/test_oracle_parity.py and a recorded family representative
-    "audio_features",        # mapInPandas decode twin of image_features
-    "json_extract_props",    # scalar built-in; §2.7 gated by text_stats et al
-    "distinct_customers",    # distinct built-in; dedup_exact gates the family
-    "events_by_hour",        # date-time built-in; events_gapfill/sessionize gate
-    # r5-new: O(N)-output corpus dedup (keep-canonical over the bucketed
-    # pair detection) — the shape downstream training stages consume;
-    # full DuckDB parity, family gated by embedding_neardups_bucketed
-    "embedding_dedup_keep",
-    # r5-new: transitive dup-cluster canonicalization (connected
-    # components over the bucketed pair graph, operators/cc.py) — the
-    # closure the pair-based keep-rule can't express; full DuckDB parity
-    # (recursive-CTE closure), family gated by embedding_neardups_bucketed
-    "embedding_dup_clusters",
-    # r5-new: the TEXT-corpus twin of embedding_dup_clusters (connected
-    # components over the jaccard-verified LSH pair graph); full DuckDB
-    # parity, family gated by jaccard_neardups_lsh + corpus_clean
-    "text_dup_clusters",
-    # r5 swap-outs (VERDICT r4 #6): built-in-dominated relational gates —
-    # their slots went to the r4-new repetition_ratio / host_stats
-    # training-data families; both keep full DuckDB parity here
-    "pricing_summary",       # TPC-H Q1 agg; rollup_pricing gates the family
-    "value_percentiles",     # percentile built-in; covar/window gates remain
-]
-
 
 def _merged() -> dict:
-    from . import queries_geo
+    from . import (
+        queries_extra, queries_extra2, queries_geo, queries_rel, queries_text,
+        queries_vec,
+    )
 
     merged: dict = {}
-    merged.update(queries_geo.QUERIES)
-    for mod_name in (
-        "queries_text", "queries_vec", "queries_rel", "queries_extra",
-        "queries_extra2",
+    for mod in (
+        queries_geo, queries_text, queries_vec, queries_rel, queries_extra,
+        queries_extra2,
     ):
-        try:
-            mod = __import__(f"orthority_spark.{mod_name}", fromlist=["QUERIES"])
-            merged.update(mod.QUERIES)
-        except ImportError:
-            pass
+        merged.update(mod.QUERIES)
     return merged
 
 
-def all_queries(include_demoted: bool = False) -> dict:
+def all_queries() -> dict:
     merged = _merged()
-    unplaced = set(merged) - set(PRIORITY) - set(DEMOTED)
+    unplaced = set(merged) - set(PRIORITY)
     if unplaced:
-        raise ValueError(
-            f"queries not placed in registry PRIORITY/DEMOTED: {sorted(unplaced)}"
-        )
+        raise ValueError(f"queries not placed in registry PRIORITY: {sorted(unplaced)}")
     missing = [n for n in PRIORITY if n not in merged]
     if missing:
         raise ValueError(f"PRIORITY names with no implementation: {missing}")
     if len(PRIORITY) > DRIVER_CAP:
         raise ValueError(f"PRIORITY exceeds driver cap: {len(PRIORITY)}")
-    names = PRIORITY + [n for n in DEMOTED if n in merged] if include_demoted else PRIORITY
-    return {n: merged[n] for n in names}
+    return {n: merged[n] for n in PRIORITY}
 
 
 def _wrap(fn: Callable) -> Callable:

@@ -35,7 +35,7 @@ def main() -> None:
     spark = get_spark(master="local[8]", shuffle_partitions=16)
     ensure_on_executors(spark)
     sf = "/root/testdata/sf0.01"
-    qs = all_queries(include_demoted=True)
+    qs = all_queries()
     out = [HEAD]
     for n in NAMES:
         fn, _ = qs[n]

@@ -1,5 +1,5 @@
-"""Contracts for operators/cc.py (distributed connected components) and
-the embedding_dup_clusters gate built on it.
+"""Contracts for operators/cc.py (distributed connected components),
+alone and over the near-dup pair graphs of the two banded-LSH gates.
 
 Correctness argument being pinned: both update steps preserve the two
 invariants (c(n) <= n; c(n) is a node of n's component), so at the
@@ -11,6 +11,7 @@ and a long path (the pointer-jump O(log diameter) case).
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from orthority_spark.operators.cc import connected_components
 
@@ -82,50 +83,50 @@ def test_deterministic_across_runs(spark):
     assert a == b
 
 
-def test_gate_consistent_with_pairs(spark):
-    # every detected near-dup pair must share a canonical id, and every
-    # canonical id must be a member of its own cluster
-    from orthority_spark.queries_vec import (
-        q_embedding_dup_clusters,
-        q_embedding_neardups_bucketed,
-    )
+def _clusters(spark, corpus, id_col, pairs, a, b):
+    # every corpus row labelled with the minimum id of its component in
+    # the detected pair graph (the canonical id of its dup cluster)
+    nodes = spark.read.parquet(corpus).select(F.col(id_col).alias("node"))
+    lab = connected_components(nodes, pairs.select(a, b), src=a, dst=b)
+    return {r.node: r.comp for r in lab.collect()}
 
-    sf_dir = "/root/testdata/sf0.001"
-    lab = {
-        r.vec_id: r.canonical_id
-        for r in q_embedding_dup_clusters(spark, sf_dir).collect()
-    }
-    pairs = q_embedding_neardups_bucketed(spark, sf_dir).collect()
+
+def _assert_consistent(lab, pairs, a, b):
     assert len(lab) > 0
     for p in pairs:
-        assert lab[p.vec_a] == lab[p.vec_b]
-        assert lab[p.vec_a] <= min(p.vec_a, p.vec_b)
+        assert lab[p[a]] == lab[p[b]]
+        assert lab[p[a]] <= min(p[a], p[b])
     for n, c in lab.items():
         assert lab[c] == c
         assert c <= n
+
+
+def test_gate_consistent_with_pairs(spark):
+    # every detected near-dup pair must share a canonical id, and every
+    # canonical id must be a member of its own cluster
+    from orthority_spark.queries_vec import q_embedding_neardups_bucketed
+
+    sf_dir = "/root/testdata/sf0.001"
+    pairs = q_embedding_neardups_bucketed(spark, sf_dir)
+    lab = _clusters(
+        spark, f"{sf_dir}/embeddings.parquet", "vec_id", pairs,
+        "vec_a", "vec_b",
+    )
+    _assert_consistent(lab, pairs.collect(), "vec_a", "vec_b")
 
 
 def test_text_gate_consistent_with_pairs(spark):
     # the text twin: every jaccard-verified near-dup pair shares a
     # canonical id; canonical ids are self-canonical cluster minima
-    from orthority_spark.queries_text import (
-        q_jaccard_neardups_lsh,
-        q_text_dup_clusters,
-    )
+    from orthority_spark.queries_text import q_jaccard_neardups_lsh
 
     sf_dir = "/root/testdata/sf0.001"
-    lab = {
-        r.doc_id: r.canonical_id
-        for r in q_text_dup_clusters(spark, sf_dir).collect()
-    }
-    pairs = q_jaccard_neardups_lsh(spark, sf_dir).collect()
-    assert len(lab) > 0
-    for p in pairs:
-        assert lab[p.doc_a] == lab[p.doc_b]
-        assert lab[p.doc_a] <= min(p.doc_a, p.doc_b)
-    for n, c in lab.items():
-        assert lab[c] == c
-        assert c <= n
+    pairs = q_jaccard_neardups_lsh(spark, sf_dir)
+    lab = _clusters(
+        spark, f"{sf_dir}/documents.parquet", "doc_id", pairs,
+        "doc_a", "doc_b",
+    )
+    _assert_consistent(lab, pairs.collect(), "doc_a", "doc_b")
 
 
 def test_persisted_rdd_count_bounded_across_iterations(spark):

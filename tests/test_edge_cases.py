@@ -109,7 +109,7 @@ def test_asof_key_with_no_right_rows(spark):
     """A left key absent from the right side carries NULL (not dropped)."""
     import datetime as dt
 
-    from orthority_spark.operators.asof import asof_join_cogroup, asof_join_window
+    from orthority_spark.operators.asof import asof_join_window
 
     t = dt.datetime(2026, 1, 1)
     l, r = _asof_inputs(
@@ -117,26 +117,24 @@ def test_asof_key_with_no_right_rows(spark):
         [(1, t, 10), (2, t, 20)],
         [(1, t - dt.timedelta(minutes=1), 99)],
     )
-    for fn in (asof_join_window, asof_join_cogroup):
-        got = {
-            row.event_id: row.view_event_id
-            for row in fn(l, r, "user_id", "ts", ["event_id"], "view_event_id").collect()
-        }
-        assert got == {10: 99, 20: None}, fn.__name__
+    out = asof_join_window(l, r, "user_id", "ts", ["event_id"], "view_event_id")
+    got = {row.event_id: row.view_event_id for row in out.collect()}
+    assert got == {10: 99, 20: None}
 
 
 def test_asof_exact_timestamp_tie_takes_right_row(spark):
     """A right row AT the left timestamp matches (<= semantics, same as
-    pd.merge_asof)."""
+    DuckDB's ASOF JOIN on ts >=)."""
     import datetime as dt
 
-    from orthority_spark.operators.asof import asof_join_cogroup, asof_join_window
+    from orthority_spark.operators.asof import asof_join_window
 
     t = dt.datetime(2026, 1, 1)
     l, r = _asof_inputs(spark, [(1, t, 10)], [(1, t, 50), (1, t - dt.timedelta(1), 40)])
-    for fn in (asof_join_window, asof_join_cogroup):
-        (row,) = fn(l, r, "user_id", "ts", ["event_id"], "view_event_id").collect()
-        assert row.view_event_id == 50, fn.__name__
+    (row,) = asof_join_window(
+        l, r, "user_id", "ts", ["event_id"], "view_event_id"
+    ).collect()
+    assert row.view_event_id == 50
 
 
 # ---------------------------------------------------------------------------

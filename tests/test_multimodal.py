@@ -3,8 +3,6 @@ stubbed deterministically."""
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 import pytest
 
@@ -56,25 +54,3 @@ def test_frame_sample_and_resize_shapes(spark):
     pooled = resize_features(meta, out_dim=4).collect()
     assert all(len(r.pooled) == 4 for r in pooled)
 
-
-def test_audio_decode_exact_features(spark):
-    """Audio stub: features are exact integer functions of the bytes."""
-    import hashlib
-
-    from pyspark.sql import functions as F
-
-    from orthority_spark.multimodal.binary import audio_decode
-
-    rows = [(1, b"abcde"), (2, b"\x00\x01" * 500)]
-    df = spark.createDataFrame(
-        [(i, bytearray(b)) for i, b in rows], "doc_id long, audio binary"
-    )
-    got = {r.doc_id: r for r in audio_decode(df).collect()}
-    for i, b in rows:
-        r = got[i]
-        assert r.n_bytes == len(b)
-        assert r.n_samples == len(b) // 2
-        assert r.n_channels == 1 + len(b) % 2
-        assert r.rms_ppm == int(hashlib.md5(b).hexdigest()[:15], 16) % 1_000_000
-    with pytest.raises(Exception):
-        audio_decode(df, fake=False).collect()

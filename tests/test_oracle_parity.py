@@ -37,7 +37,7 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
     return out.sort_values(cols, kind="mergesort").reset_index(drop=True)
 
 
-CASES = sorted(all_queries(include_demoted=True).items())
+CASES = sorted(all_queries().items())
 
 
 @pytest.mark.parametrize("name,pair", CASES, ids=[n for n, _ in CASES])

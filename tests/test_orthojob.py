@@ -54,8 +54,6 @@ def test_embedding_neardups_lsh_recall(spark):
     bucketed = {(r.vec_a, r.vec_b)
                 for r in embedding_neardups_lsh(qz, cents, tau).collect()}
     # all-pairs oracle
-    from orthority_spark.queries_vec import q_embedding_neardups, NEARDUP_TAU
-    import orthority_spark.queries_vec as qv
     a, b = qz.alias("a"), qz.alias("b")
     allpairs = (
         a.join(b, F.expr("a.vec_id < b.vec_id"))
