@@ -64,12 +64,3 @@ def tile_checksum(df: DataFrame, keys: list[str], hash_col: Column) -> DataFrame
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(hash_col).alias("checksum"),
     )
-
-
-def tile_checksum_sql(keys: list[str], hash_sql: str, from_clause: str) -> str:
-    """DuckDB oracle for :func:`tile_checksum`."""
-    keys_s = ", ".join(keys)
-    return (
-        f"SELECT {keys_s}, COUNT(*) AS n_rows, SUM({hash_sql}) AS checksum "
-        f"FROM {from_clause} GROUP BY {keys_s}"
-    )

@@ -57,10 +57,3 @@ NODATA_VALS = {
     "float": float("nan"),
     "double": float("nan"),
 }
-
-
-def default_nodata(dtype: str):
-    """Nodata value for a supported output dtype (raises KeyError on the
-    reference-excluded dtypes, matching its error contract
-    common.py:437)."""
-    return NODATA_VALS[dtype]

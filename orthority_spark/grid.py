@@ -122,11 +122,6 @@ def cell_col(lat: Column, lon: Column, res: int) -> Column:
     return (F.lit(res * RES_FACTOR) + ix * F.lit(IX_FACTOR) + iy).alias("cell")
 
 
-def parent_cell_col(lat: Column, lon: Column, parent_res: int) -> Column:
-    """Rollups recompute the parent directly from lat/lon (no decode)."""
-    return cell_col(lat, lon, parent_res)
-
-
 # ---------------------------------------------------------------------------
 # SQL text (DuckDB oracle) — byte-equivalent arithmetic
 # ---------------------------------------------------------------------------

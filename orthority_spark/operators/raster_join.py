@@ -165,6 +165,36 @@ def sample_dem_z(
     return _sample_dem_z_cogroup(points, d, a, c, e, f0, tile, ncols, nrows)
 
 
+def _bilinear_in_tile(
+    blk: np.ndarray, px: np.ndarray, py: np.ndarray,
+    a: float, c: float, e: float, f0: float, ro: int, co: int,
+) -> np.ndarray:
+    """z at world (px, py) from one DEM tile ``blk`` whose top-left cell
+    is (ro, co): bilinear over the 2x2 stencil, and nearest cell within
+    the tile where the stencil crosses the tile border (half-up rounding
+    = floor(x+0.5), identical in the SQL oracle). Both sample_dem_z
+    plans call this, so they agree bit for bit."""
+    h, w = blk.shape
+    # fractional cell coords within tile (pixel-center)
+    fc = (px - c) / a - 0.5 - co
+    fr = (py - f0) / e - 0.5 - ro
+    c0 = np.floor(fc).astype("int64")
+    r0 = np.floor(fr).astype("int64")
+    interior = (c0 >= 0) & (c0 < w - 1) & (r0 >= 0) & (r0 < h - 1)
+    cc = np.clip(c0, 0, w - 2)
+    rc = np.clip(r0, 0, h - 2)
+    wc, wr = fc - c0, fr - r0
+    z_bi = (
+        blk[rc, cc] * (1 - wr) * (1 - wc)
+        + blk[rc, cc + 1] * (1 - wr) * wc
+        + blk[rc + 1, cc] * wr * (1 - wc)
+        + blk[rc + 1, cc + 1] * wr * wc
+    )
+    ci = np.clip(np.floor(fc + 0.5).astype("int64"), 0, w - 1)
+    ri = np.clip(np.floor(fr + 0.5).astype("int64"), 0, h - 1)
+    return np.where(interior, z_bi, blk[ri, ci])
+
+
 def _sample_dem_z_broadcast(
     points: DataFrame, d: DataFrame,
     a: float, c: float, e: float, f0: float,
@@ -212,26 +242,9 @@ def _sample_dem_z_broadcast(
             for k in np.unique(tkey):
                 sel = tkey == k
                 ro, co = int(row_off[sel][0]), int(col_off[sel][0])
-                blk = tiles[f"{ro}:{co}"]
-                h, w = blk.shape
-                # identical arithmetic to the cogroup kernel (bit-exact)
-                fc = (px[sel] - c) / a - 0.5 - co
-                fr = (py[sel] - f0) / e - 0.5 - ro
-                c0 = np.floor(fc).astype("int64")
-                r0 = np.floor(fr).astype("int64")
-                interior = (c0 >= 0) & (c0 < w - 1) & (r0 >= 0) & (r0 < h - 1)
-                cc = np.clip(c0, 0, w - 2)
-                rc = np.clip(r0, 0, h - 2)
-                wc, wr = fc - c0, fr - r0
-                z_bi = (
-                    blk[rc, cc] * (1 - wr) * (1 - wc)
-                    + blk[rc, cc + 1] * (1 - wr) * wc
-                    + blk[rc + 1, cc] * wr * (1 - wc)
-                    + blk[rc + 1, cc + 1] * wr * wc
+                z[sel] = _bilinear_in_tile(
+                    tiles[f"{ro}:{co}"], px[sel], py[sel], a, c, e, f0, ro, co
                 )
-                ci = np.clip(np.floor(fc + 0.5).astype("int64"), 0, w - 1)
-                ri = np.clip(np.floor(fr + 0.5).astype("int64"), 0, h - 1)
-                z[sel] = np.where(interior, z_bi, blk[ri, ci])
             yield pa.RecordBatch.from_arrays(
                 [urls, pa.array(z, type=pa.float64(), from_pandas=True)],
                 names=["url", "z"],
@@ -282,30 +295,15 @@ def _sample_dem_z_cogroup(
             return pd.DataFrame({"url": pd.Series(dtype="object"),
                                  "z": pd.Series(dtype="float64")})
         t = dem_pdf.iloc[0]
-        h, w = int(t.height), int(t.width)
-        blk = np.asarray(t.block, dtype="float64").reshape(h, w)
-        px = pts_pdf["px"].to_numpy(dtype="float64")
-        py = pts_pdf["py"].to_numpy(dtype="float64")
-        # fractional cell coords within tile (pixel-center)
-        fc = (px - c) / a - 0.5 - int(t.col_off)
-        fr = (py - f0) / e - 0.5 - int(t.row_off)
-        c0 = np.floor(fc).astype("int64")
-        r0 = np.floor(fr).astype("int64")
-        interior = (c0 >= 0) & (c0 < w - 1) & (r0 >= 0) & (r0 < h - 1)
-        cc = np.clip(c0, 0, w - 2)
-        rc = np.clip(r0, 0, h - 2)
-        wc, wr = fc - c0, fr - r0
-        z_bi = (
-            blk[rc, cc] * (1 - wr) * (1 - wc)
-            + blk[rc, cc + 1] * (1 - wr) * wc
-            + blk[rc + 1, cc] * wr * (1 - wc)
-            + blk[rc + 1, cc + 1] * wr * wc
+        blk = np.asarray(t.block, dtype="float64").reshape(
+            int(t.height), int(t.width)
         )
-        # border fallback: nearest cell within the tile (half-up rounding
-        # = floor(x+0.5), identical in the SQL oracle)
-        ci = np.clip(np.floor(fc + 0.5).astype("int64"), 0, w - 1)
-        ri = np.clip(np.floor(fr + 0.5).astype("int64"), 0, h - 1)
-        z = np.where(interior, z_bi, blk[ri, ci])
+        z = _bilinear_in_tile(
+            blk,
+            pts_pdf["px"].to_numpy(dtype="float64"),
+            pts_pdf["py"].to_numpy(dtype="float64"),
+            a, c, e, f0, int(t.row_off), int(t.col_off),
+        )
         return pd.DataFrame({"url": pts_pdf["url"].to_numpy(), "z": z})
 
     return (

@@ -76,40 +76,6 @@ def gs_coefficients(cov: np.ndarray, w: np.ndarray) -> np.ndarray:
     return (cov @ w) / var_sim
 
 
-def gs_transform(
-    df: DataFrame,
-    band_cols: list[str],
-    pan_col: str,
-    means: np.ndarray,
-    w: np.ndarray,
-    coeffs: np.ndarray,
-    pan_gain: float,
-    pan_bias: float,
-) -> DataFrame:
-    """Pass 2: per-row Gram–Schmidt pan-sharpen as an Arrow batch kernel:
-    sharpened_k = band_k + g_k * (gain*pan + bias - sim_pan)."""
-    cols = list(df.columns)
-    out_schema = ", ".join(
-        [f"{c} double" for c in cols] + [f"sharp_{c} double" for c in band_cols]
-    )
-
-    def transform(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            bands = np.column_stack(
-                [pdf[c].to_numpy(dtype="float64") for c in band_cols]
-            )
-            sim = (bands - means) @ w
-            pan = pdf[pan_col].to_numpy(dtype="float64") * pan_gain + pan_bias
-            delta = pan - sim
-            sharp = bands + np.outer(delta, coeffs)
-            out = pdf.copy()
-            for i, c in enumerate(band_cols):
-                out[f"sharp_{c}"] = sharp[:, i]
-            yield out
-
-    return df.mapInPandas(transform, schema=out_schema)
-
-
 def pan_sharpen(df: DataFrame, band_cols: list[str], pan_col: str) -> DataFrame:
     """Full two-pass pipeline: agg -> collect tiny stats -> broadcast
     params -> mapInPandas (the reference's pass1/finalize/pass2,

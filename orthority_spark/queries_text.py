@@ -7,22 +7,20 @@ built-ins (split/explode/md5/conv + relational ops) — no Python in any hot
 path — and every query has a DuckDB oracle sharing the same arithmetic
 (md5-prefix hashes are bit-identical across engines, see functions/checksum).
 
-Scale notes (the 100 TB story):
-- tokenisation/shingling is a generated-column explode in the scan stage;
-- MinHash signatures are one groupBy(doc, perm) partial-aggregated min —
-  map-side combine collapses each partition to |perms| rows per doc;
-- LSH banding turns near-dup search from O(n^2) into an equi-join on
-  (band, band_sig) — the only pairwise work is within buckets;
-- the exact-Jaccard verifier joins only LSH candidates, never all pairs.
+The dedup gates (exact, MinHash, LSH, Jaccard, SimHash, corpus_clean,
+contamination, tf_idf's df) call the operators in operators/dedup.py —
+the one implementation, whose scale notes live there — and rename its
+``id*`` columns to ``doc_*``. The oracle SQL below takes its constants
+(P31, PERMS) from that module.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-P31 = 2147483647  # Mersenne prime 2^31-1: perm-hash modulus
-N_PERMS = 8
-PERMS = [(p, 1000003 + p * 101, 12345 + p * 7919) for p in range(N_PERMS)]
+from .operators import dedup
+from .operators.dedup import P31, PERMS
+
 JACCARD_TAU = 0.8
 STOPWORDS = ["a", "the", "of", "and", "to", "in"]
 BPE_RE = "[a-z]+|[0-9]+|[^a-z0-9 ]"
@@ -46,27 +44,8 @@ def _docs_par(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# shared token / shingle / hash fragments
+# oracle fragments (DuckDB SQL)
 # ---------------------------------------------------------------------------
-
-def _tokens(spark, sf_dir) -> DataFrame:
-    """(doc_id, token) distinct unigrams.
-
-    r6: the per-doc dedup happens MAP-SIDE (array_distinct on the split
-    array before the explode) — the row set is identical to the old
-    explode-then-.distinct() plan (doc_id is part of the key), but the
-    full-corpus (doc_id, token) Exchange disappears; consumers now
-    aggregate straight off the scan stage."""
-    return (
-        _docs_par(spark, sf_dir)
-        .select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(F.array_remove(F.split(F.col("text"), " "), ""))
-            ).alias("token"),
-        )
-    )
-
 
 _TOKENS_CTE = """
 WITH tokens AS (
@@ -74,44 +53,6 @@ WITH tokens AS (
     SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
   ) WHERE token <> ''
 )"""
-
-
-def _shingles(spark, sf_dir) -> DataFrame:
-    """(doc_id, sh) distinct word-3-gram shingles.
-
-    The token array is bound to a column FIRST so split() evaluates once
-    per row — inlining it into the lambda re-evaluates the split per
-    subscript access.
-
-    r6: the per-doc dedup happens MAP-SIDE (array_distinct on the
-    shingle array before the explode) — the row set is identical to the
-    old explode-then-.distinct() plan (doc_id is part of the key), but
-    the full-corpus (doc_id, sh) Exchange disappears from every
-    consumer (minhash, jaccard verify, contamination)."""
-    return _shingles_of(_docs_par(spark, sf_dir))
-
-
-def _shingles_of(docs: DataFrame) -> DataFrame:
-    """Shingles of an arbitrary (doc_id, text) frame — lets callers
-    pre-filter docs BEFORE the explode (the candidate-verify stage
-    shingles only LSH-candidate docs instead of the whole corpus);
-    callers pass a parallelism-guarded doc frame (_docs_par)."""
-    return (
-        docs
-        .withColumn("l", F.split(F.col("text"), " "))
-        .where(F.size("l") >= 3)  # short docs: no shingles, not a crash
-        .select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.expr(
-                        "transform(sequence(0, size(l) - 3), "
-                        "i -> concat_ws(' ', l[i], l[i+1], l[i+2]))"
-                    )
-                )
-            ).alias("sh"),
-        )
-    )
 
 
 _SHINGLES_CTE = """
@@ -122,32 +63,6 @@ WITH shingles AS (
     FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents)
   ) WHERE p <= len(l) - 2
 )"""
-
-
-#: one cached DataFrame per logical slot: gate queries run many times in
-#: one long session (driver gate sweep, bench, pytest) and unbounded
-#: ``persist()`` calls would pin every past invocation's shingle cache in
-#: executor storage; swapping per slot bounds the footprint to one copy.
-_PERSIST_SLOTS: dict[str, DataFrame] = {}
-
-
-def _persist_latest(df: DataFrame, slot: str) -> DataFrame:
-    prev = _PERSIST_SLOTS.pop(slot, None)
-    if prev is not None:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass  # session of the old cache may already be stopped
-    _PERSIST_SLOTS[slot] = df.persist()
-    return df
-
-
-def _h31(col_sql_spark: str) -> str:
-    """Spark SQL: 31-bit md5-prefix hash of a string column."""
-    return (
-        f"CAST(conv(substring(md5({col_sql_spark}), 1, 15), 16, 10) AS BIGINT)"
-        f" % {P31}"
-    )
 
 
 def _h31_duck(col: str) -> str:
@@ -161,32 +76,6 @@ _PERMS_VALUES = (
 )
 
 
-def _minhash_wide(spark, sf_dir) -> DataFrame:
-    """(doc_id, s0..s{P-1}): one wide row per doc of all P minhash sigs.
-
-    Column-wise plan: md5 is computed ONCE per shingle, the P permutation
-    hashes are map-side arithmetic columns, and the min lands in one
-    partial-aggregated groupBy — no row replication (a perms-join would
-    recompute the md5 P times and multiply the shuffle by P)."""
-    sh = _shingles(spark, sf_dir).withColumn("h", F.expr(_h31("sh")))
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(P31)).alias(f"s{p}")
-        for p, a, b in PERMS
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
-def _minhash_sigs(spark, sf_dir) -> DataFrame:
-    """(doc_id, perm, sig): the wide row restored to per-perm rows with
-    stack() after aggregation (map-side)."""
-    wide = _minhash_wide(spark, sf_dir)
-    stack = ", ".join(f"{p}, s{p}" for p, _, _ in PERMS)
-    return wide.select(
-        "doc_id",
-        F.expr(f"stack({N_PERMS}, {stack}) AS (perm, sig)"),
-    ).select("doc_id", F.col("perm").cast("int").alias("perm"), "sig")
-
-
 def _minhash_cte() -> str:
     return f"""{_SHINGLES_CTE},
 {_PERMS_VALUES},
@@ -195,28 +84,6 @@ sigs AS (
   SELECT doc_id, perm, MIN((a * h + b) % {P31}) AS sig
   FROM hashes, perms GROUP BY doc_id, perm
 )"""
-
-
-def _band_sigs(spark, sf_dir) -> DataFrame:
-    """(doc_id, band, band_sig): bands of 2 perms, arithmetic band key.
-
-    r6: band_sig(b) = s(2b) * P31 + s(2b+1) is computed straight off the
-    WIDE minhash row (one struct array + explode, map-side) instead of
-    stack() -> groupBy(doc_id, band) — same values (the old SUM over the
-    band's two stacked rows is exactly this two-term sum), one fewer
-    Exchange."""
-    wide = _minhash_wide(spark, sf_dir)
-    structs = ", ".join(
-        f"struct(CAST({b} AS BIGINT) AS band, "
-        f"(s{2 * b} * CAST({P31} AS BIGINT) + s{2 * b + 1}) AS band_sig)"
-        for b in range(N_PERMS // 2)
-    )
-    return wide.select(
-        "doc_id",
-        F.explode(F.expr(f"array({structs})")).alias("bk"),
-    ).select(
-        "doc_id", F.col("bk.band").alias("band"), F.col("bk.band_sig").alias("band_sig")
-    )
 
 
 def _band_cte() -> str:
@@ -233,16 +100,8 @@ bands AS (
 # ---------------------------------------------------------------------------
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: hash-groupBy on md5(text), keep min doc_id."""
-    return (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.md5(F.col("text")).alias("text_hash"))
-        .groupBy("text_hash")
-        .agg(
-            F.min("doc_id").alias("keep_id"),
-            F.count(F.lit(1)).alias("n_dupes"),
-        )
-    )
+    """Exact dedup: hash-groupBy on the md5 of the text, keep min doc_id."""
+    return dedup.dedup_exact(_docs(spark, sf_dir), "doc_id", "text")
 
 
 def o_dedup_exact() -> str:
@@ -254,7 +113,10 @@ def o_dedup_exact() -> str:
 
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures over word-3-gram shingles (8 permutations)."""
-    return _minhash_sigs(spark, sf_dir)
+    sh = dedup.shingle_set(_docs_par(spark, sf_dir), "doc_id", "text")
+    return dedup.minhash_signatures(dedup.minhash_wide(sh)).select(
+        F.col("id").alias("doc_id"), "perm", "sig"
+    )
 
 
 def o_minhash_signatures() -> str:
@@ -262,27 +124,11 @@ def o_minhash_signatures() -> str:
 
 
 def q_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH banding: candidate near-dup pairs sharing any band signature.
-
-    The band-signature self-join deliberately does NOT persist its input:
-    caching the band table first looks scan-minimal (one shingle->minhash
-    pass instead of two), but the cache build is a synchronization
-    barrier that serializes the whole query graph, and the r5 controlled
-    A/B (BENCH/ab_jaccard.json) measured the persisted shape 1.4-1.6x
-    SLOWER at both sf0.1 and the 10x sf1 fixture. Exchange reuse would
-    give single-scan for free, but the higher-order-function lambdas in
-    the shingle pipeline don't canonicalize equal (verified: zero
-    ReusedExchange under both BHJ and SMJ), so the two pipelined scans
-    are the measured-fastest shape on every scale we can test."""
-    b = _band_sigs(spark, sf_dir)
-    a, c = b.alias("a"), b.alias("c")
-    return (
-        a.join(c, ["band", "band_sig"])
-        .where(F.col("a.doc_id") < F.col("c.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("c.doc_id").alias("doc_b")
-        )
-        .distinct()
+    """LSH banding: candidate near-dup pairs sharing any band signature
+    (the band table is not persisted: see dedup.lsh_candidate_pairs)."""
+    sh = dedup.shingle_set(_docs_par(spark, sf_dir), "doc_id", "text")
+    return dedup.lsh_candidate_pairs(dedup.minhash_wide(sh)).select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
     )
 
 
@@ -297,60 +143,13 @@ def q_jaccard_neardups_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidates-only Jaccard verification — the 100 TB path: exact
     shingle Jaccard computed ONLY for pairs sharing an LSH band (never
     all-pairs); the shingle explode is restricted to candidate docs via a
-    left-semi join before the pair join."""
-    # no persist on the band table: the cache barrier costs more than the
-    # second pipelined shingle->minhash pass at every measurable scale
-    # (r5 A/B, BENCH/ab_jaccard.json — see q_lsh_candidates docstring)
-    b = _band_sigs(spark, sf_dir)
-    a, c = b.alias("a"), b.alias("c")
-    cands = (
-        a.join(c, ["band", "band_sig"])
-        .where(F.col("a.doc_id") < F.col("c.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("c.doc_id").alias("doc_b")
-        )
-        .distinct()
+    left-semi join on the doc rows (dedup.jaccard_verify)."""
+    pairs = dedup.minhash_lsh_neardups(
+        _docs_par(spark, sf_dir), "doc_id", "text", JACCARD_TAU
     )
-    cand_ids = (
-        cands.select(F.col("doc_a").alias("doc_id"))
-        .union(cands.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    # one shingle pass, cached: the explode subtree otherwise re-executes
-    # for each of counts/a2/b2 (3x the document scan + regex); counts is
-    # computed over candidate docs ONLY — na/nb are identical for every
-    # pair that reaches the final join, and the agg input shrinks from
-    # the corpus to the candidate set. r6: the semi-join happens on the
-    # DOC rows, before the explode — the old shape exploded the whole
-    # corpus's shingles a second time and only then filtered (Catalyst
-    # does not push a semi-join below a Generate).
-    shc = _persist_latest(
-        _shingles_of(
-            _docs_par(spark, sf_dir).join(cand_ids, "doc_id", "left_semi")
-        ),
-        "jaccard_cand_shingles",
-    )
-    counts = shc.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a2 = shc.select(F.col("doc_id").alias("doc_a"), "sh")
-    b2 = shc.select(F.col("doc_id").alias("doc_b"), "sh")
-    common = (
-        cands.join(a2, "doc_a")
-        .join(b2, ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    na = counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    nb = counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    return (
-        common.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("common")
-            / (F.col("na") + F.col("nb") - F.col("common")).cast("double"),
-        )
-        .where(F.col("jaccard") >= JACCARD_TAU)
-        .select("doc_a", "doc_b", "common", "jaccard")
+    return pairs.select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"),
+        "common", "jaccard",
     )
 
 
@@ -383,17 +182,13 @@ def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality gate -> per-language survivor counts + exact token sums."""
     d = _docs(spark, sf_dir)
     # exact dedup winners
-    keep = (
-        d.select("doc_id", F.md5("text").alias("h"))
-        .groupBy("h")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
+    keep = dedup.dedup_exact(d, "doc_id", "text").select(
+        F.col("keep_id").alias("doc_id")
     )
-    # near-dup losers: doc_b of every verified pair (q_jaccard_neardups_lsh
-    # fragments, restricted to LSH candidates)
-    losers = q_jaccard_neardups_lsh(spark, sf_dir).select(
-        F.col("doc_b").alias("doc_id")
-    ).distinct()
+    # near-dup losers: the higher id of every verified pair
+    losers = dedup.minhash_lsh_neardups(
+        _docs_par(spark, sf_dir), "doc_id", "text", JACCARD_TAU
+    ).select(F.col("id_b").alias("doc_id")).distinct()
     survivors = keep.join(losers, "doc_id", "left_anti")
     # quality gate: >= 2 stopwords AND >= 20 tokens. r6: both counts are
     # MAP-SIDE array expressions — n_tok counts non-empty tokens
@@ -464,24 +259,10 @@ GROUP BY lang"""
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bit SimHash per document from unigram token hashes.
-
-    Column-wise: md5 once per token, 16 per-bit sign sums as aggregate
-    columns in ONE partial-agg groupBy (no bits-join row replication),
-    then the simhash assembles from the 16 sums map-side."""
-    t = _tokens(spark, sf_dir).withColumn("h", F.expr(_h31("token")))
-    aggs = [
-        F.sum(
-            F.expr(f"CASE WHEN (h DIV {2**b}) % 2 = 1 THEN 1 ELSE -1 END")
-        ).alias(f"s{b}")
-        for b in range(16)
-    ]
-    wide = t.groupBy("doc_id").agg(*aggs)
-    simhash = None
-    for b in range(16):
-        term = F.when(F.col(f"s{b}") > 0, F.lit(2**b)).otherwise(F.lit(0))
-        simhash = term if simhash is None else simhash + term
-    return wide.select("doc_id", simhash.cast("long").alias("simhash"))
+    """16-bit SimHash per document from unigram token hashes
+    (dedup.simhash: per-bit sign sums in ONE partial-agg groupBy)."""
+    sims = dedup.simhash(_docs_par(spark, sf_dir), "doc_id", "text", n_bits=16)
+    return sims.select(F.col("id").alias("doc_id"), "simhash")
 
 
 def o_simhash() -> str:
@@ -648,7 +429,7 @@ def q_tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     ndf = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     df_tbl = (
-        _tokens(spark, sf_dir)
+        dedup.token_set(_docs_par(spark, sf_dir), "doc_id", "text")
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("df"))
     )
@@ -759,14 +540,14 @@ def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter trivially commutes with shingling."""
     docs = _docs_par(spark, sf_dir)
     ev = (
-        _shingles_of(docs.where(F.col("doc_id") % 97 == 0))
+        dedup.shingle_set(docs.where(F.col("doc_id") % 97 == 0), "doc_id", "text")
         .select("sh")
         .distinct()
     )
     return (
-        _shingles_of(docs.where(F.col("doc_id") % 97 != 0))
+        dedup.shingle_set(docs.where(F.col("doc_id") % 97 != 0), "doc_id", "text")
         .join(F.broadcast(ev), "sh", "left_semi")
-        .groupBy("doc_id")
+        .groupBy(F.col("id").alias("doc_id"))
         .agg(F.count(F.lit(1)).alias("n_shared_ngrams"))
     )
 
@@ -847,13 +628,7 @@ def q_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         _docs_par(spark, sf_dir)
         .withColumn("l", F.split(F.col("text"), " "))
         .where(F.size("l") >= 3)
-        .withColumn(
-            "ga",
-            F.expr(
-                "transform(sequence(0, size(l) - 3), "
-                "i -> concat_ws(' ', l[i], l[i+1], l[i+2]))"
-            ),
-        )
+        .withColumn("ga", F.expr(dedup.SHINGLES_SQL))
         .select(
             "doc_id",
             F.size("ga").cast("long").alias("n_grams"),

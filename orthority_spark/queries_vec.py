@@ -21,11 +21,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .operators.ann import quantize
+
 N_QUERIES = 10   # vec_id < 10 are the query vectors
 TOP_K = 5
 NEARDUP_TAU = 0.35
 
-_QUANT = "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))"
 _QUANT_DUCK = "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))"
 
 _DUCK_UNNEST = f"""
@@ -38,21 +39,12 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parallel_read: single-row-group fixture file — see sources/scan.py
     from .sources.scan import parallel_read
 
-    emb = parallel_read(spark, f"{sf_dir}/embeddings.parquet")
-    return emb.select(
-        "vec_id",
-        "label",
-        F.expr(_QUANT).alias("qe"),
-    ).withColumn(
-        # coalesce: a NULL embedding element counts 0, matching the SQL
-        # twin's SUM-skips-NULL over the unnested dims
-        "nn", F.expr("aggregate(qe, CAST(0 AS BIGINT), (acc, v) -> acc + coalesce(v * v, CAST(0 AS BIGINT)))")
-    )
+    return quantize(parallel_read(spark, f"{sf_dir}/embeddings.parquet"))
 
 
 def _query_matrix(spark: SparkSession, sf_dir: str):
     """(q_ids, Mq, sqq): the N_QUERIES query vectors collected once and
-    quantised in numpy (exact _QUANT twin); Mq/sqq are None when the
+    quantised in numpy (exact ann.QUANT twin); Mq/sqq are None when the
     query set is empty."""
     import numpy as np
 
@@ -80,11 +72,11 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: query set against all vectors.
 
     r6 plan: the 10 query vectors are collected once (numpy-quantised,
-    exact _QUANT twin) and ONE mapInArrow pass over the raw corpus scan
+    exact ann.QUANT twin) and ONE mapInArrow pass over the raw corpus scan
     computes every (query, vector) exact int64 dot as a single matmul
     per batch — replacing the broadcast nest-loop join whose _DOT
     evaluated an interpreted 64-step fold per pair (N * Q folds) plus
-    the interpreted _QUANT/nn corpus transforms. Arithmetic is
+    the interpreted ann.QUANT/nn corpus transforms. Arithmetic is
     bit-identical (same int64 sums, same cosine op sequence); the only
     divergence is the degenerate NULL-embedding row, where the fold
     yields NULL and the kernel 0-pads — the same normalisation the
@@ -408,7 +400,7 @@ def q_embedding_neardups_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
     # Broadcast-scored path (guarded, ATTACH_BROADCAST_MAX_ROWS budget):
     # the RAW float corpus is collected ONCE as Arrow (one job — it also
     # supplies the row count and max dim, so the old stats agg job
-    # disappears), quantised in numpy (bit-exact _QUANT twin), and one
+    # disappears), quantised in numpy (bit-exact ann.QUANT twin), and one
     # mapInArrow pass over the bare (vec_a, vec_b) id pairs gathers both
     # matrix rows, takes the exact int64 dot and emits the survivors —
     # the two JVM broadcast joins that re-attached a 64-element array to
@@ -511,7 +503,7 @@ def _floor_int64(x: "np.ndarray") -> "np.ndarray":
 
 def _quantize_matrix_arrow(ecol, dim: int) -> "np.ndarray":
     """Arrow ``list<float>`` embeddings -> dense (n, dim) int64 quantised
-    matrix — the bit-exact numpy twin of ``_QUANT``: float32 -> float64
+    matrix — the bit-exact numpy twin of ``ann.QUANT``: float32 -> float64
     is exact, the * 1e6 double product rounds identically, and floor +
     the BIGINT cast match ``_floor_int64`` (non-finite and out-of-range
     products included). Ragged rows zero-pad and NULL rows/elements
@@ -545,7 +537,7 @@ def _quantize_matrix_arrow(ecol, dim: int) -> "np.ndarray":
 
 def _band_keys_raw(emb: DataFrame, r: int, dim: int) -> DataFrame:
     """(vec_id, band, key) straight from the RAW float embedding column:
-    quantisation (the exact ``_QUANT`` twin) and the sign projections run
+    quantisation (the exact ``ann.QUANT`` twin) and the sign projections run
     in one numpy pass per Arrow batch — the interpreted per-element
     transform() lambda never executes on the band side."""
     import numpy as np
@@ -743,11 +735,11 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (score DESC, bucket DESC), the reverse of the ascending
     (score, bucket) struct sort, exact because every score is an
     integer-valued double below 2^53); then ONE mapInArrow pass over the
-    raw corpus scan quantises (exact _QUANT twin), assigns (the
+    raw corpus scan quantises (exact ann.QUANT twin), assigns (the
     _assign_buckets_np matmul+argmax, ties to the higher bucket),
     matches the <= 2 * N_QUERIES probe entries and emits
     (query_id, neighbor_id, cosine) directly. This replaces: the
-    interpreted _QUANT transform and nn fold on the corpus, the pandas
+    interpreted ann.QUANT transform and nn fold on the corpus, the pandas
     list-column boundary of the corpus assign kernel, the broadcast
     bucket join, and the per-candidate interpreted _DOT fold — with
     bit-identical arithmetic (int64 dots; cosine is the same

@@ -159,28 +159,6 @@ def footprint_cells_df(spark: SparkSession, recs: dict | None = None) -> DataFra
     return local_table(spark, recs["cells"], "filename string, cell long")
 
 
-def footprint_catalog_df(spark: SparkSession, recs: dict | None = None) -> DataFrame:
-    """(filename, cell, edges array<struct>) — the covering-cell index with
-    polygon edges pre-attached DRIVER-side, so the join side broadcasts as
-    one table and the plan carries zero footprint-side shuffles."""
-    recs = recs or footprint_records()
-    edges_by_name: dict[str, list] = {}
-    for n, x1, y1, x2, y2 in recs["edges"]:
-        edges_by_name.setdefault(n, []).append(
-            {"x1": x1, "y1": y1, "x2": x2, "y2": y2}
-        )
-    rows = [
-        (n, c, sorted(edges_by_name[n], key=lambda e: (e["x1"], e["y1"])))
-        for n, c in recs["cells"]
-    ]
-    return local_table(
-        spark,
-        rows,
-        "filename string, cell long, edges array<struct<x1: double, "
-        "y1: double, x2: double, y2: double>>",
-    )
-
-
 N_EDGES = 8  # fixed boundary size (corners + midpoints, camera.py:200-243)
 
 
@@ -193,8 +171,8 @@ def footprint_catalog_flat_df(
     This is the hot-path catalog: the PIP vote becomes a pure
     whole-stage-codegen expression over flat columns (2.2x faster than the
     aggregate() lambda over array<struct>, which Spark interprets per
-    element). Fixed-size boundaries only; variable polygons use the
-    array catalog (footprint_catalog_df)."""
+    element). Fixed-size boundaries only: every footprint must have
+    exactly ``n_edges`` edges (asserted)."""
     recs = recs or footprint_records()
     eb: dict[str, list] = {}
     for n, x1, y1, x2, y2 in recs["edges"]:
@@ -222,16 +200,6 @@ def footprint_summary_df(spark: SparkSession, recs: dict | None = None) -> DataF
         "filename string, cam_type string, xmin double, ymin double, "
         "xmax double, ymax double, cx double, cy double, gsd double",
     )
-
-
-def union_bbox_lonlat() -> tuple[float, float, float, float]:
-    """(lon_min, lat_min, lon_max, lat_max) of the footprint union bbox."""
-    polys = footprint_polygons()
-    xs = np.hstack([p[0] for p in polys.values()])
-    ys = np.hstack([p[1] for p in polys.values()])
-    lon0, lat0 = world_to_lonlat(xs.min(), ys.min())
-    lon1, lat1 = world_to_lonlat(xs.max(), ys.max())
-    return float(lon0), float(lat0), float(lon1), float(lat1)
 
 
 # ---------------------------------------------------------------------------

@@ -64,13 +64,3 @@ def write_tiles_with_checksums(
     )
     write_table(sums, path + "_checksums", overwrite=overwrite)
     return sums
-
-
-def try_iceberg_write(df: DataFrame, table: str) -> bool:
-    """Append to an Iceberg table when a catalog is configured; False
-    otherwise (sandbox has no Iceberg jar — parquet path is the stand-in)."""
-    try:
-        df.writeTo(table).append()
-        return True
-    except Exception:
-        return False

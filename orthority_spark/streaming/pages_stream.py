@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.geotag import with_geotag
+from ..operators.dedup import N_PERMS, P31, PERMS, SHINGLES_SQL, _h31
 from ..operators.tile_join import assign_cells
 
 PAGES_SCHEMA = (
@@ -78,7 +79,7 @@ def minhash_bands_cols(
     ts_col: str | None = "warc_ts",
 ) -> DataFrame:
     """Per-ROW MinHash banding (same arithmetic as the batch
-    queries_text._band_sigs: distinct word-3-gram shingles -> 31-bit
+    operators/dedup.lsh_bands: distinct word-3-gram shingles -> 31-bit
     md5-prefix hash -> min over (a*h+b) % P31 per permutation -> bands
     of 2 packed as sig0*P31 + sig1).
 
@@ -89,12 +90,6 @@ def minhash_bands_cols(
     the streaming twin possible with a single stateful operator
     downstream. Docs under 3 tokens have no shingles and are dropped
     (batch contract)."""
-    from ..queries_text import N_PERMS, P31, PERMS
-
-    h = (
-        "CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)"
-        f" % {P31}"
-    )
     sigs = [
         f"array_min(transform(hs, h -> ({a} * h + {b}) % {P31})) AS s{p}"
         for p, a, b in PERMS
@@ -106,14 +101,8 @@ def minhash_bands_cols(
     return (
         df.withColumn("l", F.split(F.col(text_col), " "))
         .where(F.size("l") >= 3)
-        .withColumn(
-            "shs",
-            F.expr(
-                "array_distinct(transform(sequence(0, size(l) - 3), "
-                "i -> concat_ws(' ', l[i], l[i+1], l[i+2])))"
-            ),
-        )
-        .withColumn("hs", F.expr(f"transform(shs, s -> {h})"))
+        .withColumn("shs", F.array_distinct(F.expr(SHINGLES_SQL)))
+        .withColumn("hs", F.expr(f"transform(shs, s -> {_h31('s')})"))
         .selectExpr(id_col, *([ts_col] if ts_col else []), *sigs)
         .selectExpr(
             id_col, *([ts_col] if ts_col else []),
@@ -133,7 +122,7 @@ def lsh_bucket_stream(
 ) -> DataFrame:
     """Streaming LSH band-bucket REGISTRY: first arrival owns each
     (band, band_sig) bucket within the watermark horizon — the streaming
-    twin of the batch LSH banding (operators/dedup.py): a later document
+    twin of the batch LSH banding (operators/dedup.lsh_bands): a later document
     hitting an owned bucket is a near-dup candidate against the owner.
 
     State holds one row per bucket bounded by the watermark (exactly the

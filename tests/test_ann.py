@@ -363,7 +363,7 @@ def test_band_keys_raw_equals_quantized_path(spark):
     """r6 pass 2: the raw-float mapInArrow band-key path (quantisation
     fused into the kernel) must reproduce the qe-based numpy path
     bit-for-bit — on the fixture AND on ragged/NULL float vectors (the
-    in-kernel floor(x * 1e6) must match the _QUANT expression), and on
+    in-kernel floor(x * 1e6) must match the ann.QUANT expression), and on
     non-finite / out-of-range floats, which Spark's BIGINT cast maps
     NaN -> 0 and saturates at the int64 ends."""
     from orthority_spark.queries_vec import (
@@ -397,9 +397,9 @@ def test_band_keys_raw_equals_quantized_path(spark):
     )
     from pyspark.sql import functions as F
 
-    from orthority_spark.queries_vec import _QUANT
+    from orthority_spark.operators.ann import QUANT
 
-    ragged_qe = ragged.select("vec_id", F.expr(_QUANT).alias("qe"))
+    ragged_qe = ragged.select("vec_id", F.expr(QUANT).alias("qe"))
     f2 = {
         (x.vec_id, x.band, x.key)
         for x in _band_keys_raw(ragged, 5, 6).collect()

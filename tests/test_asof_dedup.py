@@ -10,7 +10,7 @@ from orthority_spark.operators.dedup import (
     dedup_exact,
     minhash_lsh_neardups,
     shingle_set,
-    simhash64,
+    simhash,
 )
 
 def test_asof_small_known_case(spark):
@@ -60,12 +60,13 @@ def test_minhash_lsh_finds_planted_neardups(spark):
         assert j >= 0.5
 
 
-def test_simhash64_similar_docs_close(spark):
+def test_simhash31_similar_docs_close(spark):
     rows = [(0, " ".join(f"w{k}" for k in range(40))),
             (1, " ".join(f"w{k}" for k in range(40)) + " extra"),
             (2, " ".join(f"v{k}" for k in range(40)))]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.id: r.simhash for r in simhash64(df, "doc_id", "text").collect()}
+    out = {r.id: r.simhash
+           for r in simhash(df, "doc_id", "text", n_bits=31).collect()}
     ham01 = bin(out[0] ^ out[1]).count("1")
     ham02 = bin(out[0] ^ out[2]).count("1")
     assert ham01 < ham02  # near-identical docs are closer in hamming space
@@ -73,37 +74,32 @@ def test_simhash64_similar_docs_close(spark):
 
 
 def test_lsh_band_sig_is_order_exact(spark):
-    """rows_per_band > 2: bands whose signature TUPLES differ must not
-    collide even when their multisets (and anchor) agree; identical
-    tuples must still bucket together."""
+    """Bands whose signature TUPLES differ must not collide even when
+    their multisets agree; identical tuples must still bucket together."""
     from orthority_spark.operators.dedup import lsh_candidate_pairs
 
-    rows = []
-    for perm, (s1, s2, s3) in enumerate(
-        zip([5, 7, 11, 13], [5, 13, 11, 7], [5, 7, 11, 13])
-    ):
-        rows += [(1, perm, s1), (2, perm, s2), (3, perm, s3)]
-    sigs = spark.createDataFrame(rows, "id long, perm int, sig long")
-    got = {
-        (r.id_a, r.id_b)
-        for r in lsh_candidate_pairs(sigs, rows_per_band=4).collect()
-    }
+    band0 = {1: (5, 7), 2: (7, 5), 3: (5, 7)}
+    # bands 1-3 are distinct per id, so band 0 alone decides
+    rows = [(i, *band0[i], *(100 * i + k for k in range(6))) for i in band0]
+    wide = spark.createDataFrame(
+        rows, "id long, " + ", ".join(f"s{p} long" for p in range(8))
+    )
+    got = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(wide).collect()}
     # 1 and 3 share the identical band tuple; 2 only shares the multiset
     assert got == {(1, 3)}
 
 
-def test_simhash60_full_width(spark):
+def test_simhash_full_width_60_bits(spark):
     """60-bit simhash: high bits actually vary (the 31-bit default cannot
     set them), and similar docs stay hamming-close at full width."""
-    from orthority_spark.operators.dedup import simhash, simhash60
-
     docs = [
         (1, "the quick brown fox jumps over the lazy dog tonight"),
         (2, "the quick brown fox jumps over the lazy dog today"),
         (3, "completely different words about spark shuffles and parquet"),
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    out = {r.id: r.simhash for r in simhash60(df, "doc_id", "text").collect()}
+    out = {r.id: r.simhash
+           for r in simhash(df, "doc_id", "text", n_bits=60).collect()}
     assert any(v >> 31 for v in out.values())  # high bits populated
     def ham(a, b):
         return bin(a ^ b).count("1")

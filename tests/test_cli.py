@@ -43,6 +43,25 @@ def test_cli_dem_sample(cli_spark, tmp_path, capsys):
     assert json.loads(capsys.readouterr().out)["rows"] == 2
 
 
+def test_cli_dedup(cli_spark, capsys):
+    """`dedup` prints one JSON line per verified pair: the same pair set
+    as the jaccard_neardups_lsh DuckDB oracle at sf0.01."""
+    import duckdb
+
+    from orthority_spark.queries_text import o_jaccard_neardups_lsh
+
+    docs = "/root/testdata/sf0.01/documents.parquet"
+    assert cli.main(["dedup", "--input", docs]) == 0
+    rows = [json.loads(line) for line in capsys.readouterr().out.splitlines()]
+    assert all(set(r) == {"id_a", "id_b", "jaccard"} for r in rows)
+    got = {(r["id_a"], r["id_b"]) for r in rows}
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{docs}'")
+    exp = set(con.sql(o_jaccard_neardups_lsh()).df()[["doc_a", "doc_b"]]
+              .itertuples(index=False, name=None))
+    assert got == exp and len(got) == 25
+
+
 def _write_gcps(tmp_path, model, n=8, plane=825.0, shift=(0.0, 0.0)):
     from orthority_spark.sources.param_io import write_gcps_geojson
 

@@ -176,6 +176,6 @@ def test_shingles_short_doc_yields_nothing(spark):
     df = spark.createDataFrame(
         [(1, "only two"), (2, "a b c d")], "doc_id long, text string"
     )
-    got = shingle_set(df, "doc_id", "text", n=3).collect()
+    got = shingle_set(df, "doc_id", "text").collect()
     ids = {r.id for r in got}
     assert ids == {2} and len(got) == 2  # 'a b c', 'b c d'

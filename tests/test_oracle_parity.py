@@ -11,6 +11,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from orthority_spark import registry
 from orthority_spark.registry import all_queries
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -64,3 +65,17 @@ def test_query_matches_oracle(spark, duck, name, pair):
             )
         else:
             np.testing.assert_array_equal(gv, xv, err_msg=f"{name}.{c}")
+
+
+def test_driver_surface_is_pinned():
+    """The recorded gate names and their oracle SQL are byte-identical
+    to the pinned driver surface: an engine-side refactor must not move
+    either hash."""
+    import hashlib
+    import json
+
+    names = hashlib.sha256("\n".join(registry.queries()).encode())
+    oracles = hashlib.sha256(json.dumps(registry.oracle_sql()).encode())
+    assert (names.hexdigest()[:16], oracles.hexdigest()[:16]) == (
+        "4f5f5ea53cb52d02", "7bef118794206245"
+    )

@@ -285,10 +285,10 @@ def test_stream_lsh_bucket_registry_matches_batch(spark, tmp_path):
 
 def test_minhash_bands_cols_matches_batch_banding(spark):
     """The per-ROW stateless banding (streaming path) and the batch
-    explode->partial-agg banding (queries_text._band_sigs) are different
+    explode->partial-agg banding (operators/dedup.lsh_bands) are different
     plans over different code paths — their (doc, band, band_sig) sets
     must be identical on the real documents table."""
-    from orthority_spark.queries_text import _band_sigs
+    from orthority_spark.operators.dedup import lsh_bands, minhash_wide, shingle_set
     from orthority_spark.streaming.pages_stream import minhash_bands_cols
 
     sf = "/root/testdata/sf0.01"
@@ -298,7 +298,7 @@ def test_minhash_bands_cols_matches_batch_banding(spark):
         for r in minhash_bands_cols(docs, id_col="doc_id", ts_col=None).collect()
     }
     exp = {
-        (r.doc_id, r.band, r.band_sig)
-        for r in _band_sigs(spark, sf).collect()
+        (r.id, r.band, r.band_sig)
+        for r in lsh_bands(minhash_wide(shingle_set(docs, "doc_id", "text"))).collect()
     }
     assert got == exp and len(got) > 0
