@@ -1,305 +1,542 @@
-"""Approximate nearest neighbour over embedding columns (task brief):
-brute-force exact baseline + IVF (inverted-file) scale path.
+"""Approximate nearest neighbour over raw ``(vec_id, embedding[, label])``
+embedding frames: brute-force exact top-k, IVF (inverted-file) top-k,
+distributed k-means for the IVF coarse quantiser, and banded sign-LSH
+near-duplicate pairs.
 
-IVF: k-means-style coarse quantiser trained ON the driver from a sampled
-centroid seed (labels here; at scale: a sampled k-means), vectors
-assigned map-side to their nearest centroid (nprobe buckets per query),
-search restricted to same-bucket candidates — an equi-join on bucket id
-instead of a cross product. Recall vs the exact baseline is measured in
-tests (the standard ANN quality contract).
+Every operator quantises inside its Arrow kernel with one function,
+:func:`quantize_matrix` (``floor(x * 1e6)`` as int64), so dot products and
+norms are exact int64 sums — order-independent and bit-identical to the
+SQL twins' unnest-join ``SUM``. Cosine is then one fixed op sequence,
+``dot / (sqrt(nn_a) * sqrt(nn_b))``, on identical integers (:func:`_cosine`),
+and NULL where either norm is 0, as SQL's division by zero gives.
+Ragged rows zero-pad and NULL components count 0.
 
-All scoring uses integer-quantised embeddings (floor(x*1e6)) so dot
-products are exact int64 and rankings are deterministic (ties broken by
-id), matching queries_vec.py.
+Brute force and IVF are one scan (:func:`_scan_topk`): the small query set
+is collected to the driver once and every corpus batch scores against it
+as one int64 matmul; IVF adds the bucket filter, each corpus vector
+living in its nearest centroid's bucket and each query probing its
+``nprobe`` nearest. Recall vs the exact baseline is a test contract.
 """
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-QUANT = "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))"
-# coalesce absorbs zip_with's NULL padding for mixed-length pairs —
-# sum over COMMON dims, the same convention as the SQL index equi-join
-_DOT = (
-    "aggregate(zip_with(a.qe, b.qe, (x, y) -> coalesce(x * y, "
-    "CAST(0 AS BIGINT))), CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-)
+# --- banded sign-LSH with DATA-DRIVEN bucket cardinality -----------------
+# B fixed bands x r bits/band; r grows with corpus size so per-band bucket
+# occupancy stays bounded (~TARGET_OCC) and the within-bucket self-join
+# never degrades to N^2/constant: cost ~ B * sum(occ^2) ~ B * N * occ.
+# Candidates = union over bands (OR construction keeps recall as r grows).
+# The +/-1 hyperplanes are a per-band md5 diagonal flip times the
+# Sylvester-Hadamard rows (ORTHOGONAL within a band, so key bits are
+# independent on near-isotropic data and bucket mass stays uniform as r
+# grows) — a deterministic sign matrix the SQL twin reproduces exactly
+# (md5 + bit_count).
+LSH_BANDS = 4
+LSH_TARGET_OCC = 32
+# RMAX exists only to keep the band key inside BIGINT (bits 0..r-1, so
+# r <= 58 keeps every key < 2^58 < 2^63 with headroom for the bit sums
+# on both engines). It binds only past N = TARGET_OCC * 2^58 ~ 9.2e18
+# vectors — beyond any corpus — so bucket cardinality is genuinely
+# data-driven at design scale (the r4 clamp of 16 froze buckets at 65536
+# past N ~ 2.1M and reintroduced linear occupancy growth; VERDICT r4 #1).
+LSH_RMIN, LSH_RMAX = 2, 58
+#: corpus broadcast guard for the near-dup pair scorer: a quantised corpus
+#: row is ~(8 + dim*8) bytes, so 200k rows at dim=64 is ~100 MB —
+#: comfortably broadcastable (guide §3.1); past it the raw embeddings are
+#: attached to the deduplicated pairs by an unhinted equi-join.
+ATTACH_BROADCAST_MAX_ROWS = 200_000
 
-
-def _qe_matrix(vals: "np.ndarray") -> "np.ndarray":
-    """Batch of quantised-embedding lists -> dense int64 matrix; ragged
-    rows zero-pad and NULL elements count 0 — exactly _DOT's
-    coalesce-to-0 convention (a zero factor kills the same products the
-    zip_with NULL padding kills)."""
-    try:
-        return np.stack([np.asarray(v, dtype=np.int64) for v in vals])
-    except (TypeError, ValueError):
-        dim = max((0 if v is None else len(v)) for v in vals)
-        M = np.zeros((len(vals), dim), dtype=np.int64)
-        for i, v in enumerate(vals):
-            if v is None:
-                continue
-            a = np.asarray(v)
-            if a.dtype == object:
-                a = np.asarray(
-                    [0 if x is None else int(x) for x in a], dtype=np.int64
-                )
-            elif a.dtype.kind == "f":
-                a = np.where(np.isnan(a), 0.0, a).astype(np.int64)
-            else:
-                a = a.astype(np.int64)
-            M[i, : len(a)] = a
-        return M
-
-
-def pair_dot():
-    """Arrow-vectorized exact int64 pair dot product (guide §4.2): one
-    numpy einsum per batch instead of the per-row interpreted zip_with
-    fold of _DOT — bit-identical (|qe_i| <= ~1e7, dim <= 64 keeps every
-    sum inside int64; pytest asserts equality against _DOT). Returned as
-    a fresh UDF per call site so import carries no session state."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def dot(x: pd.Series, y: pd.Series) -> pd.Series:
-        X = _qe_matrix(x.to_numpy())
-        Y = _qe_matrix(y.to_numpy())
-        m = min(X.shape[1], Y.shape[1])
-        return pd.Series(np.einsum("ij,ij->i", X[:, :m], Y[:, :m]))
-
-    return dot
+_TOPK_SCHEMA = "query_id bigint, neighbor_id bigint, cosine double"
+_PAIR_SCHEMA = "vec_a bigint, vec_b bigint, cosine double"
+_KMEANS_STATS = pa.schema([
+    ("sums", pa.list_(pa.list_(pa.int64()))),
+    ("counts", pa.list_(pa.int64())),
+    ("nn", pa.float64()),
+    ("best", pa.float64()),
+])
 
 
-def quantize(emb: DataFrame) -> DataFrame:
-    return emb.select(
-        "vec_id", "label", F.expr(QUANT).alias("qe")
-    ).withColumn(
-        # coalesce: a NULL embedding element counts 0, matching the SQL
-        # twin's SUM-skips-NULL over the unnested dims
-        "nn", F.expr("aggregate(qe, CAST(0 AS BIGINT), (acc, v) -> acc + coalesce(v * v, CAST(0 AS BIGINT)))")
-    )
+def lsh_r_bits(n: int) -> int:
+    """Bits per band for corpus size n: bit_length(ceil(n / TARGET_OCC))
+    — per-band bucket count 2^r tracks n / TARGET_OCC, so occupancy (and
+    the within-bucket self-join) stays ~TARGET_OCC-bounded for any corpus
+    up to TARGET_OCC * 2^RMAX ~ 9.2e18 vectors (the BIGINT key budget)."""
+    m = (n + LSH_TARGET_OCC - 1) // LSH_TARGET_OCC
+    return min(LSH_RMAX, max(LSH_RMIN, m.bit_length()))
 
 
-def _score_and_rank(cand: DataFrame, k: int, dedup: bool = False) -> DataFrame:
-    scored = (
-        cand.withColumn("dot", F.expr(_DOT))
-        .withColumn(
-            "cosine",
-            F.col("dot")
-            / (
-                F.sqrt(F.col("a.nn").cast("double"))
-                * F.sqrt(F.col("b.nn").cast("double"))
-            ),
+def _lsh_sign(band: int, t: int, i: int) -> int:
+    """+/-1 for band, Hadamard row t, 1-based dim i: a per-band md5
+    diagonal flip (ASCII parity of the first hex char of md5('band:i');
+    DuckDB twin ascii(substr(md5(..),1,1)) % 2) times the
+    Sylvester-Hadamard entry (-1)^popcount(t & (i-1)) (DuckDB twin
+    bit_count(..) % 2). The rows of one band are exactly ORTHOGONAL
+    (t < r <= dim), so the r key bits are independent for near-isotropic
+    data and bucket mass stays ~uniform; purely md5-random planes leave
+    the bits correlated enough that the modal bucket holds ~50x the mean
+    at r=17/dim=64 on uniform data (measured, NOTES_r5 — the occupancy
+    bound would silently fail at scale). The md5 flip de-correlates the
+    bands (each band re-randomises the shared Hadamard rows)."""
+    h = hashlib.md5(f"{band}:{i}".encode()).hexdigest()
+    d = 1 if ord(h[0]) % 2 == 0 else -1
+    had = 1 if bin(t & (i - 1)).count("1") % 2 == 0 else -1
+    return d * had
+
+
+def _floor_int64(x: np.ndarray) -> np.ndarray:
+    """``floor(x)`` as int64 with Spark's (Java's saturating ``(long)``)
+    conversion: NaN -> 0, values past either end of int64 (including
+    +-Inf) clamp to INT64_MAX / INT64_MIN. A bare ``astype(np.int64)``
+    gives INT64_MIN for all of them."""
+    q = np.floor(x)
+    hi = q >= 2.0 ** 63
+    lo = q < -(2.0 ** 63)
+    out = np.where(np.isnan(q) | hi | lo, 0.0, q).astype(np.int64)
+    out[hi] = np.iinfo(np.int64).max
+    out[lo] = np.iinfo(np.int64).min
+    return out
+
+
+def quantize_matrix(ecol, dim: int | None = None) -> np.ndarray:
+    """Arrow ``list<float>`` embeddings -> dense (n, dim) int64 matrix of
+    ``CAST(floor(CAST(x AS DOUBLE) * 1e6) AS BIGINT)``: float32 -> float64
+    is exact, the * 1e6 double product rounds identically, and the cast
+    is :func:`_floor_int64` (non-finite and out-of-range products
+    included). ``dim`` defaults to the longest row. Shorter rows
+    zero-pad and NULL rows/elements count 0.
+
+    Fast path (rectangular, NULL-free lists): one reshape of the list
+    column's values buffer, no per-row Python objects."""
+    if isinstance(ecol, pa.ChunkedArray):
+        ecol = ecol.combine_chunks()
+    n = len(ecol)
+    offs = ecol.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    lens = np.diff(offs)
+    if dim is None:
+        dim = int(lens.max(initial=0))
+    if (
+        ecol.null_count == 0
+        and ecol.values.null_count == 0
+        and bool((lens == dim).all())
+    ):
+        vals = ecol.values.to_numpy(zero_copy_only=False)
+        V = vals[offs[0]: offs[0] + n * dim].astype(np.float64).reshape(
+            n, dim
         )
-        .select(
-            F.col("a.vec_id").alias("query_id"),
-            F.col("b.vec_id").alias("neighbor_id"),
-            "cosine",
+        return _floor_int64(V * 1e6)
+    M = np.zeros((n, dim), dtype=np.int64)
+    for i, v in enumerate(ecol.to_pylist()):
+        if v is None:
+            continue
+        a = np.asarray(
+            [0.0 if x is None else float(x) for x in v], dtype=np.float64
         )
-    )
-    if dedup:  # nprobe>1 can produce the same pair via multiple buckets
-        scored = scored.dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("int").alias("rank"), "neighbor_id", "cosine")
-    )
+        M[i, : len(a)] = _floor_int64(a * 1e6)
+    return M
 
 
-def ann_bruteforce(qz: DataFrame, query_ids: list[int], k: int = 5) -> DataFrame:
-    """Exact baseline: broadcast query set x full corpus."""
-    queries = qz.where(F.col("vec_id").isin(query_ids)).alias("a")
-    corpus = qz.alias("b")
-    cand = corpus.join(F.broadcast(queries), F.expr("a.vec_id != b.vec_id"))
-    return _score_and_rank(cand, k)
+def _ids(col) -> np.ndarray:
+    return col.to_numpy(zero_copy_only=False).astype(np.int64)
 
 
-def train_centroids(qz: DataFrame, n_centroids: int = 8) -> np.ndarray:
-    """Label-seeded centroid init: per-label mean vectors collected to the
-    driver (the cheap seed for :func:`train_centroids_kmeans`)."""
-    rows = (
-        qz.withColumn("c", F.col("label") % n_centroids)
-        .select("c", F.posexplode("qe").alias("i", "v"))
-        .groupBy("c", "i")
-        .agg(F.avg("v").alias("m"))
-        .collect()
-    )
-    n_dim = max(r.i for r in rows) + 1
-    cents = np.zeros((n_centroids, n_dim))
-    for r in rows:
-        cents[r.c, r.i] = r.m
-    return cents
+def _sqrt_nn(M: np.ndarray) -> np.ndarray:
+    """Per-row ``sqrt(nn)``: the exact int64 self-dot, then sqrt."""
+    return np.sqrt(np.einsum("ij,ij->i", M, M).astype(np.float64))
 
 
-def train_centroids_kmeans(
-    qz: DataFrame, n_centroids: int = 8, n_iter: int = 8
-) -> tuple[np.ndarray, list[float]]:
-    """Distributed Lloyd's k-means over the quantised embeddings — the
-    real IVF coarse quantiser (assignment = nearest centroid, same metric
-    as :func:`assign_buckets`).
-
-    Each iteration is ONE Spark job: map-side nearest-centroid assignment
-    against the broadcast centroids (codegen'd expressions) + a
-    partial-aggregated groupBy(bucket, dim) mean; only the K x D centroid
-    matrix and a scalar inertia ever reach the driver. Returns
-    (centroids, per-iteration Euclidean inertia — classic Lloyd, monotone
-    non-increasing; empty clusters keep their previous centroid)."""
-    cents = train_centroids(qz, n_centroids)
-    sum_nn = float(qz.agg(F.sum("nn")).first()[0])
-    inertia: list[float] = []
-    for _ in range(n_iter):
-        b = assign_buckets(qz, cents, nprobe=1)
-        stats = (
-            b.select("bucket", F.posexplode("qe").alias("i", "v"))
-            .groupBy("bucket", "i")
-            .agg(F.avg("v").alias("m"))
-            .collect()
-        )
-        new = np.zeros_like(cents)
-        seen = set()
-        for r in stats:
-            new[r.bucket, r.i] = r.m
-            seen.add(r.bucket)
-        for k in range(n_centroids):
-            if k not in seen:
-                new[k] = cents[k]
-        # inertia = sum ||x||^2 - 2 * sum(best score), best over the NEW
-        # centroids' (c.x - ||c||^2/2) — one scalar aggregate
-        score_exprs = []
-        for c in new:
-            bias = -0.5 * float(np.dot(c, c))
-            # float() pins plain-float repr (numpy>=2 reprs scalars as
-            # 'np.float64(x)', which is not a SQL literal)
-            terms = " + ".join(
-                f"qe[{i}] * {float(c[i])!r}" for i in range(len(c)) if c[i] != 0.0
-            )
-            score_exprs.append(f"(({terms or '0.0'}) + {bias!r})")
-        best = f"greatest({', '.join(score_exprs)})"
-        tot = float(qz.select(F.expr(best).alias("s")).agg(F.sum("s")).first()[0])
-        inertia.append(sum_nn - 2.0 * tot)
-        cents = new
-    return cents, inertia
+def _cosine(dot: np.ndarray, sa: np.ndarray, sb: np.ndarray) -> pa.Array:
+    """``dot / (sqrt(nn_a) * sqrt(nn_b))`` as a float64 Arrow array, NULL
+    where either norm is 0 — DuckDB's ``/`` and Spark's ``try_divide``
+    by zero (a NaN would sort above every double)."""
+    den = sa * sb
+    zero = den == 0
+    cos = dot / np.where(zero, 1.0, den)
+    return pa.array(cos, type=pa.float64(), mask=zero)
 
 
-def assign_buckets(qz: DataFrame, centroids: np.ndarray, nprobe: int = 1) -> DataFrame:
-    """Map-side bucket assignment: NEAREST centroid by Euclidean distance
-    via the dot identity argmin ||x-c||^2 = argmax (c.x - ||c||^2 / 2)
-    (||x||^2 is constant per vector), evaluated as codegen'd expressions
-    against the broadcast centroids; nprobe>1 replicates each vector into
-    its top-nprobe buckets (query-side fan-out)."""
-    exprs = []
-    for ci, c in enumerate(centroids):
-        bias = -0.5 * float(np.dot(c, c))
-        terms = " + ".join(
-            f"qe[{i}] * {float(c[i])!r}" for i in range(len(c)) if c[i] != 0.0
-        )
-        exprs.append(f"struct(({terms or '0.0'}) + {bias!r} AS score, {ci} AS bucket)")
-    if nprobe == 1:
-        # r6: one numpy matmul + argmax per Arrow batch (guide §4.2).
-        # Exact: quantised components (|qe_i| <= ~1e7) and centroid
-        # entries (multiples of 1e6, |m| <= 3) are all exactly
-        # representable in float64 and every partial sum stays far below
-        # 2^53, so scores are exact integers regardless of summation
-        # order — bit-equal to the expression form (pytest contract).
-        # Ties break to the HIGHER bucket, the head of the reversed
-        # ascending sort. Why not JVM: the unrolled K x D score
-        # expressions cost ~9 s of one-time codegen compilation per
-        # session (every cold bench run paid it), and the CodegenFallback
-        # array_sort form re-evaluated them interpreted (~1.8 s at
-        # N=20k); the numpy pass is ~0.3 s with no compile.
-        return _assign_buckets_np(qz, centroids)
-    top = (
-        f"slice(reverse(array_sort(array({', '.join(exprs)}))), 1, {nprobe})"
-    )
-    return qz.withColumn("b_arr", F.expr(top)).select(
-        "vec_id", "label", "qe", "nn",
-        F.explode(F.expr("transform(b_arr, s -> s.bucket)")).alias("bucket"),
-    )
+def collect_matrix(emb: DataFrame):
+    """``(ids, M, sqrt_nn)`` of a small embedding frame, collected to the
+    driver once as Arrow and quantised by :func:`quantize_matrix`."""
+    t = emb.select("vec_id", "embedding").toArrow()
+    ids = _ids(t.column("vec_id"))
+    M = quantize_matrix(t.column("embedding"))
+    return ids, M, _sqrt_nn(M)
 
 
-def _assign_buckets_np(qz: DataFrame, centroids: np.ndarray) -> DataFrame:
-    """Nearest-centroid (nprobe=1) assignment as a vectorized Arrow
-    batch kernel; passes vec_id/label/qe/nn through unchanged. Ragged /
-    NULL components count 0 — the SQL twin's sum-over-present-dims
-    convention (the expression form instead null-poisons short vectors;
-    no caller feeds either shape ragged rows)."""
-    import pandas as pd
-
-    C = np.asarray(centroids, dtype="float64")  # (K, D)
-    biases = -0.5 * (C * C).sum(axis=1)  # exact: entries are m * 1e6
+def _nearest(M: np.ndarray, C: np.ndarray, nprobe: int = 1):
+    """The ``nprobe`` nearest centroids of every row, nearest first, and
+    the (n, K) score matrix. Nearest by Euclidean distance via the dot
+    identity argmin ||x-c||^2 = argmax (c.x - ||c||^2 / 2); ties go to
+    the HIGHER bucket. Components past a row's length (or a centroid's)
+    count 0. With integer centroids the scores are exact integers (|qe_i|
+    <= ~1e7 keeps every partial sum far below 2^53), so the order is
+    bit-equal to the SQL twin's ``ORDER BY score DESC, bucket DESC``."""
     k = C.shape[0]
+    d = min(M.shape[1], C.shape[1])
+    S = M[:, :d].astype(np.float64) @ C[:, :d].T - 0.5 * (C * C).sum(axis=1)
+    order = np.argsort(-S[:, ::-1], axis=1, kind="stable")[:, :nprobe]
+    return (k - 1) - order, S
 
-    fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in qz.schema.fields
+
+def _scan_topk(
+    emb: DataFrame, queries: Column, k: int, centroids=None, nprobe: int = 1
+) -> DataFrame:
+    """Top-k cosine neighbours of every ``queries`` row among the other
+    rows: the query set is collected once, then ONE ``mapInArrow`` pass
+    over the corpus scores each batch against it as an exact int64
+    matmul, and a per-query window ranks by (cosine DESC, neighbor_id).
+    With ``centroids`` a candidate must sit in one of the query's
+    ``nprobe`` nearest buckets (the probe list is computed on the driver).
+    Rows without components (NULL or empty embedding) are dropped: the
+    SQL twins' unnest gives them no dims to score."""
+    emb = emb.where(F.size("embedding") > 0)
+    q_ids, Mq, sqq = collect_matrix(emb.where(queries))
+    C = probes = None
+    if centroids is not None:
+        C = np.asarray(centroids, dtype=np.float64)
+        probes = _nearest(Mq, C, nprobe)[0]
+    bc = emb.sparkSession.sparkContext.broadcast((q_ids, Mq, sqq, probes))
+
+    def search(it):
+        q_ids_b, Mq_b, sqq_b, probes_b = bc.value
+        for batch in it:
+            if not batch.num_rows or not len(q_ids_b):
+                continue
+            vid = _ids(batch.column(0))
+            M = quantize_matrix(batch.column(1))
+            sq = _sqrt_nn(M)
+            m = min(M.shape[1], Mq_b.shape[1])
+            dots = M[:, :m] @ Mq_b[:, :m].T  # (n, Q) exact int64
+            bucket = None if C is None else _nearest(M, C)[0][:, 0]
+            parts = []
+            for qi, qid in enumerate(q_ids_b):
+                sel = vid != qid
+                if bucket is not None:
+                    sel &= np.isin(bucket, probes_b[qi])
+                idx = np.flatnonzero(sel)
+                parts.append((
+                    np.full(len(idx), qid), vid[idx], dots[idx, qi],
+                    np.full(len(idx), sqq_b[qi]), sq[idx],
+                ))
+            qid, nid, dot, sa, sb = (np.concatenate(c) for c in zip(*parts))
+            if not len(qid):
+                continue
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(qid, type=pa.int64()),
+                    pa.array(nid, type=pa.int64()),
+                    _cosine(dot, sa, sb),
+                ],
+                names=["query_id", "neighbor_id", "cosine"],
+            )
+
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.col("neighbor_id")
+    )
+    return (
+        emb.select("vec_id", "embedding")
+        .mapInArrow(search, schema=_TOPK_SCHEMA)
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(
+            "query_id", F.col("rank").cast("int").alias("rank"),
+            "neighbor_id", "cosine",
+        )
     )
 
-    def assign(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            vals = pdf["qe"].to_numpy()
-            M = _qe_matrix(vals).astype("float64")
-            d = min(M.shape[1], C.shape[1])
-            S = M[:, :d] @ C[:, :d].T + biases  # (n, K), exact ints
-            bucket = (k - 1) - np.argmax(S[:, ::-1], axis=1)
-            out = pdf.copy()
-            out["bucket"] = bucket.astype("int32")
-            yield out
 
-    return qz.mapInPandas(assign, schema=f"{fields}, bucket int")
+def ann_bruteforce(emb: DataFrame, queries: Column, k: int = 5) -> DataFrame:
+    """Exact top-k: every ``queries`` row against the whole corpus."""
+    return _scan_topk(emb, queries, k)
 
 
 def ann_ivf(
-    qz: DataFrame,
-    query_ids: list[int],
+    emb: DataFrame,
+    queries: Column,
     centroids: np.ndarray,
     k: int = 5,
     nprobe: int = 2,
 ) -> DataFrame:
-    """IVF search: queries probe their nprobe nearest buckets; corpus
-    vectors live in exactly one bucket; candidates = bucket equi-join."""
-    corpus = assign_buckets(qz, centroids, nprobe=1).alias("b")
-    queries = assign_buckets(
-        qz.where(F.col("vec_id").isin(query_ids)), centroids, nprobe=nprobe
-    ).alias("a")
-    cand = corpus.join(F.broadcast(queries), "bucket").where(
-        F.expr("a.vec_id != b.vec_id")
+    """IVF top-k: corpus vectors live in their nearest centroid's bucket,
+    queries probe their ``nprobe`` nearest buckets (ordered by score DESC,
+    bucket DESC), and only the probed buckets are scored."""
+    return _scan_topk(emb, queries, k, centroids, nprobe)
+
+
+def assign_buckets(emb: DataFrame, centroids: np.ndarray) -> DataFrame:
+    """``emb`` plus an int ``bucket`` column: each row's nearest centroid
+    (:func:`_nearest`), one ``mapInArrow`` pass, no shuffle."""
+    C = np.asarray(centroids, dtype=np.float64)
+    col = emb.columns.index("embedding")
+    schema = StructType(
+        emb.schema.fields + [StructField("bucket", IntegerType())]
     )
-    return _score_and_rank(cand, k, dedup=True)
+
+    def assign(it):
+        for batch in it:
+            b = _nearest(quantize_matrix(batch.column(col)), C)[0][:, 0]
+            yield pa.RecordBatch.from_arrays(
+                batch.columns + [pa.array(b, type=pa.int32())],
+                names=schema.fieldNames(),
+            )
+
+    return emb.mapInArrow(assign, schema=schema)
 
 
-def embedding_neardups_lsh(
-    qz: DataFrame, centroids: np.ndarray, tau: float
+def _kmeans_pass(emb: DataFrame, n_centroids: int, centroids=None):
+    """One Spark job over ``emb``: per-bucket int64 component sums and
+    row counts, sum ||x||^2 and sum of the best score. Buckets are
+    ``label % n_centroids`` without ``centroids``, else each row's nearest
+    centroid (the best score is then its c.x - ||c||^2 / 2). Each
+    partition yields one row; the driver adds them up."""
+    C = None if centroids is None else np.asarray(centroids, np.float64)
+
+    def stats(it):
+        sums = np.zeros((n_centroids, 0), dtype=np.int64)
+        counts = np.zeros(n_centroids, dtype=np.int64)
+        nn = best = 0.0
+        for batch in it:
+            if not batch.num_rows:
+                continue
+            M = quantize_matrix(batch.column(1))
+            if C is None:
+                b = _ids(batch.column(0)) % n_centroids
+            else:
+                top, S = _nearest(M, C)
+                b = top[:, 0]
+                best += float(S[np.arange(len(b)), b].sum())
+            nn += float(np.einsum("ij,ij->i", M, M).astype(np.float64).sum())
+            counts += np.bincount(b, minlength=n_centroids)
+            if M.shape[1] > sums.shape[1]:
+                sums = np.pad(sums, ((0, 0), (0, M.shape[1] - sums.shape[1])))
+            for c in np.unique(b):
+                sums[c, : M.shape[1]] += M[b == c].sum(axis=0)
+        yield pa.RecordBatch.from_pylist(
+            [{"sums": sums.tolist(), "counts": counts.tolist(),
+              "nn": nn, "best": best}],
+            schema=_KMEANS_STATS,
+        )
+
+    cols = ["label" if C is None else "vec_id", "embedding"]
+    rows = emb.select(*cols).mapInArrow(
+        stats, schema=from_arrow_schema(_KMEANS_STATS)
+    ).collect()
+    dim = max((len(r.sums[0]) for r in rows), default=0)
+    sums = np.zeros((n_centroids, dim), dtype=np.int64)
+    counts = np.zeros(n_centroids, dtype=np.int64)
+    for r in rows:
+        s = np.asarray(r.sums, dtype=np.int64)
+        sums[:, : s.shape[1]] += s
+        counts += np.asarray(r.counts, dtype=np.int64)
+    return sums, counts, sum(r.nn for r in rows), sum(r.best for r in rows)
+
+
+def _means(sums: np.ndarray, counts: np.ndarray, prev: np.ndarray):
+    """Per-bucket mean vectors; an empty bucket keeps ``prev``."""
+    out = prev.astype(np.float64).copy()
+    hit = counts > 0
+    out[hit] = sums[hit] / counts[hit, None]
+    return out
+
+
+def train_centroids(emb: DataFrame, n_centroids: int = 8) -> np.ndarray:
+    """Label-seeded centroid init: the mean quantised vector of each
+    ``label % n_centroids`` group (one job; the cheap seed for
+    :func:`train_centroids_kmeans`). Ragged/NULL components count 0."""
+    sums, counts, _, _ = _kmeans_pass(emb, n_centroids)
+    return _means(sums, counts, np.zeros(sums.shape))
+
+
+def train_centroids_kmeans(
+    emb: DataFrame, n_centroids: int = 8, n_iter: int = 8
+) -> tuple[np.ndarray, list[float]]:
+    """Distributed Lloyd's k-means over the quantised embeddings — the
+    IVF coarse quantiser (assignment = :func:`_nearest`, the metric of
+    :func:`assign_buckets`).
+
+    Each pass is ONE Spark job that assigns every row to the current
+    centroids and returns only per-bucket sums and counts plus two
+    scalars, so the new centroids are the bucket means (an empty bucket
+    keeps its centroid). ``inertia[i]`` is the Euclidean inertia of the
+    centroids after iteration i, sum ||x||^2 - 2 * sum(best score), read
+    from the next pass: n_iter + 1 passes after the seed. Classic Lloyd,
+    so it is monotone non-increasing. Ragged/NULL components count 0."""
+    cents = train_centroids(emb, n_centroids)
+    sums, counts, _, _ = _kmeans_pass(emb, n_centroids, cents)
+    inertia: list[float] = []
+    for _ in range(n_iter):
+        cents = _means(sums, counts, cents)
+        sums, counts, nn, best = _kmeans_pass(emb, n_centroids, cents)
+        inertia.append(nn - 2.0 * best)
+    return cents, inertia
+
+
+def band_keys(emb: DataFrame, r: int, dim: int) -> DataFrame:
+    """``(vec_id, band, key)``: every vector replicated into LSH_BANDS rows
+    whose key sums ``(d_j > 0) << bit`` over the band's r sign planes.
+    Quantisation and the projections run as one exact int64 numpy matmul
+    per Arrow batch, with no shuffle. ``dim`` is the corpus MAX
+    dimension; shorter vectors zero-pad (sign * 0 contributes nothing)
+    and NULL elements count 0, both matching the SQL twin."""
+    S = np.array(
+        [
+            [_lsh_sign(j // r, j % r, i) for i in range(1, dim + 1)]
+            for j in range(LSH_BANDS * r)
+        ],
+        dtype=np.int64,
+    ).reshape(LSH_BANDS * r, dim)
+    shifts = np.arange(r, dtype=np.int64)
+
+    def keys(it):
+        for batch in it:
+            n = batch.num_rows
+            if not n:
+                continue
+            bits = quantize_matrix(batch.column(1), dim) @ S.T > 0
+            keys_by_band = np.column_stack([
+                (bits[:, b * r:(b + 1) * r].astype(np.int64) << shifts).sum(
+                    axis=1
+                )
+                for b in range(LSH_BANDS)
+            ])
+            vid = batch.column(0).to_numpy(zero_copy_only=False)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(
+                        np.repeat(vid, LSH_BANDS),
+                        type=pa.int64(),
+                        from_pandas=True,
+                    ),
+                    pa.array(
+                        np.tile(np.arange(LSH_BANDS, dtype=np.int32), n),
+                        type=pa.int32(),
+                    ),
+                    pa.array(keys_by_band.ravel(), type=pa.int64()),
+                ],
+                names=["vec_id", "band", "key"],
+            )
+
+    return emb.select("vec_id", "embedding").mapInArrow(
+        keys, schema="vec_id bigint, band int, key bigint"
+    )
+
+
+def _keep_pairs(va, vb, dot, sa, sb, tau: float) -> pa.RecordBatch:
+    """The ``cosine >= tau`` survivors of one batch of scored pairs; a
+    NULL cosine (a zero-norm side) never survives."""
+    cos = _cosine(dot, sa, sb)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(va, type=pa.int64()), pa.array(vb, type=pa.int64()), cos],
+        names=["vec_a", "vec_b", "cosine"],
+    ).filter(pc.greater_equal(cos, tau))
+
+
+def _score_pairs_broadcast(
+    pairs: DataFrame, ids: np.ndarray, M: np.ndarray, tau: float
 ) -> DataFrame:
-    """Embedding-cosine near-dup pairs restricted to shared IVF buckets —
-    the dedup-at-scale path (all-pairs cosine is O(n^2); bucketed search
-    only compares within coarse-quantiser cells). Recall vs the all-pairs
-    threshold scan is a test contract, not an equality: pairs straddling
-    a bucket boundary are missed by design (raise nprobe to trade cost
-    for recall)."""
-    b = assign_buckets(qz, centroids, nprobe=2)
-    a, c = b.alias("a"), b.alias("b")
-    cand = (
-        a.join(c, "bucket")
-        .where(F.expr("a.vec_id < b.vec_id"))
-        .withColumn("dot", F.expr(_DOT))
-        .withColumn(
-            "cosine",
-            F.col("dot")
-            / (
-                F.sqrt(F.col("a.nn").cast("double"))
-                * F.sqrt(F.col("b.nn").cast("double"))
-            ),
-        )
-        .where(F.col("cosine") >= tau)
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            "cosine",
-        )
-        .dropDuplicates(["vec_a", "vec_b"])
+    """Score ``(vec_a, vec_b)`` candidate pairs against a broadcast
+    id-indexed quantised corpus matrix (guide §8: decide on id pairs,
+    gather the heavy arrays exactly once) and keep ``cosine >= tau``. A
+    pair id missing from ``ids`` raises."""
+    order = np.argsort(ids, kind="stable")
+    ids_s, M_s = ids[order], np.ascontiguousarray(M[order])
+    bc = pairs.sparkSession.sparkContext.broadcast(
+        (ids_s, M_s, _sqrt_nn(M_s))
     )
-    return cand
+
+    def score(it):
+        ids_b, M_b, sq_b = bc.value
+        for batch in it:
+            if not batch.num_rows:
+                continue
+            va = _ids(batch.column(0))
+            vb = _ids(batch.column(1))
+            ia = np.searchsorted(ids_b, va)
+            ib = np.searchsorted(ids_b, vb)
+            # a pair id absent from the corpus would otherwise score the
+            # row at its insertion point
+            last = len(ids_b) - 1
+            for v, i in ((va, ia), (vb, ib)):
+                miss = ids_b[np.clip(i, 0, last)] != v
+                if miss.any():
+                    raise ValueError(
+                        f"pair ids not in the corpus: {v[miss][:5].tolist()}"
+                    )
+            dots = np.einsum("ij,ij->i", M_b[ia], M_b[ib])
+            yield _keep_pairs(va, vb, dots, sq_b[ia], sq_b[ib], tau)
+
+    return pairs.mapInArrow(score, schema=_PAIR_SCHEMA)
+
+
+def _score_pairs_join(pairs: DataFrame, emb: DataFrame, tau: float) -> DataFrame:
+    """:func:`_score_pairs_broadcast` for a corpus past the broadcast
+    guard: the raw embeddings are attached to each side by an equi-join
+    and the same kernel scores them batch by batch."""
+    def side(s):
+        return emb.select(
+            F.col("vec_id").alias(f"vec_{s}"), F.col("embedding").alias(f"e{s}")
+        )
+
+    def score(it):
+        for batch in it:
+            if not batch.num_rows:
+                continue
+            A = quantize_matrix(batch.column(2))
+            B = quantize_matrix(batch.column(3))
+            m = min(A.shape[1], B.shape[1])
+            dots = np.einsum("ij,ij->i", A[:, :m], B[:, :m])
+            yield _keep_pairs(
+                _ids(batch.column(0)), _ids(batch.column(1)),
+                dots, _sqrt_nn(A), _sqrt_nn(B), tau,
+            )
+
+    return (
+        pairs.join(side("a"), "vec_a")
+        .join(side("b"), "vec_b")
+        .select("vec_a", "vec_b", "ea", "eb")
+        .mapInArrow(score, schema=_PAIR_SCHEMA)
+    )
+
+
+def neardups_bucketed(emb: DataFrame, tau: float) -> DataFrame:
+    """Embedding near-dup pairs ``(vec_a < vec_b, cosine >= tau)`` among
+    vectors that share a banded-LSH ``(band, key)`` bucket — pairwise
+    cosine only WITHIN buckets, never all-pairs, with 2^r buckets per
+    band tracking N / TARGET_OCC (:func:`lsh_r_bits`). Pairs in no shared
+    bucket are missed by design; recall vs the all-pairs scan and the
+    occupancy bound are test contracts.
+
+    The band self-join carries only ``(vec_id, band, key)``. Up to
+    ATTACH_BROADCAST_MAX_ROWS the corpus is collected once and broadcast
+    to the pair scorer, and pairs are deduplicated after the tau filter
+    (cosine is a pure function of the pair); past it pairs are
+    deduplicated first and the embeddings attached by join."""
+    n = emb.count()
+    if not n:  # empty corpus: no pairs (and no max dim to project)
+        return emb.sparkSession.createDataFrame([], _PAIR_SCHEMA)
+    r = lsh_r_bits(n)
+    if n <= ATTACH_BROADCAST_MAX_ROWS:
+        ids, M, _ = collect_matrix(emb)
+        dim = M.shape[1]
+    else:
+        dim = emb.agg(F.max(F.size("embedding"))).first()[0] or 0
+    bk = band_keys(emb, r, dim)
+    a, b = bk.alias("a"), bk.alias("b")
+    pairs = (
+        a.join(b, ["band", "key"])
+        .where(F.col("a.vec_id") < F.col("b.vec_id"))
+        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
+    )
+    if n <= ATTACH_BROADCAST_MAX_ROWS:
+        return _score_pairs_broadcast(pairs, ids, M, tau).dropDuplicates(
+            ["vec_a", "vec_b"]
+        )
+    return _score_pairs_join(pairs.dropDuplicates(["vec_a", "vec_b"]), emb, tau)

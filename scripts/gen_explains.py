@@ -21,9 +21,12 @@ HEAD = """# Physical plans of the headline gates (generated)
 `df.explain(formatted)` at sf0.01, local[8]/16 shuffle partitions — the
 plan shapes the 100 TB claims rest on: broadcast joins on dimension
 sides, partial aggregation before every exchange, filters/pruning at the
-scan, pairwise work confined to LSH/IVF buckets, no cartesian products,
-no driver-side collects in any gate path. Regenerate with
-scripts/gen_explains.py.
+scan, pairwise work confined to LSH/IVF buckets, no cartesian products.
+Driver-side collects happen only in the vector gates, and only of sets
+that are small by construction: `ann_ivf` (and `ann_topk`) collect their
+10-row query set, and `embedding_neardups_bucketed` collects the corpus
+when it has at most 200k rows, to broadcast it to the pair scorer.
+Regenerate with scripts/gen_explains.py.
 """
 
 

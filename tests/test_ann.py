@@ -1,6 +1,10 @@
-"""ANN: IVF bucketed search vs exact brute force — recall contract."""
+"""ANN: IVF bucketed search vs exact brute force — recall contract; the
+Arrow kernels of operators/ann.py against the JVM-expression references
+below and against the DuckDB oracles."""
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,21 +13,93 @@ from orthority_spark.operators.ann import (
     ann_bruteforce,
     ann_ivf,
     assign_buckets,
-    quantize,
     train_centroids,
 )
 
 SF = "/root/testdata/sf0.01"
 QUERY_IDS = list(range(10))
 
+# --- JVM-expression references for the kernels' quantise / dot / band key
+QUANT = "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))"
+# coalesce absorbs zip_with's NULL padding for mixed-length pairs —
+# sum over COMMON dims, the same convention as the SQL index equi-join
+_DOT = (
+    "aggregate(zip_with(a.qe, b.qe, (x, y) -> coalesce(x * y, "
+    "CAST(0 AS BIGINT))), CAST(0 AS BIGINT), (acc, v) -> acc + v)"
+)
+
+
+def _quantized(emb):
+    """(vec_id, qe, nn) by JVM expressions; a NULL element counts 0 in nn."""
+    return emb.select("vec_id", F.expr(QUANT).alias("qe")).withColumn(
+        "nn",
+        F.expr(
+            "aggregate(qe, CAST(0 AS BIGINT), "
+            "(acc, v) -> acc + coalesce(v * v, CAST(0 AS BIGINT)))"
+        ),
+    )
+
+
+def _band_keys_df_expr(qz, r: int, dim: int):
+    """(vec_id, band, key) of ``band_keys`` as map-side JVM expressions
+    against ONE shared sign-table column ``_S`` (array<array<int>>, planes
+    x dims, constant-folded to a single literal). The projection walks
+    each vector's OWN indices (sequence + element_at into the sign
+    table), so a shorter vector sums its present dims and NULL elements
+    count 0."""
+    from orthority_spark.operators.ann import LSH_BANDS, _lsh_sign
+
+    sign_rows = ", ".join(
+        "array(" + ", ".join(
+            str(_lsh_sign(j // r, j % r, i)) for i in range(1, dim + 1)
+        ) + ")"
+        for j in range(LSH_BANDS * r)
+    )
+    band_structs = []
+    for b in range(LSH_BANDS):
+        bits = []
+        for t in range(r):
+            j = b * r + t
+            d = (
+                f"aggregate(zip_with(qe, sequence(1, size(qe)), "
+                f"(v, i) -> coalesce(v * element_at(element_at(_S, {j + 1}), i), "
+                "CAST(0 AS BIGINT))), "
+                "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+            )
+            bits.append(f"(CASE WHEN {d} > 0 THEN CAST({1 << t} AS BIGINT) "
+                        "ELSE CAST(0 AS BIGINT) END)")
+        band_structs.append(
+            f"struct({b} AS band, ({' + '.join(bits)}) AS key)"
+        )
+    return qz.withColumn("_S", F.expr(f"array({sign_rows})")).select(
+        "vec_id",
+        F.explode(F.expr(f"array({', '.join(band_structs)})")).alias("bk"),
+    ).select("vec_id", "bk.band", "bk.key")
+
+
+def _keys(df):
+    return {(x.vec_id, x.band, x.key) for x in df.collect()}
+
+
+@contextmanager
+def _wrapping_bigint(spark):
+    """Non-ANSI BIGINT arithmetic: it wraps on overflow, as the kernels'
+    int64 numpy sums do, where ANSI mode raises."""
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
+
 
 @pytest.fixture(scope="module")
-def qz(spark):
-    return quantize(spark.read.parquet(f"{SF}/embeddings.parquet"))
+def emb(spark):
+    return spark.read.parquet(f"{SF}/embeddings.parquet")
 
 
-def test_bruteforce_topk_shape(spark, qz):
-    out = ann_bruteforce(qz, QUERY_IDS, k=5).collect()
+def test_bruteforce_topk_shape(spark, emb):
+    out = ann_bruteforce(emb, F.col("vec_id").isin(QUERY_IDS), k=5).collect()
     assert len(out) == 50
     per_q = {}
     for r in out:
@@ -31,25 +107,23 @@ def test_bruteforce_topk_shape(spark, qz):
     assert all(sorted(v) == [1, 2, 3, 4, 5] for v in per_q.values())
 
 
-def test_bucket_assignment_covers_all(spark, qz):
-    cents = train_centroids(qz, n_centroids=8)
-    b = assign_buckets(qz, cents, nprobe=1)
-    assert b.count() == qz.count()
+def test_bucket_assignment_covers_all(spark, emb):
+    cents = train_centroids(emb, n_centroids=8)
+    b = assign_buckets(emb, cents)
+    assert b.count() == emb.count()
     n_buckets = b.select("bucket").distinct().count()
     assert 2 <= n_buckets <= 8
-    b2 = assign_buckets(qz, cents, nprobe=2)
-    assert b2.count() == 2 * qz.count()
 
 
-def test_ivf_recall_vs_bruteforce(spark, qz):
-    cents = train_centroids(qz, n_centroids=8)
+def test_ivf_recall_vs_bruteforce(spark, emb):
+    cents = train_centroids(emb, n_centroids=8)
     exact = {
         (r.query_id, r.neighbor_id)
-        for r in ann_bruteforce(qz, QUERY_IDS, k=5).collect()
+        for r in ann_bruteforce(emb, F.col("vec_id").isin(QUERY_IDS), k=5).collect()
     }
     approx = {
         (r.query_id, r.neighbor_id)
-        for r in ann_ivf(qz, QUERY_IDS, cents, k=5, nprobe=4).collect()
+        for r in ann_ivf(emb, F.col("vec_id").isin(QUERY_IDS), cents, k=5, nprobe=4).collect()
     }
     recall = len(exact & approx) / len(exact)
     # random unclustered embeddings: nprobe=4 of 8 buckets should recover
@@ -64,7 +138,7 @@ def test_banded_lsh_bucket_count_is_data_driven():
     """r = bits/band grows with corpus size (2^r tracks N / TARGET_OCC) —
     the within-bucket self-join cost stays ~B * N * TARGET_OCC at any
     scale instead of collapsing to N^2 / constant."""
-    from orthority_spark.queries_vec import (
+    from orthority_spark.operators.ann import (
         LSH_RMAX, LSH_RMIN, LSH_TARGET_OCC, lsh_r_bits,
     )
 
@@ -91,18 +165,20 @@ def test_banded_lsh_bucket_count_is_data_driven():
 def _embedding_neardups_allpairs(spark, sf_dir):
     """Reference twin of the bucketed near-dup query: every pair with
     cosine >= NEARDUP_TAU from an all-pairs self-join (no LSH)."""
-    from orthority_spark.operators.ann import _DOT
-    from orthority_spark.queries_vec import NEARDUP_TAU, _quantized
+    from orthority_spark.queries_vec import NEARDUP_TAU
 
-    qz = _quantized(spark, sf_dir)
+    qz = _quantized(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
     a, b = qz.alias("a"), qz.alias("b")
     return (
         a.join(b, F.expr("a.vec_id < b.vec_id"))
         .withColumn("dot", F.expr(_DOT))
         .withColumn(
             "cosine",
-            F.col("dot")
-            / (F.sqrt(F.col("a.nn").cast("double")) * F.sqrt(F.col("b.nn").cast("double"))),
+            F.try_divide(
+                F.col("dot"),
+                F.sqrt(F.col("a.nn").cast("double"))
+                * F.sqrt(F.col("b.nn").cast("double")),
+            ),
         )
         .where(F.col("cosine") >= NEARDUP_TAU)
         .select(
@@ -113,20 +189,16 @@ def _embedding_neardups_allpairs(spark, sf_dir):
     )
 
 
-def test_banded_lsh_occupancy_and_recall(spark, qz):
+def test_banded_lsh_occupancy_and_recall(spark, emb):
     """Fixture contracts the VERDICT asked for: 16+ band buckets at
     sf0.01, max bucket occupancy bounded (x4 the expected N / 2^r), and
     recall vs the all-pairs scan retained."""
-    from pyspark.sql import functions as F  # noqa: F811
+    from orthority_spark.operators.ann import band_keys, lsh_r_bits
+    from orthority_spark.queries_vec import q_embedding_neardups_bucketed
 
-    from orthority_spark.queries_vec import (
-        _band_keys_df, lsh_r_bits, q_embedding_neardups_bucketed,
-    )
-
-    n = qz.count()
+    n = emb.count()
     r = lsh_r_bits(n)
-    bk = _band_keys_df(qz, r, 64)
-    occ = bk.groupBy("band", "key").count()
+    occ = band_keys(emb, r, 64).groupBy("band", "key").count()
     stats = occ.agg(
         F.count(F.lit(1)).alias("nb"), F.max("count").alias("mx")
     ).first()
@@ -156,21 +228,20 @@ def test_banded_lsh_occupancy_past_old_clamp(spark):
     under the clamped design. 2.2M synthetic near-isotropic vectors
     (JVM-side generation; pmod keeps the per-dim distribution symmetric
     — Spark's % would bias every dim negative and cluster the corpus),
-    real lsh_r_bits + _band_keys_df path at r=17. ~40 s at local[32]."""
-    from orthority_spark.queries_vec import _band_keys_df, lsh_r_bits
+    real lsh_r_bits + band_keys path at r=17. ~40 s at local[32]."""
+    from orthority_spark.operators.ann import band_keys, lsh_r_bits
 
     n, dim = 2_200_000, 32
     r = lsh_r_bits(n)
     assert r == 17 > 16, "fixture must sit past the old clamp"
-    qz = spark.range(n).select(
+    emb = spark.range(n).select(
         F.col("id").alias("vec_id"),
         F.expr(
             f"transform(sequence(1, {dim}), "
-            "i -> CAST(pmod(xxhash64(id, i), 2000001) - 1000000 AS BIGINT))"
-        ).alias("qe"),
-        F.lit(1).cast("bigint").alias("nn"),
+            "i -> (pmod(xxhash64(id, i), 2000001) - 1000000) / 1e6)"
+        ).alias("embedding"),
     )
-    occ = _band_keys_df(qz, r, dim).groupBy("band", "key").count()
+    occ = band_keys(emb, r, dim).groupBy("band", "key").count()
     stats = occ.agg(
         F.max("count").alias("mx"),
         F.count(F.lit(1)).alias("nb"),
@@ -197,7 +268,7 @@ def test_banded_lsh_strong_dup_recall_across_r():
     p ~ (1 - 0.69)^4 < 0.01."""
     import numpy as np
 
-    from orthority_spark.queries_vec import LSH_BANDS, _lsh_sign
+    from orthority_spark.operators.ann import LSH_BANDS, _lsh_sign
 
     rng = np.random.RandomState(7)
     n_pairs, dim = 400, 64
@@ -283,104 +354,72 @@ def test_banded_lsh_empty_corpus(spark, tmp_path):
     assert q_embedding_neardups_bucketed(spark, str(tmp_path)).count() == 0
 
 
-def test_kmeans_inertia_monotone_and_recall(spark):
+
+
+def test_kmeans_inertia_monotone_and_recall(spark, emb):
     """Distributed Lloyd's k-means: Euclidean inertia is monotone
     non-increasing across iterations, and the trained quantiser's IVF
     recall vs exact top-k is at least as good as the label-seed's."""
-    from orthority_spark.operators.ann import (
-        ann_bruteforce, ann_ivf, quantize, train_centroids,
-        train_centroids_kmeans,
-    )
+    from orthority_spark.operators.ann import train_centroids_kmeans
 
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    qz = quantize(emb).cache()
-    cents, inertia = train_centroids_kmeans(qz, n_centroids=8, n_iter=5)
+    emb = emb.cache()
+    cents, inertia = train_centroids_kmeans(emb, n_centroids=8, n_iter=5)
     assert len(inertia) == 5
     assert all(b <= a * (1 + 1e-12) for a, b in zip(inertia, inertia[1:]))
 
-    qids = [int(r.vec_id) for r in qz.select("vec_id").limit(5).collect()]
+    qids = [int(r.vec_id) for r in emb.select("vec_id").limit(5).collect()]
+    queries = F.col("vec_id").isin(qids)
     exact = {
         (r.query_id, r.neighbor_id)
-        for r in ann_bruteforce(qz, qids, k=5).collect()
+        for r in ann_bruteforce(emb, queries, k=5).collect()
     }
     got = {
         (r.query_id, r.neighbor_id)
-        for r in ann_ivf(qz, qids, cents, k=5, nprobe=2).collect()
+        for r in ann_ivf(emb, queries, cents, k=5, nprobe=2).collect()
     }
     recall = len(got & exact) / len(exact)
-    seed = train_centroids(qz, 8)
+    seed = train_centroids(emb, 8)
     got_seed = {
         (r.query_id, r.neighbor_id)
-        for r in ann_ivf(qz, qids, seed, k=5, nprobe=2).collect()
+        for r in ann_ivf(emb, queries, seed, k=5, nprobe=2).collect()
     }
     recall_seed = len(got_seed & exact) / len(exact)
     assert recall >= 0.5
     assert recall >= recall_seed - 0.2  # k-means never collapses recall
-    qz.unpersist()
+    emb.unpersist()
 
 
-def test_band_keys_numpy_equals_expr_on_ragged_nulls(spark):
-    """r6: the numpy mapInPandas band-key path must reproduce the JVM
-    expression twin bit-for-bit — including ragged vector lengths and
-    NULL elements (both count absent dims as 0)."""
-    from orthority_spark.queries_vec import (
-        _band_keys_df, _band_keys_df_expr, _quantized,
-    )
+def test_band_keys_numpy_equals_expr_on_ragged_nulls(spark, emb):
+    """The numpy band-key kernel must reproduce the JVM expression
+    reference bit-for-bit — on the fixture and on ragged vector lengths,
+    NULL elements and an empty vector (both count absent dims as 0)."""
+    from orthority_spark.operators.ann import band_keys
 
-    qz = _quantized(spark, SF)
     r, dim = 7, 64
-    fast = {
-        (x.vec_id, x.band, x.key)
-        for x in _band_keys_df(qz, r, dim).select("vec_id", "band", "key").collect()
-    }
-    slow = {
-        (x.vec_id, x.band, x.key)
-        for x in _band_keys_df_expr(qz, r, dim).select("vec_id", "band", "key").collect()
-    }
-    assert fast == slow and len(fast) == 4 * qz.count()
+    fast = _keys(band_keys(emb, r, dim))
+    slow = _keys(_band_keys_df_expr(_quantized(emb), r, dim))
+    assert fast == slow and len(fast) == 4 * emb.count()
 
     ragged = spark.createDataFrame(
         [
-            (1, [1000000, -2000000, 3000000], 14000000000000),
-            (2, [500000, None, -700000], 740000000000),
-            (3, [], 0),
-            (4, [7, 8, 9, 10, 11, 12], 599),
+            (1, [1.0, -2.0, 3.0]),
+            (2, [0.5, None, -0.7]),
+            (3, []),
+            (4, [7e-6, 8e-6, 9e-6, 1e-5, 1.1e-5, 1.2e-5]),
         ],
-        "vec_id bigint, qe array<bigint>, nn bigint",
+        "vec_id bigint, embedding array<float>",
     )
-    f2 = {
-        (x.vec_id, x.band, x.key)
-        for x in _band_keys_df(ragged, 5, 6).select("vec_id", "band", "key").collect()
-    }
-    s2 = {
-        (x.vec_id, x.band, x.key)
-        for x in _band_keys_df_expr(ragged, 5, 6).select("vec_id", "band", "key").collect()
-    }
+    f2 = _keys(band_keys(ragged, 5, 6))
+    s2 = _keys(_band_keys_df_expr(_quantized(ragged), 5, 6))
     assert f2 == s2 and len(f2) == 16
 
 
 def test_band_keys_raw_equals_quantized_path(spark):
-    """r6 pass 2: the raw-float mapInArrow band-key path (quantisation
-    fused into the kernel) must reproduce the qe-based numpy path
-    bit-for-bit — on the fixture AND on ragged/NULL float vectors (the
-    in-kernel floor(x * 1e6) must match the ann.QUANT expression), and on
-    non-finite / out-of-range floats, which Spark's BIGINT cast maps
-    NaN -> 0 and saturates at the int64 ends."""
-    from orthority_spark.queries_vec import (
-        _band_keys_df, _band_keys_raw, _quantized,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    r, dim = 7, 64
-    raw = {
-        (x.vec_id, x.band, x.key)
-        for x in _band_keys_raw(emb, r, dim).collect()
-    }
-    via_qe = {
-        (x.vec_id, x.band, x.key)
-        for x in _band_keys_df(_quantized(spark, SF), r, dim).collect()
-    }
-    assert raw == via_qe and len(raw) == 4 * emb.count()
+    """The in-kernel floor(x * 1e6) must match the QUANT expression on
+    ragged/NULL float vectors and on non-finite / out-of-range floats,
+    which Spark's BIGINT cast maps NaN -> 0 and saturates at the int64
+    ends; the saturated projections then wrap in both engines."""
+    from orthority_spark.operators.ann import band_keys
 
     ragged = spark.createDataFrame(
         [
@@ -395,33 +434,24 @@ def test_band_keys_raw_equals_quantized_path(spark):
         ],
         "vec_id bigint, embedding array<float>",
     )
-    from pyspark.sql import functions as F
-
-    from orthority_spark.operators.ann import QUANT
-
-    ragged_qe = ragged.select("vec_id", F.expr(QUANT).alias("qe"))
-    f2 = {
-        (x.vec_id, x.band, x.key)
-        for x in _band_keys_raw(ragged, 5, 6).collect()
-    }
-    s2 = {
-        (x.vec_id, x.band, x.key)
-        for x in _band_keys_df(ragged_qe, 5, 6).collect()
-    }
+    f2 = _keys(band_keys(ragged, 5, 6))
+    with _wrapping_bigint(spark):
+        s2 = _keys(_band_keys_df_expr(_quantized(ragged), 5, 6))
     assert f2 == s2 and len(f2) == 32
 
 
 def test_score_pairs_broadcast_equals_join_fallback(spark, monkeypatch):
-    """r6 pass 2: the broadcast-matrix mapInArrow pair scorer must give
-    the exact rows of the join + pair_dot fallback (same pairs, same
-    float64 cosines) — forced by shrinking the attach guard to 0."""
+    """The broadcast-matrix pair scorer must give the exact rows of the
+    join-attach fallback (same pairs, same float64 cosines) — forced by
+    shrinking the attach guard to 0."""
+    import orthority_spark.operators.ann as ann
     import orthority_spark.queries_vec as qv
 
     fast = {
         (x.vec_a, x.vec_b, x.cosine)
         for x in qv.q_embedding_neardups_bucketed(spark, SF).collect()
     }
-    monkeypatch.setattr(qv, "ATTACH_BROADCAST_MAX_ROWS", 0)
+    monkeypatch.setattr(ann, "ATTACH_BROADCAST_MAX_ROWS", 0)
     slow = {
         (x.vec_a, x.vec_b, x.cosine)
         for x in qv.q_embedding_neardups_bucketed(spark, SF).collect()
@@ -435,76 +465,138 @@ def test_score_pairs_broadcast_rejects_pair_id_missing_from_corpus(spark):
     import numpy as np
     from pyspark.errors import PythonException
 
-    from orthority_spark.queries_vec import _score_pairs_broadcast
+    from orthority_spark.operators.ann import _score_pairs_broadcast
 
     ids = np.array([10, 20, 30], dtype=np.int64)
     M = np.array([[1, 0], [0, 1], [1, 1]], dtype=np.int64)
     ok = spark.createDataFrame([(10, 30)], "vec_a bigint, vec_b bigint")
-    got = _score_pairs_broadcast(ok, ids, M).collect()
+    got = _score_pairs_broadcast(ok, ids, M, 0.35).collect()
     assert [(r.vec_a, r.vec_b) for r in got] == [(10, 30)]
     for pair in [(10, 25), (5, 20), (10, 99)]:
         bad = spark.createDataFrame([pair], "vec_a bigint, vec_b bigint")
         with pytest.raises(PythonException, match="pair ids not in the corpus"):
-            _score_pairs_broadcast(bad, ids, M).collect()
+            _score_pairs_broadcast(bad, ids, M, 0.35).collect()
 
 
-def test_pair_dot_equals_jvm_fold_on_ragged_nulls(spark):
-    """r6: the Arrow-vectorized pair dot must equal the _DOT zip_with
-    fold bit-for-bit, including ragged lengths and NULL elements (both
-    count absent/NULL dims as 0)."""
-    from pyspark.sql import functions as F
-
-    from orthority_spark.operators.ann import _DOT, pair_dot
+def test_pair_scorers_equal_jvm_fold_on_ragged_nulls(spark):
+    """Both near-dup pair scorers (broadcast matrix and join attach) must
+    give the _DOT-fold cosine bit-for-bit, including ragged lengths and
+    NULL elements (both count absent/NULL dims as 0); a zero-norm or NULL
+    side scores NULL and never passes the threshold."""
+    from orthority_spark.operators.ann import (
+        _score_pairs_broadcast, _score_pairs_join, collect_matrix,
+    )
 
     rows = [
-        (1, [1000000, -2000000, 3000000], [400000, 500000, -600000]),
-        (2, [500000, None, -700000], [100000, 200000, 300000, 400000]),
-        (3, [], [7, 8]),
-        (4, [2, 3], None),
-        (5, [7000000] * 64, [-7000000] * 64),
+        (1, [1.0, -2.0, 3.0], [0.4, 0.5, -0.6]),
+        (2, [0.5, None, -0.7], [0.1, 0.2, 0.3, 0.4]),
+        (3, [], [7e-6, 8e-6]),
+        (4, [2e-6, 3e-6], None),
+        (5, [7.0] * 64, [-7.0] * 64),
+        (6, [0.0, 0.0], [1.0, 2.0]),
     ]
-    df = spark.createDataFrame(
-        rows, "pid bigint, x array<bigint>, y array<bigint>"
+    emb = spark.createDataFrame(
+        [(p, x) for p, x, _ in rows] + [(p + 100, y) for p, _, y in rows],
+        "vec_id bigint, embedding array<float>",
     )
-    ab = df.select(
-        "pid",
-        F.struct(F.col("x").alias("qe")).alias("a"),
-        F.struct(F.col("y").alias("qe")).alias("b"),
+    pairs = spark.createDataFrame(
+        [(p, p + 100) for p, _, _ in rows], "vec_a bigint, vec_b bigint"
     )
-    jvm = {r.pid: r.d for r in ab.select("pid", F.expr(_DOT).alias("d")).collect()}
-    py = {
-        r.pid: r.d
-        for r in df.select("pid", pair_dot()(F.col("x"), F.col("y")).alias("d")).collect()
+    tau = -2.0  # every non-NULL cosine survives
+    qz = _quantized(emb)
+    ref = {
+        (r.vec_a, r.vec_b): r.cosine
+        for r in pairs.join(qz.alias("a"), F.col("vec_a") == F.col("a.vec_id"))
+        .join(qz.alias("b"), F.col("vec_b") == F.col("b.vec_id"))
+        .select(
+            "vec_a", "vec_b",
+            F.try_divide(F.expr(_DOT), F.sqrt("a.nn") * F.sqrt("b.nn")).alias(
+                "cosine"
+            ),
+        )
+        .where(F.col("cosine") >= tau)
+        .collect()
     }
-    # _DOT yields NULL when one side is NULL; pair_dot 0 — normalise the
-    # NULL-array case (no caller scores NULL-qe rows: quantize never
-    # produces them and the attach join is on non-null corpus rows)
-    jvm = {k: (0 if v is None else v) for k, v in jvm.items()}
-    assert jvm == py
+    assert set(ref) == {(1, 101), (2, 102), (5, 105)}
+    ids, M, _ = collect_matrix(emb)
+    for scored in (
+        _score_pairs_broadcast(pairs, ids, M, tau),
+        _score_pairs_join(pairs, emb, tau),
+    ):
+        assert {(r.vec_a, r.vec_b): r.cosine for r in scored.collect()} == ref
 
 
-def test_assign_buckets_numpy_equals_expr(spark, qz):
-    """r6: the nprobe=1 numpy assignment must equal the expression form
-    (forced via nprobe=2 head... rather: via the sort path on the same
-    integer-exact centroids the IVF gate uses) bucket-for-bucket."""
+def test_assign_buckets_numpy_equals_expr(spark, emb):
+    """``assign_buckets`` must give every vector its nearest centroid by
+    the dot identity argmax (c.x - ||c||^2 / 2), ties to the higher
+    bucket, computed here in Python over the QUANT-quantised vectors and
+    the integer centroids the IVF gate uses."""
+    import numpy as np
+
     from orthority_spark.queries_vec import _fixed_centroids
 
-    cents = _fixed_centroids()
-    fast = {r.vec_id: r.bucket for r in assign_buckets(qz, cents, nprobe=1).collect()}
-    # nprobe=2 sort path's FIRST bucket == the argmax bucket
+    C = _fixed_centroids()
+    fast = {r.vec_id: r.bucket for r in assign_buckets(emb, C).collect()}
     slow = {}
-    from pyspark.sql import Window, functions as F
-    b2 = assign_buckets(qz, cents, nprobe=2)
-    # rows come back in probe order per vec? No ordering guarantee from
-    # explode — recompute rank by score is overkill; instead compare to
-    # greatest()-style reduction in pure python on collected qe
-    import numpy as np
-    rows = qz.collect()
-    C = np.asarray(cents)
-    for r in rows:
+    for r in _quantized(emb).collect():
         qe = np.array([0 if x is None else x for x in (r.qe or [])], dtype="int64")
         d = min(len(qe), C.shape[1])
         s = (qe[:d].astype("float64") @ C[:, :d].T) - 0.5 * (C * C).sum(axis=1)
-        best = max(range(C.shape[0]), key=lambda k: (s[k], k))
-        slow[r.vec_id] = best
-    assert fast == slow
+        slow[r.vec_id] = max(range(C.shape[0]), key=lambda k: (s[k], k))
+    assert fast == slow and len(fast) == emb.count()
+
+
+def test_vector_gates_match_oracle_on_zero_and_null_vectors(spark, tmp_path):
+    """All-zero and NULL/empty embeddings: a zero norm makes the cosine
+    0/0, which DuckDB and Spark SQL return as NULL (ranked last, never
+    >= tau), not NaN (ranked above every double). Each vector gate must
+    equal its oracle on a corpus with a zero query, a zero neighbour and
+    rows with no components at all."""
+    import duckdb
+    import numpy as np
+    import pandas as pd
+
+    from orthority_spark.queries_vec import QUERIES as GATES
+
+    rng = np.random.RandomState(11)
+    vecs = {i: rng.normal(size=16).astype("float32").tolist() for i in range(60)}
+    vecs[4] = vecs[60] = [0.0] * 16  # a zero query and a zero neighbour
+    vecs[6] = vecs[61] = None  # NULL embeddings, one of them a query
+    vecs[62] = []
+    pdf = pd.DataFrame(
+        [(i, i % 5, v) for i, v in vecs.items()],
+        columns=["vec_id", "label", "embedding"],
+    )
+    path = str(tmp_path / "embeddings.parquet")
+    spark.createDataFrame(
+        pdf, "vec_id bigint, label int, embedding array<float>"
+    ).coalesce(1).write.mode("overwrite").parquet(path)
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{path}/*.parquet'")
+    for name, (q, oracle) in GATES.items():
+        df = q(spark, str(tmp_path))
+        assert df.where(F.isnan("cosine")).count() == 0, name
+        got, exp = df.toPandas(), con.sql(oracle()).df()
+        cols = sorted(got.columns)
+        g = got[cols].sort_values(cols).reset_index(drop=True)
+        x = exp[cols].sort_values(cols).reset_index(drop=True)
+        assert len(g) > 0 and g.shape == x.shape, (name, g.shape, x.shape)
+        assert (g.astype(str).values == x.astype(str).values).all(), name
+
+
+def test_vector_gates_hold_no_kernels():
+    """queries_vec.py holds only gate wiring and oracles: every vector
+    kernel lives in operators/ann.py, which carries no JVM fold or
+    pandas boundary."""
+    import inspect
+
+    import orthority_spark.operators.ann as ann
+    import orthority_spark.queries_vec as qv
+
+    src = inspect.getsource(qv)
+    for word in ("mapInArrow", "mapInPandas", "pandas_udf", ".broadcast("):
+        assert word not in src, word
+    for mod in (ann, qv):
+        src = inspect.getsource(mod)
+        for word in ("_DOT", "QUANT", "pandas_udf", "mapInPandas"):
+            assert word not in src, (mod.__name__, word)

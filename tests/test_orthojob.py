@@ -1,21 +1,9 @@
-"""OrthoJob user-facing builder: process/resume/tiles/metrics; bucketed
-embedding near-dup recall contract."""
+"""OrthoJob user-facing builder: process/resume/tiles/metrics."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-from orthority_spark.functions.geotag import with_geotag
-from orthority_spark.operators.ann import (
-    embedding_neardups_lsh,
-    quantize,
-    train_centroids,
-)
 from orthority_spark.plans.job import OrthoJob
 from orthority_spark.sources.pages import synthetic_pages
-
-SF = "/root/testdata/sf0.01"
 
 
 def test_orthojob_process_and_resume(spark, tmp_path):
@@ -45,28 +33,3 @@ def test_orthojob_salted_strategy_same_tiles(spark):
     t_s = {r.cell: (r.n_rows, r.checksum)
            for r in OrthoJob(spark, strategy="salted").tiles(pages).collect()}
     assert t_b == t_s and len(t_b) > 50
-
-
-def test_embedding_neardups_lsh_recall(spark):
-    qz = quantize(spark.read.parquet(f"{SF}/embeddings.parquet"))
-    cents = train_centroids(qz, n_centroids=8)
-    tau = 0.3
-    bucketed = {(r.vec_a, r.vec_b)
-                for r in embedding_neardups_lsh(qz, cents, tau).collect()}
-    # all-pairs oracle
-    a, b = qz.alias("a"), qz.alias("b")
-    allpairs = (
-        a.join(b, F.expr("a.vec_id < b.vec_id"))
-        .withColumn("dot", F.expr(
-            "aggregate(zip_with(a.qe, b.qe, (x, y) -> x * y), CAST(0 AS BIGINT),"
-            " (acc, v) -> acc + v)"))
-        .withColumn("cosine", F.col("dot") / (
-            F.sqrt(F.col("a.nn").cast("double")) * F.sqrt(F.col("b.nn").cast("double"))))
-        .where(F.col("cosine") >= tau)
-        .select(F.col("a.vec_id").alias("va"), F.col("b.vec_id").alias("vb"))
-    )
-    exact = {(r.va, r.vb) for r in allpairs.collect()}
-    assert bucketed <= exact  # no false positives (exact verify inside)
-    if exact:
-        recall = len(bucketed) / len(exact)
-        assert recall >= 0.3, (recall, len(exact))

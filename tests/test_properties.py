@@ -192,7 +192,7 @@ def test_lsh_r_bits_tracks_target_occupancy(n):
     """2^r stays within a factor 2 of N / TARGET_OCC inside the clamp
     band — the invariant that bounds bucket occupancy at ANY corpus
     size (the round-4 scale fix for embedding near-dup)."""
-    from orthority_spark.queries_vec import (
+    from orthority_spark.operators.ann import (
         LSH_RMAX, LSH_RMIN, LSH_TARGET_OCC, lsh_r_bits,
     )
 
