@@ -5,8 +5,9 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
 value-hash -> CORRECTNESS_r{N}.json).
 
-All real logic lives in the ``orthority_spark`` package; this module only
-adapts it to the driver contract.
+The gates live in the top-level ``gates`` package and compose the
+``orthority_spark`` engine's operators; this module only exposes them as
+``entry``/``queries``/``oracle_sql``.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from orthority_spark import registry  # noqa: E402
+from gates import registry  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -27,9 +28,9 @@ def entry(spark: SparkSession) -> DataFrame:
     broadcast PIP join -> per-tile checksums."""
     from pyspark.sql import functions as F
 
+    from gates.queries_geo import pages_cells, q_pip_join
     from orthority_spark.functions import checksum
     from orthority_spark.pyfiles import ensure_on_executors
-    from orthority_spark.queries_geo import pages_cells, q_pip_join
 
     ensure_on_executors(spark)
 

@@ -9,11 +9,13 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .oracle import dlit
-from .queries_geo import pages_cte, pages_cells
+from orthority_spark.oracle import dlit
+from orthority_spark.sources import footprints as fp
+from orthority_spark.sources.demo_raster import SRC_H, SRC_W, TRANSFORM, src_array
+from orthority_spark.sources.local import local_table
+
+from .queries_geo import pages_cells, pages_cte, pinhole_sql
 from .queries_rel import _CENTS
-from .sources import footprints as fp
-from .sources.local import local_table
 
 
 # ---------------------------------------------------------------------------
@@ -42,7 +44,7 @@ FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)"""
 def q_dem_tile_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raster<->vector key derivation: owning DEM tile per page (the
     equi-key that makes the raster join shuffle-free)."""
-    from .sources.dem_tiles import dem_transform, TILE
+    from orthority_spark.sources.dem_tiles import dem_transform, TILE
 
     a, _, c, _, e, f0 = dem_transform(18000.0, 31500.0)
     pc = pages_cells(spark, sf_dir)
@@ -59,7 +61,7 @@ def q_dem_tile_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_dem_tile_assign() -> str:
-    from .sources.dem_tiles import dem_transform, TILE
+    from orthority_spark.sources.dem_tiles import dem_transform, TILE
 
     a, _, c, _, e, f0 = dem_transform(18000.0, 31500.0)
     col = f"CAST(FLOOR((px - {dlit(c)}) / {dlit(a)}) AS BIGINT)"
@@ -75,21 +77,19 @@ FROM cells"""
 # remap (J6/W2/W3) — oracle-gated per-pixel variants
 # ---------------------------------------------------------------------------
 
-# ortho grid + source-image parameters shared by the Spark kernel and the
-# SQL oracle (src values are an exact integer-rational formula — no RNG)
+# ortho grid rendered from the demo source image (sources/demo_raster.py);
+# _rm_src_sql is that image's exact integer-rational formula as SQL
 _RM_W, _RM_H = 96, 80
-_RM_SRC_H, _RM_SRC_W = 150, 200
-_RM_TRANSFORM = (2.0, 0.0, 19900.0, 0.0, -2.0, 30080.0)
 
 
-def _rm_src_array() -> np.ndarray:
-    i, j = np.indices((_RM_SRC_H, _RM_SRC_W))
-    return ((i + j) % 2) * 100.0 + ((i * 37 + j * 91) % 1000) / 1000.0
+def _rm_remap(spark: SparkSession, interp: str) -> DataFrame:
+    """Tiled remap of the demo source through img_0000 over the plane
+    DEM, exploded to valid pixels. ``proj`` pins an explicit
+    left-to-right float op order the SQL oracle mirrors (np matmul's
+    summation order is not a contract)."""
+    from orthority_spark.geom.dem import dem_plane
+    from orthority_spark.operators.remap import remap_tiles, tile_windows
 
-
-def _rm_proj_fn():
-    """(model, proj) with an explicit left-to-right float op order the SQL
-    oracle mirrors (np matmul's summation order is not a contract)."""
     model = fp.fixture_models()["img_0000"]
     R, T, K = model.R, model.T, model.K
 
@@ -104,7 +104,11 @@ def _rm_proj_fn():
         ii = K[1, 1] * (cy / cz) + K[1, 2]
         return jj, ii
 
-    return model, proj
+    tiles = tile_windows(spark, _RM_W, _RM_H, tile=64)
+    return _rm_pixels_df(remap_tiles(
+        tiles, model, src_array(), TRANSFORM, dem_plane,
+        interp=interp, dilate=1, project_fn=proj,
+    ))
 
 
 def _rm_src_sql(i: str, j: str) -> str:
@@ -114,38 +118,68 @@ def _rm_src_sql(i: str, j: str) -> str:
     )
 
 
+# the floor cell of each projected pixel, and the remap oracles' shared
+# tail: drop every pixel within 1 px of an invalid one (dilate=1)
+_RM_ST = """st AS (
+  SELECT r, c, jj, ii,
+         CAST(FLOOR(jj) AS BIGINT) AS j0, CAST(FLOOR(ii) AS BIGINT) AS i0
+  FROM prj
+)"""
+_RM_DILATED = """, inv AS (
+  SELECT r, c FROM vals WHERE NOT valid
+)
+SELECT CAST(vals.r AS INTEGER) AS r, CAST(vals.c AS INTEGER) AS c, v
+FROM vals
+WHERE NOT EXISTS (
+  SELECT 1 FROM inv
+  WHERE abs(inv.r - vals.r) <= 1 AND abs(inv.c - vals.c) <= 1
+)"""
+
+
+def _rm_bilinear_sql() -> str:
+    """``, bl ... vals`` CTEs + the dilated select over ``st``: the
+    bilinear gather both bilinear oracles share."""
+    sw, sh = SRC_W, SRC_H
+    s00 = _rm_src_sql("i0c", "j0c")
+    s01 = _rm_src_sql("i0c", "j0c + 1")
+    s10 = _rm_src_sql("i0c + 1", "j0c")
+    s11 = _rm_src_sql("i0c + 1", "j0c + 1")
+    return f""", bl AS (
+  SELECT r, c,
+         (j0 >= 0 AND i0 >= 0 AND j0 < {sw - 1} AND i0 < {sh - 1}) AS valid,
+         LEAST(GREATEST(j0, 0), {sw - 2}) AS j0c,
+         LEAST(GREATEST(i0, 0), {sh - 2}) AS i0c,
+         jj, ii
+  FROM st
+), vals AS (
+  SELECT r, c, valid,
+         {s00} * (1 - (ii - i0c)) * (1 - (jj - j0c))
+       + {s01} * (1 - (ii - i0c)) * (jj - j0c)
+       + {s10} * (ii - i0c) * (1 - (jj - j0c))
+       + {s11} * (ii - i0c) * (jj - j0c) AS v
+  FROM bl
+){_RM_DILATED}"""
+
+
 def _rm_prj_cte() -> str:
     """WITH-prefix CTEs projecting every ortho output pixel to source
     (jj, ii) + floor cell (j0, i0) — shared by the bilinear and cubic
-    remap oracles; mirrors ``_rm_proj_fn`` term-for-term."""
-    m = fp.fixture_models()["img_0000"]
-    R, T, K = m.R, m.T, m.K
-    a, b, c0, d, e, f0 = _RM_TRANSFORM
+    remap oracles; mirrors ``_rm_remap``'s ``proj`` term-for-term."""
+    a, b, c0, d, e, f0 = TRANSFORM
     x = f"({dlit(a)} * (c + 0.5) + {dlit(b)} * (r + 0.5) + {dlit(c0)})"
     y = f"({dlit(d)} * (c + 0.5) + {dlit(e)} * (r + 0.5) + {dlit(f0)})"
-    z = dlit(825.0)
-    xr = f"({x} - {dlit(T[0, 0])})"
-    yr = f"({y} - {dlit(T[1, 0])})"
-    zr = f"({z} - {dlit(T[2, 0])})"
-    cx = f"({dlit(R[0, 0])} * {xr} + {dlit(R[1, 0])} * {yr} + {dlit(R[2, 0])} * {zr})"
-    cy = f"({dlit(R[0, 1])} * {xr} + {dlit(R[1, 1])} * {yr} + {dlit(R[2, 1])} * {zr})"
-    cz = f"({dlit(R[0, 2])} * {xr} + {dlit(R[1, 2])} * {yr} + {dlit(R[2, 2])} * {zr})"
-    jj = f"({dlit(K[0, 0])} * ({cx} / {cz}) + {dlit(K[0, 2])})"
-    ii = f"({dlit(K[1, 1])} * ({cy} / {cz}) + {dlit(K[1, 2])})"
+    jj, ii = (f"({v})" for v in pinhole_sql(
+        fp.fixture_models()["img_0000"], x, y, dlit(825.0)))
     return f"""
 WITH px AS (
   SELECT rr.range AS r, cc.range AS c FROM range({_RM_H}) rr, range({_RM_W}) cc
 ), prj AS (
   SELECT r, c, {jj} AS jj, {ii} AS ii FROM px
-), st AS (
-  SELECT r, c, jj, ii,
-         CAST(FLOOR(jj) AS BIGINT) AS j0, CAST(FLOOR(ii) AS BIGINT) AS i0
-  FROM prj
-)"""
+), {_RM_ST}"""
 
 
-def _rm_pixels_df(out: DataFrame) -> DataFrame:
-    w0 = F.least(F.lit(64), F.lit(_RM_W) - F.col("col_off"))
+def _rm_pixels_df(out: DataFrame, width: int = _RM_W) -> DataFrame:
+    w0 = F.least(F.lit(64), F.lit(width) - F.col("col_off"))
     return (
         out.select("row_off", "col_off", F.posexplode("block").alias("idx", "v"))
         .select(
@@ -165,48 +199,11 @@ def q_remap_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection -> bilinear gather -> dilated nodata mask) compared
     per-pixel against a DuckDB twin. The tiled halo rendering is what is
     under test."""
-    from .geom.dem import dem_plane
-    from .operators.remap import remap_tiles, tile_windows
-
-    model, proj = _rm_proj_fn()
-    src = _rm_src_array()
-    tiles = tile_windows(spark, _RM_W, _RM_H, tile=64)
-    out = remap_tiles(
-        tiles, model, src, _RM_TRANSFORM, dem_plane, dilate=1, project_fn=proj
-    )
-    return _rm_pixels_df(out)
+    return _rm_remap(spark, "bilinear")
 
 
 def o_remap_pixels() -> str:
-    sw, sh = _RM_SRC_W, _RM_SRC_H
-    src_sql = _rm_src_sql
-    s00 = src_sql("i0c", "j0c")
-    s01 = src_sql("i0c", "j0c + 1")
-    s10 = src_sql("i0c + 1", "j0c")
-    s11 = src_sql("i0c + 1", "j0c + 1")
-    return f"""{_rm_prj_cte()}, bl AS (
-  SELECT r, c,
-         (j0 >= 0 AND i0 >= 0 AND j0 < {sw - 1} AND i0 < {sh - 1}) AS valid,
-         LEAST(GREATEST(j0, 0), {sw - 2}) AS j0c,
-         LEAST(GREATEST(i0, 0), {sh - 2}) AS i0c,
-         jj, ii
-  FROM st
-), vals AS (
-  SELECT r, c, valid,
-         {s00} * (1 - (ii - i0c)) * (1 - (jj - j0c))
-       + {s01} * (1 - (ii - i0c)) * (jj - j0c)
-       + {s10} * (ii - i0c) * (1 - (jj - j0c))
-       + {s11} * (ii - i0c) * (jj - j0c) AS v
-  FROM bl
-), inv AS (
-  SELECT r, c FROM vals WHERE NOT valid
-)
-SELECT CAST(vals.r AS INTEGER) AS r, CAST(vals.c AS INTEGER) AS c, v
-FROM vals
-WHERE NOT EXISTS (
-  SELECT 1 FROM inv
-  WHERE abs(inv.r - vals.r) <= 1 AND abs(inv.c - vals.c) <= 1
-)"""
+    return _rm_prj_cte() + _rm_bilinear_sql()
 
 
 def q_remap_pixels_cubic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -216,21 +213,11 @@ def q_remap_pixels_cubic(spark: SparkSession, sf_dir: str) -> DataFrame:
     output pixel exactly like the bilinear twin. The 4x4 stencil reads
     the broadcast source image, so tiling needs no wider halo; the
     dilated nodata mask still uses the 1-px apron."""
-    from .geom.dem import dem_plane
-    from .operators.remap import remap_tiles, tile_windows
-
-    model, proj = _rm_proj_fn()
-    src = _rm_src_array()
-    tiles = tile_windows(spark, _RM_W, _RM_H, tile=64)
-    out = remap_tiles(
-        tiles, model, src, _RM_TRANSFORM, dem_plane,
-        interp="cubic", dilate=1, project_fn=proj,
-    )
-    return _rm_pixels_df(out)
+    return _rm_remap(spark, "cubic")
 
 
 def o_remap_pixels_cubic() -> str:
-    sw, sh = _RM_SRC_W, _RM_SRC_H
+    sw, sh = SRC_W, SRC_H
     A, A2, A3 = dlit(-0.75), dlit(1.25), dlit(2.25)
 
     def w_sql(f: str) -> list[str]:
@@ -274,15 +261,7 @@ def o_remap_pixels_cubic() -> str:
   SELECT r, c, valid,
          {v} AS v
   FROM wt
-), inv AS (
-  SELECT r, c FROM vals WHERE NOT valid
-)
-SELECT CAST(vals.r AS INTEGER) AS r, CAST(vals.c AS INTEGER) AS c, v
-FROM vals
-WHERE NOT EXISTS (
-  SELECT 1 FROM inv
-  WHERE abs(inv.r - vals.r) <= 1 AND abs(inv.c - vals.c) <= 1
-)"""
+){_RM_DILATED}"""
 
 
 def q_undistort_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -291,11 +270,10 @@ def q_undistort_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     through K, apply the CLOSED-FORM brown forward distortion, re-project
     through K and bilinear-gather the source — the same tiled remap
     machinery, with the mapping in pixel space instead of world space."""
-    from .operators.remap import remap_tiles, tile_windows
+    from orthority_spark.operators.remap import remap_tiles, tile_windows
 
     m = fp.fixture_models()["img_0001"]  # brown
     K, dist = m.K, m.dist
-    src = _rm_src_array()
     w, h = m.im_size
 
     def proj(x, y, z):
@@ -315,43 +293,22 @@ def q_undistort_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     transform = (1.0, 0.0, -0.5, 0.0, 1.0, -0.5)
     tiles = tile_windows(spark, w, h, tile=64)
     out = remap_tiles(
-        tiles, m, src, transform, lambda x, y: np.zeros_like(x),
+        tiles, m, src_array(), transform, lambda x, y: np.zeros_like(x),
         dilate=1, project_fn=proj,
     )
-    w0 = F.least(F.lit(64), F.lit(w) - F.col("col_off"))
-    return (
-        out.select("row_off", "col_off", F.posexplode("block").alias("idx", "v"))
-        .select(
-            (F.col("row_off") + F.floor(F.col("idx") / w0)).cast("int").alias("r"),
-            (F.col("col_off") + F.col("idx") % w0).cast("int").alias("c"),
-            "v",
-        )
-        .where(F.col("v").isNotNull() & ~F.isnan("v"))
-    )
+    return _rm_pixels_df(out, w)
 
 
 def o_undistort_pixels() -> str:
     m = fp.fixture_models()["img_0001"]
     K, dist = m.K, m.dist
     w, h = m.im_size
-    sw, sh = _RM_SRC_W, _RM_SRC_H
-
-    def src_sql(i: str, j: str) -> str:
-        return (
-            f"(CAST((({i}) + ({j})) % 2 AS DOUBLE) * 100.0 "
-            f"+ CAST((({i}) * 37 + ({j}) * 91) % 1000 AS DOUBLE) / 1000.0)"
-        )
-
     x = f"(1.0 * (c + 0.5) + 0.0 * (r + 0.5) + {dlit(-0.5)})"
     y = f"(0.0 * (c + 0.5) + 1.0 * (r + 0.5) + {dlit(-0.5)})"
     xu = f"(({x} - {dlit(K[0, 2])}) / {dlit(K[0, 0])})"
     yu = f"(({y} - {dlit(K[1, 2])}) / {dlit(K[1, 1])})"
     k1, k2, k3 = dlit(dist["k1"]), dlit(dist["k2"]), dlit(dist["k3"])
     p1, p2 = dlit(dist["p1"]), dlit(dist["p2"])
-    s00 = src_sql("i0c", "j0c")
-    s01 = src_sql("i0c", "j0c + 1")
-    s10 = src_sql("i0c + 1", "j0c")
-    s11 = src_sql("i0c + 1", "j0c + 1")
     return f"""
 WITH px AS (
   SELECT rr.range AS r, cc.range AS c FROM range({h}) rr, range({w}) cc
@@ -372,33 +329,7 @@ WITH px AS (
   SELECT r, c, {dlit(K[0, 0])} * xd + {dlit(K[0, 2])} AS jj,
          {dlit(K[1, 1])} * yd + {dlit(K[1, 2])} AS ii
   FROM dst
-), st AS (
-  SELECT r, c, jj, ii,
-         CAST(FLOOR(jj) AS BIGINT) AS j0, CAST(FLOOR(ii) AS BIGINT) AS i0
-  FROM prj
-), bl AS (
-  SELECT r, c,
-         (j0 >= 0 AND i0 >= 0 AND j0 < {sw - 1} AND i0 < {sh - 1}) AS valid,
-         LEAST(GREATEST(j0, 0), {sw - 2}) AS j0c,
-         LEAST(GREATEST(i0, 0), {sh - 2}) AS i0c,
-         jj, ii
-  FROM st
-), vals AS (
-  SELECT r, c, valid,
-         {s00} * (1 - (ii - i0c)) * (1 - (jj - j0c))
-       + {s01} * (1 - (ii - i0c)) * (jj - j0c)
-       + {s10} * (ii - i0c) * (1 - (jj - j0c))
-       + {s11} * (ii - i0c) * (jj - j0c) AS v
-  FROM bl
-), inv AS (
-  SELECT r, c FROM vals WHERE NOT valid
-)
-SELECT CAST(vals.r AS INTEGER) AS r, CAST(vals.c AS INTEGER) AS c, v
-FROM vals
-WHERE NOT EXISTS (
-  SELECT 1 FROM inv
-  WHERE abs(inv.r - vals.r) <= 1 AND abs(inv.c - vals.c) <= 1
-)"""
+), {_RM_ST}{_rm_bilinear_sql()}"""
 
 
 # ray-march gate constants: min_z / max_z / step -> 11 linspace samples,
@@ -409,17 +340,11 @@ _RAY_S = 11
 _RAY_NPTS = 32
 
 
-def _ray_dem32(x: np.ndarray, y: np.ndarray) -> np.ndarray:
-    return (825.0 + 25.0 * (np.sin(x / 600.0) * np.cos(y / 600.0))).astype(
-        "float32"
-    )
-
-
 def _ray_params() -> list[tuple]:
     """(filename, pt, dx, dy, dz, tx, ty, tz) per boundary ray — input
     CONSTANTS shared verbatim by the Spark query and the SQL oracle (the
     march over them is what is under test)."""
-    from .geom.boundary import pixel_boundary
+    from orthority_spark.geom.boundary import pixel_boundary
 
     rows = []
     for name in sorted(fp.fixture_models()):
@@ -440,14 +365,13 @@ def _ray_params() -> list[tuple]:
 def q_ray_dem_footprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ray–DEM intersection (the orthorectification core,
     /root/reference/orthority/camera.py:103-165) oracle-gated per ray:
-    boundary-pixel rays marched against the sinusoid DEM by the batched
-    ``ray_march_params`` kernel inside mapInPandas; every marched hit
-    point (x, y, z) is compared bit-for-bit against a DuckDB twin that
-    replays the same linspace sampling + first-below rule + 20-pass
-    bisection as a recursive CTE."""
-    import pandas as pd
-
-    from .geom.dem import ray_march_params
+    boundary-pixel rays marched against the sinusoid DEM (trig quantized
+    to float32) by the ``ray_march`` operator; every marched hit point
+    (x, y, z) is compared bit-for-bit against a DuckDB twin that replays
+    the same linspace sampling + first-below rule + 20-pass bisection as
+    a recursive CTE."""
+    from orthority_spark.geom.dem import dem_sinusoid
+    from orthority_spark.operators.ray import ray_march
 
     rays = local_table(
         spark,
@@ -455,26 +379,10 @@ def q_ray_dem_footprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         "filename string, pt int, dx double, dy double, dz double, "
         "tx double, ty double, tz double",
     )
-
-    def march(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            dirs = np.vstack([pdf["dx"], pdf["dy"], pdf["dz"]])
-            orig = np.vstack([pdf["tx"], pdf["ty"], pdf["tz"]])
-            out = ray_march_params(
-                dirs, orig, _ray_dem32, _RAY_MINZ, _RAY_MAXZ, _RAY_STEP
-            )
-            yield pd.DataFrame(
-                {
-                    "filename": pdf["filename"].to_numpy(),
-                    "pt": pdf["pt"].to_numpy(),
-                    "x": out[0], "y": out[1], "z": out[2],
-                }
-            )
-
-    return rays.repartition(8, "filename").mapInPandas(
-        march, schema="filename string, pt int, x double, y double, z double"
+    return ray_march(
+        rays.repartition(8, "filename"),
+        lambda x, y: dem_sinusoid(x, y).astype("float32"),
+        _RAY_MINZ, _RAY_MAXZ, _RAY_STEP, keep=["filename", "pt"],
     )
 
 
@@ -554,12 +462,13 @@ WHERE NOT EXISTS (
 
 def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal decode plumbing over a binary column (stubbed codec).
-    The gate deliberately runs the REAL mapInPandas Arrow-batch decode
-    path; the stub's integer metadata (width/height/channels from the
+    The gate deliberately runs the operator's REAL executor-side batch
+    decode; the stub's integer metadata (width/height/channels from the
     payload's md5 bytes) is an exact SQL contract, so the distributed
     plumbing is oracle-gated end to end. The float features stay
     pytest-held (tests/test_multimodal.py)."""
-    from .multimodal.binary import image_decode
+    from orthority_spark.multimodal.binary import image_decode
+
     from .queries_geo import derived_pages
 
     pages = derived_pages(spark, sf_dir).withColumn(
@@ -574,7 +483,7 @@ def o_image_features() -> str:
     # md5 digest bytes k as int: ('0x' || hex chars 2k+1..2k+2)::BIGINT;
     # DuckDB md5() hashes the UTF-8 bytes — identical to the stub's
     # hashlib.md5(text.encode()) (_fake_decode: 64+d[0], 64+d[1], 1+d[2]%4)
-    from .sources.pages import derived_pages_sql
+    from orthority_spark.sources.pages import derived_pages_sql
 
     spec = derived_pages_sql("o_orderkey", "duckdb")
     return f"""
@@ -593,16 +502,16 @@ def q_dem_z_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-joined to their owning DEM tile, Arrow kernel interpolates. The
     oracle recomputes the float32 sinusoid block values analytically and
     blends with identical arithmetic."""
-    from .operators.raster_join import sample_dem_z
-    from .sources.dem_tiles import fixture_dem
+    from orthority_spark.operators.raster_join import sample_dem_z
+    from orthority_spark.sources.dem_tiles import fixture_dem
 
     pc = pages_cells(spark, sf_dir).select("url", "px", "py")
     return sample_dem_z(pc, fixture_dem(spark), band=1)
 
 
 def o_dem_z_sample() -> str:
-    from .geom.dem import DEM_GAIN, DEM_OFFSET, DEM_RES
-    from .sources.dem_tiles import TILE
+    from orthority_spark.geom.dem import DEM_GAIN, DEM_OFFSET, DEM_RES
+    from orthority_spark.sources.dem_tiles import TILE
 
     a, c0, e, f0 = DEM_RES, 18000.0, -DEM_RES, 31500.0
     ncols, nrows = 160, 128
@@ -795,23 +704,15 @@ def o_pan_sharpen_rows() -> str:
     return _PS_ROWS_SQL.format(table="lineitem")
 
 
-def _fit_gcp_grid(m) -> "np.ndarray":
-    """Deterministic 4x3 interior pixel grid for a fixture camera."""
-    j = np.linspace(15.0, m.im_size[0] - 15.0, 4)
-    i = np.linspace(12.0, m.im_size[1] - 12.0, 3)
-    jg, ig = np.meshgrid(j, i)
-    return np.vstack([jg.ravel(), ig.ravel()])
-
-
 def q_fit_exterior(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed exterior pose solve (cv2.solvePnP recast, reference
     fit.py:299-360): a deterministic GCP grid per fixture image, one
-    Levenberg-Marquardt PnP per image group (applyInPandas), output =
-    milli-pixel reprojection residuals per GCP — exact zeros when the
-    solver converges (the SQL-checkable residual contract)."""
-    import pandas as pd
-
-    from .operators.fit import _model_with_pose, solve_pnp
+    Levenberg-Marquardt PnP per image group (``fit_exterior_per_image``),
+    output = milli-pixel reprojection residuals per GCP through the
+    solved poses — exact zeros when the solver converges (the
+    SQL-checkable residual contract)."""
+    from orthority_spark.geom.camera import FrameModel
+    from orthority_spark.operators.fit import fit_exterior_per_image
 
     models = fp.fixture_models()
     int_by_name = {
@@ -819,43 +720,33 @@ def q_fit_exterior(spark: SparkSession, sf_dir: str) -> DataFrame:
                 sensor_size=m.sensor_size, cx=m.cx, cy=m.cy, dist=m.dist)
         for n, m in models.items()
     }
-    rows = []
-    for n in sorted(models):
-        m = models[n]
-        ji = _fit_gcp_grid(m)
-        xyz = m.pixel_to_world_z(ji, 805.0)
-        for k in range(ji.shape[1]):
-            rows.append(
-                (n, k, float(ji[0, k]), float(ji[1, k]),
-                 float(xyz[0, k]), float(xyz[1, k]), float(xyz[2, k]))
-            )
-    gcps = local_table(
-        spark,
-        rows,
-        "filename string, gcp_id int, j double, i double, "
-        "x double, y double, z double",
-    )
-
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        name = pdf.filename.iloc[0]
-        ji = np.vstack([pdf.j.to_numpy(), pdf.i.to_numpy()])
-        xyz = np.vstack(
-            [pdf.x.to_numpy(), pdf.y.to_numpy(), pdf.z.to_numpy()]
-        )
-        s = solve_pnp(int_by_name[name], ji, xyz)
-        m = _model_with_pose(int_by_name[name], s["xyz"], s["opk"])
-        r = m.world_to_pixel(xyz) - ji
-        return pd.DataFrame(
-            {
-                "filename": name,
-                "gcp_id": pdf.gcp_id.to_numpy(),
-                "rj_mpx": np.floor(np.abs(r[0]) * 1000.0 + 0.5).astype("int64"),
-                "ri_mpx": np.floor(np.abs(r[1]) * 1000.0 + 0.5).astype("int64"),
-            }
-        )
-
-    return gcps.groupBy("filename").applyInPandas(
-        solve, schema="filename string, gcp_id int, rj_mpx long, ri_mpx long"
+    gcps = {}
+    for n, m in sorted(models.items()):
+        # deterministic 4x3 interior pixel grid per fixture camera
+        jg, ig = np.meshgrid(np.linspace(15.0, m.im_size[0] - 15.0, 4),
+                             np.linspace(12.0, m.im_size[1] - 12.0, 3))
+        ji = np.vstack([jg.ravel(), ig.ravel()])
+        gcps[n] = (ji, m.pixel_to_world_z(ji, 805.0))
+    rows = [
+        (n, k, float(ji[0, k]), float(ji[1, k]),
+         float(xyz[0, k]), float(xyz[1, k]), float(xyz[2, k]))
+        for n, (ji, xyz) in gcps.items() for k in range(ji.shape[1])
+    ]
+    poses = fit_exterior_per_image(
+        local_table(spark, rows, "filename string, gcp_id int, j double, "
+                    "i double, x double, y double, z double"),
+        int_by_name,
+    ).collect()
+    res = []
+    for p in poses:
+        ji, xyz = gcps[p.filename]
+        m = FrameModel(**int_by_name[p.filename], xyz=(p.x, p.y, p.z),
+                       opk=(p.omega, p.phi, p.kappa))
+        r = np.floor(np.abs(m.world_to_pixel(xyz) - ji) * 1000.0 + 0.5)
+        res += [(p.filename, k, int(r[0, k]), int(r[1, k]))
+                for k in range(ji.shape[1])]
+    return local_table(
+        spark, res, "filename string, gcp_id int, rj_mpx long, ri_mpx long"
     )
 
 

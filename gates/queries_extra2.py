@@ -11,8 +11,8 @@ from .queries_geo import pages_cells, pages_cte, _pip_oracle
 
 def q_except_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set op EXCEPT: pages inside img_0000 but NOT img_0001."""
-    from .operators import tile_join
-    from .sources import footprints as fp
+    from orthority_spark.operators import tile_join
+    from orthority_spark.sources import footprints as fp
 
     recs = fp.footprint_records()
     j = tile_join.pip_join_broadcast(
@@ -120,8 +120,8 @@ def q_rpc_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIP join against the RPC camera's footprint (P7 in the distributed
     path): the satellite-style polygon comes from RpcModel.pixel_to_world_z
     at the ground plane, runs through the identical broadcast PIP plan."""
-    from .operators import tile_join
-    from .sources import footprints as fp
+    from orthority_spark.operators import tile_join
+    from orthority_spark.sources import footprints as fp
 
     recs = fp.rpc_footprint_records()
     return tile_join.pip_join_broadcast(
@@ -132,9 +132,9 @@ def q_rpc_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_rpc_pip_join() -> str:
-    from .oracle import dlit
-    from .operators.tile_join import pip_crossing_sql
-    from .sources import footprints as fp
+    from orthority_spark.oracle import dlit
+    from orthority_spark.operators.tile_join import pip_crossing_sql
+    from orthority_spark.sources import footprints as fp
 
     recs = fp.rpc_footprint_records()
     rows = ", ".join(

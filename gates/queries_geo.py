@@ -15,14 +15,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import config, grid
-from .functions import checksum
-from .functions.geotag import with_geotag
-from .operators import tile_join
-from .operators.knn import knn_bruteforce
-from .sources import footprints as fp
-from .oracle import dlit
-from .sources.pages import derived_pages_sql
+from orthority_spark import config, grid
+from orthority_spark.functions import checksum
+from orthority_spark.functions.geotag import with_geotag
+from orthority_spark.operators import tile_join
+from orthority_spark.operators.knn import knn_bruteforce
+from orthority_spark.oracle import dlit
+from orthority_spark.sources import footprints as fp
+from orthority_spark.sources.pages import derived_pages_sql
 
 GEO_RE_SQL = r"'geo:(-?\d+),(-?\d+)'"
 
@@ -207,7 +207,7 @@ def q_knn_kring(spark: SparkSession, sf_dir: str) -> DataFrame:
     on their OWN cell with zero blow-up, and only candidates are scored.
     Pages outside every ring get fewer/no neighbors by design — the oracle
     mirrors the same candidate set exactly."""
-    from .operators.knn import knn_kring
+    from orthority_spark.operators.knn import knn_kring
 
     return knn_kring(
         pages_cells(spark, sf_dir),
@@ -286,20 +286,27 @@ def o_rollup_pyramid() -> str:
     return f"{pages_cte()} " + " UNION ALL ".join(selects)
 
 
+def pinhole_sql(m, x: str, y: str, z: str) -> tuple[str, str]:
+    """(j, i) SQL for world point (x, y, z) through camera ``m``'s
+    R^T(x - T) + K, unrolled left to right (shared by the world->pixel
+    and remap oracles and the Spark world->pixel query)."""
+    R, T, K = m.R, m.T, m.K
+    xr = f"({x} - {dlit(T[0, 0])})"
+    yr = f"({y} - {dlit(T[1, 0])})"
+    zr = f"({z} - {dlit(T[2, 0])})"
+    cx = f"({dlit(R[0, 0])} * {xr} + {dlit(R[1, 0])} * {yr} + {dlit(R[2, 0])} * {zr})"
+    cy = f"({dlit(R[0, 1])} * {xr} + {dlit(R[1, 1])} * {yr} + {dlit(R[2, 1])} * {zr})"
+    cz = f"({dlit(R[0, 2])} * {xr} + {dlit(R[1, 2])} * {yr} + {dlit(R[2, 2])} * {zr})"
+    j = f"{dlit(K[0, 0])} * ({cx} / {cz}) + {dlit(K[0, 2])}"
+    i = f"{dlit(K[1, 1])} * ({cy} / {cz}) + {dlit(K[1, 2])}"
+    return j, i
+
+
 def _wtp_exprs() -> tuple[str, str]:
     """(j, i) projection SQL expressions for img_0000 — shared verbatim by
     the DuckDB oracle and the Spark query."""
     m = fp.fixture_models()["img_0000"]
-    R, T, K = m.R, m.T, m.K
-    x = f"(px - {dlit(T[0, 0])})"
-    y = f"(py - {dlit(T[1, 0])})"
-    z = f"({dlit(config.DEM_Z)} - {dlit(T[2, 0])})"
-    cx = f"({dlit(R[0, 0])} * {x} + {dlit(R[1, 0])} * {y} + {dlit(R[2, 0])} * {z})"
-    cy = f"({dlit(R[0, 1])} * {x} + {dlit(R[1, 1])} * {y} + {dlit(R[2, 1])} * {z})"
-    cz = f"({dlit(R[0, 2])} * {x} + {dlit(R[1, 2])} * {y} + {dlit(R[2, 2])} * {z})"
-    j = f"{dlit(K[0, 0])} * ({cx} / {cz}) + {dlit(K[0, 2])}"
-    i = f"{dlit(K[1, 1])} * ({cy} / {cz}) + {dlit(K[1, 2])}"
-    return j, i
+    return pinhole_sql(m, "px", "py", dlit(config.DEM_Z))
 
 
 def q_world_to_pixel_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -71,7 +71,7 @@ def q_asof_join_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (J6): for each purchase, the latest view at-or-before it
     by the same user, via the pure-JVM union+window carry-forward
     (operators/asof.py)."""
-    from .operators.asof import asof_join_window
+    from orthority_spark.operators.asof import asof_join_window
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     purchases = ev.where(F.col("event_type") == "purchase").select(

@@ -18,8 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .operators import dedup
-from .operators.dedup import P31, PERMS
+from orthority_spark.operators import dedup
+from orthority_spark.operators.dedup import P31, PERMS
 
 JACCARD_TAU = 0.8
 STOPWORDS = ["a", "the", "of", "and", "to", "in"]
@@ -38,7 +38,7 @@ def _docs_par(spark: SparkSession, sf_dir: str) -> DataFrame:
     more than it buys there — sources/scan.py). Uses parallel_read so
     the partition-count probe is memoized per (session, path) — the
     text family re-probes this path many times per sweep."""
-    from .sources.scan import parallel_read
+    from orthority_spark.sources.scan import parallel_read
 
     return parallel_read(spark, f"{sf_dir}/documents.parquet")
 
@@ -684,7 +684,7 @@ def q_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_host_stats() -> str:
-    from .sources.pages import derived_pages_sql
+    from orthority_spark.sources.pages import derived_pages_sql
 
     spec = derived_pages_sql("o_orderkey", "duckdb")
     return f"""

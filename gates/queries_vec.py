@@ -18,8 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .operators import ann
-from .operators.ann import LSH_BANDS, LSH_RMAX, LSH_RMIN, LSH_TARGET_OCC
+from orthority_spark.operators import ann
+from orthority_spark.operators.ann import LSH_BANDS, LSH_RMAX, LSH_RMIN, LSH_TARGET_OCC
 
 N_QUERIES = 10   # vec_id < 10 are the query vectors
 TOP_K = 5
@@ -35,7 +35,7 @@ norms AS (SELECT vec_id, SUM(v * v) AS nn FROM u GROUP BY vec_id)"""
 
 def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parallel_read: single-row-group fixture file — see sources/scan.py
-    from .sources.scan import parallel_read
+    from orthority_spark.sources.scan import parallel_read
 
     return parallel_read(spark, f"{sf_dir}/embeddings.parquet")
 

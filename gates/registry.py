@@ -114,7 +114,7 @@ def _wrap(fn: Callable) -> Callable:
     mechanism; UDF closures import orthority_spark on workers)."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from .pyfiles import ensure_on_executors
+        from orthority_spark.pyfiles import ensure_on_executors
 
         ensure_on_executors(spark)
         return fn(spark, sf_dir)

@@ -2,14 +2,21 @@
 
 Subcommands map to the reference's entry points, recast for the engine:
 
-- ``pipeline``  <- ``oty frame``: geotag -> cell -> PIP join -> ledger'd
-                 per-tile checksums (resumable; per-partition metrics)
-- ``sharpen``   <- ``oty sharpen``: two-pass Gram-Schmidt pan-sharpen of
-                 numeric band columns in a parquet table
-- ``dedup``     <- (new surface): MinHash-LSH near-dup pairs over a
-                 documents-shaped parquet table
-- ``package``   emit the --py-files zip for spark-submit
-- ``bench``     run the bench harness
+- ``pipeline``   <- ``oty frame``: geotag -> cell -> PIP join -> ledger'd
+                  per-tile checksums (``OrthoJob``; resumable)
+- ``ortho``      <- ``oty frame``: tiled remap of one camera over the
+                  analytic DEM (``--resume`` = ledger'd per-tile rendering)
+- ``odm``        <- ``oty odm``: render every camera of a processed
+                  OpenDroneMap dataset, optionally exporting its parameters
+- ``sharpen``    <- ``oty sharpen``: two-pass Gram-Schmidt pan-sharpen of
+                  numeric band columns in a parquet table
+- ``fit``        per-image exterior poses from GCPs (distributed solvePnP)
+- ``rpc-refine`` RPC shift / shift-drift refinement from GCPs
+- ``dem-sample`` per-point bilinear DEM z of a points table
+- ``knn``        k nearest footprints per page (broadcast or k-ring)
+- ``exif-scan``  parse EXIF tags from binary image blobs
+- ``dedup``      MinHash-LSH near-dup pairs over a documents-shaped table
+- ``package``    emit the --py-files zip for spark-submit
 
 Usage: ``python -m orthority_spark <subcommand> ...``
 """
@@ -28,35 +35,29 @@ def _spark(args):
     return get_spark(master=args.master, shuffle_partitions=args.shuffle_partitions)
 
 
-def cmd_pipeline(args) -> int:
-    from pyspark.sql import functions as F
-
-    from .functions import checksum
-    from .functions.geotag import with_geotag
-    from .operators import tile_join
-    from .plans.ledger import LedgerJob
-    from .sources import footprints as fp
+def _pages(spark, args):
+    """(url, text) pages: ``--pages-parquet`` or ``--n-pages`` synthetic."""
     from .sources.pages import synthetic_pages
 
-    spark = _spark(args)
     if args.pages_parquet:
-        pages = spark.read.parquet(args.pages_parquet).select("url", "text")
-    else:
-        pages = synthetic_pages(spark, args.n_pages).select("url", "text")
-    pc = tile_join.assign_cells(with_geotag(pages, token="float"))
-    recs = fp.footprint_records()
-    join_fn = (
-        tile_join.pip_join_salted if args.salted else tile_join.pip_join_broadcast
-    )
-    joined = join_fn(
-        pc, fp.footprint_catalog_flat_df(spark, recs), fp.footprint_edges_df(spark, recs),
-        keep=["cell"],
-    )
-    job = LedgerJob(spark, args.out, part_col="cell")
-    metrics = job.run(
-        joined, checksum.row_hash_fast(F.col("url"), F.col("filename"))
-    )
-    print(json.dumps(metrics))
+        return spark.read.parquet(args.pages_parquet).select("url", "text")
+    return synthetic_pages(spark, args.n_pages).select("url", "text")
+
+
+def _valid_pixels(tiles) -> int:
+    """Non-nodata pixels of written remap tiles: masked pixels arrive as
+    NULL and isnan(NULL) is FALSE, so test both."""
+    return int(tiles.selectExpr(
+        "sum(size(filter(block, v -> v IS NOT NULL AND NOT isnan(v)))) AS v"
+    ).first().v or 0)
+
+
+def cmd_pipeline(args) -> int:
+    from .plans.job import OrthoJob
+
+    spark = _spark(args)
+    job = OrthoJob(spark, strategy="salted" if args.salted else "broadcast")
+    print(json.dumps(job.process(_pages(spark, args), args.out)))
     spark.stop()
     return 0
 
@@ -152,15 +153,10 @@ def cmd_knn(args) -> int:
     from .operators import tile_join
     from .operators.knn import knn_bruteforce, knn_kring
     from .sources import footprints as fp
-    from .sources.pages import synthetic_pages
     from .sources.writers import write_table
 
     spark = _spark(args)
-    if args.pages_parquet:
-        pages = spark.read.parquet(args.pages_parquet).select("url", "text")
-    else:
-        pages = synthetic_pages(spark, args.n_pages).select("url", "text")
-    pc = tile_join.assign_cells(with_geotag(pages, token="float"))
+    pc = tile_join.assign_cells(with_geotag(_pages(spark, args), token="float"))
     if args.ring:
         out = knn_kring(
             pc, fp.footprint_cells_df(spark), fp.footprint_summary_df(spark),
@@ -204,12 +200,13 @@ def cmd_fit(args) -> int:
         dist={k: v for k, v in ip.items() if k in dist_keys},
     )
     gcps = read_gcps_geojson(args.gcps)
+    int_by_name = {g["filename"]: int_params for g in gcps}
     df = local_table(
         spark,
         [(g["filename"], g["j"], g["i"], g["x"], g["y"], g["z"]) for g in gcps],
         "filename string, j double, i double, x double, y double, z double",
     )
-    for r in fit_exterior_per_image(df, int_params).collect():
+    for r in fit_exterior_per_image(df, int_by_name).collect():
         d = r.asDict()
         d["camera"] = cam_id
         print(json.dumps(d))
@@ -245,8 +242,8 @@ def cmd_ortho(args) -> int:
     from .geom import dem as demmod
     from .operators.remap import remap_tiles, tile_windows
     from .pyfiles import ensure_on_executors
-    from .queries_extra import _RM_TRANSFORM, _rm_src_array
     from .sources import footprints as fp
+    from .sources.demo_raster import TRANSFORM, src_array
     from .sources.writers import write_table
 
     spark = _spark(args)
@@ -257,12 +254,12 @@ def cmd_ortho(args) -> int:
         model = models_from_files(args.int_params, args.ext_params)[args.image]
     else:
         model = fp.fixture_models()[args.image]
-    src = _rm_src_array()  # single definition shared with the oracle gates
+    src = src_array()
     dem_fn = demmod.dem_plane if args.dem == "plane" else demmod.dem_sinusoid
     dem_fn = _dem_with_ztrans(dem_fn, args)
     transform = (
-        args.resolution, 0.0, _RM_TRANSFORM[2],
-        0.0, -args.resolution, _RM_TRANSFORM[5],
+        args.resolution, 0.0, TRANSFORM[2],
+        0.0, -args.resolution, TRANSFORM[5],
     )
     tiles = tile_windows(spark, args.width, args.height)
     out = remap_tiles(tiles, model, src, transform, dem_fn, interp=args.interp)
@@ -312,14 +309,8 @@ def cmd_ortho(args) -> int:
         return 0
     write_table(out, args.out, overwrite=args.overwrite)
     w = spark.read.parquet(args.out)
-    n_tiles = w.count()  # metadata count, no recompute
-    # masked pixels arrive as NULL (remap_tiles writes the NaN nodata as
-    # null) and isnan(NULL) is FALSE — test both
-    valid = w.selectExpr(
-        "sum(size(filter(block, v -> v IS NOT NULL AND NOT isnan(v)))) AS v"
-    ).first().v
     print(json.dumps({
-        "tiles": n_tiles, "valid_pixels": int(valid or 0),
+        "tiles": w.count(), "valid_pixels": _valid_pixels(w),
         "interp": args.interp, "out": args.out,
     }))
     spark.stop()
@@ -363,8 +354,8 @@ def cmd_odm(args) -> int:
     from .geom import dem as demmod
     from .operators.remap import remap_tiles, tile_windows
     from .pyfiles import ensure_on_executors
-    from .queries_extra import _rm_src_array
     from .sources import footprints as fp
+    from .sources.demo_raster import src_array
     from .sources.factory import models_from_params
     from .sources.param_io import (
         osfm_world_poses, read_osfm, write_ext_param_csv, write_int_param,
@@ -407,7 +398,7 @@ def cmd_odm(args) -> int:
         )
     spark = _spark(args)
     ensure_on_executors(spark)
-    src = _rm_src_array()
+    src = src_array()
     dem_fn = demmod.dem_plane if args.dem == "plane" else demmod.dem_sinusoid
     dem_fn = _dem_with_ztrans(dem_fn, args)
     renders = {}
@@ -431,10 +422,7 @@ def cmd_odm(args) -> int:
         path = os.path.join(out_dir, os.path.splitext(fn)[0])
         write_table(out, path, overwrite=args.overwrite)
         w = spark.read.parquet(path)
-        valid = w.selectExpr(
-            "sum(size(filter(block, v -> v IS NOT NULL AND NOT isnan(v)))) AS v"
-        ).first().v
-        renders[fn] = {"tiles": w.count(), "valid_pixels": int(valid or 0)}
+        renders[fn] = {"tiles": w.count(), "valid_pixels": _valid_pixels(w)}
     print(json.dumps({
         "images": len(models), "out": out_dir, "interp": args.interp,
         "exported_params": bool(args.export_params), "renders": renders,

@@ -12,7 +12,7 @@ cell id packs (res, ix, iy) into one int64:
 The SAME arithmetic is provided three ways so engine, numpy oracle and
 DuckDB oracle agree bit-for-bit:
 
-- :func:`cell_index` — numpy (oracle twin)
+- :func:`cell_index` — numpy (oracle twin; non-finite lat/lon masked)
 - :func:`cell_col`   — Spark Column expression (JVM-side, codegen'd; the
   hot-path tile assignment never leaves whole-stage codegen)
 - :func:`cell_sql`   — ANSI-SQL text for the DuckDB oracle
@@ -36,15 +36,20 @@ MAX_RES = 26
 # numpy twin (oracle)
 # ---------------------------------------------------------------------------
 
-def cell_index(lat, lon, res: int) -> np.ndarray:
-    """int64 cell ids for lat/lon arrays at ``res`` (numpy oracle twin)."""
+def cell_index(lat, lon, res: int) -> np.ma.MaskedArray:
+    """int64 cell ids for lat/lon arrays at ``res`` (numpy oracle twin).
+    A row with a non-finite lat or lon has no cell: it is masked, the
+    numpy form of the engine's NULL (``tile_join.assign_cells``)."""
     assert 0 <= res <= MAX_RES
     n = float(2**res)
-    ix = np.floor((np.asarray(lon, dtype="float64") + 180.0) / 360.0 * n)
-    iy = np.floor((np.asarray(lat, dtype="float64") + 90.0) / 180.0 * n)
+    lat = np.asarray(lat, dtype="float64")
+    lon = np.asarray(lon, dtype="float64")
+    finite = np.isfinite(lat) & np.isfinite(lon)
+    ix = np.floor((np.where(finite, lon, 0.0) + 180.0) / 360.0 * n)
+    iy = np.floor((np.where(finite, lat, 0.0) + 90.0) / 180.0 * n)
     ix = np.minimum(np.maximum(ix, 0.0), n - 1).astype("int64")
     iy = np.minimum(np.maximum(iy, 0.0), n - 1).astype("int64")
-    return res * RES_FACTOR + ix * IX_FACTOR + iy
+    return np.ma.MaskedArray(res * RES_FACTOR + ix * IX_FACTOR + iy, mask=~finite)
 
 
 def cell_decode(cell) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

@@ -21,7 +21,7 @@ only pairwise work is inside LSH buckets; the verifier semi-joins the
 candidate ids onto the DOC rows before shingling, so only candidate docs
 are exploded a second time.
 
-The text driver gates (queries_text.py) call these operators and rename
+The text gates (gates/queries_text.py) call these operators and rename
 ``id*`` to ``doc_*``; their DuckDB oracles share the constants and the
 arithmetic below (md5-prefix hashes are bit-identical across engines).
 """

@@ -362,24 +362,26 @@ def fit_frame(
     return int_params, ext
 
 
-def fit_exterior_per_image(gcps: DataFrame, int_params: dict) -> DataFrame:
+def fit_exterior_per_image(gcps: DataFrame, int_params: dict[str, dict]) -> DataFrame:
     """Distributed solvePnP: gcps(filename, j, i, x, y, z) ->
-    per-image (filename, x, y, z, omega, phi, kappa, rms_px). One small
-    dense solve per image group — thousands of images fit in parallel
-    (the reference loops images serially, fit.py:355-359)."""
+    per-image (filename, x, y, z, omega, phi, kappa, rms_px), each image
+    solved with its own interior parameters ``int_params[filename]``.
+    One small dense solve per image group — thousands of images fit in
+    parallel (the reference loops images serially, fit.py:355-359)."""
     schema = (
         "filename string, x double, y double, z double, "
         "omega double, phi double, kappa double, rms_px double"
     )
 
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
+        name = pdf.filename.iloc[0]
         ji = np.vstack([pdf.j.to_numpy(), pdf.i.to_numpy()])
         xyz = np.vstack([pdf.x.to_numpy(), pdf.y.to_numpy(), pdf.z.to_numpy()])
-        s = solve_pnp(int_params, ji, xyz)
+        s = solve_pnp(int_params[name], ji, xyz)
         return pd.DataFrame(
             [
                 {
-                    "filename": pdf.filename.iloc[0],
+                    "filename": name,
                     "x": s["xyz"][0], "y": s["xyz"][1], "z": s["xyz"][2],
                     "omega": s["opk"][0], "phi": s["opk"][1],
                     "kappa": s["opk"][2], "rms_px": s["rms"],

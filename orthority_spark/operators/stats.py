@@ -54,28 +54,6 @@ def stats_to_cov(row, band_cols: list[str]) -> tuple[np.ndarray, np.ndarray]:
     return means, cov
 
 
-def gs_weights(cov: np.ndarray) -> np.ndarray:
-    """Least-squares solve of simulated-pan band weights from the MS
-    covariance (pan_sharp.py:319-356 semantics): minimise
-    ||cov @ w - mean-band-cov|| with a fallback to uniform weights when
-    any weight goes negative (the reference re-fits; we clamp+renorm)."""
-    k = cov.shape[0]
-    target = cov.mean(axis=1)
-    w, *_ = np.linalg.lstsq(cov, target, rcond=None)
-    if np.any(w < 0):
-        w = np.clip(w, 0.0, None)
-        if w.sum() == 0:
-            w = np.ones(k)
-    return w / w.sum()
-
-
-def gs_coefficients(cov: np.ndarray, w: np.ndarray) -> np.ndarray:
-    """Gram–Schmidt orthogonalisation coefficients from the covariance
-    (pan_sharp.py:358-379): g_k = cov(band_k, sim_pan) / var(sim_pan)."""
-    var_sim = float(w @ cov @ w)
-    return (cov @ w) / var_sim
-
-
 def pan_sharpen(df: DataFrame, band_cols: list[str], pan_col: str) -> DataFrame:
     """Full two-pass pipeline: agg -> collect tiny stats -> broadcast
     params -> mapInPandas (the reference's pass1/finalize/pass2,

@@ -48,10 +48,17 @@ def world_xy_sql(lat: str, lon: str) -> tuple[str, str]:
 
 
 def assign_cells(pages: DataFrame, res: int = config.GRID_RES) -> DataFrame:
-    """pages(lat, lon, ...) + cell + world (px, py) columns."""
-    px, py = world_xy(F.col("lat"), F.col("lon"))
+    """pages(lat, lon, ...) + cell + world (px, py) columns. A page with a
+    NULL, NaN or infinite lat/lon gets a NULL cell, so it joins no cell
+    (``cell_col`` alone would clamp it onto an edge cell)."""
+    lat, lon = F.col("lat"), F.col("lon")
+    px, py = world_xy(lat, lon)
+    # one reference per coordinate (joins push isnotnull(cell) below the
+    # geotag parse); Spark orders NaN above +Inf, so abs(NaN) < Inf fails
+    inf = F.lit(float("inf"))
+    finite = (F.abs(lat) < inf) & (F.abs(lon) < inf)
     return pages.withColumn(
-        "cell", grid.cell_col(F.col("lat"), F.col("lon"), res)
+        "cell", F.when(finite, grid.cell_col(lat, lon, res))
     ).withColumn("px", px).withColumn("py", py)
 
 

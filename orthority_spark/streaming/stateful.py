@@ -1,7 +1,7 @@
 """Custom stateful streaming: per-user sessionization with
 applyInPandasWithState (task-brief custom stateful operator slot).
 
-Batch sessionization (queries_rel.q_sessionize) numbers sessions with a
+Batch sessionization (gates/queries_rel.q_sessionize) numbers sessions with a
 window function; in streaming, session state must live ACROSS triggers.
 State per user: (last_ts_epoch, session_id). A new event starts a new
 session when its gap from the stored last timestamp exceeds the gap

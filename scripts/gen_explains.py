@@ -31,8 +31,8 @@ Regenerate with scripts/gen_explains.py.
 
 
 def main() -> None:
+    from gates.registry import all_queries
     from orthority_spark.pyfiles import ensure_on_executors
-    from orthority_spark.registry import all_queries
     from orthority_spark.session import get_spark
 
     spark = get_spark(master="local[8]", shuffle_partitions=16)

@@ -34,7 +34,7 @@ def main() -> None:
 
     # under spark-submit the session/master comes from the submit command;
     # standalone runs fall back to local[*]
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName("orthority-pipeline").getOrCreate()
     spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -43,11 +43,7 @@ def main() -> None:
     # Python-RDD path and the plan loses its LocalTableScan shape
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
 
-    from orthority_spark.functions import checksum
-    from orthority_spark.functions.geotag import with_geotag
-    from orthority_spark.operators import tile_join
-    from orthority_spark.plans.ledger import LedgerJob
-    from orthority_spark.sources import footprints as fp
+    from orthority_spark.plans.job import OrthoJob
     from orthority_spark.sources.pages import synthetic_pages
 
     t0 = time.perf_counter()
@@ -55,21 +51,8 @@ def main() -> None:
         pages = spark.read.parquet(args.pages_parquet).select("url", "text")
     else:
         pages = synthetic_pages(spark, args.n_pages).select("url", "text")
-    pc = tile_join.assign_cells(with_geotag(pages, token="float"))
-    recs = fp.footprint_records()
-    join_fn = tile_join.pip_join_salted if args.salted else tile_join.pip_join_broadcast
-    joined = join_fn(
-        pc,
-        fp.footprint_catalog_flat_df(spark, recs),
-        fp.footprint_edges_df(spark, recs),
-        keep=["cell"],
-    )
-    job = LedgerJob(spark, args.out, part_col="cell")
-    metrics = job.run(
-        joined,
-        checksum.row_hash_fast(F.col("url"), F.col("filename")),
-        max_partitions=args.max_partitions,
-    )
+    job = OrthoJob(spark, strategy="salted" if args.salted else "broadcast")
+    metrics = job.process(pages, args.out, max_partitions=args.max_partitions)
     metrics["wall_sec"] = round(time.perf_counter() - t0, 3)
     metrics["out"] = args.out
     print(json.dumps(metrics))

@@ -1,5 +1,6 @@
 """CLI subcommands drive the engine end-to-end (reference cli.py
-analogue): dem-sample, rpc-refine, knn, fit, exif-scan, dedup."""
+analogue): pipeline, dem-sample, rpc-refine, knn, fit, exif-scan, dedup,
+ortho, odm."""
 
 from __future__ import annotations
 
@@ -29,6 +30,26 @@ def cli_spark(spark, monkeypatch):
     return spark
 
 
+def test_cli_pipeline(cli_spark, tmp_path, capsys):
+    """`pipeline` runs OrthoJob: its per-cell ledger (n_rows, checksum)
+    equals OrthoJob.tiles, and a rerun finds nothing left to process."""
+    from orthority_spark.plans.job import OrthoJob
+    from orthority_spark.sources.pages import synthetic_pages
+
+    out = str(tmp_path / "job")
+    argv = ["pipeline", "--n-pages", "2000", "--out", out]
+    assert cli.main(argv) == 0
+    first = json.loads(capsys.readouterr().out)
+    ledger = {r.part_key: (r.n_rows, r.checksum)
+              for r in cli_spark.read.parquet(f"{out}/ledger").collect()}
+    pages = synthetic_pages(cli_spark, 2000).select("url", "text")
+    tiles = {r.cell: (r.n_rows, r.checksum)
+             for r in OrthoJob(cli_spark).tiles(pages).collect()}
+    assert ledger == tiles and first["partitions_processed"] == len(tiles) > 0
+    assert cli.main(argv) == 0
+    assert json.loads(capsys.readouterr().out)["partitions_processed"] == 0
+
+
 def test_cli_dem_sample(cli_spark, tmp_path, capsys):
     pts = tmp_path / "pts"
     cli_spark.createDataFrame(
@@ -48,7 +69,7 @@ def test_cli_dedup(cli_spark, capsys):
     as the jaccard_neardups_lsh DuckDB oracle at sf0.01."""
     import duckdb
 
-    from orthority_spark.queries_text import o_jaccard_neardups_lsh
+    from gates.queries_text import o_jaccard_neardups_lsh
 
     docs = "/root/testdata/sf0.01/documents.parquet"
     assert cli.main(["dedup", "--input", docs]) == 0
@@ -157,11 +178,11 @@ def test_cli_ortho_cubic(cli_spark, tmp_path, capsys):
 
     from orthority_spark.geom.dem import dem_plane
     from orthority_spark.operators.remap import remap_oracle
-    from orthority_spark.queries_extra import _RM_TRANSFORM, _rm_src_array
+    from orthority_spark.sources.demo_raster import TRANSFORM, src_array
     from orthority_spark.sources.footprints import fixture_models
 
     oracle = remap_oracle(
-        fixture_models()["img_0000"], _rm_src_array(), _RM_TRANSFORM,
+        fixture_models()["img_0000"], src_array(), TRANSFORM,
         96, 80, dem_plane, interp="cubic",
     )
     assert rep["valid_pixels"] == int(np.isfinite(oracle).sum())
@@ -308,11 +329,11 @@ def test_cli_ortho_vertical_datum(cli_spark, tmp_path, capsys):
 
     from orthority_spark.geom.dem import dem_sinusoid
     from orthority_spark.operators.remap import remap_oracle
-    from orthority_spark.queries_extra import _RM_TRANSFORM, _rm_src_array
+    from orthority_spark.sources.demo_raster import TRANSFORM, src_array
     from orthority_spark.sources.footprints import fixture_models
 
     oracle = remap_oracle(
-        fixture_models()["img_0000"], _rm_src_array(), _RM_TRANSFORM,
+        fixture_models()["img_0000"], src_array(), TRANSFORM,
         96, 80, lambda x, y: dem_sinusoid(x, y) - 120.0, interp="bilinear",
     )
     assert rep_shift["valid_pixels"] == int(np.isfinite(oracle).sum())

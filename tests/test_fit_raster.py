@@ -322,12 +322,11 @@ def test_fit_frame_requires_coplanar():
 
 
 def test_fit_exterior_per_image_spark(spark):
-    """Distributed PnP == driver-side solve_pnp per image."""
-    from orthority_spark.operators.fit import fit_exterior_per_image, solve_pnp
+    """Distributed PnP recovers each image's true pose."""
+    from orthority_spark.operators.fit import fit_exterior_per_image
     from orthority_spark.sources.footprints import fixture_models
 
     models = fixture_models()
-    m0 = models["img_0000"]
     rng = np.random.RandomState(7)
     rows = []
     for name in ["img_0000", "img_0002"]:
@@ -338,16 +337,15 @@ def test_fit_exterior_per_image_spark(spark):
         for k in range(10):
             rows.append((name, float(ji[0, k]), float(ji[1, k]),
                          float(xyz[0, k]), float(xyz[1, k]), float(xyz[2, k])))
-    # both fixture cameras share interior params with img_0000? no — use
-    # per-run interior of img_0000 only for img_0000; solve img_0002 with
-    # its own params via a second call
-    for name in ["img_0000", "img_0002"]:
-        m = models[name]
-        df = spark.createDataFrame(
-            [r for r in rows if r[0] == name],
-            "filename string, j double, i double, x double, y double, z double",
-        )
-        got = fit_exterior_per_image(df, _int_params(m)).collect()[0]
+    df = spark.createDataFrame(
+        rows, "filename string, j double, i double, x double, y double, z double"
+    )
+    # each image solves with its OWN interior parameters, in one call
+    int_by_name = {n: _int_params(models[n]) for n in ["img_0000", "img_0002"]}
+    poses = fit_exterior_per_image(df, int_by_name).collect()
+    assert sorted(p.filename for p in poses) == sorted(int_by_name)
+    for got in poses:
+        m = models[got.filename]
         np.testing.assert_allclose((got.x, got.y, got.z), m.xyz, atol=1e-3)
         np.testing.assert_allclose(
             (got.omega, got.phi, got.kappa), m.opk, atol=1e-5

@@ -11,8 +11,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from orthority_spark import registry
-from orthority_spark.registry import all_queries
+from gates import registry
+from gates.registry import all_queries
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [

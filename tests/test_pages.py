@@ -79,7 +79,7 @@ def test_geotag_single_regex_bit_identical(spark):
     )
     assert cmp_f.count() == 0
 
-    import orthority_spark.queries_geo as qg
+    import gates.queries_geo as qg
 
     dp = qg.derived_pages(spark, "/root/testdata/sf0.01")
     lat_u, lon_u = geotag_udeg(F.col("text"))

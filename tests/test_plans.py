@@ -9,12 +9,12 @@ import re
 
 import pytest
 
-from orthority_spark.queries_geo import (
+from gates.queries_geo import (
     pages_cells,
     q_pip_join,
     q_tile_checksums,
 )
-from orthority_spark.queries_rel import q_revenue_by_nation
+from gates.queries_rel import q_revenue_by_nation
 
 SF = "/root/testdata/sf0.01"
 
@@ -79,7 +79,7 @@ def test_salted_join_partitions_by_cell_and_salt(spark):
 def test_tf_idf_aggs_are_partial_and_join_not_cartesian(spark):
     """tf/df are partial-aggregated (map-side combine before exchange);
     the df join is a key equi-join, never a cartesian."""
-    from orthority_spark.queries_text import q_tf_idf
+    from gates.queries_text import q_tf_idf
 
     plan = _plan(q_tf_idf(spark, SF))
     assert "CartesianProduct" not in plan
@@ -92,7 +92,7 @@ def test_tf_idf_aggs_are_partial_and_join_not_cartesian(spark):
 def test_stratified_sample_filter_precedes_exchange(spark):
     """The hash keep-rate filter runs scan-side: the only exchange in the
     plan is the final per-lang aggregation's."""
-    from orthority_spark.queries_text import q_stratified_sample
+    from gates.queries_text import q_stratified_sample
 
     plan = _plan(q_stratified_sample(spark, SF))
     n_exch = len(re.findall(r"Exchange hashpartitioning", plan))
@@ -102,9 +102,9 @@ def test_stratified_sample_filter_precedes_exchange(spark):
 
 def test_ray_march_rays_shuffle_is_metadata_only(spark):
     """The ray-march plan shuffles only the 128-row ray-parameter table
-    (metadata), never anything data-sized, and runs one mapInPandas."""
-    from orthority_spark.queries_extra import q_ray_dem_footprints
+    (metadata), never anything data-sized, and runs one mapInArrow."""
+    from gates.queries_extra import q_ray_dem_footprints
 
     plan = _plan(q_ray_dem_footprints(spark, SF))
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan

@@ -1,5 +1,6 @@
-"""Property-based tests (hypothesis) over the pure-numpy kernels:
-invariants must hold for ALL inputs, not just fixture points."""
+"""Property-based tests (hypothesis) over the pure-numpy kernels and
+their engine counterparts: invariants must hold for ALL inputs, not just
+fixture points."""
 
 from __future__ import annotations
 
@@ -13,6 +14,11 @@ from orthority_spark.geom.rotation import opk_to_rotation, rotation_to_opk
 finite_lat = st.floats(min_value=-89.999, max_value=89.999)
 finite_lon = st.floats(min_value=-179.999, max_value=179.999)
 angle = st.floats(min_value=-1.4, max_value=1.4)  # inside asin branch
+any_coord = st.one_of(
+    st.floats(min_value=-200.0, max_value=200.0),
+    st.sampled_from([float("nan"), float("inf"), float("-inf")]),
+    st.none(),
+)
 
 
 @settings(max_examples=200, deadline=None)
@@ -36,6 +42,26 @@ def test_parent_is_ancestor(lat, lon, res, up):
     parents = grid.parent_cell(cells, parent_res)
     direct = grid.cell_index(np.array([lat]), np.array([lon]), parent_res)
     assert parents[0] == direct[0]
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(st.tuples(any_coord, any_coord), min_size=1, max_size=8))
+def test_assign_cells_nonfinite_is_null_like_twin(spark, rows):
+    """A NaN, infinite or NULL lat/lon gets a NULL cell from the engine
+    and a masked one from the numpy twin; every finite row gets the same
+    (clamped) cell from both."""
+    from orthority_spark.operators.tile_join import assign_cells
+
+    df = spark.createDataFrame(
+        [(i, lat, lon) for i, (lat, lon) in enumerate(rows)],
+        "i int, lat double, lon double",
+    )
+    got = [r.cell for r in assign_cells(df, res=12).orderBy("i").collect()]
+    lat, lon = (np.array([np.nan if v is None else v for v in col])
+                for col in zip(*rows))
+    twin = grid.cell_index(lat, lon, 12)
+    assert got == [None if m else int(c) for c, m in
+                   zip(twin.data, np.ma.getmaskarray(twin))]
 
 
 @settings(max_examples=100, deadline=None)

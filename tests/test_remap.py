@@ -4,11 +4,6 @@
 
 from __future__ import annotations
 
-import json
-import os
-import subprocess
-import sys
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -109,17 +104,3 @@ def test_remap_tiles_empty_input(spark, setup):
     model, src, transform = setup
     tiles = tile_windows(spark, W, H).where("false")
     assert remap_tiles(tiles, model, src, transform, dem_plane).collect() == []
-
-
-def test_perfbench_raster_ortho_toy_is_correct():
-    """The benchmark's own output check (sampled tiles bit-identical to
-    remap_oracle, every tile present) on its toy-size raster workload."""
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    proc = subprocess.run(
-        [sys.executable, "perfbench/run.py", "--workload", "raster_ortho",
-         "--size", "toy", "--seed", "1", "--seconds", "0", "--trace", "0"],
-        cwd=root, capture_output=True, text=True, timeout=600,
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    last = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert last["correct"] is True and last["failed"] == 0, last

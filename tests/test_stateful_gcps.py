@@ -41,7 +41,7 @@ def test_stateful_sessionize_matches_batch(spark, tmp_path):
         for r in spark.sql("SELECT * FROM sess").collect()
     }
 
-    from orthority_spark.queries_rel import q_sessionize
+    from gates.queries_rel import q_sessionize
 
     batch = {
         (r.user_id, r.event_id): r.session_id

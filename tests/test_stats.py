@@ -11,8 +11,6 @@ import pytest
 from orthority_spark.operators.stats import (
     band_stats,
     stats_to_cov,
-    gs_weights,
-    gs_coefficients,
     pan_sharpen,
 )
 
@@ -49,17 +47,6 @@ def test_partition_count_invariance(spark, band_df):
     np_cov = np.cov(band_df[BANDS].to_numpy().T, ddof=1)
     np.testing.assert_allclose(c2, np_cov, rtol=1e-6)
     np.testing.assert_allclose(m2, band_df[BANDS].mean().to_numpy(), rtol=1e-9)
-
-
-def test_gs_weights_properties(band_df):
-    cov = np.cov(band_df[BANDS].to_numpy().T, ddof=1)
-    w = gs_weights(cov)
-    assert w.shape == (3,)
-    assert w.sum() == pytest.approx(1.0)
-    assert (w >= 0).all()
-    g = gs_coefficients(cov, w)
-    # coefficient of the simulated pan against itself is 1 under w
-    assert float(w @ g) == pytest.approx(1.0, rel=1e-9)
 
 
 def test_pan_sharpen_end_to_end(spark, band_df):
