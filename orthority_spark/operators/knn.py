@@ -23,6 +23,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .. import grid
+from ..session import prepared
+from ..sources.local import local_table
+from .tile_join import cell_join_key
 
 
 def _dist_sq(cx: str = "cx", cy: str = "cy") -> Column:
@@ -109,6 +112,76 @@ def _topk_literal(
     return out
 
 
+def _catalog(summary: DataFrame) -> list:
+    """The first MAX_LITERAL_CATALOG + 1 (filename, cx, cy) rows of
+    ``summary``, taken once per application and ``summary`` object."""
+    return prepared(
+        summary.sparkSession, "knn_catalog", (summary,), (),
+        lambda: summary.select("filename", "cx", "cy").take(MAX_LITERAL_CATALOG + 1),
+    )
+
+
+def _expand(footprint_cells: DataFrame, ring: int) -> DataFrame:
+    """(filename, cell) of every cell in the ``ring``-ring of each
+    footprint covering-cell, distinct."""
+    # decode (res, ix, iy), wrap ix around the antimeridian (mod 2^res) and
+    # drop out-of-range iy — mirrors grid.k_ring exactly, so neighborhoods
+    # crossing the +-180 lon seam or the lat poles stay correct
+    return (
+        footprint_cells.select("filename", "cell")
+        .withColumn("res", F.expr("shiftright(cell, 52)"))
+        .withColumn(
+            "ix", F.expr(f"shiftright(cell, 26) & {grid.IX_FACTOR - 1}")
+        )
+        .withColumn("iy", F.expr(f"cell & {grid.IX_FACTOR - 1}"))
+        .withColumn(
+            "n", F.expr("shiftleft(CAST(1 AS BIGINT), CAST(res AS INT))")
+        )
+        .withColumn(
+            "d", F.expr(f"explode(sequence(CAST(-{ring} AS BIGINT), {ring}))")
+        )
+        .withColumn(
+            "d2", F.expr(f"explode(sequence(CAST(-{ring} AS BIGINT), {ring}))")
+        )
+        .where(
+            (F.col("iy") + F.col("d2") >= 0) & (F.col("iy") + F.col("d2") < F.col("n"))
+        )
+        .select(
+            "filename",
+            (
+                F.col("res") * F.lit(grid.RES_FACTOR).cast("long")
+                + F.pmod(F.col("ix") + F.col("d"), F.col("n"))
+                * F.lit(grid.IX_FACTOR).cast("long")
+                + F.col("iy")
+                + F.col("d2")
+            ).alias("cell"),
+        )
+        .distinct()
+    )
+
+
+def _mask_table(expanded: DataFrame, cat: list) -> DataFrame:
+    """Per-cell MEMBERSHIP MASKS ``(cell, _m0.._m{n-1})`` over the literal
+    catalog (mask j = 1 iff candidate j's ring covers the cell), computed
+    once and held as a local relation: a broadcast of it re-aggregates
+    nothing. Its rows are at most the expanded index, which the
+    ``max_broadcast_rows`` guard already bounds."""
+    names = {r.filename: i for i, r in enumerate(cat)}
+    masks = (
+        expanded.where(F.col("filename").isin(list(names)))
+        .groupBy("cell")
+        .agg(
+            *[
+                F.max(
+                    F.when(F.col("filename") == n, 1).otherwise(0)
+                ).alias(f"_m{i}")
+                for n, i in names.items()
+            ]
+        )
+    )
+    return local_table(masks.sparkSession, masks.collect(), masks.schema)
+
+
 def knn_bruteforce(pages_cells: DataFrame, summary: DataFrame, k: int = 3) -> DataFrame:
     """Catalog-unrolled map-side top-k (r6 plan): the tiny center catalog
     is collected once and inlined as codegen'd expressions; ranking
@@ -116,7 +189,7 @@ def knn_bruteforce(pages_cells: DataFrame, summary: DataFrame, k: int = 3) -> Da
     (page x footprint) candidate row on url for the window; this one has
     zero shuffles and the identical output. Catalogs past
     MAX_LITERAL_CATALOG entries fall back to the window plan."""
-    cat = summary.select("filename", "cx", "cy").take(MAX_LITERAL_CATALOG + 1)
+    cat = _catalog(summary)
     if len(cat) <= MAX_LITERAL_CATALOG:
         return _topk_literal(pages_cells.select("url", "px", "py"), cat, k)
     cand = pages_cells.select("url", "px", "py").join(
@@ -148,73 +221,36 @@ def knn_kring(
     equi-join itself (shuffle-hash/SMJ for a genuinely large index).
     Pass ``n_index_cells`` (e.g. from catalog stats) to avoid the
     guard's one count() job over ``footprint_cells``.
+
+    The count, the catalog and the mask table are prepared once per
+    application and input DataFrame objects
+    (:func:`orthority_spark.session.prepared`), so later calls with the
+    same ``footprint_cells`` and ``summary`` objects launch no Spark job.
     """
-    # decode (res, ix, iy), wrap ix around the antimeridian (mod 2^res) and
-    # drop out-of-range iy — mirrors grid.k_ring exactly, so neighborhoods
-    # crossing the +-180 lon seam or the lat poles stay correct
-    expanded = (
-        footprint_cells.select("filename", "cell")
-        .withColumn("res", F.expr("shiftright(cell, 52)"))
-        .withColumn(
-            "ix", F.expr(f"shiftright(cell, 26) & {grid.IX_FACTOR - 1}")
-        )
-        .withColumn("iy", F.expr(f"cell & {grid.IX_FACTOR - 1}"))
-        .withColumn(
-            "n", F.expr("shiftleft(CAST(1 AS BIGINT), CAST(res AS INT))")
-        )
-        .withColumn(
-            "d", F.expr(f"explode(sequence(CAST(-{ring} AS BIGINT), {ring}))")
-        )
-        .withColumn(
-            "d2", F.expr(f"explode(sequence(CAST(-{ring} AS BIGINT), {ring}))")
-        )
-        .where(
-            (F.col("iy") + F.col("d2") >= 0) & (F.col("iy") + F.col("d2") < F.col("n"))
-        )
-        .select(
-            "filename",
-            (
-                F.col("res") * F.lit(grid.RES_FACTOR).cast("long")
-                + F.pmod(F.col("ix") + F.col("d"), F.col("n"))
-                * F.lit(grid.IX_FACTOR).cast("long")
-                + F.col("iy")
-                + F.col("d2")
-            ).alias("cell"),
-        )
-        .distinct()
-    )
+    spark = footprint_cells.sparkSession
+    expanded = _expand(footprint_cells, ring)
     # no distinct needed: the expanded index is distinct on
     # (filename, cell) and each page carries exactly one cell, so a
     # (url, filename) pair can appear at most once — a distinct here
     # would shuffle the full candidate set for nothing
     if n_index_cells is None:
-        n_index_cells = footprint_cells.count()
+        n_index_cells = prepared(
+            spark, "knn_index_cells", (footprint_cells,), (),
+            footprint_cells.count,
+        )
     est_rows = n_index_cells * (2 * ring + 1) ** 2
-    cat = summary.select("filename", "cx", "cy").take(MAX_LITERAL_CATALOG + 1)
+    cat = _catalog(summary)
+    pages = cell_join_key(pages_cells.select("url", "px", "py", "cell"))
     if est_rows <= max_broadcast_rows and len(cat) <= MAX_LITERAL_CATALOG:
-        # r6 plan: pivot the expanded index to per-cell MEMBERSHIP MASKS
-        # over the literal catalog (tiny-side groupBy, broadcast), join
-        # pages on their own cell (broadcast hash join) and rank map-side
-        # with the codegen'd unrolled comparisons — zero pages-side
-        # shuffles. The candidate set per page is identical to the r5
-        # join+window plan (mask j = 1 iff candidate j's ring covers the
-        # page's cell).
-        names = {r.filename: i for i, r in enumerate(cat)}
-        masks = (
-            expanded.where(F.col("filename").isin(list(names)))
-            .groupBy("cell")
-            .agg(
-                *[
-                    F.max(
-                        F.when(F.col("filename") == n, 1).otherwise(0)
-                    ).alias(f"_m{i}")
-                    for n, i in names.items()
-                ]
-            )
+        # r6 plan: join pages on their own cell to the per-cell mask
+        # table (broadcast hash join) and rank map-side with the
+        # codegen'd unrolled comparisons — zero pages-side shuffles. The
+        # candidate set per page is identical to the r5 join+window plan.
+        masks = prepared(
+            spark, "knn_masks", (footprint_cells, summary), (ring,),
+            lambda: _mask_table(expanded, cat),
         )
-        cand = pages_cells.select("url", "px", "py", "cell").join(
-            F.broadcast(masks), "cell"
-        )
+        cand = pages.join(F.broadcast(masks), "cell")
         return _topk_literal(cand.drop("cell"), cat, k, masked=True)
     if est_rows <= max_broadcast_rows:
         # catalog too wide for the literal unroll but the expanded index
@@ -232,8 +268,7 @@ def knn_kring(
             stacklevel=2,
         )
     cand = (
-        pages_cells.select("url", "px", "py", "cell")
-        .join(expanded, "cell")
+        pages.join(expanded, "cell")
         .join(F.broadcast(summary.select("filename", "cx", "cy")), "filename")
         .select("url", "px", "py", "filename", "cx", "cy")
     )

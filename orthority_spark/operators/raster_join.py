@@ -24,7 +24,10 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, functions as F
+
+from ..session import prepared
 
 
 class OutsideDemError(ValueError):
@@ -123,7 +126,7 @@ def sample_dem_z(
 
     - **broadcast gather** (default whenever the band's blocks fit in
       ``max_broadcast_bytes``): the tile blocks are collected once and
-      broadcast; a single ``mapInPandas`` pass over the points computes
+      broadcast; a single ``mapInArrow`` pass over the points computes
       the owning tile, the extent mask and the bilinear blend — ZERO
       shuffles and full scan-stage parallelism. A DEM raster is metadata
       next to a 10^12-point table, the classic broadcast side; the r5
@@ -135,14 +138,36 @@ def sample_dem_z(
       equi-joined to their owning tile key, Arrow cogroup kernel per
       tile group; the 16 KB block crosses the shuffle once per tile.
 
+    Both plans drop points outside the DEM grid and points whose px or
+    py is NaN, infinite or NULL.
+
+    The affine, extents, blocks and broadcast are prepared once per
+    application, ``dem`` DataFrame object and band
+    (:func:`orthority_spark.session.prepared`), so later calls with the
+    same ``dem`` object build their plan without a Spark job.
+
     Points whose 2x2 bilinear stencil crosses a tile border fall back to
     nearest-cell within the tile (documented tolerance; halo-tiled DEM
     removes this at scale)."""
     d = dem.where(F.col("band") == band)
-    # ONE driver-side metadata job (no blocks) for the (constant) affine
-    # + extents + the broadcast-size estimate; countDistinct on the
-    # transforms makes a mixed-transform DEM fail loudly instead of
-    # silently sampling against an arbitrary tile's affine (ADVICE r4).
+    spark = dem.sparkSession
+    geo = prepared(spark, "dem_extent", (dem,), (band,), lambda: _dem_extent(d, band))
+    a, c, e, f0, tile, ncols, nrows, cells = geo
+    if cells * 8 <= max_broadcast_bytes:
+        bc = prepared(
+            spark, "dem_blocks", (dem,), (band,), lambda: _broadcast_blocks(d)
+        )
+        return _sample_dem_z_broadcast(
+            points, bc, a, c, e, f0, tile, ncols, nrows
+        )
+    return _sample_dem_z_cogroup(points, d, a, c, e, f0, tile, ncols, nrows)
+
+
+def _dem_extent(d: DataFrame, band: int) -> tuple:
+    """(a, c, e, f0, tile, ncols, nrows, cells) of one DEM band, from ONE
+    metadata job (no blocks). countDistinct on the transforms makes a
+    mixed-transform DEM fail loudly instead of silently sampling against
+    an arbitrary tile's affine (ADVICE r4)."""
     ext = d.agg(
         F.first("transform").alias("t"),
         F.countDistinct("transform").alias("nt"),
@@ -157,12 +182,21 @@ def sample_dem_z(
             f"band {band} has {ext.nt} distinct transforms"
         )
     a, _, c, _, e, f0 = ext.t
-    tile, ncols, nrows = int(ext.h), int(ext.nc), int(ext.nr)
-    if int(ext.cells) * 8 <= max_broadcast_bytes:
-        return _sample_dem_z_broadcast(
-            points, d, a, c, e, f0, tile, ncols, nrows
+    return a, c, e, f0, int(ext.h), int(ext.nc), int(ext.nr), int(ext.cells)
+
+
+def _broadcast_blocks(d: DataFrame) -> Broadcast:
+    """Broadcast {dem_tile_id: 2-D float64 block} of one DEM band."""
+    rows = d.select(
+        "dem_tile_id", "row_off", "col_off", "height", "width", "block"
+    ).collect()
+    blocks = {
+        r.dem_tile_id: np.asarray(r.block, dtype="float64").reshape(
+            r.height, r.width
         )
-    return _sample_dem_z_cogroup(points, d, a, c, e, f0, tile, ncols, nrows)
+        for r in rows
+    }
+    return d.sparkSession.sparkContext.broadcast(blocks)
 
 
 def _bilinear_in_tile(
@@ -196,24 +230,15 @@ def _bilinear_in_tile(
 
 
 def _sample_dem_z_broadcast(
-    points: DataFrame, d: DataFrame,
+    points: DataFrame, bc: Broadcast,
     a: float, c: float, e: float, f0: float,
     tile: int, ncols: int, nrows: int,
 ) -> DataFrame:
-    """Broadcast-DEM mapInPandas gather: no shuffle, no join; the extent
+    """Broadcast-DEM mapInArrow gather: no shuffle, no join; the extent
     mask and tile ownership are computed inside the kernel (keeping the
     bounds out of the Spark plan also stops predicate pushdown from
-    re-inlining the upstream projection into a 4x-duplicated filter)."""
-    rows = d.select(
-        "dem_tile_id", "row_off", "col_off", "height", "width", "block"
-    ).collect()
-    blocks = {
-        r.dem_tile_id: np.asarray(r.block, dtype="float64").reshape(
-            r.height, r.width
-        )
-        for r in rows
-    }
-    bc = points.sparkSession.sparkContext.broadcast(blocks)
+    re-inlining the upstream projection into a 4x-duplicated filter).
+    A NaN or infinite px/py fails the extent mask."""
 
     def gather(it):
         import pyarrow as pa
@@ -261,6 +286,12 @@ def _sample_dem_z_cogroup(
     tile: int, ncols: int, nrows: int,
 ) -> DataFrame:
     """The r5 cogroup plan, kept as the big-DEM fallback."""
+    # Spark's floor maps NaN to 0 (and the extent filter below would keep
+    # it), so non-finite points are dropped first, as the broadcast
+    # kernel's extent mask drops them; abs(NaN) < Inf fails (NaN sorts
+    # above +Inf) and a NULL compares NULL
+    inf = F.lit(float("inf"))
+    points = points.where((F.abs("px") < inf) & (F.abs("py") < inf))
     col = F.floor((F.col("px") - F.lit(c)) / F.lit(a)).cast("long")
     row = F.floor((F.col("py") - F.lit(f0)) / F.lit(e)).cast("long")
     # drop points outside the DEM grid BEFORE deriving the tile key:

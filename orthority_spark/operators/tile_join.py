@@ -53,13 +53,27 @@ def assign_cells(pages: DataFrame, res: int = config.GRID_RES) -> DataFrame:
     (``cell_col`` alone would clamp it onto an edge cell)."""
     lat, lon = F.col("lat"), F.col("lon")
     px, py = world_xy(lat, lon)
-    # one reference per coordinate (joins push isnotnull(cell) below the
-    # geotag parse); Spark orders NaN above +Inf, so abs(NaN) < Inf fails
+    # Spark orders NaN above +Inf, so abs(NaN) < Inf fails. Joins never
+    # key on this nullable column: they key on cell_join_key (below)
     inf = F.lit(float("inf"))
     finite = (F.abs(lat) < inf) & (F.abs(lon) < inf)
     return pages.withColumn(
         "cell", F.when(finite, grid.cell_col(lat, lon, res))
     ).withColumn("px", px).withColumn("py", py)
+
+
+def cell_join_key(pages_cells: DataFrame) -> DataFrame:
+    """pages_cells whose ``cell`` is a NON-NULL join key: a masked (NULL)
+    cell becomes -1. Every cell equi-join keys on this. A join on the
+    nullable ``cell`` infers isnotnull(cell), and the optimizer pushes
+    that below the geotag projection into a Filter, which gets no
+    subexpression elimination and re-runs the geotag regexp for lat and
+    again for lon. -1 joins nothing: a cell id is
+    res * RES_FACTOR + ix * IX_FACTOR + iy with res, ix and iy all >= 0,
+    so no footprint cell (nor any k-ring cell) is negative."""
+    return pages_cells.withColumn(
+        "cell", F.coalesce(F.col("cell"), F.lit(-1).cast("long"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -151,7 +165,7 @@ def pip_join_broadcast(
     fits in a broadcast (it always should — it is metadata, not data).
     """
     fc = _attach_edge_arrays(footprint_cells, footprint_edges)
-    cand = pages_cells.join(F.broadcast(fc), "cell")
+    cand = cell_join_key(pages_cells).join(F.broadcast(fc), "cell")
     return _pip_filter(cand, list(keep))
 
 
@@ -177,7 +191,7 @@ def pip_join_salted(
     # project to join-relevant columns BEFORE the shuffle: never shuffle
     # page payload (text/html) through a join that only needs geometry
     proj = list(dict.fromkeys(["url", "cell", "px", "py", *keep]))
-    salted_pages = pages_cells.select(*proj).withColumn(
+    salted_pages = cell_join_key(pages_cells.select(*proj)).withColumn(
         "salt", F.pmod(F.xxhash64(F.col("url")), F.lit(n_salt))
     )
     replicated = fc.withColumn(

@@ -7,7 +7,10 @@ shuffle-partition sizing) are what we would submit to a real cluster via
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from collections.abc import Callable
+from typing import Any
+
+from pyspark.sql import DataFrame, SparkSession
 
 from . import config
 
@@ -52,3 +55,43 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+#: (applicationId, name, ids of the input frames, args) ->
+#: (the input frames, the prepared value); see :func:`prepared`.
+_PREPARED: dict[tuple, tuple[tuple[DataFrame, ...], Any]] = {}
+
+
+def prepared(
+    spark: SparkSession,
+    name: str,
+    frames: tuple[DataFrame, ...],
+    args: tuple,
+    build: Callable[[], Any],
+) -> Any:
+    """``build()``, run once per application, input frames and ``args``.
+
+    Operators use this for the driver-side state they derive from small
+    inputs that do not change between jobs: the DEM affine, blocks and
+    their broadcast (``raster_join.sample_dem_z``), the kNN catalog and
+    cell index (``operators/knn.py``), the fixture DEM itself. A later
+    call with the SAME DataFrame objects and equal ``args`` gets the
+    stored value and launches no Spark job.
+
+    Lifetime: per application and per DataFrame OBJECT. The entry holds
+    its input frames by strong reference, so no other frame can take
+    over their ``id`` while it lives. A new DataFrame object is prepared
+    again, even over the same path, since nothing here can see that a
+    source changed under a plan. Entries, and the broadcasts they hold,
+    live until the application stops; the next entry stored under a new
+    application drops them (as ``sources.scan.parallel_read`` does). A
+    ``build`` that raises stores nothing."""
+    app = spark.sparkContext.applicationId
+    key = (app, name, tuple(id(f) for f in frames), args)
+    hit = _PREPARED.get(key)
+    if hit is None:
+        hit = (frames, build())
+        for k in [k for k in _PREPARED if k[0] != app]:
+            del _PREPARED[k]
+        _PREPARED[key] = hit
+    return hit[1]

@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..geom.dem import DEM_OFFSET, DEM_RES, dem_sinusoid
+from ..session import prepared
 from .local import local_table
 
 TILE = 64
@@ -100,9 +101,17 @@ def build_dem_tiles(
 
 
 def fixture_dem(spark: SparkSession, partial: bool = False) -> DataFrame:
-    """DEM covering the footprint fixture block with margin."""
+    """DEM covering the footprint fixture block with margin.
+
+    One DataFrame object per application and ``partial`` (the tiles are
+    a pure function of the arguments), so the DEM state ``sample_dem_z``
+    prepares for it is reused across calls."""
     # footprint block spans ~(19850..20300, 29880..30250); cover generously
     # with a multi-tile grid (2x3 tiles per band) so tile pruning is real
-    return build_dem_tiles(
-        spark, x0=18000.0, y1=31500.0, n_rows=128, n_cols=160, partial=partial
+    return prepared(
+        spark, "fixture_dem", (), (partial,),
+        lambda: build_dem_tiles(
+            spark, x0=18000.0, y1=31500.0, n_rows=128, n_cols=160,
+            partial=partial,
+        ),
     )

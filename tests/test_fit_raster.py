@@ -394,7 +394,9 @@ def test_sample_dem_z_broadcast_equals_cogroup(spark):
     """r6: the broadcast-gather default and the cogroup fallback (forced
     via max_broadcast_bytes=0) must return the identical point->z map,
     bit for bit — including border-stencil fallback and out-of-extent
-    drops."""
+    drops. Both drop NaN, infinite and NULL points (Spark's floor maps
+    NaN to 0, which once put a NaN point on tile 0 in the cogroup
+    plan)."""
     dem = fixture_dem(spark)
     rng = np.random.RandomState(11)
     # mix of interior, tile-border-straddling and out-of-extent points
@@ -404,8 +406,13 @@ def test_sample_dem_z_broadcast_equals_cogroup(spark):
     py = np.concatenate([
         rng.uniform(27500, 31500, 200), [31501.0, 27600.5, 29579.99]
     ])
+    nan, inf = float("nan"), float("inf")
+    bad = [("nan_x", nan, 30000.0), ("nan_y", 19000.0, nan),
+           ("inf_x", inf, 30000.0), ("ninf_y", 19000.0, -inf),
+           ("null_x", None, 30000.0), ("null_y", 19000.0, None)]
     pts = spark.createDataFrame(
-        [(f"p{i}", float(x), float(y)) for i, (x, y) in enumerate(zip(px, py))],
+        [(f"p{i}", float(x), float(y)) for i, (x, y) in enumerate(zip(px, py))]
+        + bad,
         "url string, px double, py double")
     fast = {r.url: r.z for r in sample_dem_z(pts, dem, band=1).collect()}
     slow = {
@@ -416,3 +423,4 @@ def test_sample_dem_z_broadcast_equals_cogroup(spark):
     }
     assert fast == slow
     assert len(fast) > 100  # in-extent points actually sampled
+    assert not set(fast) & {u for u, _, _ in bad}

@@ -108,3 +108,97 @@ def test_ray_march_rays_shuffle_is_metadata_only(spark):
     plan = _plan(q_ray_dem_footprints(spark, SF))
     assert "MapInArrow" in plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
+
+
+def _vector_inputs(spark):
+    from orthority_spark.functions.geotag import with_geotag
+    from orthority_spark.sources import footprints as fp
+    from orthority_spark.sources.pages import synthetic_pages
+
+    recs = fp.footprint_records()
+    return (
+        with_geotag(synthetic_pages(spark, 2000)),
+        fp.footprint_catalog_flat_df(spark, recs),
+        fp.footprint_edges_df(spark, recs),
+        fp.footprint_cells_df(spark, recs),
+        fp.footprint_summary_df(spark, recs),
+    )
+
+
+def test_cell_joins_parse_the_geotag_once(spark):
+    """The cell equi-joins key on a non-null cell, so no isnotnull(cell)
+    filter is pushed below the geotag projection to re-run its regexp:
+    each join plan holds exactly the regexp_extract calls of the geotag
+    projection alone."""
+    from orthority_spark.operators import knn, tile_join
+
+    pages, cat, edges, cells, summ = _vector_inputs(spark)
+    pc = tile_join.assign_cells(pages)
+    base = _plan(pages).count("regexp_extract")
+    assert base > 0
+    plans = {
+        "broadcast": tile_join.pip_join_broadcast(pc, cat, edges, keep=["cell"]),
+        "salted": tile_join.pip_join_salted(pc, cat, edges, keep=["cell"]),
+        "kring": knn.knn_kring(pc, cells, summ, k=3, ring=8),
+    }
+    counts = {k: _plan(df).count("regexp_extract") for k, df in plans.items()}
+    assert counts == {k: base for k in plans}, counts
+
+
+def test_repeated_plans_launch_no_jobs_and_no_broadcasts(spark, monkeypatch):
+    """A second sample_dem_z and knn_kring plan over the same DEM and
+    catalog objects reuses the prepared state: no Spark job, no new
+    broadcast."""
+    from pyspark import SparkContext
+
+    from orthority_spark.operators import knn, raster_join, tile_join
+    from orthority_spark.sources.dem_tiles import fixture_dem
+
+    pages, _cat, _edges, cells, summ = _vector_inputs(spark)
+    pc = tile_join.assign_cells(pages)
+    pts = pc.select("url", "px", "py")
+    raster_join.sample_dem_z(pts, fixture_dem(spark), band=1)
+    knn.knn_kring(pc, cells, summ, k=3, ring=8)
+
+    made = []
+    real = SparkContext.broadcast
+    monkeypatch.setattr(
+        SparkContext, "broadcast", lambda sc, v: made.append(v) or real(sc, v)
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("repeated-plans", "second plans over prepared inputs")
+    try:
+        raster_join.sample_dem_z(pts, fixture_dem(spark), band=1)
+        knn.knn_kring(pc, cells, summ, k=3, ring=8)
+        jobs = list(sc.statusTracker().getJobIdsForGroup("repeated-plans"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == [] and made == []
+
+
+def test_sample_dem_z_follows_the_dem_object(spark):
+    """Prepared DEM state is keyed by the DataFrame object: after the
+    full fixture DEM, the partial one (NaN upper-left triangle, sampled
+    as a NULL z) yields its own z values, and the full one its own
+    again."""
+    from orthority_spark.operators.raster_join import sample_dem_z
+    from orthority_spark.sources.dem_tiles import fixture_dem
+
+    # (5.5, 5.5) cells from the UL corner lies in the partial DEM's NaN
+    # triangle; (150.5, 120.5) lies far outside it
+    pts = spark.createDataFrame(
+        [("nan_corner", 18165.0, 31335.0), ("valid", 22515.0, 27885.0)],
+        "url string, px double, py double",
+    )
+
+    def z(dem):
+        return {r.url: r.z for r in sample_dem_z(pts, dem, band=1).collect()}
+
+    full, partial = fixture_dem(spark), fixture_dem(spark, partial=True)
+    z_full = z(full)
+    z_partial = z(partial)
+    assert z_full["nan_corner"] is not None
+    assert z_partial["nan_corner"] is None
+    assert z_partial["valid"] == z_full["valid"]
+    assert z(full) == z_full

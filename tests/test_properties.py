@@ -64,6 +64,49 @@ def test_assign_cells_nonfinite_is_null_like_twin(spark, rows):
                    zip(twin.data, np.ma.getmaskarray(twin))]
 
 
+# around the footprint fixture block (world x 19850..20300, y 29880..30250)
+near_lat = st.floats(min_value=-33.7045, max_value=-33.694)
+near_lon = st.floats(min_value=24.195, max_value=24.206)
+nonfinite = st.sampled_from([float("nan"), float("inf"), float("-inf"), None])
+
+
+@settings(max_examples=8, deadline=None)
+@given(st.lists(st.tuples(st.one_of(near_lat, nonfinite),
+                          st.one_of(near_lon, nonfinite)),
+                min_size=1, max_size=12))
+def test_nonfinite_pages_join_nothing(spark, rows):
+    """A page with a NaN, infinite or NULL lat/lon appears in no output
+    of the cell joins, and the output equals the same call over the
+    finite pages alone. Its NULL cell becomes the join key -1, a value
+    no footprint cell can take (tile_join.cell_join_key)."""
+    from orthority_spark.operators import knn, tile_join
+    from orthority_spark.sources import footprints as fp
+
+    recs = fp.footprint_records()
+    cat = fp.footprint_catalog_flat_df(spark, recs)
+    edges = fp.footprint_edges_df(spark, recs)
+    cells = fp.footprint_cells_df(spark, recs)
+    summ = fp.footprint_summary_df(spark, recs)
+    pages = spark.createDataFrame(
+        [(f"u{i}", lat, lon) for i, (lat, lon) in enumerate(rows)],
+        "url string, lat double, lon double",
+    )
+    bad = {f"u{i}" for i, r in enumerate(rows)
+           if not all(v is not None and np.isfinite(v) for v in r)}
+    finite = pages.where(~pages.url.isin(list(bad)))
+    ops = {
+        "broadcast": lambda pc: tile_join.pip_join_broadcast(
+            pc, cat, edges, keep=["cell"]),
+        "salted": lambda pc: tile_join.pip_join_salted(
+            pc, cat, edges, keep=["cell"]),
+        "kring": lambda pc: knn.knn_kring(pc, cells, summ, k=3, ring=8),
+    }
+    for name, op in ops.items():
+        got = sorted(op(tile_join.assign_cells(pages)).collect())
+        assert not {r.url for r in got} & bad, name
+        assert got == sorted(op(tile_join.assign_cells(finite)).collect()), name
+
+
 @settings(max_examples=100, deadline=None)
 @given(angle, angle, angle)
 def test_rotation_roundtrip_property(o, p, k):
