@@ -228,11 +228,6 @@ def knn_kring(
     same ``footprint_cells`` and ``summary`` objects launch no Spark job.
     """
     spark = footprint_cells.sparkSession
-    expanded = _expand(footprint_cells, ring)
-    # no distinct needed: the expanded index is distinct on
-    # (filename, cell) and each page carries exactly one cell, so a
-    # (url, filename) pair can appear at most once — a distinct here
-    # would shuffle the full candidate set for nothing
     if n_index_cells is None:
         n_index_cells = prepared(
             spark, "knn_index_cells", (footprint_cells,), (),
@@ -248,10 +243,11 @@ def knn_kring(
         # candidate set per page is identical to the r5 join+window plan.
         masks = prepared(
             spark, "knn_masks", (footprint_cells, summary), (ring,),
-            lambda: _mask_table(expanded, cat),
+            lambda: _mask_table(_expand(footprint_cells, ring), cat),
         )
         cand = pages.join(F.broadcast(masks), "cell")
         return _topk_literal(cand.drop("cell"), cat, k, masked=True)
+    expanded = _expand(footprint_cells, ring)
     if est_rows <= max_broadcast_rows:
         # catalog too wide for the literal unroll but the expanded index
         # still broadcasts: the r5 broadcast join + window plan
@@ -267,6 +263,10 @@ def knn_kring(
             "broadcast plan)",
             stacklevel=2,
         )
+    # no distinct needed: the expanded index is distinct on
+    # (filename, cell) and each page carries exactly one cell, so a
+    # (url, filename) pair can appear at most once — a distinct here
+    # would shuffle the full candidate set for nothing
     cand = (
         pages.join(expanded, "cell")
         .join(F.broadcast(summary.select("filename", "cx", "cy")), "filename")

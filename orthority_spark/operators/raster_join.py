@@ -151,8 +151,9 @@ def sample_dem_z(
     removes this at scale)."""
     d = dem.where(F.col("band") == band)
     spark = dem.sparkSession
-    geo = prepared(spark, "dem_extent", (dem,), (band,), lambda: _dem_extent(d, band))
-    a, c, e, f0, tile, ncols, nrows, cells = geo
+    a, c, e, f0, tile, ncols, nrows, cells = prepared(
+        spark, "dem_extent", (dem,), (band,), lambda: _dem_extent(d, band)
+    )
     if cells * 8 <= max_broadcast_bytes:
         bc = prepared(
             spark, "dem_blocks", (dem,), (band,), lambda: _broadcast_blocks(d)
