@@ -20,6 +20,7 @@ ties stably across engines and parallelism levels.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .. import grid
@@ -123,7 +124,8 @@ def _catalog(summary: DataFrame) -> list:
 
 def _expand(footprint_cells: DataFrame, ring: int) -> DataFrame:
     """(filename, cell) of every cell in the ``ring``-ring of each
-    footprint covering-cell, distinct."""
+    footprint covering-cell, distinct: the Spark form of
+    :func:`_ring_cells`, for the plans that join on the expanded index."""
     # decode (res, ix, iy), wrap ix around the antimeridian (mod 2^res) and
     # drop out-of-range iy — mirrors grid.k_ring exactly, so neighborhoods
     # crossing the +-180 lon seam or the lat poles stay correct
@@ -160,26 +162,44 @@ def _expand(footprint_cells: DataFrame, ring: int) -> DataFrame:
     )
 
 
-def _mask_table(expanded: DataFrame, cat: list) -> DataFrame:
+def _ring_cells(cells: np.ndarray, ring: int) -> tuple[np.ndarray, np.ndarray]:
+    """(i, cell) for every cell in the ``ring``-ring of ``cells[i]``, not
+    distinct: the driver-side, vectorized form of :func:`_expand` (ix
+    wraps around the antimeridian, out-of-range iy rows are dropped)."""
+    res, ix, iy = grid.cell_decode(cells)
+    n = (np.int64(1) << res)[:, None]
+    d = np.arange(-ring, ring + 1, dtype="int64")
+    dx, dy = (g.ravel()[None, :] for g in np.meshgrid(d, d, indexing="ij"))
+    jx = (ix[:, None] + dx) % n
+    jy = iy[:, None] + dy
+    keep = (jy >= 0) & (jy < n)
+    out = res[:, None] * grid.RES_FACTOR + jx * grid.IX_FACTOR + jy
+    return np.nonzero(keep)[0], out[keep]
+
+
+def _mask_table(spark, index: list, cat: list, ring: int) -> DataFrame:
     """Per-cell MEMBERSHIP MASKS ``(cell, _m0.._m{n-1})`` over the literal
-    catalog (mask j = 1 iff candidate j's ring covers the cell), computed
-    once and held as a local relation: a broadcast of it re-aggregates
-    nothing. Its rows are at most the expanded index, which the
+    catalog (mask j = 1 iff candidate j's ring covers the cell), built
+    on the driver from the collected ``(filename, cell)`` index rows and
+    held as a local relation: a broadcast of it re-aggregates nothing.
+    Its rows are at most the expanded index, which the
     ``max_broadcast_rows`` guard already bounds."""
     names = {r.filename: i for i, r in enumerate(cat)}
-    masks = (
-        expanded.where(F.col("filename").isin(list(names)))
-        .groupBy("cell")
-        .agg(
-            *[
-                F.max(
-                    F.when(F.col("filename") == n, 1).otherwise(0)
-                ).alias(f"_m{i}")
-                for n, i in names.items()
-            ]
-        )
+    rows = [
+        (names[r.filename], r.cell)
+        for r in index if r.filename in names and r.cell is not None
+    ]
+    j, cells = np.array(rows, dtype="int64").reshape(-1, 2).T
+    src, ring_cells = _ring_cells(cells, ring)
+    uniq, inv = np.unique(ring_cells, return_inverse=True)
+    m = np.zeros((len(uniq), len(cat)), dtype="int32")
+    m[inv, j[src]] = 1
+    cols = list(names.values())
+    return local_table(
+        spark,
+        [(c, *r) for c, r in zip(uniq.tolist(), m[:, cols].tolist())],
+        "cell long, " + ", ".join(f"_m{i} int" for i in cols),
     )
-    return local_table(masks.sparkSession, masks.collect(), masks.schema)
 
 
 def knn_bruteforce(pages_cells: DataFrame, summary: DataFrame, k: int = 3) -> DataFrame:
@@ -205,7 +225,6 @@ def knn_kring(
     k: int = 3,
     ring: int = 8,
     max_broadcast_rows: int = 4_000_000,
-    n_index_cells: int | None = None,
 ) -> DataFrame:
     """Cell k-ring candidate join + window top-k (the 10^12-page plan).
 
@@ -219,21 +238,25 @@ def knn_kring(
     longs at the default), broadcasting it would stress the driver, so
     the explicit broadcast hint is withheld and Spark plans the cell
     equi-join itself (shuffle-hash/SMJ for a genuinely large index).
-    Pass ``n_index_cells`` (e.g. from catalog stats) to avoid the
-    guard's one count() job over ``footprint_cells``.
 
-    The count, the catalog and the mask table are prepared once per
-    application and input DataFrame objects
-    (:func:`orthority_spark.session.prepared`), so later calls with the
-    same ``footprint_cells`` and ``summary`` objects launch no Spark job.
+    Prepare: one ``collect()`` of at most
+    ``max_broadcast_rows // (2*ring+1)**2 + 1`` rows of
+    ``footprint_cells`` decides the guard (a full read means the index
+    fits) and, under the literal plan, supplies the rows of the mask
+    table, which is expanded and aggregated on the driver in numpy.
+    With the catalog ``take()``, these are driver-side reads that run no
+    Spark job over local tables. They are prepared once per application
+    and input DataFrame objects (:func:`orthority_spark.session.prepared`),
+    so later calls with the same ``footprint_cells`` and ``summary``
+    objects launch no Spark job.
     """
     spark = footprint_cells.sparkSession
-    if n_index_cells is None:
-        n_index_cells = prepared(
-            spark, "knn_index_cells", (footprint_cells,), (),
-            footprint_cells.count,
-        )
-    est_rows = n_index_cells * (2 * ring + 1) ** 2
+    cap = max_broadcast_rows // (2 * ring + 1) ** 2 + 1
+    index = prepared(
+        spark, "knn_index", (footprint_cells,), (cap,),
+        lambda: footprint_cells.select("filename", "cell").limit(cap).collect(),
+    )
+    est_rows = len(index) * (2 * ring + 1) ** 2
     cat = _catalog(summary)
     pages = cell_join_key(pages_cells.select("url", "px", "py", "cell"))
     if est_rows <= max_broadcast_rows and len(cat) <= MAX_LITERAL_CATALOG:
@@ -243,7 +266,7 @@ def knn_kring(
         # candidate set per page is identical to the r5 join+window plan.
         masks = prepared(
             spark, "knn_masks", (footprint_cells, summary), (ring,),
-            lambda: _mask_table(_expand(footprint_cells, ring), cat),
+            lambda: _mask_table(spark, index, cat, ring),
         )
         cand = pages.join(F.broadcast(masks), "cell")
         return _topk_literal(cand.drop("cell"), cat, k, masked=True)
@@ -256,7 +279,7 @@ def knn_kring(
         import warnings
 
         warnings.warn(
-            f"knn_kring: expanded cell index ~{est_rows} rows exceeds the "
+            f"knn_kring: expanded cell index >= {est_rows} rows exceeds the "
             f"broadcast guard ({max_broadcast_rows}); withholding the "
             "broadcast hint and letting Spark plan the cell equi-join "
             "(raise max_broadcast_rows or lower ring to force the "

@@ -23,7 +23,6 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark import Broadcast
 from pyspark.sql import DataFrame, functions as F
 
@@ -138,10 +137,17 @@ def sample_dem_z(
       equi-joined to their owning tile key, Arrow cogroup kernel per
       tile group; the 16 KB block crosses the shuffle once per tile.
 
-    Both plans drop points outside the DEM grid and points whose px or
-    py is NaN, infinite or NULL.
+    Both plans drop points outside the DEM grid, points in a grid tile
+    the band does not hold, and points whose px or py is NaN, infinite
+    or NULL.
 
-    The affine, extents, blocks and broadcast are prepared once per
+    Prepare: one ``collect()`` of the band's tile metadata (no
+    ``block`` column) gives the affine, the one-transform check, the
+    extent and the cell count; the broadcast plan then collects the
+    blocks once more and broadcasts them. Both are driver-side reads of
+    O(tiles) rows, reduced in numpy; over a local DEM table such as
+    ``fixture_dem`` they run no Spark job, and over a file-backed DEM
+    they scan without a shuffle. They are prepared once per
     application, ``dem`` DataFrame object and band
     (:func:`orthority_spark.session.prepared`), so later calls with the
     same ``dem`` object build their plan without a Spark job.
@@ -166,24 +172,24 @@ def sample_dem_z(
 
 def _dem_extent(d: DataFrame, band: int) -> tuple:
     """(a, c, e, f0, tile, ncols, nrows, cells) of one DEM band, from ONE
-    metadata job (no blocks). countDistinct on the transforms makes a
-    mixed-transform DEM fail loudly instead of silently sampling against
-    an arbitrary tile's affine (ADVICE r4)."""
-    ext = d.agg(
-        F.first("transform").alias("t"),
-        F.countDistinct("transform").alias("nt"),
-        F.max("height").alias("h"),
-        F.max(F.col("col_off") + F.col("width")).alias("nc"),
-        F.max(F.col("row_off") + F.col("height")).alias("nr"),
-        F.sum(F.col("height").cast("long") * F.col("width")).alias("cells"),
-    ).first()
-    if ext.nt != 1:
+    collect of its tile metadata (no blocks; O(tiles) rows on the
+    driver). A mixed-transform DEM fails loudly instead of silently
+    sampling against an arbitrary tile's affine (ADVICE r4)."""
+    rows = d.select("transform", "row_off", "col_off", "height", "width").collect()
+    transforms = {tuple(r.transform) for r in rows}
+    if len(transforms) != 1:
         raise ValueError(
             f"sample_dem_z requires one shared affine transform per band; "
-            f"band {band} has {ext.nt} distinct transforms"
+            f"band {band} has {len(transforms)} distinct transforms"
         )
-    a, _, c, _, e, f0 = ext.t
-    return a, c, e, f0, int(ext.h), int(ext.nc), int(ext.nr), int(ext.cells)
+    (a, _, c, _, e, f0), = transforms
+    ro, co, h, w = np.array(
+        [(r.row_off, r.col_off, r.height, r.width) for r in rows], dtype="int64"
+    ).T
+    return (
+        a, c, e, f0, int(h.max()), int((co + w).max()), int((ro + h).max()),
+        int((h * w).sum()),
+    )
 
 
 def _broadcast_blocks(d: DataFrame) -> Broadcast:
@@ -256,23 +262,31 @@ def _sample_dem_z_broadcast(
             if not m.any():
                 continue
             px, py = px[m], py[m]
-            # r6: the url strings stay an Arrow buffer end to end
-            # (filter is an offsets-level op) — no pandas object arrays
-            urls = b.column(0).filter(pa.array(m))
             gci = gcol[m].astype("int64")
             gri = grow[m].astype("int64")
             col_off = gci - gci % tile
             row_off = gri - gri % tile
             z = np.empty(len(px), dtype="float64")
+            hit = np.zeros(len(px), dtype=bool)
             tkey = row_off * (ncols + tile) + col_off
             for k in np.unique(tkey):
                 sel = tkey == k
                 ro, co = int(row_off[sel][0]), int(col_off[sel][0])
+                blk = tiles.get(f"{ro}:{co}")
+                if blk is None:  # a grid tile the DEM does not hold
+                    continue
+                hit |= sel
                 z[sel] = _bilinear_in_tile(
-                    tiles[f"{ro}:{co}"], px[sel], py[sel], a, c, e, f0, ro, co
+                    blk, px[sel], py[sel], a, c, e, f0, ro, co
                 )
+            m[m] = hit
+            # r6: the url strings stay an Arrow buffer end to end
+            # (filter is an offsets-level op) — no pandas object arrays
             yield pa.RecordBatch.from_arrays(
-                [urls, pa.array(z, type=pa.float64(), from_pandas=True)],
+                [
+                    b.column(0).filter(pa.array(m)),
+                    pa.array(z[hit], type=pa.float64(), from_pandas=True),
+                ],
                 names=["url", "z"],
             )
 
@@ -287,6 +301,8 @@ def _sample_dem_z_cogroup(
     tile: int, ncols: int, nrows: int,
 ) -> DataFrame:
     """The r5 cogroup plan, kept as the big-DEM fallback."""
+    import pandas as pd
+
     # Spark's floor maps NaN to 0 (and the extent filter below would keep
     # it), so non-finite points are dropped first, as the broadcast
     # kernel's extent mask drops them; abs(NaN) < Inf fails (NaN sorts
@@ -322,7 +338,7 @@ def _sample_dem_z_cogroup(
     # it onto every point row — 10^12 points x 16 KB is the difference
     # between a working plan and a dead one), and the kernel is one numpy
     # fancy-index gather per tile group
-    def interp(_key, pts_pdf: pd.DataFrame, dem_pdf: pd.DataFrame) -> pd.DataFrame:
+    def interp(_key, pts_pdf, dem_pdf):
         if not len(pts_pdf) or not len(dem_pdf):
             return pd.DataFrame({"url": pd.Series(dtype="object"),
                                  "z": pd.Series(dtype="float64")})

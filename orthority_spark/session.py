@@ -72,11 +72,21 @@ def prepared(
     """``build()``, run once per application, input frames and ``args``.
 
     Operators use this for the driver-side state they derive from small
-    inputs that do not change between jobs: the DEM affine, blocks and
-    their broadcast (``raster_join.sample_dem_z``), the kNN catalog and
-    cell index (``operators/knn.py``), the fixture DEM itself. A later
-    call with the SAME DataFrame objects and equal ``args`` gets the
-    stored value and launches no Spark job.
+    inputs that do not change between jobs, each read with one
+    ``collect()`` (or ``take()``) and reduced in numpy:
+
+    - ``raster_join.sample_dem_z``: the band's tile metadata (affine,
+      extent, cell count), and, for the broadcast plan, its blocks and
+      their broadcast;
+    - ``operators/knn.py``: the catalog rows, the footprint index rows
+      (at most the broadcast guard's worth) and the mask table built
+      from them;
+    - ``sources.dem_tiles.fixture_dem``: the DEM table itself, rendered
+      on the driver.
+
+    Over local tables these reads run no Spark job. A later call with
+    the SAME DataFrame objects and equal ``args`` gets the stored value
+    and launches no Spark job.
 
     Lifetime: per application and per DataFrame OBJECT. The entry holds
     its input frames by strong reference, so no other frame can take

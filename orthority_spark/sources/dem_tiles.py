@@ -7,23 +7,21 @@ sinusoid (offset 825 / gain 25), band 2 = flat plane at 825 (closed-form
 oracle); a 'partial' variant NaNs the upper triangle to exercise
 nodata-mask semantics (conftest.py:635-655).
 
-Tiles are generated DISTRIBUTED: the driver enumerates tile metadata
-(cheap), executors evaluate the surface into blocks via an Arrow batch
-kernel — at 100 TB the DEM would be an Iceberg table produced exactly
-this way from source rasters.
+The table is rendered on the driver into a ``LocalRelation``: 12 tiles
+of 16 KB are a small driver-side input, as Orthority's DEM window is
+(ortho.py:144-190), so reading it back (``sample_dem_z``'s prepare
+collects) runs no Spark job. A DEM at scale is a table produced from
+source rasters (e.g. Iceberg) and read through the same schema.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from ..geom.dem import DEM_OFFSET, DEM_RES, dem_sinusoid
 from ..session import prepared
-from .local import local_table
 
 TILE = 64
 
@@ -47,57 +45,48 @@ def build_dem_tiles(
     partial: bool = False,
     tile: int = TILE,
 ) -> DataFrame:
-    """DEM tile table covering n_rows x n_cols cells from UL corner (x0, y1)."""
+    """DEM tile table covering n_rows x n_cols cells from UL corner (x0, y1),
+    rendered on the driver into a local relation. Nodata cells are float
+    NaN, not NULL (an Arrow table built from numpy keeps NaN)."""
     transform = dem_transform(x0, y1)
+    a, _, c0, _, e, f0 = transform
     meta = [
-        (f"{r}:{c}", band, r, c, min(tile, n_rows - r), min(tile, n_cols - c))
+        (band, r, c, min(tile, n_rows - r), min(tile, n_cols - c))
         for band in (1, 2)
         for r in range(0, n_rows, tile)
         for c in range(0, n_cols, tile)
     ]
-    meta_df = local_table(
-        spark,
-        meta,
-        "dem_tile_id string, band int, row_off int, col_off int, "
-        "height int, width int",
+    blocks = []
+    for band, row_off, col_off, height, width in meta:
+        cols, rows = np.meshgrid(
+            np.arange(col_off, col_off + width),
+            np.arange(row_off, row_off + height),
+        )
+        # pixel-center sampling (+0.5, camera.py:123 convention)
+        x = a * (cols + 0.5) + c0
+        y = e * (rows + 0.5) + f0
+        if band == 1:
+            z = dem_sinusoid(x, y).astype("float32")
+        else:
+            z = np.full(x.shape, DEM_OFFSET, dtype="float32")
+        if partial:
+            # global upper triangle -> NaN (row + col in global grid)
+            z = np.where(cols + rows < (width + height), np.nan, z)
+        blocks.append(z.ravel())
+    band, row_off, col_off, height, width = zip(*meta)
+    table = pa.table(
+        {
+            "dem_tile_id": [f"{r}:{c}" for r, c in zip(row_off, col_off)],
+            "band": pa.array(band, pa.int32()),
+            "row_off": pa.array(row_off, pa.int32()),
+            "col_off": pa.array(col_off, pa.int32()),
+            "height": pa.array(height, pa.int32()),
+            "width": pa.array(width, pa.int32()),
+            "transform": pa.array([list(transform)] * len(meta), pa.list_(pa.float64())),
+            "block": pa.array(blocks, pa.list_(pa.float32())),
+        }
     )
-    a, b, c0, d, e, f0 = transform
-
-    def render(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for t in pdf.itertuples():
-                cols, rows = np.meshgrid(
-                    np.arange(t.col_off, t.col_off + t.width),
-                    np.arange(t.row_off, t.row_off + t.height),
-                )
-                # pixel-center sampling (+0.5, camera.py:123 convention)
-                x = a * (cols + 0.5) + c0
-                y = e * (rows + 0.5) + f0
-                if t.band == 1:
-                    z = dem_sinusoid(x, y).astype("float32")
-                else:
-                    z = np.full(x.shape, DEM_OFFSET, dtype="float32")
-                if partial:
-                    # global upper triangle -> NaN (row + col in global grid)
-                    z = np.where(cols + rows < (t.width + t.height), np.nan, z)
-                out.append(
-                    {
-                        "dem_tile_id": t.dem_tile_id,
-                        "band": t.band,
-                        "row_off": t.row_off,
-                        "col_off": t.col_off,
-                        "height": t.height,
-                        "width": t.width,
-                        "transform": list(transform),
-                        "block": z.ravel(),
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    return meta_df.repartition("dem_tile_id", "band").mapInPandas(
-        render, schema=DEM_SCHEMA
-    )
+    return spark.createDataFrame(table, DEM_SCHEMA)
 
 
 def fixture_dem(spark: SparkSession, partial: bool = False) -> DataFrame:

@@ -159,6 +159,73 @@ def test_sample_dem_z_drops_out_of_extent(spark):
     assert got == {"in"}
 
 
+def test_sample_dem_z_drops_points_in_a_missing_tile(spark):
+    """A point inside the DEM grid whose tile the band does not hold is
+    dropped by both plans (the broadcast gather once raised KeyError in
+    its worker while the cogroup plan dropped the point)."""
+    dem = fixture_dem(spark).where("dem_tile_id != '64:64'")
+    pts = spark.createDataFrame(
+        [("hole", 20220.0, 29280.0), ("held", 19000.0, 30000.0)],
+        "url string, px double, py double",
+    )
+    for max_bytes in (256 << 20, 0):
+        got = sample_dem_z(pts, dem, band=1, max_broadcast_bytes=max_bytes)
+        assert {r.url for r in got.collect()} == {"held"}, max_bytes
+
+
+def test_raster_join_imports_no_pandas():
+    """The broadcast gather's Python workers import raster_join; only the
+    cogroup fallback imports pandas, and only when it plans."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import sys, orthority_spark.operators.raster_join; "
+        "print('pandas' in sys.modules)"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        check=True, cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert out.stdout.strip() == "False"
+
+
+@pytest.mark.parametrize("partial", [False, True])
+def test_fixture_dem_equals_numpy_render(spark, partial):
+    """The driver-rendered fixture DEM holds the 12 expected tiles, each
+    equal bit for bit to a per-tile numpy render of the sinusoid (band 1)
+    and the plane (band 2); the partial DEM's nodata cells are float NaN,
+    not NULL."""
+    from orthority_spark.sources.dem_tiles import dem_transform, TILE
+
+    transform = dem_transform(18000.0, 31500.0)
+    a, _, c, _, e, f0 = transform
+    rows = fixture_dem(spark, partial=partial).collect()
+    assert sorted((r.band, r.row_off, r.col_off) for r in rows) == [
+        (b, ro, co) for b in (1, 2) for ro in (0, 64) for co in (0, 64, 128)
+    ]
+    n_nan = 0
+    for r in rows:
+        assert r.dem_tile_id == f"{r.row_off}:{r.col_off}"
+        assert (r.height, r.width) == (TILE, min(TILE, 160 - r.col_off))
+        assert tuple(r.transform) == transform
+        assert None not in r.block
+        cols, rws = np.meshgrid(
+            np.arange(r.col_off, r.col_off + r.width),
+            np.arange(r.row_off, r.row_off + r.height),
+        )
+        x, y = a * (cols + 0.5) + c, e * (rws + 0.5) + f0
+        want = dem_sinusoid(x, y) if r.band == 1 else np.full(x.shape, DEM_OFFSET)
+        want = want.astype("float32")
+        if partial:
+            want[cols + rws < r.width + r.height] = np.nan
+        got = np.array(r.block, dtype="float32").reshape(r.height, r.width)
+        np.testing.assert_array_equal(got, want)
+        n_nan += int(np.isnan(got).sum())
+    assert n_nan == (16_512 if partial else 0)
+
+
 def test_sample_dem_z_rejects_mixed_transforms(spark):
     """sample_dem_z derives the (single) affine with first() in an
     unordered agg — sound only because every tile of a band shares one

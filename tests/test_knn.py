@@ -9,7 +9,7 @@ import pytest
 from orthority_spark import grid
 from orthority_spark.functions.geotag import with_geotag
 from orthority_spark.operators import tile_join
-from orthority_spark.operators.knn import knn_bruteforce, knn_kring
+from orthority_spark.operators.knn import _ring_cells, knn_bruteforce, knn_kring
 from orthority_spark.sources import footprints as fp
 from orthority_spark.sources.pages import synthetic_pages
 
@@ -119,3 +119,21 @@ def test_kring_expansion_matches_grid_k_ring_at_edges(spark):
         c in expected for c in patch
         if grid.cell_decode(np.array([c]))[1][0] < 2  # ix 0/1 = just east of -180
     )
+
+
+def test_ring_cells_match_grid_k_ring():
+    """The driver-side ring expansion behind knn_kring's mask table equals
+    grid.k_ring per cell: across the antimeridian, at both poles, and at
+    a coarse resolution where the ring wraps the whole globe."""
+    pts = [(8, 10.0, 0.0), (8, 10.0, 179.9), (8, 10.0, -179.9),
+           (8, 89.9, 179.9), (8, -89.9, -179.9), (2, 0.0, 0.0)]
+    cells = np.array([
+        int(grid.cell_index(np.array([lat]), np.array([lon]), res)[0])
+        for res, lat, lon in pts
+    ])
+    for ring in (1, 3):
+        src, got = _ring_cells(cells, ring)
+        for i, c in enumerate(cells):
+            assert np.array_equal(
+                np.unique(got[src == i]), grid.k_ring(int(c), ring)
+            ), (pts[i], ring)

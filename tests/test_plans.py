@@ -177,6 +177,66 @@ def test_repeated_plans_launch_no_jobs_and_no_broadcasts(spark, monkeypatch):
     assert jobs == [] and made == []
 
 
+def _jobs_in_group(spark, group, fn):
+    """Spark job ids launched while ``fn()`` runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_first_plans_over_local_tables_launch_no_jobs(spark, monkeypatch):
+    """The FIRST sample_dem_z and knn_kring plans over local tables (the
+    fixture DEM, the footprint cells and summary) prepare their state
+    with driver-side collects, which run no Spark job; the DEM blocks
+    are the one broadcast."""
+    from pyspark import SparkContext
+
+    from orthority_spark.operators import knn, raster_join, tile_join
+    from orthority_spark.sources.dem_tiles import fixture_dem
+
+    # fresh DataFrame objects, so no state is prepared for them yet
+    pages, _cat, _edges, cells, summ = _vector_inputs(spark)
+    dem = fixture_dem(spark).select("*")
+    pc = tile_join.assign_cells(pages)
+
+    made = []
+    real = SparkContext.broadcast
+    monkeypatch.setattr(
+        SparkContext, "broadcast", lambda sc, v: made.append(v) or real(sc, v)
+    )
+    jobs = _jobs_in_group(spark, "first-plans", lambda: (
+        raster_join.sample_dem_z(pc.select("url", "px", "py"), dem, band=1),
+        knn.knn_kring(pc, cells, summ, k=3, ring=8),
+    ))
+    assert jobs == [] and len(made) == 1
+
+
+def test_dem_prepare_over_files_shuffles_nothing(spark, tmp_path):
+    """Over a file-backed DEM, sample_dem_z's prepare step scans the tile
+    table without a shuffle: every job it launches has a single stage."""
+    from orthority_spark.operators import raster_join
+    from orthority_spark.sources.dem_tiles import fixture_dem
+
+    path = str(tmp_path / "dem")
+    fixture_dem(spark).write.parquet(path)
+    dem = spark.read.parquet(path)
+    pts = spark.createDataFrame(
+        [("p", 19000.0, 30000.0)], "url string, px double, py double"
+    )
+    jobs = _jobs_in_group(
+        spark, "dem-files",
+        lambda: raster_join.sample_dem_z(pts, dem, band=1),
+    )
+    tracker = spark.sparkContext.statusTracker()
+    stages = [list(tracker.getJobInfo(j).stageIds) for j in jobs]
+    assert jobs and all(len(s) == 1 for s in stages), stages
+
+
 def test_sample_dem_z_follows_the_dem_object(spark):
     """Prepared DEM state is keyed by the DataFrame object: after the
     full fixture DEM, the partial one (NaN upper-left triangle, sampled
