@@ -20,8 +20,6 @@ Re-expresses the reference's DEM machinery (SURVEY §2.3 J2, §4 O1/O2,
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 from pyspark import Broadcast
 from pyspark.sql import DataFrame, functions as F
@@ -236,6 +234,28 @@ def _bilinear_in_tile(
     return np.where(interior, z_bi, blk[ri, ci])
 
 
+# The gather kernel moves numpy <-> Arrow through raw buffers: pyarrow's
+# own conversions (pa.array, Array.to_numpy) import pandas, ~0.4 CPU-s in
+# every Python worker that first runs the kernel.
+
+
+def _bits(mask: np.ndarray):
+    """An Arrow bitmap buffer (LSB first) of a bool array."""
+    import pyarrow as pa
+
+    return pa.py_buffer(np.packbits(mask, bitorder="little"))
+
+
+def _float64(col) -> np.ndarray:
+    """The values of an Arrow double array, NULL read as NaN."""
+    valid, data = col.buffers()
+    x = np.frombuffer(data, "float64", len(col), col.offset * 8)
+    if col.null_count:
+        bits = np.unpackbits(np.frombuffer(valid, "uint8"), bitorder="little")
+        x = np.where(bits[col.offset:col.offset + len(col)] == 1, x, np.nan)
+    return x
+
+
 def _sample_dem_z_broadcast(
     points: DataFrame, bc: Broadcast,
     a: float, c: float, e: float, f0: float,
@@ -254,8 +274,8 @@ def _sample_dem_z_broadcast(
         for b in it:
             if not b.num_rows:
                 continue
-            px = b.column(1).to_numpy(zero_copy_only=False)
-            py = b.column(2).to_numpy(zero_copy_only=False)
+            px = _float64(b.column(1))
+            py = _float64(b.column(2))
             gcol = np.floor((px - c) / a)
             grow = np.floor((py - f0) / e)
             m = (gcol >= 0) & (gcol < ncols) & (grow >= 0) & (grow < nrows)
@@ -280,19 +300,25 @@ def _sample_dem_z_broadcast(
                     blk, px[sel], py[sel], a, c, e, f0, ro, co
                 )
             m[m] = hit
+            z = z[hit]
             # r6: the url strings stay an Arrow buffer end to end
-            # (filter is an offsets-level op) — no pandas object arrays
+            # (filter is an offsets-level op) — no pandas object arrays;
+            # a NaN z (DEM nodata) crosses as NULL
             yield pa.RecordBatch.from_arrays(
                 [
-                    b.column(0).filter(pa.array(m)),
-                    pa.array(z[hit], type=pa.float64(), from_pandas=True),
+                    b.column(0).filter(
+                        pa.Array.from_buffers(pa.bool_(), len(m), [None, _bits(m)])
+                    ),
+                    pa.Array.from_buffers(
+                        pa.float64(), len(z), [_bits(~np.isnan(z)), pa.py_buffer(z)]
+                    ),
                 ],
                 names=["url", "z"],
             )
 
-    return points.select("url", "px", "py").mapInArrow(
-        gather, schema="url string, z double"
-    )
+    return points.select(
+        "url", F.col("px").cast("double"), F.col("py").cast("double")
+    ).mapInArrow(gather, schema="url string, z double")
 
 
 def _sample_dem_z_cogroup(

@@ -73,17 +73,18 @@ def build_dem_tiles(
             # global upper triangle -> NaN (row + col in global grid)
             z = np.where(cols + rows < (width + height), np.nan, z)
         blocks.append(z.ravel())
-    band, row_off, col_off, height, width = zip(*meta)
+    bands, row_offs, col_offs, heights, widths = zip(*meta)
+    # createDataFrame casts each column to DEM_SCHEMA's type
     table = pa.table(
         {
-            "dem_tile_id": [f"{r}:{c}" for r, c in zip(row_off, col_off)],
-            "band": pa.array(band, pa.int32()),
-            "row_off": pa.array(row_off, pa.int32()),
-            "col_off": pa.array(col_off, pa.int32()),
-            "height": pa.array(height, pa.int32()),
-            "width": pa.array(width, pa.int32()),
-            "transform": pa.array([list(transform)] * len(meta), pa.list_(pa.float64())),
-            "block": pa.array(blocks, pa.list_(pa.float32())),
+            "dem_tile_id": [f"{r}:{c}" for r, c in zip(row_offs, col_offs)],
+            "band": bands,
+            "row_off": row_offs,
+            "col_off": col_offs,
+            "height": heights,
+            "width": widths,
+            "transform": [list(transform)] * len(meta),
+            "block": blocks,
         }
     )
     return spark.createDataFrame(table, DEM_SCHEMA)

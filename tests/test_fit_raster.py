@@ -174,21 +174,33 @@ def test_sample_dem_z_drops_points_in_a_missing_tile(spark):
 
 
 def test_raster_join_imports_no_pandas():
-    """The broadcast gather's Python workers import raster_join; only the
-    cogroup fallback imports pandas, and only when it plans."""
+    """The broadcast gather's Python workers import raster_join and run
+    its Arrow buffer conversions; neither imports pandas (only the
+    cogroup fallback does, when it plans). The conversions read NULL as
+    NaN and honour a sliced array's offset, as pyarrow's to_numpy does."""
     import os
     import subprocess
     import sys
 
-    code = (
-        "import sys, orthority_spark.operators.raster_join; "
-        "print('pandas' in sys.modules)"
-    )
+    code = """
+import sys
+import numpy as np, pyarrow as pa
+from orthority_spark.operators.raster_join import _bits, _float64
+print('pandas' in sys.modules)
+vals = np.arange(11, dtype='float64')
+col = pa.Array.from_buffers(
+    pa.float64(), 11, [_bits(np.arange(11) % 3 != 0), pa.py_buffer(vals)]
+).slice(2, 7)
+x = _float64(col)
+print('pandas' in sys.modules)
+assert np.array_equal(x, col.to_numpy(zero_copy_only=False), equal_nan=True)
+assert np.isnan(x).sum() == 2
+"""
     out = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True,
         check=True, cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
-    assert out.stdout.strip() == "False"
+    assert out.stdout.split() == ["False", "False"]
 
 
 @pytest.mark.parametrize("partial", [False, True])
