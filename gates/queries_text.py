@@ -569,8 +569,8 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, but the kept HASH SET is exactly the distinct texts — an
     order-independent, engine-checkable contract for the streaming path
     (SURVEY §2.8). Watermark-free dropDuplicates is correct for a
-    bounded drain; the continuous-ingest variant with bounded state is
-    streaming/pages_stream.dedup_stream (watermark eviction, pytest)."""
+    bounded drain; the documents table has no event-time column for a
+    watermark to bound the state with."""
     import shutil
     import tempfile
     import uuid

@@ -17,7 +17,6 @@ A brand-new engine (NOT a port) with the query/data-processing capabilities of
                 kNN, dedup (exact / minhash-LSH / simhash / jaccard /
                 embedding), ANN, remap gather, parallel stats, rollups.
 - ``plans``     resumable job ledger with per-partition lineage + metrics.
-- ``streaming`` Structured Streaming ingestion of the pages table.
 """
 
 __version__ = "0.1.0"

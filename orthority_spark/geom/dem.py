@@ -84,20 +84,3 @@ def ray_march_params(
             hi = np.where(has_prev & ~below_mid, mid, hi)
         out = np.where(has_prev, lo, out)
     return out
-
-
-def ray_dem_intersect(
-    model,
-    ji: np.ndarray,
-    dem_fn,
-    min_z: float,
-    max_z: float,
-    step: float = DEM_RES / 2,
-) -> np.ndarray:
-    """Intersect pixel rays with an analytic DEM surface, batched: pixel
-    boundary -> camera rays (dir = R @ pixel_to_camera, origin = T), then
-    ``ray_march_params``."""
-    ji = np.asarray(ji, dtype="float64")
-    dirs = model.R @ model._pixel_to_camera(ji)
-    origins = np.broadcast_to(model.T, (3, ji.shape[1]))
-    return ray_march_params(dirs, origins, dem_fn, min_z, max_z, step)

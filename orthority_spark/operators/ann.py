@@ -1,7 +1,6 @@
 """Approximate nearest neighbour over raw ``(vec_id, embedding[, label])``
-embedding frames: brute-force exact top-k, IVF (inverted-file) top-k,
-distributed k-means for the IVF coarse quantiser, and banded sign-LSH
-near-duplicate pairs.
+embedding frames: brute-force exact top-k, IVF (inverted-file) top-k over
+caller-supplied centroids, and banded sign-LSH near-duplicate pairs.
 
 Every operator quantises inside its Arrow kernel with one function,
 :func:`quantize_matrix` (``floor(x * 1e6)`` as int64), so dot products and
@@ -26,8 +25,6 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window, functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
-from pyspark.sql.types import IntegerType, StructField, StructType
 
 # --- banded sign-LSH with DATA-DRIVEN bucket cardinality -----------------
 # B fixed bands x r bits/band; r grows with corpus size so per-band bucket
@@ -56,12 +53,6 @@ ATTACH_BROADCAST_MAX_ROWS = 200_000
 
 _TOPK_SCHEMA = "query_id bigint, neighbor_id bigint, cosine double"
 _PAIR_SCHEMA = "vec_a bigint, vec_b bigint, cosine double"
-_KMEANS_STATS = pa.schema([
-    ("sums", pa.list_(pa.list_(pa.int64()))),
-    ("counts", pa.list_(pa.int64())),
-    ("nn", pa.float64()),
-    ("best", pa.float64()),
-])
 
 
 def lsh_r_bits(n: int) -> int:
@@ -269,114 +260,6 @@ def ann_ivf(
     queries probe their ``nprobe`` nearest buckets (ordered by score DESC,
     bucket DESC), and only the probed buckets are scored."""
     return _scan_topk(emb, queries, k, centroids, nprobe)
-
-
-def assign_buckets(emb: DataFrame, centroids: np.ndarray) -> DataFrame:
-    """``emb`` plus an int ``bucket`` column: each row's nearest centroid
-    (:func:`_nearest`), one ``mapInArrow`` pass, no shuffle."""
-    C = np.asarray(centroids, dtype=np.float64)
-    col = emb.columns.index("embedding")
-    schema = StructType(
-        emb.schema.fields + [StructField("bucket", IntegerType())]
-    )
-
-    def assign(it):
-        for batch in it:
-            b = _nearest(quantize_matrix(batch.column(col)), C)[0][:, 0]
-            yield pa.RecordBatch.from_arrays(
-                batch.columns + [pa.array(b, type=pa.int32())],
-                names=schema.fieldNames(),
-            )
-
-    return emb.mapInArrow(assign, schema=schema)
-
-
-def _kmeans_pass(emb: DataFrame, n_centroids: int, centroids=None):
-    """One Spark job over ``emb``: per-bucket int64 component sums and
-    row counts, sum ||x||^2 and sum of the best score. Buckets are
-    ``label % n_centroids`` without ``centroids``, else each row's nearest
-    centroid (the best score is then its c.x - ||c||^2 / 2). Each
-    partition yields one row; the driver adds them up."""
-    C = None if centroids is None else np.asarray(centroids, np.float64)
-
-    def stats(it):
-        sums = np.zeros((n_centroids, 0), dtype=np.int64)
-        counts = np.zeros(n_centroids, dtype=np.int64)
-        nn = best = 0.0
-        for batch in it:
-            if not batch.num_rows:
-                continue
-            M = quantize_matrix(batch.column(1))
-            if C is None:
-                b = _ids(batch.column(0)) % n_centroids
-            else:
-                top, S = _nearest(M, C)
-                b = top[:, 0]
-                best += float(S[np.arange(len(b)), b].sum())
-            nn += float(np.einsum("ij,ij->i", M, M).astype(np.float64).sum())
-            counts += np.bincount(b, minlength=n_centroids)
-            if M.shape[1] > sums.shape[1]:
-                sums = np.pad(sums, ((0, 0), (0, M.shape[1] - sums.shape[1])))
-            for c in np.unique(b):
-                sums[c, : M.shape[1]] += M[b == c].sum(axis=0)
-        yield pa.RecordBatch.from_pylist(
-            [{"sums": sums.tolist(), "counts": counts.tolist(),
-              "nn": nn, "best": best}],
-            schema=_KMEANS_STATS,
-        )
-
-    cols = ["label" if C is None else "vec_id", "embedding"]
-    rows = emb.select(*cols).mapInArrow(
-        stats, schema=from_arrow_schema(_KMEANS_STATS)
-    ).collect()
-    dim = max((len(r.sums[0]) for r in rows), default=0)
-    sums = np.zeros((n_centroids, dim), dtype=np.int64)
-    counts = np.zeros(n_centroids, dtype=np.int64)
-    for r in rows:
-        s = np.asarray(r.sums, dtype=np.int64)
-        sums[:, : s.shape[1]] += s
-        counts += np.asarray(r.counts, dtype=np.int64)
-    return sums, counts, sum(r.nn for r in rows), sum(r.best for r in rows)
-
-
-def _means(sums: np.ndarray, counts: np.ndarray, prev: np.ndarray):
-    """Per-bucket mean vectors; an empty bucket keeps ``prev``."""
-    out = prev.astype(np.float64).copy()
-    hit = counts > 0
-    out[hit] = sums[hit] / counts[hit, None]
-    return out
-
-
-def train_centroids(emb: DataFrame, n_centroids: int = 8) -> np.ndarray:
-    """Label-seeded centroid init: the mean quantised vector of each
-    ``label % n_centroids`` group (one job; the cheap seed for
-    :func:`train_centroids_kmeans`). Ragged/NULL components count 0."""
-    sums, counts, _, _ = _kmeans_pass(emb, n_centroids)
-    return _means(sums, counts, np.zeros(sums.shape))
-
-
-def train_centroids_kmeans(
-    emb: DataFrame, n_centroids: int = 8, n_iter: int = 8
-) -> tuple[np.ndarray, list[float]]:
-    """Distributed Lloyd's k-means over the quantised embeddings — the
-    IVF coarse quantiser (assignment = :func:`_nearest`, the metric of
-    :func:`assign_buckets`).
-
-    Each pass is ONE Spark job that assigns every row to the current
-    centroids and returns only per-bucket sums and counts plus two
-    scalars, so the new centroids are the bucket means (an empty bucket
-    keeps its centroid). ``inertia[i]`` is the Euclidean inertia of the
-    centroids after iteration i, sum ||x||^2 - 2 * sum(best score), read
-    from the next pass: n_iter + 1 passes after the seed. Classic Lloyd,
-    so it is monotone non-increasing. Ragged/NULL components count 0."""
-    cents = train_centroids(emb, n_centroids)
-    sums, counts, _, _ = _kmeans_pass(emb, n_centroids, cents)
-    inertia: list[float] = []
-    for _ in range(n_iter):
-        cents = _means(sums, counts, cents)
-        sums, counts, nn, best = _kmeans_pass(emb, n_centroids, cents)
-        inertia.append(nn - 2.0 * best)
-    return cents, inertia
 
 
 def band_keys(emb: DataFrame, r: int, dim: int) -> DataFrame:

@@ -1,30 +1,25 @@
-"""Model fitting and refinement: RPC shift / shift-drift (A9/J5), frame
-exterior pose solving (solvePnP recast), frame interior calibration
-(calibrateCamera recast).
+"""Model fitting and refinement: RPC shift / shift-drift (A9/J5) and
+frame exterior pose solving (solvePnP recast).
 
 The reference refines each image's RPC model against its GCPs with a
 per-image least squares ('shift' = mean pixel offset, 'shift-drift' =
-per-axis 1D linear fit, /root/reference/orthority/fit.py:49-130), joining
-images to GCPs on filename with a warning for unmatched images
-(/root/reference/orthority/factory.py:352-362). Frame fitting delegates
-to cv2.solvePnP (fit.py:299-360) and cv2.calibrateCamera (fit.py:158-296)
-there; cv2 is not assumed on executors here, so both are re-derived in
-numpy: planar-homography / DLT initialisation + Levenberg-Marquardt
-refinement of the reprojection residuals through the engine's own
-FrameModel (so every distortion kind the engine projects, it can fit).
+per-axis 1D linear fit, /root/reference/orthority/fit.py:49-130). Frame
+pose fitting delegates to cv2.solvePnP (fit.py:299-360) there; cv2 is
+not assumed on executors here, so it is re-derived in numpy:
+planar-homography / DLT initialisation + Levenberg-Marquardt refinement
+of the reprojection residuals through the engine's own FrameModel (so
+every distortion kind the engine projects, it can fit).
 
 Spark restatement: GCP residuals are computed by the camera UDF, then
 ``groupBy(filename).applyInPandas`` solves the per-image problem — the
 cogrouped-solver shape from SURVEY §2.9; thousands of images fit in
-parallel, one small dense solve per group. Unmatched images fall out of
-a left-anti join (the J5 anti-join construct).
+parallel, one small dense solve per group.
 """
-
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 
 def refine_shift_oracle(ji_obs: np.ndarray, ji_pred: np.ndarray) -> np.ndarray:
@@ -86,23 +81,9 @@ def refine_per_image(
     return gcps.groupBy("filename").applyInPandas(solve, schema=schema)
 
 
-def unmatched_images(images: DataFrame, gcps: DataFrame) -> DataFrame:
-    """Images with no GCPs (the J5 warning set) — left-anti join."""
-    return images.join(gcps.select("filename").distinct(), "filename", "left_anti")
-
-
 # ---------------------------------------------------------------------------
 # frame exterior pose solve (cv2.solvePnP recast, ref fit.py:299-360)
 # ---------------------------------------------------------------------------
-
-# distortion coefficient names fit per camera type (OpenCV ordering,
-# ref fit.py:40-46 _frame_dist_params)
-FIT_DIST_NAMES = {
-    "pinhole": [],
-    "brown": ["k1", "k2", "p1", "p2", "k3"],
-    "opencv": ["k1", "k2", "p1", "p2", "k3", "k4", "k5", "k6"],
-    "fisheye": ["k1", "k2", "k3", "k4"],
-}
 
 
 def _model_with_pose(int_params: dict, xyz, opk):
@@ -231,135 +212,6 @@ def solve_pnp(
     return dict(
         xyz=tuple(theta[3:6]), opk=tuple(theta[0:3]), rms=rms
     )
-
-
-def fit_frame(
-    cam_type: str,
-    im_size: tuple[int, int],
-    gcps: dict[str, tuple[np.ndarray, np.ndarray]],
-    n_focal_probe: int = 24,
-) -> tuple[dict, dict]:
-    """Fit interior + exterior frame parameters to CO-PLANAR GCPs
-    (cv2.calibrateCamera recast, ref fit.py:158-296).
-
-    ``gcps``: {filename: (ji (2,N), xyz (3,N))}. Requires >= 4 GCPs per
-    image and co-planar world z (the reference replicates OpenCV's test,
-    fit.py:203-207). Square pixels are forced (CALIB_FIX_ASPECT_RATIO
-    analogue): one normalised focal, principal offset (cx, cy) and the
-    camera type's distortion coefficients are fitted jointly with each
-    image's pose. Initialisation = coarse log-spaced focal probe (each
-    probe solves per-image PnP), then joint Levenberg-Marquardt.
-
-    Returns (int_params, {filename: dict(xyz, opk, rms)}).
-    """
-    for name, (ji, _xyz) in gcps.items():
-        if ji.shape[1] < 4:
-            raise ValueError("At least four GCPs are needed per image.")
-    # ONE common plane across all images (global std, like the reference's
-    # globally-centred test, fit.py:203-207) — per-image centring would
-    # pass two images on two different planes
-    z_all = np.concatenate([xyz[2] for _, xyz in gcps.values()])
-    if z_all.std() > 1e-5:
-        raise ValueError("GCPs should be co-planar to fit interior parameters.")
-    dist_names = FIT_DIST_NAMES[cam_type]
-    n_dist = len(dist_names)
-    names = sorted(gcps)
-
-    def int_params_of(th):
-        return dict(
-            cam_type=cam_type,
-            im_size=im_size,
-            focal_len=float(th[0]),
-            sensor_size=None,
-            cx=float(th[1]),
-            cy=float(th[2]),
-            dist=dict(zip(dist_names, (float(v) for v in th[3 : 3 + n_dist]))),
-        )
-
-    # coarse focal probe: per-image PnP at fixed intrinsics, pick best RMS
-    best = None
-    for f in np.geomspace(0.3, 3.0, n_focal_probe):
-        ip = dict(cam_type=cam_type, im_size=im_size, focal_len=float(f),
-                  sensor_size=None, cx=0.0, cy=0.0,
-                  dist={k: 0.0 for k in dist_names})
-        try:
-            sols = {n: solve_pnp(ip, *gcps[n], n_iter=30) for n in names}
-        except np.linalg.LinAlgError:
-            continue
-        rms = float(np.sqrt(np.mean([s["rms"] ** 2 for s in sols.values()])))
-        if best is None or rms < best[0]:
-            best = (rms, f, sols)
-    if best is None:
-        raise ValueError(
-            "every focal probe failed to solve a pose — the GCPs are "
-            "degenerate (collinear or otherwise rank-deficient)"
-        )
-    _, f0, sols0 = best
-
-    theta = np.concatenate(
-        [
-            [f0, 0.0, 0.0],
-            np.zeros(n_dist),
-            np.concatenate([[*sols0[n]["opk"], *sols0[n]["xyz"]] for n in names]),
-        ]
-    )
-    n_int = 3 + n_dist
-
-    def residuals(th):
-        ip = int_params_of(th)
-        out = []
-        for i, n in enumerate(names):
-            pose = th[n_int + 6 * i : n_int + 6 * (i + 1)]
-            m = _model_with_pose(ip, pose[3:6], pose[0:3])
-            out.append((m.world_to_pixel(gcps[n][1]) - gcps[n][0]).ravel())
-        return np.concatenate(out)
-
-    eps = np.concatenate(
-        [[1e-6, 1e-6, 1e-6], np.full(n_dist, 1e-6),
-         np.tile([1e-7, 1e-7, 1e-7, 1e-4, 1e-4, 1e-4], len(names))]
-    )
-    lam = 1e-3
-    r = residuals(theta)
-    cost = float(r @ r)
-    for _ in range(150):
-        J = np.zeros((r.size, theta.size))
-        for k in range(theta.size):
-            d = np.zeros(theta.size)
-            d[k] = eps[k]
-            J[:, k] = (residuals(theta + d) - residuals(theta - d)) / (2 * eps[k])
-        g = J.T @ r
-        H = J.T @ J
-        improved = False
-        for _try in range(10):
-            try:
-                dth = np.linalg.solve(H + lam * np.diag(np.diag(H) + 1e-12), -g)
-            except np.linalg.LinAlgError:
-                lam *= 10
-                continue
-            r_new = residuals(theta + dth)
-            c_new = float(r_new @ r_new)
-            if c_new < cost:
-                theta, r, cost = theta + dth, r_new, c_new
-                lam = max(lam / 10, 1e-12)
-                improved = True
-                break
-            lam *= 10
-        if not improved or cost < 1e-18:
-            break
-
-    int_params = int_params_of(theta)
-    ext = {}
-    n_total = sum(g[0].shape[1] for g in gcps.values())
-    for i, n in enumerate(names):
-        pose = theta[n_int + 6 * i : n_int + 6 * (i + 1)]
-        m = _model_with_pose(int_params, pose[3:6], pose[0:3])
-        res = m.world_to_pixel(gcps[n][1]) - gcps[n][0]
-        ext[n] = dict(
-            xyz=tuple(pose[3:6]), opk=tuple(pose[0:3]),
-            rms=float(np.sqrt((res * res).sum() / res.shape[1])),
-        )
-    int_params["n_gcps"] = n_total
-    return int_params, ext
 
 
 def fit_exterior_per_image(gcps: DataFrame, int_params: dict[str, dict]) -> DataFrame:

@@ -208,9 +208,9 @@ def knn_bruteforce(pages_cells: DataFrame, summary: DataFrame, k: int = 3) -> Da
     happens inside the scan stage. The r5 plan exchanged + sorted every
     (page x footprint) candidate row on url for the window; this one has
     zero shuffles and the identical output. Catalogs past
-    MAX_LITERAL_CATALOG entries fall back to the window plan."""
+    MAX_LITERAL_CATALOG entries, and an empty one, take the window plan."""
     cat = _catalog(summary)
-    if len(cat) <= MAX_LITERAL_CATALOG:
+    if 0 < len(cat) <= MAX_LITERAL_CATALOG:
         return _topk_literal(pages_cells.select("url", "px", "py"), cat, k)
     cand = pages_cells.select("url", "px", "py").join(
         F.broadcast(summary.select("filename", "cx", "cy"))
@@ -259,7 +259,7 @@ def knn_kring(
     est_rows = len(index) * (2 * ring + 1) ** 2
     cat = _catalog(summary)
     pages = cell_join_key(pages_cells.select("url", "px", "py", "cell"))
-    if est_rows <= max_broadcast_rows and len(cat) <= MAX_LITERAL_CATALOG:
+    if est_rows <= max_broadcast_rows and 0 < len(cat) <= MAX_LITERAL_CATALOG:
         # r6 plan: join pages on their own cell to the per-cell mask
         # table (broadcast hash join) and rank map-side with the
         # codegen'd unrolled comparisons — zero pages-side shuffles. The
@@ -272,8 +272,9 @@ def knn_kring(
         return _topk_literal(cand.drop("cell"), cat, k, masked=True)
     expanded = _expand(footprint_cells, ring)
     if est_rows <= max_broadcast_rows:
-        # catalog too wide for the literal unroll but the expanded index
-        # still broadcasts: the r5 broadcast join + window plan
+        # catalog empty or too wide for the literal unroll but the
+        # expanded index still broadcasts: the r5 broadcast join + window
+        # plan
         expanded = F.broadcast(expanded)
     else:
         import warnings

@@ -1,21 +1,10 @@
-"""Raster <-> vector joins: bbox range join, two-phase window pruning,
-coverage stats, per-point z sampling.
+"""Raster <-> vector join: per-point z sampling from a DEM tile table.
 
-Re-expresses the reference's DEM machinery (SURVEY §2.3 J2, §4 O1/O2,
-§2.4 A3/A4):
-
-- J2: footprint bbox x DEM-tile bbox interval-overlap join; empty result
-  for any footprint is the reference's "lies outside the DEM" error
-  (/root/reference/orthority/ortho.py:154-190).
-- O1: two-phase pruning — phase 1 intersects at a worst-case z range
-  (EGM min/max -106.71..82.28 + Everest 8850, ortho.py:80-83), phase 2
-  re-prunes with the ACTUAL z min/max aggregated from phase-1 tiles
-  (ortho.py:180-190). On Iceberg, phase 2 is what file-level min/max
-  stats give for free; here it is one cheap agg + refined join.
-- A3/A4: DEM min/max/coverage aggregates; full-nodata -> error,
-  partial coverage -> warning flag (ortho.py:318-329).
-- z-sampling: per-point bilinear DEM lookup inside the owning tile
-  (Arrow kernel) — the J6 gather against the raster side.
+Re-expresses the reference's DEM lookup (SURVEY §2.3 J6, §2.4 A3): a
+per-point bilinear DEM sample inside the owning tile (Arrow kernel) —
+the J6 gather against the raster side. Points outside the DEM grid are
+dropped, where the reference raises for a source outside the DEM
+(/root/reference/orthority/ortho.py:154-190).
 """
 
 from __future__ import annotations
@@ -24,91 +13,8 @@ import numpy as np
 from pyspark import Broadcast
 from pyspark.sql import DataFrame, functions as F
 
+from ..arrow_buffers import bitmap, float64_array, float64_values
 from ..session import prepared
-
-
-class OutsideDemError(ValueError):
-    """A footprint does not intersect the DEM (ortho.py:170 semantics)."""
-
-
-def _tile_bounds(dem: DataFrame) -> DataFrame:
-    """DEM tile table + world bbox columns from transform + offsets."""
-    a = F.element_at("transform", 1)
-    c = F.element_at("transform", 3)
-    e = F.element_at("transform", 5)
-    f0 = F.element_at("transform", 6)
-    x0 = c + a * F.col("col_off")
-    x1 = c + a * (F.col("col_off") + F.col("width"))
-    yt = f0 + e * F.col("row_off")
-    yb = f0 + e * (F.col("row_off") + F.col("height"))
-    return (
-        dem.withColumn("txmin", F.least(x0, x1))
-        .withColumn("txmax", F.greatest(x0, x1))
-        .withColumn("tymin", F.least(yt, yb))
-        .withColumn("tymax", F.greatest(yt, yb))
-    )
-
-
-def bbox_range_join(footprints: DataFrame, dem: DataFrame) -> DataFrame:
-    """Interval-overlap theta-join: footprint bbox x DEM tile bbox.
-
-    The footprint side is tiny -> broadcast, so the range predicate is
-    evaluated map-side over the DEM scan (no shuffle; with Iceberg the
-    bbox predicate also prunes files via min/max column stats)."""
-    d = _tile_bounds(dem)
-    cond = (
-        (F.col("xmin") <= F.col("txmax"))
-        & (F.col("xmax") >= F.col("txmin"))
-        & (F.col("ymin") <= F.col("tymax"))
-        & (F.col("ymax") >= F.col("tymin"))
-    )
-    return d.join(F.broadcast(footprints), cond)
-
-
-def check_dem_coverage(footprints: DataFrame, dem: DataFrame) -> DataFrame:
-    """Per-footprint DEM intersection stats; raises OutsideDemError if any
-    footprint has no intersecting tile (J2 error semantics)."""
-    joined = bbox_range_join(footprints, dem.where(F.col("band") == 1))
-    stats = joined.groupBy("filename").agg(
-        F.count(F.lit(1)).alias("n_tiles"),
-        F.sum(
-            F.expr("aggregate(block, 0L, (acc, v) -> acc + CAST(isnotnull(v) AND NOT isnan(v) AS LONG))")
-        ).alias("n_valid_cells"),
-        F.sum(F.size("block")).alias("n_cells"),
-    )
-    missing = footprints.join(
-        stats.select("filename"), "filename", "left_anti"
-    ).collect()
-    if missing:
-        raise OutsideDemError(
-            f"footprints outside DEM: {[r.filename for r in missing]}"
-        )
-    return stats.withColumn(
-        "full_coverage", F.col("n_valid_cells") == F.col("n_cells")
-    )
-
-
-# worst-case z range: EGM96 min/max + Everest (ortho.py:80-83)
-EGM_MIN, EGM_MAX, EVEREST = -106.71, 82.28, 8850.0
-
-
-def two_phase_prune(
-    footprints_at_z,  # callable: (z_min, z_max) -> footprint bbox DataFrame
-    dem: DataFrame,
-) -> tuple[DataFrame, float, float]:
-    """O1: prune DEM tiles at worst-case z, aggregate actual z min/max
-    from survivors, re-prune at the refined bounds. Returns
-    (pruned tiles, z_min, z_max)."""
-    coarse_fp = footprints_at_z(EGM_MIN, EGM_MAX + EVEREST)
-    phase1 = bbox_range_join(coarse_fp, dem.where(F.col("band") == 1))
-    zr = phase1.agg(
-        F.min(F.expr("array_min(filter(block, v -> NOT isnan(v)))")).alias("zmin"),
-        F.max(F.expr("array_max(filter(block, v -> NOT isnan(v)))")).alias("zmax"),
-    ).collect()[0]
-    z_min, z_max = float(zr.zmin), float(zr.zmax)
-    fine_fp = footprints_at_z(z_min, z_max)
-    phase2 = bbox_range_join(fine_fp, dem.where(F.col("band") == 1))
-    return phase2, z_min, z_max
 
 
 def sample_dem_z(
@@ -234,28 +140,6 @@ def _bilinear_in_tile(
     return np.where(interior, z_bi, blk[ri, ci])
 
 
-# The gather kernel moves numpy <-> Arrow through raw buffers: pyarrow's
-# own conversions (pa.array, Array.to_numpy) import pandas, ~0.4 CPU-s in
-# every Python worker that first runs the kernel.
-
-
-def _bits(mask: np.ndarray):
-    """An Arrow bitmap buffer (LSB first) of a bool array."""
-    import pyarrow as pa
-
-    return pa.py_buffer(np.packbits(mask, bitorder="little"))
-
-
-def _float64(col) -> np.ndarray:
-    """The values of an Arrow double array, NULL read as NaN."""
-    valid, data = col.buffers()
-    x = np.frombuffer(data, "float64", len(col), col.offset * 8)
-    if col.null_count:
-        bits = np.unpackbits(np.frombuffer(valid, "uint8"), bitorder="little")
-        x = np.where(bits[col.offset:col.offset + len(col)] == 1, x, np.nan)
-    return x
-
-
 def _sample_dem_z_broadcast(
     points: DataFrame, bc: Broadcast,
     a: float, c: float, e: float, f0: float,
@@ -274,8 +158,8 @@ def _sample_dem_z_broadcast(
         for b in it:
             if not b.num_rows:
                 continue
-            px = _float64(b.column(1))
-            py = _float64(b.column(2))
+            px = float64_values(b.column(1))
+            py = float64_values(b.column(2))
             gcol = np.floor((px - c) / a)
             grow = np.floor((py - f0) / e)
             m = (gcol >= 0) & (gcol < ncols) & (grow >= 0) & (grow < nrows)
@@ -307,11 +191,9 @@ def _sample_dem_z_broadcast(
             yield pa.RecordBatch.from_arrays(
                 [
                     b.column(0).filter(
-                        pa.Array.from_buffers(pa.bool_(), len(m), [None, _bits(m)])
+                        pa.Array.from_buffers(pa.bool_(), len(m), [None, bitmap(m)])
                     ),
-                    pa.Array.from_buffers(
-                        pa.float64(), len(z), [_bits(~np.isnan(z)), pa.py_buffer(z)]
-                    ),
+                    float64_array(z, nan_is_null=True),
                 ],
                 names=["url", "z"],
             )

@@ -7,8 +7,9 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
+from ..arrow_buffers import float64_array, float64_values
 from ..geom.dem import DEM_RES, ray_march_params
 
 
@@ -19,8 +20,9 @@ def ray_march(
     """rays(dx, dy, dz, tx, ty, tz, *keep) -> (*keep, x, y, z): the first
     intersection of each ray (direction d, origin t) with the surface
     ``dem_fn(x, y)``, with ``ray_march_params`` semantics and operation
-    order. ``dem_fn`` runs on the executors, so it must pickle by value
-    (a lambda or closure) or be importable there."""
+    order; the ray columns are read as doubles. ``dem_fn`` runs on the
+    executors, so it must pickle by value (a lambda or closure) or be
+    importable there."""
     keep = list(keep)
     fields = [f"`{f.name}` {f.dataType.simpleString()}"
               for f in rays.select(*keep).schema]
@@ -30,15 +32,14 @@ def ray_march(
         for batch in it:
             if not batch.num_rows:
                 continue
-            d, t = (np.vstack([batch.column(c).to_numpy(zero_copy_only=False)
-                               for c in cols])
+            d, t = (np.vstack([float64_values(batch.column(c)) for c in cols])
                     for cols in (("dx", "dy", "dz"), ("tx", "ty", "tz")))
             out = ray_march_params(d, t, dem_fn, min_z, max_z, step)
             yield pa.RecordBatch.from_arrays(
-                [batch.column(c) for c in keep] + [pa.array(v) for v in out],
+                [batch.column(c) for c in keep]
+                + [float64_array(v, nan_is_null=False) for v in out],
                 names=keep + ["x", "y", "z"],
             )
 
-    return rays.select(*keep, "dx", "dy", "dz", "tx", "ty", "tz").mapInArrow(
-        march, schema=schema
-    )
+    dirs = [F.col(c).cast("double") for c in ("dx", "dy", "dz", "tx", "ty", "tz")]
+    return rays.select(*keep, *dirs).mapInArrow(march, schema=schema)

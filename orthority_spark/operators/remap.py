@@ -43,13 +43,18 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from ..sources.local import local_table
+
+from ..arrow_buffers import float64_array, int32_array
 
 TILE = 64  # analogue of the reference's 512x512 blocks, scaled to fixtures
 
 
 def tile_windows(spark: SparkSession, width: int, height: int, tile: int = TILE) -> DataFrame:
     """Enumerate tile windows covering a (width x height) output grid."""
+    # imported here: it loads pandas, which the remap kernel's workers,
+    # importing this module, do not need
+    from ..sources.local import local_table
+
     rows = [
         (f"{r}:{c}", r, c, min(tile, height - r), min(tile, width - c), height, width)
         for r in range(0, height, tile)
@@ -326,7 +331,7 @@ def remap_tiles(
                     block[ro - r0:ro - r0 + h0, co - c0:co - c0 + w0]
                 )
             blocks = pa.ListArray.from_arrays(
-                pa.array(offsets), pa.array(vals, mask=np.isnan(vals))
+                int32_array(offsets), float64_array(vals, nan_is_null=True)
             )
             yield pa.RecordBatch.from_arrays(
                 [batch.column("tile_id"), batch.column("row_off"),

@@ -1,4 +1,4 @@
-"""Pure-python TIFF/EXIF/XMP tag reader + writer (S7/S13 made genuine).
+"""Pure-python TIFF/EXIF/XMP tag reader (S7/S13 made genuine).
 
 The reference extracts camera tags through GDAL/rasterio
 (/root/reference/orthority/exif.py:101-363: focal length, 35mm fallback,
@@ -8,9 +8,9 @@ parameters (/root/reference/orthority/param_io.py:141-203). No GDAL is
 assumed on executors here, so this module parses the TIFF container
 itself: header, IFD0, the EXIF and GPS sub-IFDs, and the XMP packet —
 enough of the spec (types BYTE/ASCII/SHORT/LONG/RATIONAL/SRATIONAL,
-both byte orders) for every tag the reference reads. A matching writer
-builds deterministic fixture files so round trips are testable without
-binary blobs in the repo.
+both byte orders) for every tag the reference reads. The tests build
+their fixture files with a matching writer (``tests/builders.py``), so
+no binary blobs live in the repo.
 
 The distributed shape is ``exif_scan``: a binary `(filename, data)`
 DataFrame mapped through an Arrow batch parser — the engine twin of the
@@ -54,10 +54,6 @@ TAG_GPS_LON_REF = 0x0003
 TAG_GPS_LON = 0x0004
 TAG_GPS_ALT_REF = 0x0005
 TAG_GPS_ALT = 0x0006
-# GeoTIFF RPCCoefficientTag: 92 DOUBLEs (err_bias, err_rand, the 10
-# offset/scale scalars, then 4 x 20 coefficient blocks) — what GDAL
-# serves as `im.rpcs` to the reference (param_io.py:337-364)
-TAG_RPC = 50844
 
 # mm per focal-plane resolution unit (exif.py:268-275)
 _MM_PER_UNIT = {2: 25.4, 3: 10.0, 4: 1.0, 5: 0.001}
@@ -300,213 +296,6 @@ def exif_ext_param(t: ExifTags) -> dict:
     )
     opk = rpy_to_opk(tuple(math.radians(v) for v in t.rpy))
     return dict(xyz=xyz, opk=opk, camera=exif_cam_id(t))
-
-
-# ---------------------------------------------------------------------------
-# RPC image tags (S8 made genuine: read_im_rpc_param without GDAL)
-# ---------------------------------------------------------------------------
-
-# order of the 10 scalar offset/scale values inside tag 50844, after
-# (err_bias, err_rand) — the GeoTIFF RPC layout
-_RPC_SCALARS = [
-    "line_off", "samp_off", "lat_off", "long_off", "height_off",
-    "line_scale", "samp_scale", "lat_scale", "long_scale", "height_scale",
-]
-_RPC_COEFFS = ["line_num_coeff", "line_den_coeff", "samp_num_coeff", "samp_den_coeff"]
-
-
-def parse_rpc_tag(data: bytes) -> dict:
-    """TIFF bytes -> oty rpc dict from the RPCCoefficientTag (92 doubles)."""
-    tags, _ = parse_tiff_tags(data)
-    if TAG_RPC not in tags:
-        raise ParamFileError("No RPC parameters found in the image tags.")
-    vals = tags[TAG_RPC]
-    if not isinstance(vals, tuple) or len(vals) != 92:
-        raise ParamFileError("RPCCoefficientTag must carry 92 doubles.")
-    rpc = dict(zip(_RPC_SCALARS, vals[2:12]))
-    for i, k in enumerate(_RPC_COEFFS):
-        rpc[k] = list(vals[12 + 20 * i : 32 + 20 * i])
-    return rpc
-
-
-def build_rpc_tag_bytes(rpc: dict, im_size: tuple[int, int] = (1024, 768)) -> bytes:
-    """Minimal TIFF carrying an RPCCoefficientTag (fixture writer twin)."""
-    e = "<"
-    vals = [0.0, 0.0] + [float(rpc[k]) for k in _RPC_SCALARS]
-    for k in _RPC_COEFFS:
-        vals.extend(float(v) for v in rpc[k])
-    payload = struct.pack(e + "d" * 92, *vals)
-    n = 3
-    ifd_size = 2 + 12 * n + 4
-    heap_off = 8 + ifd_size
-    ifd = struct.pack(e + "H", n)
-    ifd += struct.pack(e + "HHI", TAG_IMAGE_WIDTH, 4, 1) + struct.pack(e + "I", im_size[0])
-    ifd += struct.pack(e + "HHI", TAG_IMAGE_LENGTH, 4, 1) + struct.pack(e + "I", im_size[1])
-    ifd += struct.pack(e + "HHII", TAG_RPC, 12, 92, heap_off)
-    ifd += struct.pack(e + "I", 0)
-    return b"II" + struct.pack(e + "HI", 42, 8) + ifd + payload
-
-
-def read_im_rpc_param(file) -> dict:
-    """Image file (path or bytes) with RPC tags -> {filename: {'rpc': ...,
-    'im_size': ...}} — the reference's read_im_rpc_param
-    (param_io.py:330-395) without GDAL."""
-    from pathlib import Path
-
-    if isinstance(file, (bytes, bytearray)):
-        data, name = bytes(file), "image"
-    else:
-        data, name = Path(file).read_bytes(), Path(file).name
-    tags, _ = parse_tiff_tags(data)
-    out = {"rpc": parse_rpc_tag(data)}
-    if TAG_IMAGE_WIDTH in tags and TAG_IMAGE_LENGTH in tags:
-        out["im_size"] = [int(tags[TAG_IMAGE_WIDTH]), int(tags[TAG_IMAGE_LENGTH])]
-    return {name: out}
-
-
-# ---------------------------------------------------------------------------
-# writer (deterministic fixtures; also the S15 analogue for EXIF)
-# ---------------------------------------------------------------------------
-
-def _rat(v: float, den: int = 1_000_000) -> tuple[int, int]:
-    """Unsigned TIFF RATIONAL; the denominator backs off so the numerator
-    fits 32 bits (a 9000 m altitude at 1e-6 precision would overflow)."""
-    v = float(v)
-    while den > 1 and v * den > 4_294_967_295:
-        den //= 10
-    num = int(round(v * den))
-    if not 0 <= num <= 4_294_967_295:
-        # den backoff stops at 1; a negative or > 2^32-1 value cannot be
-        # an unsigned RATIONAL — fail here, not in struct.pack
-        raise ParamFileError(f"value {v!r} does not fit a TIFF RATIONAL")
-    return num, den
-
-
-def build_exif_bytes(
-    im_size: tuple[int, int],
-    focal_len_mm: float | None = None,
-    sensor_size_mm: tuple[float, float] | None = None,
-    focal_35: int | None = None,
-    lla: tuple[float, float, float] | None = None,
-    rpy_deg: tuple[float, float, float] | None = None,
-    dewarp: list[float] | None = None,
-    make: str = "oty",
-    model: str = "spark",
-) -> bytes:
-    """Minimal little-endian TIFF with IFD0 + EXIF + GPS IFDs + XMP."""
-    e = "<"
-    heap = bytearray()
-    heap_base = [0]  # patched once layout is known
-
-    def defer(payload: bytes) -> int:
-        off = len(heap)
-        heap.extend(payload)
-        if len(payload) % 2:
-            heap.extend(b"\x00")
-        return off
-
-    def entry(tag: int, typ: int, cnt: int, payload: bytes) -> tuple:
-        return (tag, typ, cnt, payload)
-
-    def pack_ifd(entries: list[tuple], ifd_off: int) -> bytes:
-        out = struct.pack(e + "H", len(entries))
-        for tag, typ, cnt, payload in sorted(entries):
-            if len(payload) <= 4:
-                out += struct.pack(e + "HHI", tag, typ, cnt) + payload.ljust(4, b"\x00")
-            else:
-                off = defer(payload) + heap_base[0]
-                out += struct.pack(e + "HHII", tag, typ, cnt, off)
-        return out + struct.pack(e + "I", 0)
-
-    def rat_payload(vals) -> bytes:
-        out = b""
-        for v in vals:
-            n, d = _rat(float(v))
-            out += struct.pack(e + "II", n, d)
-        return out
-
-    exif_entries = []
-    if focal_len_mm is not None:
-        exif_entries.append(entry(TAG_FOCAL, 5, 1, rat_payload([focal_len_mm])))
-    if focal_35 is not None:
-        exif_entries.append(entry(TAG_FOCAL_35, 3, 1, struct.pack(e + "H", focal_35)))
-    exif_entries.append(entry(TAG_PIXEL_X, 4, 1, struct.pack(e + "I", im_size[0])))
-    exif_entries.append(entry(TAG_PIXEL_Y, 4, 1, struct.pack(e + "I", im_size[1])))
-    if sensor_size_mm is not None:
-        xres = im_size[0] / sensor_size_mm[0]  # pixels per mm (unit 4)
-        yres = im_size[1] / sensor_size_mm[1]
-        exif_entries += [
-            entry(TAG_PLANE_XRES, 5, 1, rat_payload([xres])),
-            entry(TAG_PLANE_YRES, 5, 1, rat_payload([yres])),
-            entry(TAG_PLANE_UNIT, 3, 1, struct.pack(e + "H", 4)),
-        ]
-
-    gps_entries = []
-    if lla is not None:
-        lat, lon, alt = lla
-
-        def dms(v: float) -> list[float]:
-            v = abs(v)
-            d = math.floor(v)
-            m = math.floor((v - d) * 60)
-            s = (v - d - m / 60) * 3600
-            return [d, m, s]
-
-        gps_entries = [
-            entry(TAG_GPS_LAT_REF, 2, 2, (b"N" if lat >= 0 else b"S") + b"\x00"),
-            entry(TAG_GPS_LAT, 5, 3, rat_payload(dms(lat))),
-            entry(TAG_GPS_LON_REF, 2, 2, (b"E" if lon >= 0 else b"W") + b"\x00"),
-            entry(TAG_GPS_LON, 5, 3, rat_payload(dms(lon))),
-            entry(TAG_GPS_ALT_REF, 1, 1, bytes([0 if alt >= 0 else 1])),
-            entry(TAG_GPS_ALT, 5, 1, rat_payload([abs(alt)])),
-        ]
-
-    ifd0_entries = [
-        entry(TAG_IMAGE_WIDTH, 4, 1, struct.pack(e + "I", im_size[0])),
-        entry(TAG_IMAGE_LENGTH, 4, 1, struct.pack(e + "I", im_size[1])),
-        entry(TAG_MAKE, 2, len(make) + 1, make.encode() + b"\x00"),
-        entry(TAG_MODEL, 2, len(model) + 1, model.encode() + b"\x00"),
-    ]
-    xmp_parts = []
-    if rpy_deg is not None:
-        r, p, y = rpy_deg
-        xmp_parts += [
-            f'drone-dji:GimbalRollDegree="{r!r}"',
-            f'drone-dji:GimbalPitchDegree="{p - 90.0!r}"',  # writer inverts the +90 read offset
-            f'drone-dji:GimbalYawDegree="{y!r}"',
-        ]
-    if dewarp is not None:
-        xmp_parts.append(
-            'drone-dji:DewarpData="2000-01-01;' + ",".join(repr(v) for v in dewarp) + '"'
-        )
-    if xmp_parts:
-        xmp = ("<x:xmpmeta><rdf:Description " + " ".join(xmp_parts) + "/></x:xmpmeta>").encode()
-        ifd0_entries.append(entry(TAG_XMP, 1, len(xmp), xmp))
-
-    # layout: header(8) | ifd0 | exif ifd | gps ifd | heap
-    n0 = len(ifd0_entries) + (1 if exif_entries else 0) + (1 if gps_entries else 0)
-    ifd0_size = 2 + 12 * n0 + 4
-    exif_off = 8 + ifd0_size
-    exif_size = (2 + 12 * len(exif_entries) + 4) if exif_entries else 0
-    gps_off = exif_off + exif_size
-    gps_size = (2 + 12 * len(gps_entries) + 4) if gps_entries else 0
-    heap_base[0] = gps_off + gps_size
-
-    if exif_entries:
-        ifd0_entries.append(
-            entry(TAG_EXIF_IFD, 4, 1, struct.pack(e + "I", exif_off))
-        )
-    if gps_entries:
-        ifd0_entries.append(entry(TAG_GPS_IFD, 4, 1, struct.pack(e + "I", gps_off)))
-
-    # all deferred payloads share one heap placed after the last IFD, so
-    # packing order does not affect the offsets
-    exif_blob = pack_ifd(exif_entries, exif_off) if exif_entries else b""
-    gps_blob = pack_ifd(gps_entries, gps_off) if gps_entries else b""
-    ifd0_blob = pack_ifd(ifd0_entries, 8)
-    assert len(ifd0_blob) == ifd0_size
-    header = b"II" + struct.pack(e + "HI", 42, 8)
-    return bytes(header + ifd0_blob + exif_blob + gps_blob + heap)
 
 
 # ---------------------------------------------------------------------------

@@ -90,13 +90,6 @@ def world_to_lonlat(x, y):
     ) / config.M_PER_DEG
 
 
-def footprint_polygons(z: float = DEM_OFFSET) -> dict[str, np.ndarray]:
-    """filename -> (2,8) world (x,y) ground footprint polygon."""
-    return {
-        name: world_footprint(model, z) for name, model in fixture_models().items()
-    }
-
-
 def footprint_records(res: int = config.GRID_RES) -> dict:
     """Driver-side footprint catalog: polygons, edges, bboxes, covering
     cells, centers, gsd. Tiny (4 images); broadcast to every join."""

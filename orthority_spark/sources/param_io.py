@@ -9,8 +9,6 @@ stage 2). Mirrors the reference's formats:
    lat/lon — here the 4-way CsvFormat enum becomes a column-presence
    check, and auto-"zone" is the mean-coordinate rule common.py:156-161)
 - exterior GeoJSON   /root/reference/orthority/param_io.py:1365-1425
-- RPC YAML           /root/reference/orthority/param_io.py:397-448
-  (strict 20-coefficient validation)
 - writers            /root/reference/orthority/param_io.py:570-700
 - validate_collection-style recursive schema checking
   /root/reference/orthority/common.py:164-220
@@ -302,72 +300,6 @@ def read_ext_param_geojson(file: str | Path) -> tuple[list[dict], dict | None]:
     return records, data.get("world_crs")
 
 
-def write_ext_param_geojson(file: str | Path, records: list[dict],
-                            world_crs: str | None = None,
-                            overwrite: bool = False) -> None:
-    p = Path(file)
-    if p.exists() and not overwrite:
-        raise FileExistsError(p)
-    feats = []
-    for r in records:
-        props = {k: v for k, v in r.items() if k not in ("lon", "lat", "z")}
-        feats.append(
-            {
-                "type": "Feature",
-                "properties": props,
-                "geometry": {
-                    "type": "Point",
-                    "coordinates": [r["lon"], r["lat"]]
-                    + ([r["z"]] if r.get("z") is not None else []),
-                },
-            }
-        )
-    doc = {"type": "FeatureCollection", "features": feats}
-    if world_crs:
-        doc["world_crs"] = world_crs
-    with open(p, "w") as f:
-        json.dump(doc, f, indent=2)
-
-
-# ---------------------------------------------------------------------------
-# RPC params (YAML, strict 20-coeff validation) — S9
-# ---------------------------------------------------------------------------
-
-RPC_COEFF_KEYS = [
-    "line_num_coeff", "line_den_coeff", "samp_num_coeff", "samp_den_coeff",
-]
-RPC_SCALAR_KEYS = [
-    "lat_off", "lat_scale", "long_off", "long_scale", "height_off",
-    "height_scale", "line_off", "line_scale", "samp_off", "samp_scale",
-]
-
-
-def read_rpc_param(file: str | Path) -> dict:
-    """oty RPC YAML -> {filename: rpc dict}; every coeff list must have
-    exactly 20 entries (param_io.py:414-437)."""
-    with open(file) as f:
-        data = yaml.safe_load(f)
-    for filename, entry in data.items():
-        rpc = entry.get("rpc", entry)
-        for k in RPC_SCALAR_KEYS:
-            if k not in rpc:
-                raise ParamFileError(f"{filename}: missing rpc key '{k}'")
-        for k in RPC_COEFF_KEYS:
-            if k not in rpc or len(rpc[k]) != 20:
-                raise ParamFileError(
-                    f"{filename}: '{k}' must have exactly 20 coefficients"
-                )
-    return data
-
-
-def write_rpc_param(file: str | Path, params: dict, overwrite: bool = False) -> None:
-    p = Path(file)
-    if p.exists() and not overwrite:
-        raise FileExistsError(p)
-    with open(p, "w") as f:
-        yaml.safe_dump(params, f)
-
-
 # ---------------------------------------------------------------------------
 # OpenSfM / ODM reconstruction.json — S6/S12
 # ---------------------------------------------------------------------------
@@ -504,29 +436,3 @@ def read_gcps_geojson(file: str | Path) -> list[dict]:
             }
         )
     return out
-
-
-def write_gcps_geojson(file: str | Path, records: list[dict],
-                       overwrite: bool = False) -> None:
-    p = Path(file)
-    if p.exists() and not overwrite:
-        raise FileExistsError(p)
-    feats = [
-        {
-            "type": "Feature",
-            "properties": {
-                "filename": r["filename"],
-                "ji": [r["j"], r["i"]],
-                "id": r.get("id"),
-                "info": r.get("info"),
-            },
-            "geometry": {
-                "type": "Point",
-                "coordinates": [r["x"], r["y"]]
-                + ([r["z"]] if r.get("z") is not None else []),
-            },
-        }
-        for r in records
-    ]
-    with open(p, "w") as f:
-        json.dump({"type": "FeatureCollection", "features": feats}, f, indent=2)

@@ -12,8 +12,7 @@ from pyspark.sql import functions as F
 from orthority_spark.operators.ann import (
     ann_bruteforce,
     ann_ivf,
-    assign_buckets,
-    train_centroids,
+    quantize_matrix,
 )
 
 SF = "/root/testdata/sf0.01"
@@ -107,16 +106,26 @@ def test_bruteforce_topk_shape(spark, emb):
     assert all(sorted(v) == [1, 2, 3, 4, 5] for v in per_q.values())
 
 
-def test_bucket_assignment_covers_all(spark, emb):
-    cents = train_centroids(emb, n_centroids=8)
-    b = assign_buckets(emb, cents)
-    assert b.count() == emb.count()
-    n_buckets = b.select("bucket").distinct().count()
-    assert 2 <= n_buckets <= 8
+def _label_mean_centroids(emb, n_centroids: int = 8):
+    """IVF seed centroids: the mean quantised vector of each
+    ``label % n_centroids`` group, from exact int64 sums (an empty group
+    keeps a zero centroid). Ragged/NULL components count 0."""
+    import numpy as np
+
+    t = emb.select("label", "embedding").toArrow()
+    M = quantize_matrix(t.column("embedding"))
+    b = t.column("label").to_numpy(zero_copy_only=False).astype(np.int64) % n_centroids
+    sums = np.zeros((n_centroids, M.shape[1]), dtype=np.int64)
+    np.add.at(sums, b, M)
+    counts = np.bincount(b, minlength=n_centroids)
+    cents = np.zeros(sums.shape)
+    hit = counts > 0
+    cents[hit] = sums[hit] / counts[hit, None]
+    return cents
 
 
 def test_ivf_recall_vs_bruteforce(spark, emb):
-    cents = train_centroids(emb, n_centroids=8)
+    cents = _label_mean_centroids(emb, n_centroids=8)
     exact = {
         (r.query_id, r.neighbor_id)
         for r in ann_bruteforce(emb, F.col("vec_id").isin(QUERY_IDS), k=5).collect()
@@ -354,41 +363,6 @@ def test_banded_lsh_empty_corpus(spark, tmp_path):
     assert q_embedding_neardups_bucketed(spark, str(tmp_path)).count() == 0
 
 
-
-
-def test_kmeans_inertia_monotone_and_recall(spark, emb):
-    """Distributed Lloyd's k-means: Euclidean inertia is monotone
-    non-increasing across iterations, and the trained quantiser's IVF
-    recall vs exact top-k is at least as good as the label-seed's."""
-    from orthority_spark.operators.ann import train_centroids_kmeans
-
-    emb = emb.cache()
-    cents, inertia = train_centroids_kmeans(emb, n_centroids=8, n_iter=5)
-    assert len(inertia) == 5
-    assert all(b <= a * (1 + 1e-12) for a, b in zip(inertia, inertia[1:]))
-
-    qids = [int(r.vec_id) for r in emb.select("vec_id").limit(5).collect()]
-    queries = F.col("vec_id").isin(qids)
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in ann_bruteforce(emb, queries, k=5).collect()
-    }
-    got = {
-        (r.query_id, r.neighbor_id)
-        for r in ann_ivf(emb, queries, cents, k=5, nprobe=2).collect()
-    }
-    recall = len(got & exact) / len(exact)
-    seed = train_centroids(emb, 8)
-    got_seed = {
-        (r.query_id, r.neighbor_id)
-        for r in ann_ivf(emb, queries, seed, k=5, nprobe=2).collect()
-    }
-    recall_seed = len(got_seed & exact) / len(exact)
-    assert recall >= 0.5
-    assert recall >= recall_seed - 0.2  # k-means never collapses recall
-    emb.unpersist()
-
-
 def test_band_keys_numpy_equals_expr_on_ragged_nulls(spark, emb):
     """The numpy band-key kernel must reproduce the JVM expression
     reference bit-for-bit — on the fixture and on ragged vector lengths,
@@ -524,26 +498,6 @@ def test_pair_scorers_equal_jvm_fold_on_ragged_nulls(spark):
         _score_pairs_join(pairs, emb, tau),
     ):
         assert {(r.vec_a, r.vec_b): r.cosine for r in scored.collect()} == ref
-
-
-def test_assign_buckets_numpy_equals_expr(spark, emb):
-    """``assign_buckets`` must give every vector its nearest centroid by
-    the dot identity argmax (c.x - ||c||^2 / 2), ties to the higher
-    bucket, computed here in Python over the QUANT-quantised vectors and
-    the integer centroids the IVF gate uses."""
-    import numpy as np
-
-    from gates.queries_vec import _fixed_centroids
-
-    C = _fixed_centroids()
-    fast = {r.vec_id: r.bucket for r in assign_buckets(emb, C).collect()}
-    slow = {}
-    for r in _quantized(emb).collect():
-        qe = np.array([0 if x is None else x for x in (r.qe or [])], dtype="int64")
-        d = min(len(qe), C.shape[1])
-        s = (qe[:d].astype("float64") @ C[:, :d].T) - 0.5 * (C * C).sum(axis=1)
-        slow[r.vec_id] = max(range(C.shape[0]), key=lambda k: (s[k], k))
-    assert fast == slow and len(fast) == emb.count()
 
 
 def test_vector_gates_match_oracle_on_zero_and_null_vectors(spark, tmp_path):

@@ -84,7 +84,7 @@ def test_cli_dedup(cli_spark, capsys):
 
 
 def _write_gcps(tmp_path, model, n=8, plane=825.0, shift=(0.0, 0.0)):
-    from orthority_spark.sources.param_io import write_gcps_geojson
+    from builders import write_gcps_geojson
 
     rng = np.random.RandomState(13)
     ji = np.vstack([rng.uniform(10, model.im_size[0] - 10, n),
@@ -144,7 +144,7 @@ def test_cli_fit(cli_spark, tmp_path, capsys):
 
 
 def test_cli_exif_scan(cli_spark, tmp_path, capsys):
-    from orthority_spark.sources.exif import build_exif_bytes
+    from builders import build_exif_bytes
 
     src = tmp_path / "blobs"
     cli_spark.createDataFrame(

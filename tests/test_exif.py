@@ -12,13 +12,14 @@ from orthority_spark.geom.boundary import world_footprint
 from orthority_spark.geom.camera import FrameModel
 from orthority_spark.geom.rotation import rpy_to_opk
 from orthority_spark.sources.exif import (
-    build_exif_bytes,
     exif_ext_param,
     exif_int_param,
     exif_scan,
     parse_exif,
 )
 from orthority_spark.sources.param_io import ParamFileError
+
+from builders import build_exif_bytes
 
 LLA = (-33.7001, 24.2001, 825.0)
 RPY = (3.0, -5.0, 35.0)
@@ -137,45 +138,6 @@ def test_exif_scan_distributed(spark):
         assert r.lat == pytest.approx(LLA[0] + k * 1e-4, abs=1e-8)
         assert r.alt == pytest.approx(820.0 + k, abs=1e-6)
         assert r.yaw == pytest.approx(10.0 * k, abs=1e-12)
-
-
-def test_rpc_image_tag_roundtrip(tmp_path):
-    """RPC written as a TIFF RPCCoefficientTag reads back into the same
-    model the YAML path builds — read_im_rpc_param made genuine (S8)."""
-    from orthority_spark.geom.camera import RpcModel
-    from orthority_spark.sources.exif import build_rpc_tag_bytes, read_im_rpc_param
-    from orthority_spark.sources.footprints import fixture_rpc_model
-
-    m = fixture_rpc_model()
-    rpc = {k: getattr(m, k) for k in (
-        "lat_off", "lat_scale", "long_off", "long_scale", "height_off",
-        "height_scale", "line_off", "line_scale", "samp_off", "samp_scale")}
-    rpc.update({k: list(getattr(m, k)) for k in (
-        "line_num_coeff", "line_den_coeff", "samp_num_coeff", "samp_den_coeff")})
-    data = build_rpc_tag_bytes(rpc, im_size=m.im_size)
-    f = tmp_path / "img.tif"
-    f.write_bytes(data)
-    (entry,) = read_im_rpc_param(f).values()
-    assert entry["im_size"] == [1024, 768]
-    m2 = RpcModel(im_size=tuple(entry["im_size"]), **{
-        k: (np.asarray(v) if isinstance(v, list) else v)
-        for k, v in entry["rpc"].items()
-    })
-    ji = np.array([[100.0, 900.0, 511.5], [80.0, 700.0, 383.5]])
-    xyz = m.pixel_to_world_z(ji, 825.0)
-    np.testing.assert_allclose(m2.world_to_pixel(xyz), ji, atol=1e-9)
-    # bytes input works too (the distributed binary-column path)
-    (entry2,) = read_im_rpc_param(data).values()
-    assert entry2["rpc"]["line_off"] == m.line_off
-
-
-def test_rpc_image_tag_missing_raises():
-    from orthority_spark.sources.exif import parse_rpc_tag
-
-    data = build_exif_bytes(im_size=(10, 10), focal_len_mm=5.0,
-                            sensor_size_mm=(6.0, 4.5))
-    with pytest.raises(ParamFileError, match="RPC"):
-        parse_rpc_tag(data)
 
 
 def test_exif_scan_isolates_corrupt_blobs(spark):
@@ -320,7 +282,8 @@ def test_dms_ref_strict_and_rat_bounds():
     """A truncated GPS ref must raise, not silently read as northern
     hemisphere ('' in "NE" is True); _rat must reject values that cannot
     be an unsigned TIFF RATIONAL instead of failing in struct.pack."""
-    from orthority_spark.sources.exif import _dms_to_decimal, _rat
+    from builders import _rat
+    from orthority_spark.sources.exif import _dms_to_decimal
 
     assert _dms_to_decimal((10.0, 30.0, 0.0), "S") == -10.5
     assert _dms_to_decimal((10.0, 30.0, 0.0), "w") == -10.5  # case-folded

@@ -1,5 +1,5 @@
-"""RPC refine (A9) recovers a known shift analytically; raster<->vector
-joins: J2 range join, O1 two-phase pruning, A4 coverage, z-sampling."""
+"""RPC refine (A9) recovers a known shift analytically; frame pose
+solving; raster<->vector z-sampling."""
 
 from __future__ import annotations
 
@@ -7,21 +7,10 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from orthority_spark.geom.dem import DEM_OFFSET, DEM_GAIN, dem_sinusoid
-from orthority_spark.operators.fit import (
-    refine_per_image,
-    refine_shift_oracle,
-    unmatched_images,
-)
-from orthority_spark.operators.raster_join import (
-    OutsideDemError,
-    bbox_range_join,
-    check_dem_coverage,
-    two_phase_prune,
-    sample_dem_z,
-)
+from orthority_spark.geom.dem import DEM_OFFSET, dem_sinusoid
+from orthority_spark.operators.fit import refine_per_image
+from orthority_spark.operators.raster_join import sample_dem_z
 from orthority_spark.sources.dem_tiles import fixture_dem
-from orthority_spark.sources import footprints as fp
 
 
 # --- fit -------------------------------------------------------------------
@@ -56,68 +45,7 @@ def test_refine_shift_drift_identity_plus_shift(spark):
     assert r.ai == pytest.approx(1.0, abs=1e-9) and r.bi == pytest.approx(-2.25, abs=1e-6)
 
 
-def test_unmatched_images_anti_join(spark):
-    gcps = _gcps_with_shift(spark)
-    images = spark.createDataFrame(
-        [("img_0000",), ("img_0001",), ("img_9999",)], "filename string")
-    missing = [r.filename for r in unmatched_images(images, gcps).collect()]
-    assert missing == ["img_9999"]
-
-
 # --- raster joins ----------------------------------------------------------
-
-def test_bbox_range_join_and_coverage(spark):
-    dem = fixture_dem(spark)
-    fps = fp.footprint_summary_df(spark)
-    joined = bbox_range_join(fps, dem.where(F.col("band") == 1))
-    per_fp = {r.filename: r.n for r in
-              joined.groupBy("filename").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert set(per_fp) == {"img_0000", "img_0001", "img_0002", "img_0003"}
-    assert all(n >= 1 for n in per_fp.values())
-    cov = check_dem_coverage(fps, dem)
-    assert all(r.full_coverage for r in cov.collect())
-
-
-def test_partial_dem_flags_coverage(spark):
-    dem = fixture_dem(spark, partial=True)
-    cov = check_dem_coverage(fp.footprint_summary_df(spark), dem)
-    rows = cov.collect()
-    assert any(not r.full_coverage for r in rows) or all(
-        r.n_valid_cells < r.n_cells for r in rows
-    )
-
-
-def test_outside_dem_raises(spark):
-    dem = fixture_dem(spark)
-    far = spark.createDataFrame(
-        [("ghost", 9e6, 9e6, 9.1e6, 9.1e6)],
-        "filename string, xmin double, ymin double, xmax double, ymax double")
-    with pytest.raises(OutsideDemError, match="ghost"):
-        check_dem_coverage(far, dem)
-
-
-def test_two_phase_prune_shrinks(spark):
-    dem = fixture_dem(spark)
-    base = fp.footprint_summary_df(spark).select(
-        "filename", "xmin", "ymin", "xmax", "ymax")
-
-    def footprints_at_z(z_min, z_max):
-        # footprint bbox grows with z range (stand-in for re-projected
-        # boundary at z): pad by (z_max - z_min) / 10
-        pad = (z_max - z_min) / 10.0
-        return base.select(
-            "filename",
-            (F.col("xmin") - pad).alias("xmin"),
-            (F.col("ymin") - pad).alias("ymin"),
-            (F.col("xmax") + pad).alias("xmax"),
-            (F.col("ymax") + pad).alias("ymax"),
-        )
-
-    pruned, z_min, z_max = two_phase_prune(footprints_at_z, dem)
-    assert DEM_OFFSET - DEM_GAIN <= z_min <= z_max <= DEM_OFFSET + DEM_GAIN
-    coarse = bbox_range_join(
-        footprints_at_z(-106.71, 8932.28), dem.where(F.col("band") == 1))
-    assert pruned.count() < coarse.count()
 
 
 def test_sample_dem_z_matches_surface(spark):
@@ -173,34 +101,57 @@ def test_sample_dem_z_drops_points_in_a_missing_tile(spark):
         assert {r.url for r in got.collect()} == {"held"}, max_bytes
 
 
-def test_raster_join_imports_no_pandas():
-    """The broadcast gather's Python workers import raster_join and run
-    its Arrow buffer conversions; neither imports pandas (only the
-    cogroup fallback does, when it plans). The conversions read NULL as
-    NaN and honour a sliced array's offset, as pyarrow's to_numpy does."""
+def _assert_imports_no_pandas(module: str) -> None:
+    """A fresh interpreter imports ``orthority_spark.operators.<module>``
+    and runs the Arrow buffer conversions its kernel uses; neither loads
+    pandas. The conversions read NULL as NaN and honour a sliced array's
+    offset, as pyarrow's to_numpy does, and write NaN as NULL only when
+    asked."""
     import os
     import subprocess
     import sys
 
-    code = """
+    code = f"""
 import sys
 import numpy as np, pyarrow as pa
-from orthority_spark.operators.raster_join import _bits, _float64
+import orthority_spark.operators.{module}
+from orthority_spark.arrow_buffers import (
+    bitmap, float64_array, float64_values, int32_array)
 print('pandas' in sys.modules)
 vals = np.arange(11, dtype='float64')
 col = pa.Array.from_buffers(
-    pa.float64(), 11, [_bits(np.arange(11) % 3 != 0), pa.py_buffer(vals)]
+    pa.float64(), 11, [bitmap(np.arange(11) % 3 != 0), pa.py_buffer(vals)]
 ).slice(2, 7)
-x = _float64(col)
+x = float64_values(col)
+nulls = float64_array(x, nan_is_null=True)
+nans = float64_array(x, nan_is_null=False)
+offs = int32_array(np.array([0, 2, 5]))
 print('pandas' in sys.modules)
 assert np.array_equal(x, col.to_numpy(zero_copy_only=False), equal_nan=True)
 assert np.isnan(x).sum() == 2
+assert nulls.equals(col) and nulls.null_count == 2
+assert nans.null_count == 0 and np.isnan(nans.to_numpy()).sum() == 2
+assert offs.type == pa.int32() and offs.to_pylist() == [0, 2, 5]
 """
     out = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True,
         check=True, cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert out.stdout.split() == ["False", "False"]
+
+
+def test_raster_join_imports_no_pandas():
+    """The broadcast gather's Python workers import raster_join and run
+    its Arrow buffer conversions without pandas (only the cogroup
+    fallback imports it, when it plans)."""
+    _assert_imports_no_pandas("raster_join")
+
+
+@pytest.mark.parametrize("module", ["remap", "ray"])
+def test_kernel_imports_no_pandas(module):
+    """The remap and ray-march kernels' Python workers import their
+    module and build their output columns without pandas."""
+    _assert_imports_no_pandas(module)
 
 
 @pytest.mark.parametrize("partial", [False, True])
@@ -314,7 +265,7 @@ def test_sample_dem_z_matches_scalar_twin(spark):
 
 
 # ---------------------------------------------------------------------------
-# frame pose / calibration solvers (cv2.solvePnP / calibrateCamera recast)
+# frame pose solver (cv2.solvePnP recast)
 # ---------------------------------------------------------------------------
 
 
@@ -351,55 +302,6 @@ def test_solve_pnp_min_gcps():
         solve_pnp(_int_params(m), np.zeros((2, 3)), np.zeros((3, 3)))
 
 
-def test_fit_frame_multiple_images_brown():
-    """Interior + exterior fit from 3 diverse poses (the reference's
-    multi-image scenario, test_fit.py:233-265): reprojection within
-    0.1 px, ground round-trip within 1 m."""
-    from orthority_spark.geom.camera import FrameModel
-    from orthority_spark.operators.fit import _model_with_pose, fit_frame
-
-    base = dict(cam_type="brown", im_size=(200, 150), focal_len=5.0,
-                sensor_size=(6.0, 4.5), cx=-0.01, cy=0.02,
-                dist=dict(k1=-0.1, k2=0.05, p1=0.005, p2=-0.003, k3=0.0))
-    j, i = np.arange(25, 200, 35.0), np.arange(20, 150, 30.0)
-    jg, ig = np.meshgrid(j, i)
-    grid_ji = np.vstack([jg.ravel(), ig.ravel()])
-    gcps, truth = {}, {}
-    for k, (exyz, eopk_deg) in enumerate(zip(
-        [(2e4, 3e4, 1e3), (3e4, 3e4, 1e3), (3e4, 3e4, 2e3)],
-        [(-3.0, 2.0, 10.0), (-15.0, 2.0, 10.0), (-30.0, 20.0, 10.0)],
-    )):
-        cam = FrameModel(**base, xyz=exyz, opk=tuple(np.radians(eopk_deg)))
-        xyz = cam.pixel_to_world_z(grid_ji, 0.0)
-        gcps[f"file{k}"] = (grid_ji, xyz)
-        truth[f"file{k}"] = xyz
-    int_p, ext = fit_frame("brown", (200, 150), gcps)
-    for name, e in ext.items():
-        test_cam = _model_with_pose(int_p, e["xyz"], e["opk"])
-        np.testing.assert_allclose(
-            test_cam.world_to_pixel(truth[name]), grid_ji, atol=0.1
-        )
-        np.testing.assert_allclose(
-            test_cam.pixel_to_world_z(grid_ji, 0.0), truth[name], atol=1.0
-        )
-
-
-def test_fit_frame_requires_coplanar():
-    from orthority_spark.operators.fit import fit_frame
-    from orthority_spark.sources.footprints import fixture_models
-
-    m = fixture_models()["img_0000"]
-    rng = np.random.RandomState(5)
-    ji = np.vstack([rng.uniform(10, 190, 8), rng.uniform(10, 140, 8)])
-    xyz = m.pixel_to_world_z(ji, 800.0)
-    xyz[2] += rng.uniform(-5, 5, 8)  # break co-planarity
-    with pytest.raises(ValueError, match="co-planar"):
-        fit_frame("pinhole", m.im_size, {"f": (ji, xyz)})
-    with pytest.raises(ValueError, match="four"):
-        fit_frame("pinhole", m.im_size,
-                  {"f": (ji[:, :3], np.vstack([xyz[:2, :3], np.zeros(3)]))})
-
-
 def test_fit_exterior_per_image_spark(spark):
     """Distributed PnP recovers each image's true pose."""
     from orthority_spark.operators.fit import fit_exterior_per_image
@@ -430,43 +332,6 @@ def test_fit_exterior_per_image_spark(spark):
             (got.omega, got.phi, got.kappa), m.opk, atol=1e-5
         )
         assert got.rms_px < 1e-4
-
-
-@pytest.mark.parametrize("cam_type,dist", [
-    ("pinhole", {}),
-    ("opencv", dict(k1=-0.08, k2=0.03, p1=0.002, p2=-0.001,
-                    k3=0.0, k4=0.0, k5=0.0, k6=0.0)),
-    ("fisheye", dict(k1=-0.05, k2=0.01, k3=0.0, k4=0.0)),
-])
-def test_fit_frame_multiple_images_other_models(cam_type, dist):
-    """The multi-image interior fit meets the reference contract for the
-    other frame models too (brown is covered separately)."""
-    from orthority_spark.geom.camera import FrameModel
-    from orthority_spark.operators.fit import _model_with_pose, fit_frame
-
-    base = dict(cam_type=cam_type, im_size=(200, 150), focal_len=5.0,
-                sensor_size=(6.0, 4.5), cx=-0.01, cy=0.02, dist=dist)
-    j, i = np.arange(25, 200, 35.0), np.arange(20, 150, 30.0)
-    jg, ig = np.meshgrid(j, i)
-    grid_ji = np.vstack([jg.ravel(), ig.ravel()])
-    gcps, truth = {}, {}
-    for k, (exyz, eopk_deg) in enumerate(zip(
-        [(2e4, 3e4, 1e3), (3e4, 3e4, 1e3), (3e4, 3e4, 2e3)],
-        [(-3.0, 2.0, 10.0), (-15.0, 2.0, 10.0), (-30.0, 20.0, 10.0)],
-    )):
-        cam = FrameModel(**base, xyz=exyz, opk=tuple(np.radians(eopk_deg)))
-        xyz = cam.pixel_to_world_z(grid_ji, 0.0)
-        gcps[f"file{k}"] = (grid_ji, xyz)
-        truth[f"file{k}"] = xyz
-    int_p, ext = fit_frame(cam_type, (200, 150), gcps)
-    for name, e in ext.items():
-        test_cam = _model_with_pose(int_p, e["xyz"], e["opk"])
-        np.testing.assert_allclose(
-            test_cam.world_to_pixel(truth[name]), grid_ji, atol=0.1
-        )
-        np.testing.assert_allclose(
-            test_cam.pixel_to_world_z(grid_ji, 0.0), truth[name], atol=1.0
-        )
 
 
 def test_sample_dem_z_broadcast_equals_cogroup(spark):

@@ -2,10 +2,12 @@
 never imports them, no gate holds an executor-side kernel, and the gates
 that run Python on executors work where ``gates`` is not importable — as
 on a cluster, where only the orthority_spark zip ships to the Python
-workers."""
+workers. Every public engine function or class is reached from a
+command, gate, benchmark or script, not only from the tests."""
 
 from __future__ import annotations
 
+import ast
 import os
 import subprocess
 import sys
@@ -19,6 +21,19 @@ KERNEL_WORDS = ("mapInPandas", "mapInArrow", "applyInPandas", "applyInArrow",
 EXECUTOR_GATES = ["remap_pixels", "remap_pixels_cubic", "undistort_pixels",
                   "ray_dem_footprints", "fit_exterior", "image_features",
                   "dem_z_sample"]
+#: files whose code counts as a use of the engine: the CLI, the driver
+#: contract, the gates, the benchmark and the scripts
+ENTRY_POINTS = ("orthority_spark/cli.py", "orthority_spark/__main__.py",
+                "__spark_entry__.py", "gates", "perfbench", "scripts")
+#: public engine functions and classes that only the tests reach. This set
+#: may only shrink: route a command or gate through a name, move it into
+#: tests/, or delete it.
+TEST_ONLY = {
+    "cell_center", "decode_html_text", "ensure_parallelism",
+    "exif_ext_param", "exif_int_param", "frame_sample", "mean_latlon_zone",
+    "parent_cell", "probe_z_transform", "resize_features",
+    "synthetic_pages_pandas", "write_tiles_with_checksums",
+}
 
 
 def _python(code: str, cwd: str) -> str:
@@ -76,3 +91,62 @@ spark.stop()
     assert rows.pop("worker_sees_gates") == "False"
     assert set(rows) == set(EXECUTOR_GATES)
     assert all(int(n) > 0 for n in rows.values()), rows
+
+
+def _used_names(node: ast.AST) -> set[str]:
+    """Identifiers that ``node``'s code uses: names, attribute names and
+    imported names. Comments and docstrings do not count."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.split(".")[-1])
+    return out
+
+
+def _unreached_engine_names() -> set[str]:
+    """Public top-level functions and classes of ``orthority_spark/`` that
+    no entry point reaches. Names resolve by identifier alone, so a name
+    reached in one module counts as reached in all."""
+    entries = [Path(ROOT, e) for e in ENTRY_POINTS]
+    files = [f for e in entries for f in ([e] if e.is_file() else e.rglob("*.py"))]
+    seeds = set().union(*(_used_names(ast.parse(f.read_text())) for f in files))
+    defs: dict[str, list[ast.AST]] = {}
+    public = set()
+    for path in Path(ROOT, "orthority_spark").rglob("*.py"):
+        if path in entries:
+            continue
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                defs.setdefault(node.name, []).append(node)
+                if not node.name.startswith("_"):
+                    public.add(node.name)
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                for t in targets:
+                    for n in ast.walk(t):
+                        if isinstance(n, ast.Name):
+                            defs.setdefault(n.id, []).append(node)
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)):
+                seeds |= _used_names(node)  # runs at import time
+    reached, todo = set(), list(seeds)
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            for node in defs.get(name, ()):
+                todo.extend(_used_names(node) - reached)
+    return public - reached
+
+
+def test_engine_ships_only_reached_code():
+    """An engine function that only tests call is either a test twin (it
+    belongs in tests/) or dead code; TEST_ONLY lists the ones left."""
+    unreached = _unreached_engine_names()
+    assert not unreached - TEST_ONLY, "reached only from tests: " + ", ".join(
+        sorted(unreached - TEST_ONLY))
+    assert not TEST_ONLY - unreached, "drop from TEST_ONLY: " + ", ".join(
+        sorted(TEST_ONLY - unreached))

@@ -25,8 +25,10 @@ from orthority_spark.geom import (
     gsd,
     point_in_polygon,
 )
-from orthority_spark.geom.dem import dem_sinusoid, dem_plane, ray_dem_intersect
+from orthority_spark.geom.dem import dem_sinusoid, dem_plane
 from orthority_spark.sources.footprints import fixture_models
+
+from builders import ray_dem_intersect
 
 RNG = np.random.RandomState(42)
 

@@ -1,15 +1,12 @@
 """Undistort intrinsics/pixel warps (S4/P12), north-aligned RPY->OPK
-(P10), OpenSfM reader (S6/S12), Column helpers (P15/P17)."""
+(P10), OpenSfM reader (S6/S12)."""
 
 from __future__ import annotations
 
 import json
 
 import numpy as np
-import pytest
-from pyspark.sql import functions as F
 
-from orthority_spark.functions.columns import convert_dtype, nan_equals, nodata_mask
 from orthority_spark.geom.camera import FrameModel
 from orthority_spark.geom.rotation import rpy_to_opk, aa_to_rotation
 from orthority_spark.sources.footprints import fixture_models
@@ -123,20 +120,3 @@ def test_read_osfm(tmp_path):
     np.testing.assert_allclose(shot["xyz"], (-R.T @ np.array(t)), rtol=1e-12)
     assert len(shot["opk"]) == 3
     assert shot["ref_lla"][0] == -33.7
-
-
-def test_column_helpers(spark):
-    df = spark.createDataFrame(
-        [(1.0, 1.0, 300.7, [0, 0, 0]), (float("nan"), float("nan"), -300.2, [0, 1, 0])],
-        "a double, b double, v double, bands array<int>",
-    )
-    out = df.select(
-        nan_equals(F.col("a"), F.col("b")).alias("eq"),
-        convert_dtype(F.col("v"), "tinyint").alias("t"),
-        convert_dtype(F.col("v"), "int").alias("i"),
-        nodata_mask(F.col("bands"), 0).alias("nd"),
-    ).collect()
-    assert out[0].eq is True and out[1].eq is True  # NaN == NaN
-    assert out[0].t == 127 and out[1].t == -128     # clipped, not wrapped
-    assert out[0].i == 301 and out[1].i == -300     # rounded
-    assert out[0].nd is True and out[1].nd is False

@@ -39,6 +39,26 @@ def test_kring_equals_bruteforce(spark, inputs):
     assert len(brute) > 0
 
 
+def test_empty_catalog_returns_no_rows(spark, inputs):
+    """An empty footprint catalog gives zero rows, with the columns and
+    types of a non-empty call, on both operators."""
+    pages, cells, summary = inputs
+    empty = summary.where("false")
+
+    def fields(df):
+        return [(f.name, f.dataType) for f in df.schema]
+
+    for full, none in (
+        (knn_bruteforce(pages, summary, k=2), knn_bruteforce(pages, empty, k=2)),
+        (knn_kring(pages, cells, summary, k=2, ring=8),
+         knn_kring(pages, cells, empty, k=2, ring=8)),
+        (knn_kring(pages, cells, summary, k=2, ring=8),
+         knn_kring(pages, cells.where("false"), empty, k=2, ring=8)),
+    ):
+        assert none.count() == 0
+        assert fields(none) == fields(full)
+
+
 def test_kring_broadcast_guard_withholds_hint(spark, inputs):
     """When the (2*ring+1)^2 expansion estimate exceeds the broadcast
     guard, knn_kring must warn, withhold the explicit broadcast hint

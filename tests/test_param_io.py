@@ -1,5 +1,5 @@
 """Param-file I/O: round trips, schema validation, CSV format dispatch,
-auto-zone rule (SURVEY §2.1 S5/S9/S11/S14/S15)."""
+auto-zone rule (SURVEY §2.1 S5/S11/S14/S15)."""
 
 from __future__ import annotations
 
@@ -13,11 +13,10 @@ from orthority_spark.sources.param_io import (
     read_ext_param_csv,
     write_ext_param_csv,
     read_ext_param_geojson,
-    write_ext_param_geojson,
-    read_rpc_param,
-    write_rpc_param,
     mean_latlon_zone,
 )
+
+from builders import write_ext_param_geojson
 
 INT_PARAMS = {
     "pinhole-1": {
@@ -95,21 +94,6 @@ def test_geojson_roundtrip(tmp_path):
     got, crs = read_ext_param_geojson(f)
     assert crs == "EPSG:32735"
     assert got[0]["lon"] == 24.2 and got[0]["camera"] == "pinhole-1"
-
-
-def test_rpc_strict_20_coeff(tmp_path):
-    f = tmp_path / "rpc.yaml"
-    rpc = {k: 0.0 for k in (
-        "lat_off", "lat_scale", "long_off", "long_scale", "height_off",
-        "height_scale", "line_off", "line_scale", "samp_off", "samp_scale")}
-    rpc.update({k: [0.0] * 20 for k in (
-        "line_num_coeff", "line_den_coeff", "samp_num_coeff", "samp_den_coeff")})
-    write_rpc_param(f, {"img.tif": {"rpc": rpc}})
-    assert read_rpc_param(f)["img.tif"]["rpc"]["lat_off"] == 0.0
-    rpc_bad = dict(rpc, line_num_coeff=[0.0] * 19)
-    write_rpc_param(f, {"img.tif": {"rpc": rpc_bad}}, overwrite=True)
-    with pytest.raises(ParamFileError, match="exactly 20"):
-        read_rpc_param(f)
 
 
 def test_validate_collection_shapes():
@@ -212,10 +196,8 @@ def test_factory_models_from_files(tmp_path):
 
     from orthority_spark.sources.factory import models_from_files
     from orthority_spark.sources.footprints import fixture_models, world_to_lonlat
-    from orthority_spark.sources.param_io import (
-        write_ext_param_geojson,
-        write_int_param,
-    )
+    from builders import write_ext_param_geojson
+    from orthority_spark.sources.param_io import write_int_param
 
     m = fixture_models()["img_0001"]  # brown distortion
     yml = tmp_path / "int.yaml"

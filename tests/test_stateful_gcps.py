@@ -1,62 +1,15 @@
-"""Stateful streaming sessionizer == batch sessionization; GCP GeoJSON
-round trip feeding the refine pipeline end-to-end."""
+"""GCP GeoJSON round trip feeding the refine pipeline end-to-end."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from orthority_spark.operators.fit import refine_per_image
 from orthority_spark.sources.footprints import fixture_models
-from orthority_spark.sources.param_io import read_gcps_geojson, write_gcps_geojson
-from orthority_spark.streaming.stateful import sessionize_stream
+from orthority_spark.sources.param_io import read_gcps_geojson
 
-SF = "/root/testdata/sf0.01"
-
-
-def test_stateful_sessionize_matches_batch(spark, tmp_path):
-    events = spark.read.parquet(f"{SF}/events.parquet").where(
-        F.col("user_id") < 20
-    )
-    src = str(tmp_path / "ev")
-    events.write.parquet(src)
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).parquet(src)
-    q = (
-        sessionize_stream(stream)
-        .writeStream.format("memory")
-        .queryName("sess")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.user_id, r.event_id): r.session_id
-        for r in spark.sql("SELECT * FROM sess").collect()
-    }
-
-    from gates.queries_rel import q_sessionize
-
-    batch = {
-        (r.user_id, r.event_id): r.session_id
-        for r in q_sessionize(spark, SF).where(F.col("user_id") < 20).collect()
-    }
-    assert len(got) == len(batch) > 0
-    # stream numbers sessions from 1, batch from 0 within each user —
-    # compare structure: same session boundaries per user
-    assert {
-        k: v - min(u for (uu, _), u in got.items() if uu == k[0])
-        for k, v in got.items()
-    } == {
-        k: v - min(u for (uu, _), u in batch.items() if uu == k[0])
-        for k, v in batch.items()
-    }
+from builders import write_gcps_geojson
 
 
 def test_gcp_roundtrip_feeds_refine(spark, tmp_path):

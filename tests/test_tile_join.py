@@ -15,6 +15,8 @@ from orthority_spark.operators import tile_join
 from orthority_spark.sources import footprints as fp
 from orthority_spark.sources.pages import synthetic_pages, synthetic_pages_pandas
 
+from builders import footprint_polygons
+
 N = 3000
 
 
@@ -29,7 +31,7 @@ def oracle_join():
     py = (lat - config.LAT0) * config.M_PER_DEG
     cells = grid.cell_index(lat.to_numpy(), lon.to_numpy(), config.GRID_RES)
     hits = set()
-    for name, poly in fp.footprint_polygons().items():
+    for name, poly in footprint_polygons().items():
         inside = point_in_polygon(px.to_numpy(), py.to_numpy(), poly)
         for u in pages.url[inside]:
             hits.add((u, name))
