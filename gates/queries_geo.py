@@ -36,7 +36,7 @@ def derived_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the derivation is one concat projection — the guard's exchange
     # measured as a net loss for the light consumers (host_stats,
     # stratified_sample, rollup_pyramid); heavy consumers guard at their
-    # own map stage (sources/scan.ensure_parallelism)
+    # own map stage (sources/scan.parallel_read)
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     spec = derived_pages_sql("o_orderkey", "spark")
     return orders.select(

@@ -35,36 +35,18 @@ from pyspark.sql import DataFrame, SparkSession
 _SCAN_PARTITIONS_MEMO: dict[tuple[str, str, int], int] = {}
 
 
-def ensure_parallelism(
-    df: DataFrame, min_partitions: int | None = None
-) -> DataFrame:
-    """``df`` repartitioned round-robin to ``min_partitions`` (default:
-    the session's defaultParallelism) ONLY when its current partition
-    count is lower. Values are row-identical — only placement changes,
-    and Spark's sort-before-repartition keeps the assignment
-    retry-deterministic. Apply at HEAVY map stages only: the exchange
-    costs a few hundred ms, so a scan feeding one cheap projection +
-    partial agg is faster unguarded (measured: stratified_sample /
-    lang_profile regressed ~2x under a blanket guard, while the
-    shingle+md5 pipeline gained 3.2x).
-
-    ONLY pass plain scans (or scan+projection frames): the partition
-    probe is `.rdd.getNumPartitions()`, which is free for a file scan
-    but EXECUTES upstream shuffle stages under AQE for a frame
-    containing joins/aggregations."""
-    if min_partitions is None:
-        min_partitions = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < min_partitions:
-        df = df.repartition(min_partitions)
-    return df
-
-
 def parallel_read(
     spark: SparkSession, path: str, min_partitions: int | None = None
 ) -> DataFrame:
     """Parquet read whose map stage has at least ``min_partitions``
-    tasks — :func:`ensure_parallelism` over a parquet scan, with the
-    partition-count probe memoized per (session, path, mtime)."""
+    tasks (default: the session's defaultParallelism): the scan is
+    repartitioned round-robin ONLY when its natural partition count is
+    lower, with the partition-count probe memoized per (session, path,
+    mtime). Values are row-identical — only placement changes. Use it
+    for HEAVY map stages only: the exchange costs a few hundred ms, so a
+    scan feeding one cheap projection + partial agg is faster unguarded
+    (measured: stratified_sample / lang_profile regressed ~2x under a
+    blanket guard, while the shingle+md5 pipeline gained 3.2x)."""
     if min_partitions is None:
         min_partitions = spark.sparkContext.defaultParallelism
     df = spark.read.parquet(path)

@@ -29,10 +29,9 @@ ENTRY_POINTS = ("orthority_spark/cli.py", "orthority_spark/__main__.py",
 #: may only shrink: route a command or gate through a name, move it into
 #: tests/, or delete it.
 TEST_ONLY = {
-    "cell_center", "decode_html_text", "ensure_parallelism",
-    "exif_ext_param", "exif_int_param", "frame_sample", "mean_latlon_zone",
-    "parent_cell", "probe_z_transform", "resize_features",
-    "synthetic_pages_pandas", "write_tiles_with_checksums",
+    "cell_center", "decode_html_text", "exif_ext_param", "exif_int_param",
+    "frame_sample", "mean_latlon_zone", "parent_cell", "probe_z_transform",
+    "resize_features", "synthetic_pages_pandas", "write_tiles_with_checksums",
 }
 
 
