@@ -41,5 +41,6 @@ def ray_march(
                 names=keep + ["x", "y", "z"],
             )
 
-    dirs = [F.col(c).cast("double") for c in ("dx", "dy", "dz", "tx", "ty", "tz")]
-    return rays.select(*keep, *dirs).mapInArrow(march, schema=schema)
+    ray_cols = [F.col(c).cast("double").alias(c)
+                for c in ("dx", "dy", "dz", "tx", "ty", "tz")]
+    return rays.select(*keep, *ray_cols).mapInArrow(march, schema=schema)
