@@ -26,6 +26,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..arrow_buffers import bitmap, int32_array, int64_array, list_offsets, values
+
 # --- banded sign-LSH with DATA-DRIVEN bucket cardinality -----------------
 # B fixed bands x r bits/band; r grows with corpus size so per-band bucket
 # occupancy stays bounded (~TARGET_OCC) and the within-bucket self-join
@@ -109,7 +111,7 @@ def quantize_matrix(ecol, dim: int | None = None) -> np.ndarray:
     if isinstance(ecol, pa.ChunkedArray):
         ecol = ecol.combine_chunks()
     n = len(ecol)
-    offs = ecol.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    offs = list_offsets(ecol)
     lens = np.diff(offs)
     if dim is None:
         dim = int(lens.max(initial=0))
@@ -118,7 +120,7 @@ def quantize_matrix(ecol, dim: int | None = None) -> np.ndarray:
         and ecol.values.null_count == 0
         and bool((lens == dim).all())
     ):
-        vals = ecol.values.to_numpy(zero_copy_only=False)
+        vals = values(ecol.values)
         V = vals[offs[0]: offs[0] + n * dim].astype(np.float64).reshape(
             n, dim
         )
@@ -135,7 +137,9 @@ def quantize_matrix(ecol, dim: int | None = None) -> np.ndarray:
 
 
 def _ids(col) -> np.ndarray:
-    return col.to_numpy(zero_copy_only=False).astype(np.int64)
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    return values(col).astype(np.int64)
 
 
 def _sqrt_nn(M: np.ndarray) -> np.ndarray:
@@ -149,8 +153,9 @@ def _cosine(dot: np.ndarray, sa: np.ndarray, sb: np.ndarray) -> pa.Array:
     by zero (a NaN would sort above every double)."""
     den = sa * sb
     zero = den == 0
-    cos = dot / np.where(zero, 1.0, den)
-    return pa.array(cos, type=pa.float64(), mask=zero)
+    cos = np.ascontiguousarray(dot / np.where(zero, 1.0, den), dtype="float64")
+    return pa.Array.from_buffers(
+        pa.float64(), len(cos), [bitmap(~zero), pa.py_buffer(cos)])
 
 
 def collect_matrix(emb: DataFrame):
@@ -221,11 +226,7 @@ def _scan_topk(
             if not len(qid):
                 continue
             yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qid, type=pa.int64()),
-                    pa.array(nid, type=pa.int64()),
-                    _cosine(dot, sa, sb),
-                ],
+                [int64_array(qid), int64_array(nid), _cosine(dot, sa, sb)],
                 names=["query_id", "neighbor_id", "cosine"],
             )
 
@@ -290,19 +291,11 @@ def band_keys(emb: DataFrame, r: int, dim: int) -> DataFrame:
                 )
                 for b in range(LSH_BANDS)
             ])
-            vid = batch.column(0).to_numpy(zero_copy_only=False)
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(
-                        np.repeat(vid, LSH_BANDS),
-                        type=pa.int64(),
-                        from_pandas=True,
-                    ),
-                    pa.array(
-                        np.tile(np.arange(LSH_BANDS, dtype=np.int32), n),
-                        type=pa.int32(),
-                    ),
-                    pa.array(keys_by_band.ravel(), type=pa.int64()),
+                    int64_array(np.repeat(_ids(batch.column(0)), LSH_BANDS)),
+                    int32_array(np.tile(np.arange(LSH_BANDS), n)),
+                    int64_array(keys_by_band.ravel()),
                 ],
                 names=["vec_id", "band", "key"],
             )
@@ -317,7 +310,7 @@ def _keep_pairs(va, vb, dot, sa, sb, tau: float) -> pa.RecordBatch:
     NULL cosine (a zero-norm side) never survives."""
     cos = _cosine(dot, sa, sb)
     return pa.RecordBatch.from_arrays(
-        [pa.array(va, type=pa.int64()), pa.array(vb, type=pa.int64()), cos],
+        [int64_array(va), int64_array(vb), cos],
         names=["vec_a", "vec_b", "cosine"],
     ).filter(pc.greater_equal(cos, tau))
 

@@ -3,16 +3,131 @@
 Local sandbox runs use ``local[N]``; the same settings (AQE, Arrow,
 shuffle-partition sizing) are what we would submit to a real cluster via
 ``spark-submit --py-files`` (see BASELINE.md submission mode).
+
+Cold start is the JVM's. When :func:`get_spark` launches the driver JVM
+itself, it starts it from a dynamic class-data-sharing archive (JEP 350)
+of the classes Spark loads; see :func:`_cds_plan` for when. The first
+such session dumps the archive as its JVM exits, and later sessions map
+it: set-up falls by about a third. The archive (about 170 MB) lives in
+``tempfile.gettempdir()`` as ``orthority_spark_cds_<key>.jsa``, keyed by
+the JDK, Spark's jars and the class path, so a new JDK or Spark gets a
+new file. Delete the file to rebuild it; delete every
+``orthority_spark_cds_*`` file there to reclaim the space.
+
+The dump goes to a per-process ``.tmp`` name, and an exit hook publishes
+it only after the JVM exited cleanly, and only if no archive exists yet.
+A JVM that maps a truncated archive dies of SIGBUS, so a partly written
+archive must never sit under the published name.
 """
 
 from __future__ import annotations
 
+import atexit
+import glob
+import hashlib
+import os
+import shutil
+import subprocess
+import tempfile
 from collections.abc import Callable
 from typing import Any
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import DataFrame, SparkSession
 
 from . import config
+
+#: environment variables that put more than ``$SPARK_CONF_DIR`` and
+#: ``$SPARK_HOME/jars`` on the driver's class path
+_CLASS_PATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
+                   "SPARK_PREPEND_CLASSES", "PYSPARK_SUBMIT_ARGS")
+
+
+def _java() -> str | None:
+    """The ``java`` that ``spark-class`` runs."""
+    home = os.environ.get("JAVA_HOME")
+    return shutil.which(os.path.join(home, "bin", "java") if home else "java")
+
+
+def _cds_key(java: str, spark_home: str, conf_dir: str) -> str:
+    """Hash of what a dynamic archive is only valid for: the JDK, the
+    jars on the class path and the conf directory in front of them."""
+    h = hashlib.md5()
+    java = os.path.realpath(java)
+    h.update(java.encode())
+    release = os.path.join(os.path.dirname(os.path.dirname(java)), "release")
+    if os.path.isfile(release):
+        h.update(open(release, "rb").read())
+    for jar in sorted(glob.glob(os.path.join(spark_home, "jars", "*"))):
+        st = os.stat(jar)
+        h.update(f"{os.path.basename(jar)} {st.st_size} {st.st_mtime_ns}\n".encode())
+    h.update(conf_dir.encode())
+    return h.hexdigest()[:12]
+
+
+def _cds_plan(master: str, conf: dict) -> tuple[str, str, str] | None:
+    """``(JVM flag, conf dir, archive path)`` for a driver JVM launched
+    from the class-data archive, or None to launch it as Spark would.
+
+    Only when this process launches the JVM: a ``local*`` master, no
+    running gateway and no ``PYSPARK_GATEWAY_PORT``. Only when the Spark
+    conf dir in use (``$SPARK_CONF_DIR``, else ``$SPARK_HOME/conf``)
+    holds nothing but ``*.template`` files, and nothing else is added to
+    the class path. The JVM then reads its conf from an empty directory
+    under the temp dir instead, which loses no setting: a JVM cannot
+    dump an archive while a non-empty directory is on its class path.
+
+    The flag maps the archive if it exists, else dumps one at exit to a
+    per-process ``.tmp`` name that :func:`_publish_archive` renames."""
+    if (not master.startswith("local") or SparkContext._gateway is not None
+            or "PYSPARK_GATEWAY_PORT" in os.environ
+            or any(os.environ.get(k) for k in _CLASS_PATH_ENV)
+            or "spark.driver.extraClassPath" in conf):
+        return None
+    spark_home = _find_spark_home()
+    user_conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    if os.path.isdir(user_conf) and any(
+            not f.endswith(".template") for f in os.listdir(user_conf)):
+        return None
+    java = _java()
+    if java is None:
+        return None
+    tmp = tempfile.gettempdir()
+    conf_dir = os.path.join(tmp, "orthority_spark_conf")
+    os.makedirs(conf_dir, exist_ok=True)
+    if os.listdir(conf_dir):
+        return None
+    path = os.path.join(
+        tmp, f"orthority_spark_cds_{_cds_key(java, spark_home, conf_dir)}.jsa")
+    if os.path.isfile(path):
+        return f"-XX:SharedArchiveFile={path}", conf_dir, path
+    # the dump warns once per class it skips (hundreds of lines) on stdout
+    return (f"-XX:ArchiveClassesAtExit={path}.{os.getpid()}.tmp -Xlog:cds=off",
+            conf_dir, path)
+
+
+def _publish_archive(proc: subprocess.Popen, tmp: str, path: str) -> None:
+    """Exit hook of a dumping session: close the gateway, wait for the
+    JVM to write its archive to ``tmp``, and rename that to ``path`` only
+    if the JVM exited with code 0 and no archive exists yet. ``tmp`` is
+    gone either way."""
+    try:
+        if proc.poll() is None:
+            gw = SparkContext._gateway
+            if gw is not None and getattr(gw, "proc", None) is proc:
+                gw.shutdown()
+            proc.stdin.close()  # the gateway JVM exits on EOF
+            try:
+                proc.wait(timeout=120)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+                proc.wait()
+        if proc.returncode == 0 and os.path.isfile(tmp) and not os.path.exists(path):
+            os.rename(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 def get_spark(
@@ -24,9 +139,24 @@ def get_spark(
     """Build a SparkSession with engine defaults.
 
     AQE is enabled so skew-join splitting and partition coalescing apply at
-    runtime on a real cluster; Arrow is enabled for the vectorized pandas
-    UDF kernels (the mandated execution path for the camera math).
+    runtime on a real cluster; Arrow is enabled for the ``mapInArrow``
+    kernels that run the camera, DEM and remap math.
+
+    When this call launches a local driver JVM, that JVM starts from the
+    engine's class-data archive through ``spark.driver.defaultJavaOptions``
+    (which Spark places before ``spark.driver.extraJavaOptions``, so a
+    caller's JVM options still apply). The archive is
+    ``orthority_spark_cds_<key>.jsa`` in ``tempfile.gettempdir()``, about
+    170 MB; delete it to have the next session dump it again. The session
+    that dumps it waits for its JVM at interpreter exit, about 12 s, and
+    publishes the archive atomically, since a JVM that maps a partly
+    written archive dies of SIGBUS. See the module docstring.
     """
+    conf = dict(extra_conf or {})
+    cds = _cds_plan(master, conf)
+    if cds is not None:
+        flag = conf.get("spark.driver.defaultJavaOptions", "")
+        conf["spark.driver.defaultJavaOptions"] = f"{cds[0]} {flag}".strip()
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -52,9 +182,23 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "8g")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    if cds is None:
+        return b.getOrCreate()
+    user_conf_dir = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = cds[1]
+    try:
+        spark = b.getOrCreate()
+    finally:
+        if user_conf_dir is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = user_conf_dir
+    flag, _, tmp = cds[0].split()[0].partition("=")
+    if flag == "-XX:ArchiveClassesAtExit":
+        atexit.register(_publish_archive, SparkContext._gateway.proc, tmp, cds[2])
+    return spark
 
 
 #: (applicationId, name, ids of the input frames, args) ->

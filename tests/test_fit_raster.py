@@ -101,12 +101,23 @@ def test_sample_dem_z_drops_points_in_a_missing_tile(spark):
         assert {r.url for r in got.collect()} == {"held"}, max_bytes
 
 
+#: per-module kernel calls that the pandas probe runs after the import
+_KERNEL_PROBE = {"ann": """
+from orthority_spark.operators.ann import _cosine, _ids, quantize_matrix
+M = quantize_matrix(lists)
+assert M.tolist() == [[2000000, 3000000, 4000000]]
+cos = _cosine(np.array([3, 0]), np.array([1.0, 0.0]), np.array([2.0, 1.0]))
+assert cos.to_pylist() == [1.5, None]
+assert _ids(pa.chunked_array([ids])).tolist() == [7, -1, 2**40]
+"""}
+
+
 def _assert_imports_no_pandas(module: str) -> None:
     """A fresh interpreter imports ``orthority_spark.operators.<module>``
-    and runs the Arrow buffer conversions its kernel uses; neither loads
-    pandas. The conversions read NULL as NaN and honour a sliced array's
-    offset, as pyarrow's to_numpy does, and write NaN as NULL only when
-    asked."""
+    and runs the Arrow buffer conversions its kernel uses (for ``ann``,
+    the quantiser and the output columns too); neither loads pandas. The
+    conversions read NULL as NaN and honour a sliced array's offset, as
+    pyarrow's to_numpy does, and write NaN as NULL only when asked."""
     import os
     import subprocess
     import sys
@@ -116,7 +127,8 @@ import sys
 import numpy as np, pyarrow as pa
 import orthority_spark.operators.{module}
 from orthority_spark.arrow_buffers import (
-    bitmap, float64_array, float64_values, int32_array)
+    bitmap, float64_array, float64_values, int32_array, int64_array,
+    list_offsets, values)
 print('pandas' in sys.modules)
 vals = np.arange(11, dtype='float64')
 col = pa.Array.from_buffers(
@@ -126,12 +138,21 @@ x = float64_values(col)
 nulls = float64_array(x, nan_is_null=True)
 nans = float64_array(x, nan_is_null=False)
 offs = int32_array(np.array([0, 2, 5]))
+ids = int64_array(np.array([7, -1, 2**40]))
+lists = pa.ListArray.from_arrays(offs, pa.Array.from_buffers(
+    pa.float32(), 5, [None, pa.py_buffer(np.arange(5, dtype='float32'))])).slice(1)
+got = (values(ids.slice(1)), values(lists.values), list_offsets(lists))
+{_KERNEL_PROBE.get(module, "")}
 print('pandas' in sys.modules)
 assert np.array_equal(x, col.to_numpy(zero_copy_only=False), equal_nan=True)
 assert np.isnan(x).sum() == 2
 assert nulls.equals(col) and nulls.null_count == 2
 assert nans.null_count == 0 and np.isnan(nans.to_numpy()).sum() == 2
 assert offs.type == pa.int32() and offs.to_pylist() == [0, 2, 5]
+assert ids.type == pa.int64() and ids.to_pylist() == [7, -1, 2**40]
+assert got[0].tolist() == [-1, 2**40] and got[0].dtype == np.int64
+assert got[1].tolist() == [0, 1, 2, 3, 4] and got[1].dtype == np.float32
+assert got[2].tolist() == [2, 5]
 """
     out = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True,
@@ -147,9 +168,9 @@ def test_raster_join_imports_no_pandas():
     _assert_imports_no_pandas("raster_join")
 
 
-@pytest.mark.parametrize("module", ["remap", "ray"])
+@pytest.mark.parametrize("module", ["remap", "ray", "ann"])
 def test_kernel_imports_no_pandas(module):
-    """The remap and ray-march kernels' Python workers import their
+    """The remap, ray-march and ANN kernels' Python workers import their
     module and build their output columns without pandas."""
     _assert_imports_no_pandas(module)
 
