@@ -262,3 +262,24 @@ def test_sample_dem_z_follows_the_dem_object(spark):
     assert z_partial["nan_corner"] is None
     assert z_partial["valid"] == z_full["valid"]
     assert z(full) == z_full
+
+
+def test_sample_dem_z_cogroup_nodata_is_null(spark):
+    """The cogroup plan (forced by ``max_broadcast_bytes=0``) gives a
+    point in the partial DEM's NaN triangle a NULL z, as the broadcast
+    plan does, and a valid point the broadcast plan's z."""
+    from orthority_spark.operators.raster_join import sample_dem_z
+    from orthority_spark.sources.dem_tiles import fixture_dem
+
+    pts = spark.createDataFrame(
+        [("nan_corner", 18165.0, 31335.0), ("valid", 22515.0, 27885.0)],
+        "url string, px double, py double",
+    )
+    partial = fixture_dem(spark, partial=True)
+    broadcast, cogroup = (
+        {r.url: r.z for r in sample_dem_z(pts, partial, band=1,
+                                          max_broadcast_bytes=b).collect()}
+        for b in (256 << 20, 0)
+    )
+    assert cogroup == {"nan_corner": None, "valid": broadcast["valid"]}
+    assert broadcast["nan_corner"] is None and broadcast["valid"] is not None
