@@ -44,12 +44,6 @@ _CLASS_PATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
                    "SPARK_PREPEND_CLASSES", "PYSPARK_SUBMIT_ARGS")
 
 
-def _java() -> str | None:
-    """The ``java`` that ``spark-class`` runs."""
-    home = os.environ.get("JAVA_HOME")
-    return shutil.which(os.path.join(home, "bin", "java") if home else "java")
-
-
 def _cds_key(java: str, spark_home: str, conf_dir: str) -> str:
     """Hash of what a dynamic archive is only valid for: the JDK, the
     jars on the class path and the conf directory in front of them."""
@@ -66,8 +60,8 @@ def _cds_key(java: str, spark_home: str, conf_dir: str) -> str:
     return h.hexdigest()[:12]
 
 
-def _cds_plan(master: str, conf: dict) -> tuple[str, str, str] | None:
-    """``(JVM flag, conf dir, archive path)`` for a driver JVM launched
+def _cds_plan(master: str, conf: dict) -> tuple[str, str, str | None] | None:
+    """``(JVM options, conf dir, dump file)`` for a driver JVM launched
     from the class-data archive, or None to launch it as Spark would.
 
     Only when this process launches the JVM: a ``local*`` master, no
@@ -78,8 +72,9 @@ def _cds_plan(master: str, conf: dict) -> tuple[str, str, str] | None:
     under the temp dir instead, which loses no setting: a JVM cannot
     dump an archive while a non-empty directory is on its class path.
 
-    The flag maps the archive if it exists, else dumps one at exit to a
-    per-process ``.tmp`` name that :func:`_publish_archive` renames."""
+    The options map the archive if it exists (no dump file), else dump
+    one at exit to the per-process dump file ``<archive>.<pid>.tmp``
+    that :func:`_publish_archive` renames."""
     if (not master.startswith("local") or SparkContext._gateway is not None
             or "PYSPARK_GATEWAY_PORT" in os.environ
             or any(os.environ.get(k) for k in _CLASS_PATH_ENV)
@@ -90,7 +85,8 @@ def _cds_plan(master: str, conf: dict) -> tuple[str, str, str] | None:
     if os.path.isdir(user_conf) and any(
             not f.endswith(".template") for f in os.listdir(user_conf)):
         return None
-    java = _java()
+    java_home = os.environ.get("JAVA_HOME")  # else spark-class runs PATH's java
+    java = shutil.which(os.path.join(java_home, "bin", "java") if java_home else "java")
     if java is None:
         return None
     tmp = tempfile.gettempdir()
@@ -101,17 +97,18 @@ def _cds_plan(master: str, conf: dict) -> tuple[str, str, str] | None:
     path = os.path.join(
         tmp, f"orthority_spark_cds_{_cds_key(java, spark_home, conf_dir)}.jsa")
     if os.path.isfile(path):
-        return f"-XX:SharedArchiveFile={path}", conf_dir, path
+        return f"-XX:SharedArchiveFile={path}", conf_dir, None
+    tmp = f"{path}.{os.getpid()}.tmp"
     # the dump warns once per class it skips (hundreds of lines) on stdout
-    return (f"-XX:ArchiveClassesAtExit={path}.{os.getpid()}.tmp -Xlog:cds=off",
-            conf_dir, path)
+    return f"-XX:ArchiveClassesAtExit={tmp} -Xlog:cds=off", conf_dir, tmp
 
 
-def _publish_archive(proc: subprocess.Popen, tmp: str, path: str) -> None:
+def _publish_archive(proc: subprocess.Popen, tmp: str) -> None:
     """Exit hook of a dumping session: close the gateway, wait for the
-    JVM to write its archive to ``tmp``, and rename that to ``path`` only
-    if the JVM exited with code 0 and no archive exists yet. ``tmp`` is
-    gone either way."""
+    JVM to write its archive to ``tmp``, and rename that to the archive
+    path only if the JVM exited with code 0 and no archive exists yet.
+    ``tmp`` is gone either way."""
+    path = tmp.rsplit(".", 2)[0]
     try:
         if proc.poll() is None:
             gw = SparkContext._gateway
@@ -195,9 +192,8 @@ def get_spark(
             del os.environ["SPARK_CONF_DIR"]
         else:
             os.environ["SPARK_CONF_DIR"] = user_conf_dir
-    flag, _, tmp = cds[0].split()[0].partition("=")
-    if flag == "-XX:ArchiveClassesAtExit":
-        atexit.register(_publish_archive, SparkContext._gateway.proc, tmp, cds[2])
+    if cds[2] is not None:
+        atexit.register(_publish_archive, SparkContext._gateway.proc, cds[2])
     return spark
 
 

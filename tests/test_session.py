@@ -33,15 +33,16 @@ def stock(tmp_path, monkeypatch):
 
 
 def test_cds_flag_dumps_then_maps(stock, tmp_path):
-    flag, conf_dir, path = session._cds_plan("local[2]", {})
+    options, conf_dir, tmp = session._cds_plan("local[2]", {})
     assert os.listdir(conf_dir) == []
+    path, pid, suffix = tmp.rsplit(".", 2)
+    assert (pid, suffix) == (str(os.getpid()), "tmp")
     assert os.path.dirname(path) == str(tmp_path)
     assert os.path.basename(path).startswith("orthority_spark_cds_")
-    dump = flag.split()[0]
-    assert dump == f"-XX:ArchiveClassesAtExit={path}.{os.getpid()}.tmp"
+    assert options.split()[0] == f"-XX:ArchiveClassesAtExit={tmp}"
     open(path, "wb").close()
     assert session._cds_plan("local[*]", {}) == (
-        f"-XX:SharedArchiveFile={path}", conf_dir, path)
+        f"-XX:SharedArchiveFile={path}", conf_dir, None)
 
 
 def test_cds_flag_only_where_the_engine_launches_the_jvm(stock, monkeypatch):
