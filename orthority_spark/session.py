@@ -52,7 +52,8 @@ def _cds_key(java: str, spark_home: str, conf_dir: str) -> str:
     h.update(java.encode())
     release = os.path.join(os.path.dirname(os.path.dirname(java)), "release")
     if os.path.isfile(release):
-        h.update(open(release, "rb").read())
+        with open(release, "rb") as f:
+            h.update(f.read())
     for jar in sorted(glob.glob(os.path.join(spark_home, "jars", "*"))):
         st = os.stat(jar)
         h.update(f"{os.path.basename(jar)} {st.st_size} {st.st_mtime_ns}\n".encode())
@@ -89,13 +90,13 @@ def _cds_plan(master: str, conf: dict) -> tuple[str, str, str | None] | None:
     java = shutil.which(os.path.join(java_home, "bin", "java") if java_home else "java")
     if java is None:
         return None
-    tmp = tempfile.gettempdir()
-    conf_dir = os.path.join(tmp, "orthority_spark_conf")
+    tmpdir = tempfile.gettempdir()
+    conf_dir = os.path.join(tmpdir, "orthority_spark_conf")
     os.makedirs(conf_dir, exist_ok=True)
     if os.listdir(conf_dir):
         return None
     path = os.path.join(
-        tmp, f"orthority_spark_cds_{_cds_key(java, spark_home, conf_dir)}.jsa")
+        tmpdir, f"orthority_spark_cds_{_cds_key(java, spark_home, conf_dir)}.jsa")
     if os.path.isfile(path):
         return f"-XX:SharedArchiveFile={path}", conf_dir, None
     tmp = f"{path}.{os.getpid()}.tmp"
