@@ -1,7 +1,9 @@
 """Package distribution to executors (the spark-submit --py-files story).
 
-UDF closures (mapInPandas / applyInPandas kernels) are cloudpickled by
-module reference, so executors must be able to ``import orthority_spark``.
+UDF closures (the camera, DEM, remap, ray and ANN ``mapInArrow``
+kernels, and the pandas UDFs of the fit, stats, EXIF and DEM-z cogroup
+plans) are cloudpickled by module reference, so executors must be able
+to ``import orthority_spark``.
 On a real cluster that is ``spark-submit --py-files orthority_spark.zip``;
 for driver-embedded use (the sandbox driver, notebooks) we build the same
 zip on demand and register it with ``SparkContext.addPyFile`` — identical
@@ -13,6 +15,8 @@ from __future__ import annotations
 import os
 import tempfile
 import zipfile
+
+from . import tmpfiles
 
 _SENTINEL = "_orthority_spark_pyfile_added"
 
@@ -30,27 +34,38 @@ def _content_hash(pkg_dir: str) -> str:
     return h.hexdigest()[:12]
 
 
+def _write_zip(pkg_dir: str, out_path: str) -> None:
+    with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            if "__pycache__" in root:
+                continue
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    rel = os.path.join("orthority_spark", os.path.relpath(full, pkg_dir))
+                    zf.write(full, rel)
+
+
 def package_zip(out_path: str | None = None) -> str:
     """Zip the orthority_spark package. The default path is
     content-addressed (md5 of all sources) so a stale zip from an earlier
-    build can never shadow current code on the driver/executors."""
+    build can never shadow current code on the driver/executors. It is
+    written under a per-process name and renamed into place, and this
+    process holds it until it exits; publishing it deletes the zips of
+    other source versions that no live process holds (``tmpfiles``)."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out_path = out_path or os.path.join(
-        tempfile.gettempdir(), f"orthority_spark_{_content_hash(pkg_dir)}.zip"
-    )
-    if not os.path.exists(out_path):
-        with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                if "__pycache__" in root:
-                    continue
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        rel = os.path.join(
-                            "orthority_spark", os.path.relpath(full, pkg_dir)
-                        )
-                        zf.write(full, rel)
-    return out_path
+    if out_path is not None:
+        if not os.path.exists(out_path):
+            _write_zip(pkg_dir, out_path)
+        return out_path
+    path = os.path.join(
+        tempfile.gettempdir(), f"orthority_spark_{_content_hash(pkg_dir)}.zip")
+    if not tmpfiles.hold(path):
+        tmp = f"{path}.{os.getpid()}.tmp"
+        _write_zip(pkg_dir, tmp)
+        tmpfiles.publish(tmp, path)
+        tmpfiles.hold(path)
+    return path
 
 
 def ensure_on_executors(spark, validate: bool = True) -> None:

@@ -5,19 +5,35 @@ shuffle-partition sizing) are what we would submit to a real cluster via
 ``spark-submit --py-files`` (see BASELINE.md submission mode).
 
 Cold start is the JVM's. When :func:`get_spark` launches the driver JVM
-itself, it starts it from a dynamic class-data-sharing archive (JEP 350)
-of the classes Spark loads; see :func:`_cds_plan` for when. The first
-such session dumps the archive as its JVM exits, and later sessions map
-it: set-up falls by about a third. The archive (about 170 MB) lives in
-``tempfile.gettempdir()`` as ``orthority_spark_cds_<key>.jsa``, keyed by
-the JDK, Spark's jars and the class path, so a new JDK or Spark gets a
-new file. Delete the file to rebuild it; delete every
-``orthority_spark_cds_*`` file there to reclaim the space.
+itself (a ``local*`` master, no running gateway and no
+``PYSPARK_GATEWAY_PORT``), it changes how that JVM starts, and nothing
+that is planned or run, so every output stays the same:
 
-The dump goes to a per-process ``.tmp`` name, and an exit hook publishes
-it only after the JVM exited cleanly, and only if no archive exists yet.
-A JVM that maps a truncated archive dies of SIGBUS, so a partly written
-archive must never sit under the published name.
+- ``-XX:CompileThresholdScaling=4``: the JIT compiles a method after
+  four times as many calls and loop back-edges as by default. C2 stays
+  on; set-up compiles fewer of the JDK, Scala, Catalyst and Janino
+  methods it runs a few times only.
+- A dynamic class-data-sharing archive (JEP 350) of the classes Spark
+  loads; see :func:`_cds_plan` for when. The first such session dumps it
+  as its JVM exits, and later sessions map it. The dump goes to a
+  per-process ``.tmp`` name, and an exit hook publishes it only after
+  the JVM exited cleanly, and only if no archive exists yet: a JVM that
+  maps a truncated archive dies of SIGBUS.
+- A shadow ``SPARK_HOME`` without ``python/lib/pyspark.zip``, so that
+  the Python workers import the driver's installed pyspark, compiled
+  once, instead of compiling it from the zip in every worker daemon and
+  re-reading the zip's directory on every task; see :func:`_shadow_home`
+  for when. Elsewhere the launch uses the real home.
+
+Together they cut ``vector_join`` set-up by about a third against the
+archive alone. Both files live in ``tempfile.gettempdir()``: the archive
+``orthority_spark_cds_<key>.jsa`` (about 170 MB) and the directory of
+symlinks ``orthority_spark_home_<key>``, next to an empty conf
+directory ``orthority_spark_conf``. Each key covers what the file is
+valid for, so a new JDK, Spark or Python gets new files, and the session
+that publishes one deletes the old ones no live session holds (see
+:mod:`.tmpfiles`). Delete any of them to have the next session build it
+again; nothing under ``$SPARK_HOME`` is written.
 """
 
 from __future__ import annotations
@@ -26,27 +42,118 @@ import atexit
 import glob
 import hashlib
 import os
+import re
 import shutil
 import subprocess
+import sys
 import tempfile
 from collections.abc import Callable
 from typing import Any
 
+import pyspark
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import DataFrame, SparkSession
 
-from . import config
+from . import config, tmpfiles
+
+#: raises the JIT's invocation and back-edge thresholds; C2 stays on (a
+#: C1-only JIT halves cold start but makes steady jobs ~40% dearer)
+_JIT_FLAG = "-XX:CompileThresholdScaling=4"
 
 #: environment variables that put more than ``$SPARK_CONF_DIR`` and
 #: ``$SPARK_HOME/jars`` on the driver's class path
 _CLASS_PATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
                    "SPARK_PREPEND_CLASSES", "PYSPARK_SUBMIT_ARGS")
 
+#: what a worker interpreter prints to show which Python it is
+_WHICH_PYTHON = "import os, sys; print(os.path.realpath(sys.executable)); print(sys.prefix)"
+
+
+def _launches_jvm(master: str) -> bool:
+    """Whether building a session for ``master`` launches a local driver
+    JVM from this process."""
+    return (master.startswith("local") and SparkContext._gateway is None
+            and "PYSPARK_GATEWAY_PORT" not in os.environ)
+
+
+def _spark_version(spark_home: str) -> str | None:
+    """The version of Spark's jars: from ``RELEASE``, else from the name
+    of ``jars/spark-core_*.jar``."""
+    release = os.path.join(spark_home, "RELEASE")
+    if os.path.isfile(release):
+        with open(release) as f:
+            m = re.match(r"Spark (\S+)", f.readline())
+    else:
+        jars = glob.glob(os.path.join(spark_home, "jars", "spark-core_*.jar"))
+        m = re.search(r"spark-core_[^-]+-(.+)\.jar$", jars[0]) if jars else None
+    return m[1] if m else None
+
+
+def _runs_driver_python(exe: str) -> bool:
+    """Whether ``exe`` starts this interpreter in this environment: the
+    same binary and the same ``sys.prefix``. It is run once to ask, since
+    it may be a shim (pyenv's) or a name on ``PATH``."""
+    try:
+        out = subprocess.run([exe, "-c", _WHICH_PYTHON], capture_output=True,
+                             text=True, timeout=60).stdout
+    except (OSError, subprocess.SubprocessError):
+        return False
+    return out == f"{os.path.realpath(sys.executable)}\n{sys.prefix}\n"
+
+
+def _shadow_home(conf: dict) -> str | None:
+    """A Spark home to launch from that lacks ``python/lib/pyspark.zip``,
+    or None to launch from the real one.
+
+    Python workers put ``$SPARK_HOME/python/lib/pyspark.zip`` first on
+    their path. It holds no ``.pyc`` files, so every worker daemon
+    compiles pyspark from source (about 1 CPU-s), and pyspark's per-task
+    ``importlib.invalidate_caches()`` makes each cached zipimporter
+    re-read the zip's directory. Without the zip the workers import the
+    pyspark this driver runs, which is only right when all of these hold:
+
+    - the worker interpreter (``PYSPARK_PYTHON``, else ``python3``: what
+      pyspark starts workers with here) and ``spark.pyspark.python``, if
+      set, are this interpreter in this environment
+      (:func:`_runs_driver_python`);
+    - ``pyspark.__version__`` is the version of the jars;
+    - this pyspark is not itself loaded from a zip;
+    - the real home has a ``pyspark.zip`` to leave out.
+
+    The home is ``orthority_spark_home_<key>`` in the temp dir, keyed by
+    the real home's path and entries: real ``python`` and ``python/lib``
+    directories, and a symlink to every other entry of the real home.
+    It is built under a per-process name and renamed into place."""
+    real = _find_spark_home()
+    pythons = {os.environ.get("PYSPARK_PYTHON") or "python3",
+               conf.get("spark.pyspark.python")} - {None}
+    if (not os.path.isfile(os.path.join(real, "python", "lib", "pyspark.zip"))
+            or not os.path.isfile(pyspark.__file__)
+            or pyspark.__version__ != _spark_version(real)
+            or not all(_runs_driver_python(exe) for exe in pythons)):
+        return None
+    layout = {d: sorted(os.listdir(os.path.join(real, d)))
+              for d in ("", "python", os.path.join("python", "lib"))}
+    key = hashlib.md5(repr((os.path.realpath(real), layout)).encode()).hexdigest()[:12]
+    home = os.path.join(tempfile.gettempdir(), f"orthority_spark_home_{key}")
+    if tmpfiles.hold(home):
+        return home
+    tmp = f"{home}.{os.getpid()}.tmp"
+    left_out = {*layout, os.path.join("python", "lib", "pyspark.zip")}
+    for d, names in layout.items():
+        os.makedirs(os.path.join(tmp, d), exist_ok=True)
+        for name in names:
+            if os.path.join(d, name) not in left_out:
+                os.symlink(os.path.join(real, d, name), os.path.join(tmp, d, name))
+    tmpfiles.publish(tmp, home)
+    return home if tmpfiles.hold(home) else None
+
 
 def _cds_key(java: str, spark_home: str, conf_dir: str) -> str:
     """Hash of what a dynamic archive is only valid for: the JDK, the
-    jars on the class path and the conf directory in front of them."""
+    jars on the class path, under the path the JVM reads them from, and
+    the conf directory in front of them."""
     h = hashlib.md5()
     java = os.path.realpath(java)
     h.update(java.encode())
@@ -54,6 +161,7 @@ def _cds_key(java: str, spark_home: str, conf_dir: str) -> str:
     if os.path.isfile(release):
         with open(release, "rb") as f:
             h.update(f.read())
+    h.update(f"{spark_home}\n".encode())
     for jar in sorted(glob.glob(os.path.join(spark_home, "jars", "*"))):
         st = os.stat(jar)
         h.update(f"{os.path.basename(jar)} {st.st_size} {st.st_mtime_ns}\n".encode())
@@ -61,28 +169,30 @@ def _cds_key(java: str, spark_home: str, conf_dir: str) -> str:
     return h.hexdigest()[:12]
 
 
-def _cds_plan(master: str, conf: dict) -> tuple[str, str, str | None] | None:
+def _cds_plan(master: str, conf: dict,
+              spark_home: str | None = None) -> tuple[str, str, str | None] | None:
     """``(JVM options, conf dir, dump file)`` for a driver JVM launched
-    from the class-data archive, or None to launch it as Spark would.
+    from ``spark_home`` (default: the real one) and the class-data
+    archive, or None to launch it without one.
 
-    Only when this process launches the JVM: a ``local*`` master, no
-    running gateway and no ``PYSPARK_GATEWAY_PORT``. Only when the Spark
-    conf dir in use (``$SPARK_CONF_DIR``, else ``$SPARK_HOME/conf``)
-    holds nothing but ``*.template`` files, and nothing else is added to
-    the class path. The JVM then reads its conf from an empty directory
-    under the temp dir instead, which loses no setting: a JVM cannot
-    dump an archive while a non-empty directory is on its class path.
+    Only when this process launches the JVM (:func:`_launches_jvm`).
+    Only when the Spark conf dir in use (``$SPARK_CONF_DIR``, else
+    ``$SPARK_HOME/conf``) holds nothing but ``*.template`` files, and
+    nothing else is added to the class path. The JVM then reads its conf
+    from an empty directory under the temp dir instead, which loses no
+    setting: a JVM cannot dump an archive while a non-empty directory is
+    on its class path.
 
-    The options map the archive if it exists (no dump file), else dump
-    one at exit to the per-process dump file ``<archive>.<pid>.tmp``
-    that :func:`_publish_archive` renames."""
-    if (not master.startswith("local") or SparkContext._gateway is not None
-            or "PYSPARK_GATEWAY_PORT" in os.environ
+    The options map the archive if it exists (no dump file), and this
+    process holds it from then on; else they dump one at exit to the
+    per-process dump file ``<archive>.<pid>.tmp`` that
+    :func:`_publish_archive` renames."""
+    if (not _launches_jvm(master)
             or any(os.environ.get(k) for k in _CLASS_PATH_ENV)
             or "spark.driver.extraClassPath" in conf):
         return None
-    spark_home = _find_spark_home()
-    user_conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    real_home = _find_spark_home()
+    user_conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(real_home, "conf")
     if os.path.isdir(user_conf) and any(
             not f.endswith(".template") for f in os.listdir(user_conf)):
         return None
@@ -95,19 +205,41 @@ def _cds_plan(master: str, conf: dict) -> tuple[str, str, str | None] | None:
     os.makedirs(conf_dir, exist_ok=True)
     if os.listdir(conf_dir):
         return None
-    path = os.path.join(
-        tmpdir, f"orthority_spark_cds_{_cds_key(java, spark_home, conf_dir)}.jsa")
-    if os.path.isfile(path):
+    key = _cds_key(java, spark_home or real_home, conf_dir)
+    path = os.path.join(tmpdir, f"orthority_spark_cds_{key}.jsa")
+    if tmpfiles.hold(path):
         return f"-XX:SharedArchiveFile={path}", conf_dir, None
     tmp = f"{path}.{os.getpid()}.tmp"
     # the dump warns once per class it skips (hundreds of lines) on stdout
     return f"-XX:ArchiveClassesAtExit={tmp} -Xlog:cds=off", conf_dir, tmp
 
 
+def _launch_plan(master: str, conf: dict) -> tuple[dict, dict, str | None]:
+    """``(conf, environment, dump file)`` for :func:`get_spark`: the
+    session conf with the JVM options above placed first in
+    ``spark.driver.defaultJavaOptions``, the environment variables to
+    set for the launch only, and the archive dump file, if any. Where
+    this process launches no JVM, ``conf`` as it is."""
+    if not _launches_jvm(master):
+        return conf, {}, None
+    home = _shadow_home(conf)
+    cds = _cds_plan(master, conf, home)
+    options, env, dump = [_JIT_FLAG], {}, None
+    if home is not None:
+        env["SPARK_HOME"] = home
+    if cds is not None:
+        options.insert(0, cds[0])
+        env["SPARK_CONF_DIR"] = cds[1]
+        dump = cds[2]
+    options.append(conf.get("spark.driver.defaultJavaOptions", ""))
+    return ({**conf, "spark.driver.defaultJavaOptions": " ".join(options).strip()},
+            env, dump)
+
+
 def _publish_archive(proc: subprocess.Popen, tmp: str) -> None:
     """Exit hook of a dumping session: close the gateway, wait for the
-    JVM to write its archive to ``tmp``, and rename that to the archive
-    path only if the JVM exited with code 0 and no archive exists yet.
+    JVM to write its archive to ``tmp``, and publish that as the archive
+    only if the JVM exited with code 0 and no archive exists yet.
     ``tmp`` is gone either way."""
     path = tmp.rsplit(".", 2)[0]
     try:
@@ -121,8 +253,8 @@ def _publish_archive(proc: subprocess.Popen, tmp: str) -> None:
             except subprocess.TimeoutExpired:
                 proc.kill()
                 proc.wait()
-        if proc.returncode == 0 and os.path.isfile(tmp) and not os.path.exists(path):
-            os.rename(tmp, path)
+        if proc.returncode == 0 and os.path.isfile(tmp):
+            tmpfiles.publish(tmp, path)
     finally:
         if os.path.exists(tmp):
             os.remove(tmp)
@@ -140,21 +272,22 @@ def get_spark(
     runtime on a real cluster; Arrow is enabled for the ``mapInArrow``
     kernels that run the camera, DEM and remap math.
 
-    When this call launches a local driver JVM, that JVM starts from the
-    engine's class-data archive through ``spark.driver.defaultJavaOptions``
-    (which Spark places before ``spark.driver.extraJavaOptions``, so a
-    caller's JVM options still apply). The archive is
-    ``orthority_spark_cds_<key>.jsa`` in ``tempfile.gettempdir()``, about
-    170 MB; delete it to have the next session dump it again. The session
-    that dumps it waits for its JVM at interpreter exit, about 12 s, and
-    publishes the archive atomically, since a JVM that maps a partly
-    written archive dies of SIGBUS. See the module docstring.
+    When this call launches a local driver JVM, it starts that JVM with
+    ``-XX:CompileThresholdScaling=4`` and, where :func:`_cds_plan` allows,
+    from the engine's class-data archive, both through
+    ``spark.driver.defaultJavaOptions``. Spark places those before
+    ``spark.driver.extraJavaOptions``, so a caller's JVM options still
+    win. Where :func:`_shadow_home` allows, ``SPARK_HOME`` points at a
+    shadow home without ``pyspark.zip`` for the launch only, so the
+    Python workers import the installed pyspark; else the launch uses
+    the real home. The archive (``orthority_spark_cds_<key>.jsa``, about
+    170 MB) and the shadow home (``orthority_spark_home_<key>``, a
+    directory of symlinks) sit in ``tempfile.gettempdir()``; delete them
+    to have the next session build them again. The session that dumps
+    the archive waits for its JVM at interpreter exit, about 12 s, and
+    publishes the archive atomically. See the module docstring.
     """
-    conf = dict(extra_conf or {})
-    cds = _cds_plan(master, conf)
-    if cds is not None:
-        flag = conf.get("spark.driver.defaultJavaOptions", "")
-        conf["spark.driver.defaultJavaOptions"] = f"{cds[0]} {flag}".strip()
+    conf, env, dump = _launch_plan(master, dict(extra_conf or {}))
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -182,19 +315,18 @@ def get_spark(
     )
     for k, v in conf.items():
         b = b.config(k, v)
-    if cds is None:
-        return b.getOrCreate()
-    user_conf_dir = os.environ.get("SPARK_CONF_DIR")
-    os.environ["SPARK_CONF_DIR"] = cds[1]
+    saved = {k: os.environ.get(k) for k in env}
+    os.environ.update(env)
     try:
         spark = b.getOrCreate()
     finally:
-        if user_conf_dir is None:
-            del os.environ["SPARK_CONF_DIR"]
-        else:
-            os.environ["SPARK_CONF_DIR"] = user_conf_dir
-    if cds[2] is not None:
-        atexit.register(_publish_archive, SparkContext._gateway.proc, cds[2])
+        for k, v in saved.items():
+            if v is None:
+                del os.environ[k]
+            else:
+                os.environ[k] = v
+    if dump is not None:
+        atexit.register(_publish_archive, SparkContext._gateway.proc, dump)
     return spark
 
 
