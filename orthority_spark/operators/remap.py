@@ -23,14 +23,16 @@ Spark restatement:
   (nodata, and any NaN the gather produced) leave as SQL NULL elements,
   never as NaN. The write lock disappears — each task owns its tile.
 
-The stage keeps ``repartition("tile_id")`` and its Python task count:
-measured on a 4-core host with pyspark 4.1, every extra Python task
-costs 0.2-0.3 CPU-s, because the worker calls
-``importlib.invalidate_caches()`` per task, which re-reads the directory
-of pyspark.zip for each of its ~100 cached zipimporters (a no-op
-``mapInArrow`` over 1 -> 8 tasks cost 0.9 -> 2.5-3.1 CPU-s; this remap
-at 4 partitions cost 36% more CPU). Widening the stage trades that CPU
-for wall time.
+The stage keeps ``repartition("tile_id")`` and its Python task count,
+since every extra Python task costs CPU. Measured on a 4-core host with
+pyspark 4.1 (a no-op ``mapInArrow`` over 1 -> 8 tasks, median of 5):
+0.50 -> 2.29 CPU-s, or 0.26 CPU-s per extra task, when the workers
+import pyspark from ``$SPARK_HOME/python/lib/pyspark.zip``, because the
+worker calls ``importlib.invalidate_caches()`` per task and each cached
+zipimporter then re-reads the zip's directory; 0.23 -> 1.09 CPU-s, or
+0.12 per extra task, when they import the installed pyspark, as
+``session.get_spark`` arranges where it can. Widening the stage trades
+that CPU for wall time.
 
 Nodata semantics follow the reference: out-of-frame pixels get nodata,
 and the nodata mask is dilated by a kernel sized from the GSD ratio

@@ -125,7 +125,7 @@ def _shadow_home(conf: dict) -> str | None:
     the real home's path and entries: real ``python`` and ``python/lib``
     directories, and a symlink to every other entry of the real home.
     It is built under a per-process name and renamed into place."""
-    real = _find_spark_home()
+    real = os.path.abspath(_find_spark_home())
     pythons = {os.environ.get("PYSPARK_PYTHON") or "python3",
                conf.get("spark.pyspark.python")} - {None}
     if (not os.path.isfile(os.path.join(real, "python", "lib", "pyspark.zip"))
