@@ -29,10 +29,10 @@ pyspark 4.1 (a no-op ``mapInArrow`` over 1 -> 8 tasks, median of 5):
 0.50 -> 2.29 CPU-s, or 0.26 CPU-s per extra task, when the workers
 import pyspark from ``$SPARK_HOME/python/lib/pyspark.zip``, because the
 worker calls ``importlib.invalidate_caches()`` per task and each cached
-zipimporter then re-reads the zip's directory; 0.23 -> 1.09 CPU-s, or
-0.12 per extra task, when they import the installed pyspark, as
-``session.get_spark`` arranges where it can. Widening the stage trades
-that CPU for wall time.
+zipimporter then re-reads the zip's directory. With a Spark home that
+lacks the zip, so that the workers import the installed pyspark, the
+same probe cost 0.23 -> 1.09 CPU-s, or 0.12 per extra task. Widening
+the stage trades that CPU for wall time.
 
 Nodata semantics follow the reference: out-of-frame pixels get nodata,
 and the nodata mask is dilated by a kernel sized from the GSD ratio

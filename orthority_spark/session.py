@@ -9,30 +9,26 @@ itself (a ``local*`` master, no running gateway and no
 ``PYSPARK_GATEWAY_PORT``), it changes how that JVM starts, and nothing
 that is planned or run, so every output stays the same:
 
-- ``-XX:CompileThresholdScaling=4``: the JIT compiles a method after
-  four times as many calls and loop back-edges as by default. C2 stays
-  on; set-up compiles fewer of the JDK, Scala, Catalyst and Janino
-  methods it runs a few times only.
+- ``-XX:CompileThresholdScaling=4``, through ``SPARK_SUBMIT_OPTS`` for
+  the launch only: the JIT compiles a method after four times as many
+  calls and loop back-edges as by default. C2 stays on; set-up compiles
+  fewer of the JDK, Scala, Catalyst and Janino methods it runs a few
+  times only. Spark puts ``SPARK_SUBMIT_OPTS`` before the driver's
+  default and extra Java options, so a caller's or a site's
+  ``-XX:CompileThresholdScaling`` wins, and no Spark conf is touched.
 - A dynamic class-data-sharing archive (JEP 350) of the classes Spark
   loads; see :func:`_cds_plan` for when. The first such session dumps it
-  as its JVM exits, and later sessions map it. The dump goes to a
-  per-process ``.tmp`` name, and an exit hook publishes it only after
-  the JVM exited cleanly, and only if no archive exists yet: a JVM that
-  maps a truncated archive dies of SIGBUS.
-- A shadow ``SPARK_HOME`` without ``python/lib/pyspark.zip``, so that
-  the Python workers import the driver's installed pyspark, compiled
-  once, instead of compiling it from the zip in every worker daemon and
-  re-reading the zip's directory on every task; see :func:`_shadow_home`
-  for when. Elsewhere the launch uses the real home.
+  as its JVM exits, and later sessions map it: set-up falls by about a
+  third. The dump goes to a per-process ``.tmp`` name, and an exit hook
+  publishes it only after the JVM exited cleanly, and only if no archive
+  exists yet: a JVM that maps a truncated archive dies of SIGBUS.
 
-Together they cut ``vector_join`` set-up by about a third against the
-archive alone. Both files live in ``tempfile.gettempdir()``: the archive
-``orthority_spark_cds_<key>.jsa`` (about 170 MB) and the directory of
-symlinks ``orthority_spark_home_<key>``, next to an empty conf
-directory ``orthority_spark_conf``. Each key covers what the file is
-valid for, so a new JDK, Spark or Python gets new files, and the session
-that publishes one deletes the old ones no live session holds (see
-:mod:`.tmpfiles`). Delete any of them to have the next session build it
+The archive lives in ``tempfile.gettempdir()`` as
+``orthority_spark_cds_<key>.jsa`` (about 170 MB), next to an empty conf
+directory ``orthority_spark_conf``. It is keyed by the JDK, Spark's jars
+and the class path, so a new JDK or Spark gets a new file, and the
+session that publishes one deletes the old ones no live session holds
+(see :mod:`.tmpfiles`). Delete it to have the next session dump it
 again; nothing under ``$SPARK_HOME`` is written.
 """
 
@@ -42,15 +38,12 @@ import atexit
 import glob
 import hashlib
 import os
-import re
 import shutil
 import subprocess
-import sys
 import tempfile
 from collections.abc import Callable
 from typing import Any
 
-import pyspark
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import DataFrame, SparkSession
@@ -66,9 +59,6 @@ _JIT_FLAG = "-XX:CompileThresholdScaling=4"
 _CLASS_PATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
                    "SPARK_PREPEND_CLASSES", "PYSPARK_SUBMIT_ARGS")
 
-#: what a worker interpreter prints to show which Python it is
-_WHICH_PYTHON = "import os, sys; print(os.path.realpath(sys.executable)); print(sys.prefix)"
-
 
 def _launches_jvm(master: str) -> bool:
     """Whether building a session for ``master`` launches a local driver
@@ -77,83 +67,9 @@ def _launches_jvm(master: str) -> bool:
             and "PYSPARK_GATEWAY_PORT" not in os.environ)
 
 
-def _spark_version(spark_home: str) -> str | None:
-    """The version of Spark's jars: from ``RELEASE``, else from the name
-    of ``jars/spark-core_*.jar``."""
-    release = os.path.join(spark_home, "RELEASE")
-    if os.path.isfile(release):
-        with open(release) as f:
-            m = re.match(r"Spark (\S+)", f.readline())
-    else:
-        jars = glob.glob(os.path.join(spark_home, "jars", "spark-core_*.jar"))
-        m = re.search(r"spark-core_[^-]+-(.+)\.jar$", jars[0]) if jars else None
-    return m[1] if m else None
-
-
-def _runs_driver_python(exe: str) -> bool:
-    """Whether ``exe`` starts this interpreter in this environment: the
-    same binary and the same ``sys.prefix``. It is run once to ask, since
-    it may be a shim (pyenv's) or a name on ``PATH``."""
-    try:
-        out = subprocess.run([exe, "-c", _WHICH_PYTHON], capture_output=True,
-                             text=True, timeout=60).stdout
-    except (OSError, subprocess.SubprocessError):
-        return False
-    return out == f"{os.path.realpath(sys.executable)}\n{sys.prefix}\n"
-
-
-def _shadow_home(conf: dict) -> str | None:
-    """A Spark home to launch from that lacks ``python/lib/pyspark.zip``,
-    or None to launch from the real one.
-
-    Python workers put ``$SPARK_HOME/python/lib/pyspark.zip`` first on
-    their path. It holds no ``.pyc`` files, so every worker daemon
-    compiles pyspark from source (about 1 CPU-s), and pyspark's per-task
-    ``importlib.invalidate_caches()`` makes each cached zipimporter
-    re-read the zip's directory. Without the zip the workers import the
-    pyspark this driver runs, which is only right when all of these hold:
-
-    - the worker interpreter (``PYSPARK_PYTHON``, else ``python3``: what
-      pyspark starts workers with here) and ``spark.pyspark.python``, if
-      set, are this interpreter in this environment
-      (:func:`_runs_driver_python`);
-    - ``pyspark.__version__`` is the version of the jars;
-    - this pyspark is not itself loaded from a zip;
-    - the real home has a ``pyspark.zip`` to leave out.
-
-    The home is ``orthority_spark_home_<key>`` in the temp dir, keyed by
-    the real home's path and entries: real ``python`` and ``python/lib``
-    directories, and a symlink to every other entry of the real home.
-    It is built under a per-process name and renamed into place."""
-    real = os.path.abspath(_find_spark_home())
-    pythons = {os.environ.get("PYSPARK_PYTHON") or "python3",
-               conf.get("spark.pyspark.python")} - {None}
-    if (not os.path.isfile(os.path.join(real, "python", "lib", "pyspark.zip"))
-            or not os.path.isfile(pyspark.__file__)
-            or pyspark.__version__ != _spark_version(real)
-            or not all(_runs_driver_python(exe) for exe in pythons)):
-        return None
-    layout = {d: sorted(os.listdir(os.path.join(real, d)))
-              for d in ("", "python", os.path.join("python", "lib"))}
-    key = hashlib.md5(repr((os.path.realpath(real), layout)).encode()).hexdigest()[:12]
-    home = os.path.join(tempfile.gettempdir(), f"orthority_spark_home_{key}")
-    if tmpfiles.hold(home):
-        return home
-    tmp = f"{home}.{os.getpid()}.tmp"
-    left_out = {*layout, os.path.join("python", "lib", "pyspark.zip")}
-    for d, names in layout.items():
-        os.makedirs(os.path.join(tmp, d), exist_ok=True)
-        for name in names:
-            if os.path.join(d, name) not in left_out:
-                os.symlink(os.path.join(real, d, name), os.path.join(tmp, d, name))
-    tmpfiles.publish(tmp, home)
-    return home if tmpfiles.hold(home) else None
-
-
 def _cds_key(java: str, spark_home: str, conf_dir: str) -> str:
     """Hash of what a dynamic archive is only valid for: the JDK, the
-    jars on the class path, under the path the JVM reads them from, and
-    the conf directory in front of them."""
+    jars on the class path and the conf directory in front of them."""
     h = hashlib.md5()
     java = os.path.realpath(java)
     h.update(java.encode())
@@ -161,7 +77,6 @@ def _cds_key(java: str, spark_home: str, conf_dir: str) -> str:
     if os.path.isfile(release):
         with open(release, "rb") as f:
             h.update(f.read())
-    h.update(f"{spark_home}\n".encode())
     for jar in sorted(glob.glob(os.path.join(spark_home, "jars", "*"))):
         st = os.stat(jar)
         h.update(f"{os.path.basename(jar)} {st.st_size} {st.st_mtime_ns}\n".encode())
@@ -169,11 +84,9 @@ def _cds_key(java: str, spark_home: str, conf_dir: str) -> str:
     return h.hexdigest()[:12]
 
 
-def _cds_plan(master: str, conf: dict,
-              spark_home: str | None = None) -> tuple[str, str, str | None] | None:
+def _cds_plan(master: str, conf: dict) -> tuple[str, str, str | None] | None:
     """``(JVM options, conf dir, dump file)`` for a driver JVM launched
-    from ``spark_home`` (default: the real one) and the class-data
-    archive, or None to launch it without one.
+    from the class-data archive, or None to launch it without one.
 
     Only when this process launches the JVM (:func:`_launches_jvm`).
     Only when the Spark conf dir in use (``$SPARK_CONF_DIR``, else
@@ -191,8 +104,8 @@ def _cds_plan(master: str, conf: dict,
             or any(os.environ.get(k) for k in _CLASS_PATH_ENV)
             or "spark.driver.extraClassPath" in conf):
         return None
-    real_home = _find_spark_home()
-    user_conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(real_home, "conf")
+    spark_home = _find_spark_home()
+    user_conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
     if os.path.isdir(user_conf) and any(
             not f.endswith(".template") for f in os.listdir(user_conf)):
         return None
@@ -205,8 +118,8 @@ def _cds_plan(master: str, conf: dict,
     os.makedirs(conf_dir, exist_ok=True)
     if os.listdir(conf_dir):
         return None
-    key = _cds_key(java, spark_home or real_home, conf_dir)
-    path = os.path.join(tmpdir, f"orthority_spark_cds_{key}.jsa")
+    path = os.path.join(
+        tmpdir, f"orthority_spark_cds_{_cds_key(java, spark_home, conf_dir)}.jsa")
     if tmpfiles.hold(path):
         return f"-XX:SharedArchiveFile={path}", conf_dir, None
     tmp = f"{path}.{os.getpid()}.tmp"
@@ -216,24 +129,22 @@ def _cds_plan(master: str, conf: dict,
 
 def _launch_plan(master: str, conf: dict) -> tuple[dict, dict, str | None]:
     """``(conf, environment, dump file)`` for :func:`get_spark`: the
-    session conf with the JVM options above placed first in
-    ``spark.driver.defaultJavaOptions``, the environment variables to
-    set for the launch only, and the archive dump file, if any. Where
-    this process launches no JVM, ``conf`` as it is."""
+    session conf with the archive's options, if any, placed first in
+    ``spark.driver.defaultJavaOptions``; the environment variables to
+    set for the launch only (the JIT flag in front of any
+    ``SPARK_SUBMIT_OPTS``, and the archive's conf dir); and the archive
+    dump file, if any. Where this process launches no JVM, ``conf`` as
+    it is."""
     if not _launches_jvm(master):
         return conf, {}, None
-    home = _shadow_home(conf)
-    cds = _cds_plan(master, conf, home)
-    options, env, dump = [_JIT_FLAG], {}, None
-    if home is not None:
-        env["SPARK_HOME"] = home
-    if cds is not None:
-        options.insert(0, cds[0])
-        env["SPARK_CONF_DIR"] = cds[1]
-        dump = cds[2]
-    options.append(conf.get("spark.driver.defaultJavaOptions", ""))
-    return ({**conf, "spark.driver.defaultJavaOptions": " ".join(options).strip()},
-            env, dump)
+    submit_opts = f"{_JIT_FLAG} {os.environ.get('SPARK_SUBMIT_OPTS', '')}".strip()
+    env = {"SPARK_SUBMIT_OPTS": submit_opts}
+    cds = _cds_plan(master, conf)
+    if cds is None:
+        return conf, env, None
+    env["SPARK_CONF_DIR"] = cds[1]
+    flag = f"{cds[0]} {conf.get('spark.driver.defaultJavaOptions', '')}".strip()
+    return {**conf, "spark.driver.defaultJavaOptions": flag}, env, cds[2]
 
 
 def _publish_archive(proc: subprocess.Popen, tmp: str) -> None:
@@ -273,19 +184,17 @@ def get_spark(
     kernels that run the camera, DEM and remap math.
 
     When this call launches a local driver JVM, it starts that JVM with
-    ``-XX:CompileThresholdScaling=4`` and, where :func:`_cds_plan` allows,
-    from the engine's class-data archive, both through
-    ``spark.driver.defaultJavaOptions``. Spark places those before
-    ``spark.driver.extraJavaOptions``, so a caller's JVM options still
-    win. Where :func:`_shadow_home` allows, ``SPARK_HOME`` points at a
-    shadow home without ``pyspark.zip`` for the launch only, so the
-    Python workers import the installed pyspark; else the launch uses
-    the real home. The archive (``orthority_spark_cds_<key>.jsa``, about
-    170 MB) and the shadow home (``orthority_spark_home_<key>``, a
-    directory of symlinks) sit in ``tempfile.gettempdir()``; delete them
-    to have the next session build them again. The session that dumps
-    the archive waits for its JVM at interpreter exit, about 12 s, and
-    publishes the archive atomically. See the module docstring.
+    ``-XX:CompileThresholdScaling=4`` in front of ``SPARK_SUBMIT_OPTS``
+    (set for the launch only, then restored), so a caller's or a site's
+    Java options still win, and, where :func:`_cds_plan` allows, from
+    the engine's class-data archive through
+    ``spark.driver.defaultJavaOptions``. The archive is
+    ``orthority_spark_cds_<key>.jsa`` in ``tempfile.gettempdir()``, about
+    170 MB; delete it to have the next session dump it again. The session
+    that dumps it waits for its JVM at interpreter exit, about 12 s, and
+    publishes the archive atomically. Where this call launches no JVM (a
+    cluster master, or a gateway already up), it changes nothing of the
+    launch. See the module docstring.
     """
     conf, env, dump = _launch_plan(master, dict(extra_conf or {}))
     b = (

@@ -1,15 +1,17 @@
 """Content-addressed files in the temp dir, and their removal.
 
-The engine keeps three kinds of files in ``tempfile.gettempdir()``, each
+The engine keeps two kinds of files in ``tempfile.gettempdir()``, each
 named by a 12-hex key of what it was built from: the package zip
-``orthority_spark_<key>.zip`` (``pyfiles``), the driver JVM's class-data
-archive ``orthority_spark_cds_<key>.jsa`` and the shadow Spark home
-``orthority_spark_home_<key>/`` (``session``). A new key supersedes the
-old files of the same kind, which would otherwise pile up.
+``orthority_spark_<key>.zip`` (``pyfiles``) and the driver JVM's
+class-data archive ``orthority_spark_cds_<key>.jsa`` (``session``). A new
+key supersedes the old files of the same kind, which would otherwise
+pile up. Each is written under ``<name>.<pid>.tmp`` first and renamed
+into place.
 
 A session holds a shared ``flock`` on each file it uses until its
 process exits (:func:`hold`). Whoever publishes a new file deletes the
-superseded siblings it can lock exclusively without blocking
+superseded siblings it can lock exclusively without blocking, and the
+``.tmp`` files of its kind that a process no longer alive left behind
 (:func:`prune`), so a file a live session uses is never deleted.
 """
 
@@ -18,10 +20,10 @@ from __future__ import annotations
 import fcntl
 import os
 import re
-import shutil
 
-#: a published name: kind prefix, 12-hex key, kind suffix
-_KEYED = re.compile(r"(orthority_spark_(?:cds_|home_)?)[0-9a-f]{12}(\.jsa|\.zip)?")
+#: a published name (kind prefix, 12-hex key, kind suffix), or the
+#: per-process name it is written under
+_KEYED = re.compile(r"(orthority_spark_(?:cds_)?)[0-9a-f]{12}(\.jsa|\.zip)(?:\.(\d+)\.tmp)?")
 
 #: path -> open descriptor holding a shared lock for this process's life
 _HELD: dict[str, int] = {}
@@ -42,10 +44,20 @@ def _still_linked(fd: int, path: str) -> bool:
         return False
 
 
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # another user's process
+        return True
+    return True
+
+
 def hold(path: str) -> bool:
-    """Take a shared lock on ``path`` (a file or a directory) until this
-    process exits. False, and no lock, if ``path`` does not exist or was
-    deleted before the lock was granted."""
+    """Take a shared lock on ``path`` until this process exits. False,
+    and no lock, if ``path`` does not exist or was deleted before the
+    lock was granted."""
     if path in _HELD:
         return True
     fd = _open(path)
@@ -59,34 +71,33 @@ def hold(path: str) -> bool:
     return True
 
 
-def _remove(path: str) -> None:
-    if os.path.isdir(path) and not os.path.islink(path):
-        shutil.rmtree(path)  # unlinks symlinks, never follows them
-    else:
-        os.remove(path)
-
-
 def prune(path: str) -> None:
     """Delete the siblings of ``path`` of the same kind under another
-    key, each only if no process holds it."""
+    key, each only if no process holds it, and the ``.tmp`` files of
+    that kind whose writer is no longer alive."""
     folder, name = os.path.split(path)
-    kind = _KEYED.fullmatch(name).groups()
+    kind = _KEYED.fullmatch(name).groups()[:2]
     for other in os.listdir(folder):
         m = _KEYED.fullmatch(other)
-        if other == name or m is None or m.groups() != kind:
+        if other == name or m is None or m.groups()[:2] != kind:
             continue
         full = os.path.join(folder, other)
+        if m[3] is not None:
+            if not _alive(int(m[3])):
+                try:
+                    os.remove(full)
+                except FileNotFoundError:
+                    pass
+            continue
         fd = _open(full)
         if fd is None:
             continue
         try:
             fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            # a session that opens it now finds it unlinked once it gets
+            # its shared lock, and does not use it
             if _still_linked(fd, full):
-                # off the published name first, so no session can take
-                # a half-deleted shadow home
-                doomed = f"{full}.{os.getpid()}.tmp"
-                os.rename(full, doomed)
-                _remove(doomed)
+                os.remove(full)
         except OSError:  # held by a live session, or removed meanwhile
             pass
         finally:
@@ -97,12 +108,9 @@ def publish(tmp: str, path: str) -> bool:
     """Rename the finished ``tmp`` to ``path`` unless ``path`` exists,
     then prune what it supersedes. ``tmp`` is gone either way. True if
     this call published ``path``."""
-    try:
-        if os.path.exists(path):
-            raise FileExistsError(path)
-        os.rename(tmp, path)  # a directory: fails if another won the race
-    except OSError:
-        _remove(tmp)
+    if os.path.exists(path):
+        os.remove(tmp)
         return False
+    os.rename(tmp, path)
     prune(path)
     return True

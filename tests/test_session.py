@@ -1,11 +1,9 @@
 """How ``get_spark`` launches the local driver JVM: the JIT flag, the
-class-data archive (``session._cds_plan``), the shadow Spark home
-(``session._shadow_home``) and the pruning of superseded temp files
-(``orthority_spark.tmpfiles``)."""
+class-data archive (``session._cds_plan``) and the pruning of superseded
+temp files (``orthority_spark.tmpfiles``)."""
 
 from __future__ import annotations
 
-import ast
 import glob
 import os
 import signal
@@ -14,10 +12,8 @@ import sys
 import tempfile
 import time
 
-import pyspark
 import pytest
 from pyspark import SparkContext
-from pyspark.find_spark_home import _find_spark_home
 
 from orthority_spark import session, tmpfiles
 
@@ -70,98 +66,51 @@ def test_jit_flag_only_where_the_engine_launches_the_jvm(stock, monkeypatch):
     caller = {"spark.driver.extraJavaOptions": "-XX:CompileThresholdScaling=1",
               "spark.driver.defaultJavaOptions": "-Dcaller=1"}
     assert session._launch_plan("spark://host:7077", caller) == (caller, {}, None)
+    monkeypatch.setenv("SPARK_SUBMIT_OPTS", "-Dsubmit=1")
     conf, env, dump = session._launch_plan("local[2]", caller)
-    options = conf.pop("spark.driver.defaultJavaOptions").split()
-    assert conf == {"spark.driver.extraJavaOptions": "-XX:CompileThresholdScaling=1"}
-    assert options.index(session._JIT_FLAG) < options.index("-Dcaller=1")
-    assert options[0].startswith("-XX:ArchiveClassesAtExit=") and dump is not None
+    assert env["SPARK_SUBMIT_OPTS"] == f"{session._JIT_FLAG} -Dsubmit=1"
     assert env["SPARK_CONF_DIR"] == os.path.join(tempfile.gettempdir(), "orthority_spark_conf")
-    # the conf dir rules the archive out, not the JIT flag
-    (stock / "spark-defaults.conf").write_text("spark.driver.memory 2g\n")
-    conf, env, dump = session._launch_plan("local[2]", {})
-    assert conf["spark.driver.defaultJavaOptions"] == session._JIT_FLAG
-    assert "SPARK_CONF_DIR" not in env and dump is None
+    options = conf.pop("spark.driver.defaultJavaOptions").split()
+    assert options[0] == f"-XX:ArchiveClassesAtExit={dump}" and options[-1] == "-Dcaller=1"
+    assert conf == {"spark.driver.extraJavaOptions": "-XX:CompileThresholdScaling=1"}
+    # a real conf dir rules the archive out, not the JIT flag, and its
+    # spark.driver.defaultJavaOptions is not overridden by the session conf
+    (stock / "spark-defaults.conf").write_text("spark.driver.defaultJavaOptions -Dsite=1\n")
+    monkeypatch.delenv("SPARK_SUBMIT_OPTS")
+    assert session._launch_plan("local[2]", {}) == (
+        {}, {"SPARK_SUBMIT_OPTS": session._JIT_FLAG}, None)
     monkeypatch.setattr(SparkContext, "_gateway", object())
     assert session._launch_plan("local[2]", {}) == ({}, {}, None)
-
-
-def test_shadow_home_only_where_workers_import_this_pyspark(stock, tmp_path, monkeypatch):
-    real = _find_spark_home()
-    monkeypatch.setenv("PYSPARK_PYTHON", sys.executable)
-    home = session._shadow_home({})
-    assert os.path.dirname(home) == str(tmp_path)
-    assert os.path.basename(home).startswith("orthority_spark_home_")
-    lib = os.path.join(home, "python", "lib")
-    assert "pyspark.zip" not in os.listdir(lib)
-    assert sorted(os.listdir(lib)) == sorted(
-        set(os.listdir(os.path.join(real, "python", "lib"))) - {"pyspark.zip"})
-    assert os.readlink(os.path.join(home, "jars")) == os.path.join(real, "jars")
-    assert not os.path.islink(lib) and not os.path.islink(os.path.dirname(lib))
-    assert session._shadow_home({}) == home
-    # the archive is keyed by the class-path root the JVM reads
-    assert session._cds_plan("local[2]", {})[0] != session._cds_plan("local[2]", {}, home)[0]
-
-    # another interpreter, as PYSPARK_PYTHON, spark.pyspark.python or
-    # the python3 on PATH that pyspark falls back to
-    other = tmp_path / "other_python"
-    other.write_text("#!/bin/sh\necho /usr/bin/python3\necho /usr\n")
-    other.chmod(0o755)
-    assert session._shadow_home({"spark.pyspark.python": str(other)}) is None
-    monkeypatch.setenv("PYSPARK_PYTHON", str(other))
-    assert session._shadow_home({}) is None
-    monkeypatch.delenv("PYSPARK_PYTHON")
-    bin_dir = tmp_path / "bin"
-    bin_dir.mkdir()
-    (bin_dir / "python3").symlink_to(sys.executable)
-    monkeypatch.setenv("PATH", str(bin_dir))
-    assert session._shadow_home({}) == home
-    (bin_dir / "python3").unlink()
-    (bin_dir / "python3").symlink_to(other)
-    assert session._shadow_home({"spark.pyspark.python": sys.executable}) is None
-    conf, env, _ = session._launch_plan("local[2]", {})
-    assert "SPARK_HOME" not in env and session._JIT_FLAG in conf[
-        "spark.driver.defaultJavaOptions"]
-    monkeypatch.setenv("PYSPARK_PYTHON", sys.executable)
-    monkeypatch.setattr(pyspark, "__version__", "0.0.0")
-    assert session._shadow_home({}) is None
 
 
 def test_prune_keeps_what_a_live_session_holds(tmp_path, monkeypatch):
     held = {}
     monkeypatch.setattr(tmpfiles, "_HELD", held)
-    outside = tmp_path / "outside"
-    outside.mkdir()
-    (outside / "data").write_text("kept")
+    dead = subprocess.run([sys.executable, "-c", "import os; print(os.getpid())"],
+                          capture_output=True, text=True).stdout.strip()
     names = {"live_zip": "orthority_spark_aaaaaaaaaaaa.zip",
              "free_zip": "orthority_spark_bbbbbbbbbbbb.zip",
-             "building": "orthority_spark_cccccccccccc.zip.123.tmp",
+             "building": f"orthority_spark_cccccccccccc.zip.{os.getpid()}.tmp",
+             "left_over": f"orthority_spark_ffffffffffff.zip.{dead}.tmp",
              "other_kind": "orthority_spark_cds_dddddddddddd.jsa",
-             "live_home": "orthority_spark_home_aaaaaaaaaaaa",
-             "free_home": "orthority_spark_home_bbbbbbbbbbbb"}
+             "other_left_over": f"orthority_spark_cds_dddddddddddd.jsa.{dead}.tmp",
+             "unrelated": "orthority_spark_conf"}
     for key, name in names.items():
-        if key.endswith("home"):
-            (tmp_path / name).mkdir()
-            (tmp_path / name / "data").symlink_to(outside / "data")
-        else:
-            (tmp_path / name).write_text(key)
+        (tmp_path / name).write_text(key)
     try:
         assert tmpfiles.hold(str(tmp_path / names["live_zip"]))
-        assert tmpfiles.hold(str(tmp_path / names["live_home"]))
         assert not tmpfiles.hold(str(tmp_path / "orthority_spark_eeeeeeeeeeee.zip"))
         (tmp_path / "zip.tmp").write_text("new")
-        (tmp_path / "home.tmp").mkdir()
-        for tmp, new in (("zip.tmp", "orthority_spark_ffffffffffff.zip"),
-                         ("home.tmp", "orthority_spark_home_ffffffffffff")):
-            assert tmpfiles.publish(str(tmp_path / tmp), str(tmp_path / new))
-        left = set(os.listdir(tmp_path))
-        assert left == {"outside", "orthority_spark_ffffffffffff.zip",
-                        "orthority_spark_home_ffffffffffff", names["live_zip"],
-                        names["building"], names["other_kind"], names["live_home"]}
-        assert (outside / "data").read_text() == "kept"
+        new = "orthority_spark_ffffffffffff.zip"
+        assert tmpfiles.publish(str(tmp_path / "zip.tmp"), str(tmp_path / new))
+        assert set(os.listdir(tmp_path)) == {
+            new, names["live_zip"], names["building"], names["other_kind"],
+            names["other_left_over"], names["unrelated"]}
+        assert (tmp_path / new).read_text() == "new"
         (tmp_path / "late.tmp").write_text("late")
-        assert not tmpfiles.publish(str(tmp_path / "late.tmp"),
-                                    str(tmp_path / "orthority_spark_ffffffffffff.zip"))
+        assert not tmpfiles.publish(str(tmp_path / "late.tmp"), str(tmp_path / new))
         assert not (tmp_path / "late.tmp").exists()
+        assert (tmp_path / new).read_text() == "new"
     finally:
         for fd in held.values():
             os.close(fd)
@@ -174,9 +123,8 @@ import pyarrow as pa
 from orthority_spark.session import get_spark
 
 def probe(it):
-    import pyspark
     for b in it:
-        yield pa.RecordBatch.from_pydict({{"n": [b.num_rows], "f": [pyspark.__file__]}})
+        yield pa.RecordBatch.from_pydict({{"n": [b.num_rows]}})
 
 spark = get_spark(master="local[2]", shuffle_partitions=2, extra_conf={{
     "spark.driver.extraJavaOptions": "-Dorthority.probe=1"}})
@@ -185,24 +133,17 @@ print("jvm", pid, flush=True)
 cmd = open(f"/proc/{{pid}}/cmdline").read().split("\\0")
 maps = open(f"/proc/{{pid}}/maps").read()
 print("caller_option", "-Dorthority.probe=1" in cmd)
-print("jit_first", cmd.index("-XX:CompileThresholdScaling=4") < cmd.index("-Dorthority.probe=1"))
 print("mapped", sorted({{l.split()[-1] for l in maps.splitlines()
                         if "orthority_spark_cds_" in l}}))
-n = spark.range(0, 100, 1, 2).mapInArrow(probe, "n long, f string").collect()
+n = spark.range(0, 100, 1, 2).mapInArrow(probe, "n long").collect()
 print("rows", sum(r.n for r in n))
-print("worker_pyspark", sorted({{r.f for r in n}}))
 """
 
 
-@pytest.fixture(scope="module")
-def sessions(tmp_path_factory):
-    """Two sessions in one fresh temp dir: the first dumps the archive,
-    the second maps it. Yields a runner and both outputs."""
-    tmp_path = tmp_path_factory.mktemp("launch")
+def test_cds_archive_is_published_mapped_and_never_torn(tmp_path):
     env = {k: v for k, v in os.environ.items()
            if k not in ("PYTHONPATH", "SPARK_CONF_DIR", "PYSPARK_GATEWAY_PORT")}
     env["TMPDIR"] = str(tmp_path)
-    env["PYSPARK_PYTHON"] = sys.executable
     code = SESSION.format(root=ROOT)
 
     def run():
@@ -210,34 +151,18 @@ def sessions(tmp_path_factory):
                            capture_output=True, text=True, timeout=600)
         assert p.returncode == 0, p.stdout[-2000:] + p.stderr[-4000:]
         return dict(line.split(" ", 1) for line in p.stdout.splitlines()
-                    if line.split(" ", 1)[0] in (
-                        "caller_option", "mapped", "rows", "jit_first", "worker_pyspark"))
+                    if line.split(" ", 1)[0] in ("caller_option", "mapped", "rows"))
 
     def archives(pattern):
         return glob.glob(str(tmp_path / f"orthority_spark_cds_*{pattern}"))
 
     first = run()
-    jsa = archives(".jsa")
-    second = run()
-    yield tmp_path, env, code, archives, jsa, first, second
-
-
-def test_workers_import_the_installed_pyspark(sessions):
-    *_, first, second = sessions
-    for out in (first, second):
-        assert out["rows"] == "100" and out["jit_first"] == "True"
-        [worker] = ast.literal_eval(out["worker_pyspark"])
-        assert ".zip" not in worker and worker == pyspark.__file__
-
-
-def test_cds_archive_is_published_mapped_and_never_torn(sessions):
-    tmp_path, env, code, archives, published, first, second = sessions
     assert first["mapped"] == "[]" and first["rows"] == "100"
-    [jsa] = published
+    [jsa] = archives(".jsa")
     assert archives(".tmp") == []
 
-    assert {k: second[k] for k in ("caller_option", "mapped", "rows")} == {
-        "caller_option": "True", "mapped": str([jsa]), "rows": "100"}
+    second = run()
+    assert second == {"caller_option": "True", "mapped": str([jsa]), "rows": "100"}
 
     os.remove(jsa)
     p = subprocess.Popen([sys.executable, "-c", code], cwd=tmp_path, env=env,
@@ -250,3 +175,44 @@ def test_cds_archive_is_published_mapped_and_never_torn(sessions):
     p.stdout.read()
     assert p.wait(timeout=120) == 0
     assert archives(".jsa") == [] and archives(".tmp") == []
+
+
+SITE_SESSION = """
+import os, sys
+sys.path.insert(0, {root!r})
+from orthority_spark.session import get_spark
+
+spark = get_spark(master="local[2]", shuffle_partitions=2, extra_conf={{
+    "spark.driver.extraJavaOptions": "-XX:CompileThresholdScaling=2 -Dorthority.probe=1"}})
+jvm = spark.sparkContext._jvm
+cmd = open(f"/proc/{{spark.sparkContext._gateway.proc.pid}}/cmdline").read().split("\\0")
+flags = ["-XX:CompileThresholdScaling=4", "-Dorthority.submit=1", "-Dorthority.site=1",
+         "-XX:CompileThresholdScaling=2", "-Dorthority.probe=1"]
+print("order", [cmd.index(f) for f in flags] == sorted(cmd.index(f) for f in flags))
+print("scaling", jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+    jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+).getVMOption("CompileThresholdScaling").getValue())
+print("submit_opts", os.environ["SPARK_SUBMIT_OPTS"])
+print("rows", spark.range(0, 100, 1, 2).count())
+"""
+
+
+def test_jit_flag_keeps_site_and_caller_java_options(tmp_path):
+    """A site's ``spark.driver.defaultJavaOptions`` and a caller's
+    ``SPARK_SUBMIT_OPTS`` and ``extraJavaOptions`` all reach the JVM,
+    after the JIT flag, so the caller's scaling is the one in effect."""
+    conf = tmp_path / "spark_conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text(
+        "spark.driver.defaultJavaOptions -Dorthority.site=1\n")
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("PYTHONPATH", "PYSPARK_GATEWAY_PORT")}
+    env.update(TMPDIR=str(tmp_path), SPARK_CONF_DIR=str(conf),
+               SPARK_SUBMIT_OPTS="-Dorthority.submit=1")
+    p = subprocess.run([sys.executable, "-c", SITE_SESSION.format(root=ROOT)], cwd=tmp_path,
+                       env=env, capture_output=True, text=True, timeout=600)
+    assert p.returncode == 0, p.stdout[-2000:] + p.stderr[-4000:]
+    out = dict(line.split(" ", 1) for line in p.stdout.splitlines()
+               if line.split(" ", 1)[0] in ("order", "scaling", "submit_opts", "rows"))
+    assert out == {"order": "True", "scaling": "2.0", "submit_opts": "-Dorthority.submit=1",
+                   "rows": "100"}
