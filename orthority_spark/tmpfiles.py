@@ -12,7 +12,9 @@ A session holds a shared ``flock`` on each file it uses until its
 process exits (:func:`hold`). Whoever publishes a new file deletes the
 superseded siblings it can lock exclusively without blocking, and the
 ``.tmp`` files of its kind that a process no longer alive left behind
-(:func:`prune`), so a file a live session uses is never deleted.
+(:func:`prune`), so a file a live session uses is never deleted. The
+writer's pid is read in this process's pid namespace, so the temp dir
+must not be shared with processes outside it.
 """
 
 from __future__ import annotations
