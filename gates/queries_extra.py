@@ -474,7 +474,7 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = derived_pages(spark, sf_dir).withColumn(
         "html", F.encode(F.col("text"), "utf-8")
     )
-    return image_decode(pages, fake=True).select(
+    return image_decode(pages).select(
         "url", "width", "height", "n_channels"
     )
 

@@ -174,7 +174,8 @@ def o_pip_join_salted() -> str:
 
 
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k=3 nearest footprints per page (window top-k over candidates)."""
+    """k=3 nearest footprints per page (literal plan: the 4-entry catalog
+    unrolled into expressions, ranked map-side)."""
     return knn_bruteforce(
         pages_cells(spark, sf_dir),
         fp.footprint_summary_df(spark),

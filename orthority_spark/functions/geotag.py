@@ -15,11 +15,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-# float-token form: geo:<lat:.6f>,<lon:.6f> (synthetic_pages)
-GEO_FLOAT_RE = r"geo:(-?\d+\.\d+),(-?\d+\.\d+)"
-# integer-microdegree form: geo:<lat_udeg>,<lon_udeg> (derived pages)
-GEO_INT_RE = r"geo:(-?\d+),(-?\d+)"
-# r6: single-group twins — ONE regexp execution extracts "lat,lon" and a
+# float-token form geo:<lat:.6f>,<lon:.6f> (synthetic_pages) and
+# integer-microdegree form geo:<lat_udeg>,<lon_udeg> (derived pages).
+# r6: one group each — ONE regexp execution extracts "lat,lon" and a
 # cheap split slices it (two regexp_extract calls each re-ran the full
 # match per row; codegen subexpression elimination does not merge
 # different group indices). Same regex language, same matched text, and
@@ -42,11 +40,14 @@ def geotag_udeg(text: Column) -> tuple[Column, Column]:
 
 
 def with_geotag(pages: DataFrame, token: str = "float") -> DataFrame:
-    """pages + (lat, lon) columns parsed from text."""
-    fn = geotag_float if token == "float" else None
-    if fn is not None:
-        lat, lon = fn(F.col("text"))
+    """pages + (lat, lon) columns parsed from text. ``token`` is the
+    geotag form: ``"float"`` degrees or ``"udeg"`` integer microdegrees;
+    any other value raises ``ValueError``."""
+    if token == "float":
+        lat, lon = geotag_float(F.col("text"))
         return pages.withColumn("lat", lat).withColumn("lon", lon)
+    if token != "udeg":
+        raise ValueError(f"token must be 'float' or 'udeg', got {token!r}")
     lat_u, lon_u = geotag_udeg(F.col("text"))
     return pages.withColumn(
         "lat", lat_u.cast("double") / F.lit(1000000.0)

@@ -89,9 +89,6 @@ C_EN = np.array([[0.0, 1.0, 0.0], [1.0, 0.0, 0.0], [0.0, 0.0, -1.0]])
 # rotation — typical drone geometry, /root/reference/orthority/param_io.py:830.
 C_BODY = np.array([[0.0, 1.0, 0.0], [1.0, 0.0, 0.0], [0.0, 0.0, -1.0]])
 
-# kept for backward compatibility with earlier callers/tests
-C_EB = C_EN
-
 
 def rpy_to_opk(rpy) -> tuple[float, float, float]:
     """(roll, pitch, yaw) radians -> (omega, phi, kappa), PATB, for a

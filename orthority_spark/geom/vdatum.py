@@ -39,10 +39,6 @@ class ZTransform:
         return (z - self.offset) / self.scale
 
 
-#: the identity transform: input heights already in world z
-IDENTITY = ZTransform()
-
-
 def probe_z_transform(
     datum_to_world: Callable[[float], float], z0: float = 0.0, z1: float = 1.0
 ) -> ZTransform:

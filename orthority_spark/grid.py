@@ -18,7 +18,7 @@ DuckDB oracle agree bit-for-bit:
 - :func:`cell_sql`   — ANSI-SQL text for the DuckDB oracle
 
 Cell ids play the role H3 indexes play in the north rule: equi-join keys
-for point-in-polygon prefilters, k-ring kNN candidates, and parent-cell
+for point-in-polygon prefilters, k-ring kNN candidates, and coarser-cell
 rollups (the reference's overview pyramid, SURVEY.md §2 S17).
 """
 
@@ -60,23 +60,6 @@ def cell_decode(cell) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     ix = rem // IX_FACTOR
     iy = rem - ix * IX_FACTOR
     return res, ix, iy
-
-
-def cell_center(cell) -> tuple[np.ndarray, np.ndarray]:
-    """cell ids -> (lat, lon) of cell centers."""
-    res, ix, iy = cell_decode(cell)
-    n = (2.0**res.astype("float64"))
-    lon = (ix.astype("float64") + 0.5) / n * 360.0 - 180.0
-    lat = (iy.astype("float64") + 0.5) / n * 180.0 - 90.0
-    return lat, lon
-
-
-def parent_cell(cell, parent_res: int) -> np.ndarray:
-    """Coarser-resolution ancestor of each cell (rollup key)."""
-    res, ix, iy = cell_decode(cell)
-    shift = res - parent_res
-    factor = np.left_shift(np.int64(1), shift)
-    return parent_res * RES_FACTOR + (ix // factor) * IX_FACTOR + (iy // factor)
 
 
 def k_ring(cell: int, k: int) -> np.ndarray:

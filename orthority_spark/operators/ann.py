@@ -394,7 +394,9 @@ def neardups_bucketed(emb: DataFrame, tau: float) -> DataFrame:
     ATTACH_BROADCAST_MAX_ROWS the corpus is collected once and broadcast
     to the pair scorer, and pairs are deduplicated after the tau filter
     (cosine is a pure function of the pair); past it pairs are
-    deduplicated first and the embeddings attached by join."""
+    deduplicated first and the embeddings attached by join.
+    ``tests/test_ann.py::test_score_pairs_broadcast_equals_join_fallback``
+    forces the join plan and checks it against the broadcast one."""
     n = emb.count()
     if not n:  # empty corpus: no pairs (and no max dim to project)
         return emb.sparkSession.createDataFrame([], _PAIR_SCHEMA)

@@ -1,18 +1,23 @@
 """kNN: k nearest footprints per page (SURVEY §2.3 kNN / §2.5 W4).
 
-Two strategies:
+Two operators, each ranking with the literal plan while the footprint
+catalog has 1..MAX_LITERAL_CATALOG entries: the catalog's centers are
+unrolled into codegen'd expressions and the top-k is taken map-side in
+the scan stage, with no shuffle and no window.
 
-- :func:`knn_bruteforce` — broadcast the (tiny) footprint-center catalog,
-  score every (page, footprint) pair map-side, take top-k per page with a
-  window. Right whenever the footprint catalog broadcasts; the cross
-  product never materialises a shuffle of the pages side — only the
-  window's partition-by-url exchange.
+- :func:`knn_bruteforce` — score every (page, footprint) pair.
 - :func:`knn_kring` — the scale path for large catalogs: candidates come
-  from an equi-join of the page's cell k-ring against the footprint-cell
-  index, so each page only scores footprints in its neighborhood; falls
-  back to ring expansion radius ``k_ring`` (must be chosen >= catalog
-  spacing so that >= k true neighbors are inside the ring — verified
-  against brute force in tests).
+  from an equi-join of the page's cell against the footprint-cell index
+  dilated by ``ring`` cells (``ring`` must be chosen >= catalog spacing
+  so that >= k true neighbors are inside the ring — verified against
+  brute force in tests), so each page only scores footprints in its
+  neighborhood.
+
+Past MAX_LITERAL_CATALOG entries, or for an empty catalog, both take a
+window plan (broadcast candidates + ``row_number`` per url), and
+:func:`knn_kring` withholds the broadcast hint past
+KRING_BROADCAST_MAX_ROWS. Each plan's test is named in its operator's
+docstring.
 
 Determinism: rank orders by (dist_sq, filename) so equal distances break
 ties stably across engines and parallelism levels.
@@ -46,6 +51,9 @@ def _topk(scored: DataFrame, k: int) -> DataFrame:
 #: unrolled O(n^2) comparison expressions bloat codegen, so the window
 #: plan takes over (a catalog this big should use knn_kring anyway).
 MAX_LITERAL_CATALOG = 256
+#: knn_kring's broadcast guard on the ring-expanded footprint-cell index
+#: (~100 MB of packed longs): past it the broadcast hint is withheld.
+KRING_BROADCAST_MAX_ROWS = 4_000_000
 
 
 def _topk_literal(
@@ -117,7 +125,7 @@ def _catalog(summary: DataFrame) -> list:
     """The first MAX_LITERAL_CATALOG + 1 (filename, cx, cy) rows of
     ``summary``, taken once per application and ``summary`` object."""
     return prepared(
-        summary.sparkSession, "knn_catalog", (summary,), (),
+        summary.sparkSession, "knn_catalog", (summary,), (MAX_LITERAL_CATALOG,),
         lambda: summary.select("filename", "cx", "cy").take(MAX_LITERAL_CATALOG + 1),
     )
 
@@ -183,7 +191,7 @@ def _mask_table(spark, index: list, cat: list, ring: int) -> DataFrame:
     on the driver from the collected ``(filename, cell)`` index rows and
     held as a local relation: a broadcast of it re-aggregates nothing.
     Its rows are at most the expanded index, which the
-    ``max_broadcast_rows`` guard already bounds."""
+    KRING_BROADCAST_MAX_ROWS guard already bounds."""
     names = {r.filename: i for i, r in enumerate(cat)}
     rows = [
         (names[r.filename], r.cell)
@@ -207,8 +215,12 @@ def knn_bruteforce(pages_cells: DataFrame, summary: DataFrame, k: int = 3) -> Da
     is collected once and inlined as codegen'd expressions; ranking
     happens inside the scan stage. The r5 plan exchanged + sorted every
     (page x footprint) candidate row on url for the window; this one has
-    zero shuffles and the identical output. Catalogs past
-    MAX_LITERAL_CATALOG entries, and an empty one, take the window plan."""
+    zero shuffles and the identical output.
+
+    Catalogs past MAX_LITERAL_CATALOG entries, and an empty one, take the
+    window plan: ``tests/test_knn.py::test_window_plans_equal_literal_plans``
+    and ``test_empty_catalog_returns_no_rows`` force it; the literal plan
+    is checked against the DuckDB oracle by the ``knn`` gate."""
     cat = _catalog(summary)
     if 0 < len(cat) <= MAX_LITERAL_CATALOG:
         return _topk_literal(pages_cells.select("url", "px", "py"), cat, k)
@@ -224,23 +236,32 @@ def knn_kring(
     summary: DataFrame,
     k: int = 3,
     ring: int = 8,
-    max_broadcast_rows: int = 4_000_000,
 ) -> DataFrame:
-    """Cell k-ring candidate join + window top-k (the 10^12-page plan).
+    """Cell k-ring candidate join + top-k (the 10^12-page plan).
 
     Ring expansion happens on the *footprint* side (tiny): each footprint
     covering-cell is replicated to its k-ring, so the pages side joins on
     its own cell with zero blow-up and no shuffle when the expanded index
     still broadcasts.
 
-    Size guard: the expansion is (2*ring+1)^2 rows per covering cell;
-    when the estimate exceeds ``max_broadcast_rows`` (~100 MB of packed
-    longs at the default), broadcasting it would stress the driver, so
-    the explicit broadcast hint is withheld and Spark plans the cell
-    equi-join itself (shuffle-hash/SMJ for a genuinely large index).
+    Three plans, one test each:
+
+    - literal (1..MAX_LITERAL_CATALOG catalog entries, index under the
+      guard): pages join a per-cell mask table and rank map-side;
+      ``tests/test_knn.py::test_kring_equals_bruteforce``.
+    - broadcast window (catalog empty or past MAX_LITERAL_CATALOG):
+      the broadcast expanded index + ``row_number`` per url;
+      ``test_window_plans_equal_literal_plans`` and
+      ``test_empty_catalog_returns_no_rows``.
+    - unhinted window (size guard): the expansion is (2*ring+1)^2 rows
+      per covering cell; when the estimate exceeds
+      KRING_BROADCAST_MAX_ROWS, broadcasting it would stress the
+      driver, so the explicit broadcast hint is withheld and Spark
+      plans the cell equi-join itself (shuffle-hash/SMJ for a genuinely
+      large index); ``test_kring_broadcast_guard_withholds_hint``.
 
     Prepare: one ``collect()`` of at most
-    ``max_broadcast_rows // (2*ring+1)**2 + 1`` rows of
+    ``KRING_BROADCAST_MAX_ROWS // (2*ring+1)**2 + 1`` rows of
     ``footprint_cells`` decides the guard (a full read means the index
     fits) and, under the literal plan, supplies the rows of the mask
     table, which is expanded and aggregated on the driver in numpy.
@@ -251,7 +272,7 @@ def knn_kring(
     objects launch no Spark job.
     """
     spark = footprint_cells.sparkSession
-    cap = max_broadcast_rows // (2 * ring + 1) ** 2 + 1
+    cap = KRING_BROADCAST_MAX_ROWS // (2 * ring + 1) ** 2 + 1
     index = prepared(
         spark, "knn_index", (footprint_cells,), (cap,),
         lambda: footprint_cells.select("filename", "cell").limit(cap).collect(),
@@ -259,7 +280,8 @@ def knn_kring(
     est_rows = len(index) * (2 * ring + 1) ** 2
     cat = _catalog(summary)
     pages = cell_join_key(pages_cells.select("url", "px", "py", "cell"))
-    if est_rows <= max_broadcast_rows and 0 < len(cat) <= MAX_LITERAL_CATALOG:
+    fits = est_rows <= KRING_BROADCAST_MAX_ROWS
+    if fits and 0 < len(cat) <= MAX_LITERAL_CATALOG:
         # r6 plan: join pages on their own cell to the per-cell mask
         # table (broadcast hash join) and rank map-side with the
         # codegen'd unrolled comparisons — zero pages-side shuffles. The
@@ -271,7 +293,7 @@ def knn_kring(
         cand = pages.join(F.broadcast(masks), "cell")
         return _topk_literal(cand.drop("cell"), cat, k, masked=True)
     expanded = _expand(footprint_cells, ring)
-    if est_rows <= max_broadcast_rows:
+    if fits:
         # catalog empty or too wide for the literal unroll but the
         # expanded index still broadcasts: the r5 broadcast join + window
         # plan
@@ -281,10 +303,9 @@ def knn_kring(
 
         warnings.warn(
             f"knn_kring: expanded cell index >= {est_rows} rows exceeds the "
-            f"broadcast guard ({max_broadcast_rows}); withholding the "
+            f"broadcast guard ({KRING_BROADCAST_MAX_ROWS}); withholding the "
             "broadcast hint and letting Spark plan the cell equi-join "
-            "(raise max_broadcast_rows or lower ring to force the "
-            "broadcast plan)",
+            "(lower ring to get the broadcast plan)",
             stacklevel=2,
         )
     # no distinct needed: the expanded index is distinct on

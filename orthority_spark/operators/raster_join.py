@@ -16,19 +16,18 @@ from pyspark.sql import DataFrame, functions as F
 from ..arrow_buffers import bitmap, float64_array, float64_values
 from ..session import prepared
 
+#: sample_dem_z's broadcast guard on one band's float64 blocks: past it
+#: the cogroup plan runs
+DEM_BROADCAST_MAX_BYTES = 256 << 20
 
-def sample_dem_z(
-    points: DataFrame,
-    dem: DataFrame,
-    band: int = 1,
-    max_broadcast_bytes: int = 256 << 20,
-) -> DataFrame:
+
+def sample_dem_z(points: DataFrame, dem: DataFrame, band: int = 1) -> DataFrame:
     """Per-point bilinear z sample from the owning DEM tile.
 
     Two plans with identical results (r6 optimization, guide §2.4/§3.1):
 
     - **broadcast gather** (default whenever the band's blocks fit in
-      ``max_broadcast_bytes``): the tile blocks are collected once and
+      DEM_BROADCAST_MAX_BYTES): the tile blocks are collected once and
       broadcast; a single ``mapInArrow`` pass over the points computes
       the owning tile, the extent mask and the bilinear blend — ZERO
       shuffles and full scan-stage parallelism. A DEM raster is metadata
@@ -40,6 +39,8 @@ def sample_dem_z(
     - **cogroup gather** (fallback past the guard): the r5 plan — points
       equi-joined to their owning tile key, Arrow cogroup kernel per
       tile group; the 16 KB block crosses the shuffle once per tile.
+      ``tests/test_fit_raster.py::test_sample_dem_z_broadcast_equals_cogroup``
+      forces it and checks it against the broadcast gather.
 
     Both plans drop points outside the DEM grid, points in a grid tile
     the band does not hold, and points whose px or py is NaN, infinite
@@ -64,7 +65,7 @@ def sample_dem_z(
     a, c, e, f0, tile, ncols, nrows, cells = prepared(
         spark, "dem_extent", (dem,), (band,), lambda: _dem_extent(d, band)
     )
-    if cells * 8 <= max_broadcast_bytes:
+    if cells * 8 <= DEM_BROADCAST_MAX_BYTES:
         bc = prepared(
             spark, "dem_blocks", (dem,), (band,), lambda: _broadcast_blocks(d)
         )

@@ -8,19 +8,20 @@ reference materialises PIP as a cv2.fillPoly raster mask,
 Plan shape (designed for 10^12 pages vs a small footprint catalog):
 
 1. geotag -> cell assignment: pure Column expressions in the scan stage.
-2. candidate prefilter: equi-join pages.cell == footprint_cells.cell. The
-   footprint side is tiny -> BROADCAST hash join, no shuffle of pages.
-3. exact PIP: ray-casting decided entirely with Column arithmetic — the
-   8 polygon edges are broadcast-joined, per-edge crossing flags are
-   map-side expressions, and the odd-crossings vote is one partial-agg
-   groupBy on (url, filename).
+2. candidate prefilter: equi-join pages.cell == catalog.cell. The
+   catalog (one row per covering cell, the footprint's 8 polygon edges
+   unrolled into flat columns) is tiny -> BROADCAST hash join, no
+   shuffle of pages.
+3. exact PIP: ray casting as one codegen'd Column expression over the
+   flat edge columns — per-edge crossing flags summed and tested for an
+   odd count, map-side in the join stage, with no aggregation.
 
 Skew: one mega-cell can hold ~10^6x the median page count. The salted
 variant splits each page's candidate lookup across N_SALT replicas of the
-footprint-cell table so no single shuffle partition owns a whole mega-cell
+catalog so no single shuffle partition owns a whole mega-cell
 (SURVEY.md §4 O9 — AQE alone cannot split a single hot *key*). Salting is
 deterministic (pmod(xxhash64(url))) and provably result-identical: tests
-assert salted == unsalted == broadcast row sets and checksums.
+assert salted == broadcast row sets and checksums.
 """
 
 from __future__ import annotations
@@ -76,29 +77,19 @@ def cell_join_key(pages_cells: DataFrame) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# exact PIP as a single map-side expression (no shuffle)
-#
-# The polygon's edges ride the broadcast footprint_cells table as an
-# array<struct<x1,y1,x2,y2>> column; the odd-crossings vote is an
-# F.aggregate lambda over that array — evaluated inside the scan/join
-# stage, so the exact PIP adds ZERO shuffles beyond the (broadcast) cell
-# equi-join. At 10^12 pages this is the difference between shuffling the
-# full candidate set and shuffling nothing.
-# ---------------------------------------------------------------------------
-
-_PIP_INSIDE = (
-    "aggregate(edges, CAST(0 AS BIGINT), (acc, e) -> acc + "
-    "CAST((CASE WHEN ((e.y1 > py) != (e.y2 > py)) "
-    "AND (px < e.x1 + (e.x2 - e.x1) * (py - e.y1) / (e.y2 - e.y1)) "
-    "THEN 1 ELSE 0 END) AS BIGINT)) % 2 = 1"
-)
-
-
-def _flat_inside_expr(n_edges: int = 8) -> str:
-    """Unrolled crossing vote over flat edge columns — stays inside
-    whole-stage codegen (the aggregate() lambda is interpreted per element;
-    unrolling is ~2.2x faster at 8M pages). Same arithmetic per edge."""
+def _inside(catalog: DataFrame) -> Column:
+    """The odd-crossings vote unrolled over ``catalog``'s flat edge
+    columns ``ex1_i, ey1_i, ex2_i, ey2_i``: one whole-stage-codegen
+    expression, evaluated map-side inside the join stage (no shuffle, no
+    lambda). ValueError for a catalog without those columns."""
+    n_edges = sum(1 for c in catalog.columns if c.startswith("ex1_"))
+    if not n_edges:
+        raise ValueError(
+            "PIP joins take the flat footprint catalog (columns filename, "
+            "cell, ex1_0..ey2_{n-1}) built by "
+            "footprints.footprint_catalog_flat_df; got columns "
+            f"{catalog.columns}"
+        )
     terms = []
     for i in range(n_edges):
         x1, y1, x2, y2 = (f"e{k}_{i}" for k in ("x1", "y1", "x2", "y2"))
@@ -106,35 +97,7 @@ def _flat_inside_expr(n_edges: int = 8) -> str:
             f"CAST((({y1} > py) != ({y2} > py)) AND "
             f"(px < {x1} + ({x2} - {x1}) * (py - {y1}) / ({y2} - {y1})) AS INT)"
         )
-    return "((" + " + ".join(terms) + ") % 2) = 1"
-
-
-def _attach_edge_arrays(footprint_cells: DataFrame, footprint_edges: DataFrame) -> DataFrame:
-    """footprint_cells + an edges array<struct> column per filename (tiny,
-    driver-side-sized; stays broadcastable). Skipped when the catalog
-    already carries an edges column (footprints.footprint_catalog_flat_df
-    builds it driver-side — preferred: zero footprint-side shuffles)."""
-    if "edges" in footprint_cells.columns or "ex1_0" in footprint_cells.columns:
-        return footprint_cells
-    edge_arrays = footprint_edges.groupBy("filename").agg(
-        F.array_sort(
-            F.collect_list(F.struct("x1", "y1", "x2", "y2"))
-        ).alias("edges")
-    )
-    return footprint_cells.join(edge_arrays, "filename")
-
-
-def _pip_filter(candidates: DataFrame, keep: list[str]) -> DataFrame:
-    """candidates(url, filename, px, py, edge cols...) -> rows strictly
-    inside; picks the codegen'd flat-unrolled vote when the catalog
-    carries flat edge columns, else the array-lambda vote."""
-    if "ex1_0" in candidates.columns:
-        inside = _flat_inside_expr(
-            sum(1 for c in candidates.columns if c.startswith("ex1_"))
-        )
-    else:
-        inside = _PIP_INSIDE
-    return candidates.where(F.expr(inside)).select("url", "filename", *keep)
+    return F.expr("((" + " + ".join(terms) + ") % 2) = 1")
 
 
 def pip_crossing_sql(px: str, py: str, e: str = "") -> str:
@@ -153,25 +116,32 @@ def pip_crossing_sql(px: str, py: str, e: str = "") -> str:
 
 def pip_join_broadcast(
     pages_cells: DataFrame,
-    footprint_cells: DataFrame,
+    catalog: DataFrame,
     footprint_edges: DataFrame,
     keep: list[str] = (),
 ) -> DataFrame:
     """Broadcast path: cell-prefilter equi-join + inline exact PIP.
 
-    ZERO shuffles: the footprint side (cells x edges arrays) broadcasts,
-    the crossing vote evaluates map-side, output streams straight into the
-    next stage. This is the default plan whenever the footprint catalog
-    fits in a broadcast (it always should — it is metadata, not data).
+    ``catalog`` is the flat catalog of
+    :func:`orthority_spark.sources.footprints.footprint_catalog_flat_df`;
+    any other table raises ``ValueError``. ``footprint_edges`` is no
+    longer read: the catalog carries the edges. It stays a positional
+    parameter so existing callers keep working.
+
+    ZERO shuffles: the catalog broadcasts, the crossing vote evaluates
+    map-side, output streams straight into the next stage. This is the
+    default plan whenever the footprint catalog fits in a broadcast (it
+    always should — it is metadata, not data). Tested against the numpy
+    oracle in ``tests/test_tile_join.py::test_broadcast_pip_matches_oracle``.
     """
-    fc = _attach_edge_arrays(footprint_cells, footprint_edges)
-    cand = cell_join_key(pages_cells).join(F.broadcast(fc), "cell")
-    return _pip_filter(cand, list(keep))
+    inside = _inside(catalog)
+    cand = cell_join_key(pages_cells).join(F.broadcast(catalog), "cell")
+    return cand.where(inside).select("url", "filename", *keep)
 
 
 def pip_join_salted(
     pages_cells: DataFrame,
-    footprint_cells: DataFrame,
+    catalog: DataFrame,
     footprint_edges: DataFrame,
     keep: list[str] = (),
     n_salt: int = config.N_SALT,
@@ -184,17 +154,21 @@ def pip_join_salted(
     replicated n_salt times, so one mega-cell's pages spread over n_salt
     shuffle partitions instead of hot-spotting one task (SURVEY §4 O9 —
     AQE splits skewed *partitions*, not single hot *keys* on the build
-    side). Result rows are byte-identical to the broadcast path
-    (asserted in tests).
+    side). ``catalog`` and ``footprint_edges`` are as in
+    :func:`pip_join_broadcast`. Result rows are byte-identical to the
+    broadcast path: ``tests/test_tile_join.py::test_salted_equals_broadcast``
+    and ``test_tile_checksum_parity_across_paths`` force this plan, and
+    ``tests/test_plans.py::test_salted_join_partitions_by_cell_and_salt``
+    pins its (cell, salt) shuffle.
     """
-    fc = _attach_edge_arrays(footprint_cells, footprint_edges)
+    inside = _inside(catalog)
     # project to join-relevant columns BEFORE the shuffle: never shuffle
     # page payload (text/html) through a join that only needs geometry
     proj = list(dict.fromkeys(["url", "cell", "px", "py", *keep]))
     salted_pages = cell_join_key(pages_cells.select(*proj)).withColumn(
         "salt", F.pmod(F.xxhash64(F.col("url")), F.lit(n_salt))
     )
-    replicated = fc.withColumn(
+    replicated = catalog.withColumn(
         "salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
     ).withColumn("salt", F.col("salt").cast("long"))
     # hint the REPLICATED FOOTPRINT side as the shuffle-hash build side:
@@ -204,5 +178,5 @@ def pip_join_salted(
     cand = salted_pages.join(
         replicated.hint("shuffle_hash"), ["cell", "salt"]
     )
-    return _pip_filter(cand, list(keep))
+    return cand.where(inside).select("url", "filename", *keep)
 

@@ -12,8 +12,10 @@ DataFrames:
 
 ``process`` is resumable (ledger anti-join) and returns run metrics;
 ``tiles()`` exposes the per-tile checksum table; ``metrics()`` the
-per-partition lineage. Strategy selection mirrors the engine defaults:
-broadcast PIP while the catalog broadcasts, salted shuffle otherwise.
+per-partition lineage. ``strategy`` names the PIP join plan: the
+caller picks ``"broadcast"`` (the default) or ``"salted"`` (skewed
+mega-cells, :func:`orthority_spark.operators.tile_join.pip_join_salted`);
+any other value raises ``ValueError``.
 """
 
 from __future__ import annotations
@@ -36,23 +38,24 @@ class OrthoJob:
         res: int = config.GRID_RES,
         strategy: str = "broadcast",
         n_salt: int = config.N_SALT,
-        token: str = "float",
     ):
+        if strategy not in ("broadcast", "salted"):
+            raise ValueError(
+                f"strategy must be 'broadcast' or 'salted', got {strategy!r}"
+            )
         self.spark = spark
         self.recs = footprint_records or fp.footprint_records(res)
         self.res = res
         self.strategy = strategy
         self.n_salt = n_salt
-        self.token = token
         self._catalog = fp.footprint_catalog_flat_df(spark, self.recs)
+        # the PIP joins' footprint_edges argument, which they no longer read
         self._edges = fp.footprint_edges_df(spark, self.recs)
 
     # -- plan ----------------------------------------------------------------
     def joined(self, pages: DataFrame) -> DataFrame:
         """pages(url, text, ...) -> (url, filename, cell) PIP join rows."""
-        pc = tile_join.assign_cells(
-            with_geotag(pages, token=self.token), res=self.res
-        )
+        pc = tile_join.assign_cells(with_geotag(pages), res=self.res)
         if self.strategy == "salted":
             return tile_join.pip_join_salted(
                 pc, self._catalog, self._edges, keep=["cell"], n_salt=self.n_salt

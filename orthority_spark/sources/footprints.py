@@ -156,16 +156,15 @@ N_EDGES = 8  # fixed boundary size (corners + midpoints, camera.py:200-243)
 
 
 def footprint_catalog_flat_df(
-    spark: SparkSession, recs: dict | None = None, n_edges: int = N_EDGES
+    spark: SparkSession, recs: dict | None = None
 ) -> DataFrame:
     """(filename, cell, ex1_0..ey2_7) — the covering-cell index with the
-    polygon's edges UNROLLED into flat double columns.
+    polygon's edges UNROLLED into flat double columns: the catalog both
+    PIP joins take (:mod:`orthority_spark.operators.tile_join`).
 
-    This is the hot-path catalog: the PIP vote becomes a pure
-    whole-stage-codegen expression over flat columns (2.2x faster than the
-    aggregate() lambda over array<struct>, which Spark interprets per
-    element). Fixed-size boundaries only: every footprint must have
-    exactly ``n_edges`` edges (asserted)."""
+    The PIP vote over it is a pure whole-stage-codegen expression over
+    flat columns. Fixed-size boundaries only: every footprint must have
+    exactly ``N_EDGES`` edges (asserted)."""
     recs = recs or footprint_records()
     eb: dict[str, list] = {}
     for n, x1, y1, x2, y2 in recs["edges"]:
@@ -173,13 +172,13 @@ def footprint_catalog_flat_df(
     rows = []
     for n, c in recs["cells"]:
         edges = sorted(eb[n])
-        assert len(edges) == n_edges, (n, len(edges))
+        assert len(edges) == N_EDGES, (n, len(edges))
         flat: list[float] = []
         for e in edges:
             flat.extend(e)
         rows.append((n, c, *flat))
     schema = "filename string, cell long, " + ", ".join(
-        f"e{k}_{i} double" for i in range(n_edges)
+        f"e{k}_{i} double" for i in range(N_EDGES)
         for k in ("x1", "y1", "x2", "y2")
     )
     return local_table(spark, rows, schema)

@@ -5,10 +5,10 @@ html binary, text string, lang string). Two constructions:
 
 1. :func:`synthetic_pages` — the engine's seeded generator (FIXTURES.md §1)
    built entirely from JVM-side Column expressions over ``spark.range`` (no
-   Python in the loop — generates millions of rows/sec for the bench), with
-   a numpy/pandas twin :func:`synthetic_pages_pandas` used as the
-   single-process oracle. Per-url ``text`` byte-identity between the two is
-   a test invariant (BASELINE.json:15).
+   Python in the loop — generates millions of rows/sec for the bench). Its
+   numpy/pandas twin ``synthetic_pages_pandas`` lives in ``tests/builders.py``
+   as the single-process oracle; per-url ``text`` byte-identity between the
+   two is a test invariant (BASELINE.json:15).
 
 2. :func:`derived_pages_sql` — a dialect-parameterised SQL fragment deriving
    the same page shape from an integer key column of the driver's testdata
@@ -25,8 +25,6 @@ explicit salting must handle (SURVEY.md §4 O9; AQE cannot split one key).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .. import config
@@ -91,10 +89,6 @@ def derived_pages_sql(key: str, dialect: str) -> dict[str, str]:
         "text": text,
     }
 
-# regex for parsing the integer geotag token back out of `text`
-GEO_TOKEN_RE = r"geo:(-?\d+),(-?\d+)"
-
-
 # ---------------------------------------------------------------------------
 # synthetic pages (engine generator, JVM-side expressions)
 # ---------------------------------------------------------------------------
@@ -151,41 +145,3 @@ def synthetic_pages(spark: SparkSession, n: int, num_partitions: int | None = No
     )
 
 
-# ---------------------------------------------------------------------------
-# numpy/pandas twin (single-process oracle; byte-identity check target)
-# ---------------------------------------------------------------------------
-
-def synthetic_pages_pandas(n: int) -> pd.DataFrame:
-    """Single-process oracle twin of :func:`synthetic_pages`."""
-    i = np.arange(n, dtype="int64")
-    u1 = (i * _MUL1) % 1000000
-    u2 = (i * _MUL2 + _ADD2) % 1000000
-    base_lat = config.LAT_MIN_UDEG + (u1 * config.LAT_SPAN_UDEG) // 1000000
-    base_lon = config.LON_MIN_UDEG + (u2 * config.LON_SPAN_UDEG) // 1000000
-    mega = (i % 5) == 1
-    outside = (i % 5) == 4
-    lat_udeg = np.where(mega, config.MEGA_LAT_UDEG, base_lat)
-    lon_udeg = np.where(
-        mega,
-        config.MEGA_LON_UDEG,
-        np.where(outside, base_lon + config.OUTSIDE_SHIFT_UDEG, base_lon),
-    )
-    lat = lat_udeg / 1e6
-    lon = lon_udeg / 1e6
-    lang = np.array(LANGS)[i % 6]
-    text = [
-        f"Deterministic page {k} mentions location geo:{la:.6f},{lo:.6f} in "
-        f"{lg} words w{(k * 31) % 997} w{(k * 17) % 991}."
-        for k, la, lo, lg in zip(i, lat, lon, lang)
-    ]
-    return pd.DataFrame(
-        {
-            "url": [f"https://site{k % 1000}.example/p/{k}" for k in i],
-            "warc_ts": pd.to_datetime(1735689600 + i * 137, unit="s"),
-            "html": [f"<html><body>{t}</body></html>".encode() for t in text],
-            "text": text,
-            "lang": lang,
-            "lat": lat,
-            "lon": lon,
-        }
-    )

@@ -1,4 +1,4 @@
-"""Sinks: profile-driven table writes with overwrite guards + checksums.
+"""Sinks: profile-driven table writes with overwrite guards.
 
 Re-expresses the reference's output machinery (SURVEY §2.1 S1/S2/S16/S19):
 
@@ -8,8 +8,9 @@ Re-expresses the reference's output machinery (SURVEY §2.1 S1/S2/S16/S19):
   (/root/reference/orthority/common.py:416-498) -> parquet/Iceberg write
   options chosen by payload type (binary-heavy tables get zstd, numeric
   tables snappy + dictionary).
-- per-tile write + mask (ortho.py:394-399) -> partitioned parquet append
-  with an order-independent checksum column instead of a mask band.
+
+Per-tile outputs with order-independent checksums (the per-tile write +
+mask, ortho.py:394-399) are the ledger's job (``plans/ledger.py``).
 
 The Iceberg writeTo(...) path is gated on catalog availability (no
 Iceberg jar in the sandbox); the parquet path has identical semantics.
@@ -19,9 +20,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, functions as F
-
-from ..functions import checksum
+from pyspark.sql import DataFrame
 
 
 def create_profile(payload: str = "numeric") -> dict:
@@ -48,19 +47,3 @@ def write_table(
         w = w.partitionBy(*partition_by)
     w.parquet(path)
 
-
-def write_tiles_with_checksums(
-    tiles: DataFrame,
-    path: str,
-    keys: list[str],
-    hash_cols: list[str],
-    overwrite: bool = False,
-) -> DataFrame:
-    """Write per-tile outputs plus a sidecar checksum table; returns the
-    checksum DataFrame (the ortho-writer + mask analogue)."""
-    write_table(tiles, path, partition_by=keys[:1], overwrite=overwrite)
-    sums = checksum.tile_checksum(
-        tiles, keys, checksum.row_hash_fast(*[F.col(c) for c in hash_cols])
-    )
-    write_table(sums, path + "_checksums", overwrite=overwrite)
-    return sums

@@ -1,7 +1,8 @@
 """Test-data builders and single-process twins that only the tests call:
 the TIFF/EXIF fixture writer, the exterior-parameter and GCP GeoJSON
-writers, the fixture footprint polygons, and the batched pixel-ray DEM
-intersection."""
+writers, the fixture footprint polygons, the batched pixel-ray DEM
+intersection, the pandas twin of the synthetic pages generator and the
+grid-cell centers."""
 
 from __future__ import annotations
 
@@ -11,7 +12,9 @@ import struct
 from pathlib import Path
 
 import numpy as np
+import pandas as pd
 
+from orthority_spark import config, grid
 from orthority_spark.geom.dem import DEM_OFFSET, DEM_RES, ray_march_params
 from orthority_spark.sources.exif import (
     TAG_EXIF_IFD,
@@ -36,6 +39,7 @@ from orthority_spark.sources.exif import (
     TAG_XMP,
 )
 from orthority_spark.sources.footprints import fixture_models, world_footprint
+from orthority_spark.sources.pages import _ADD2, _MUL1, _MUL2, LANGS
 from orthority_spark.sources.param_io import ParamFileError
 
 
@@ -255,3 +259,49 @@ def ray_dem_intersect(
     dirs = model.R @ model._pixel_to_camera(ji)
     origins = np.broadcast_to(model.T, (3, ji.shape[1]))
     return ray_march_params(dirs, origins, dem_fn, min_z, max_z, step)
+
+
+def synthetic_pages_pandas(n: int) -> pd.DataFrame:
+    """Single-process oracle twin of
+    :func:`orthority_spark.sources.pages.synthetic_pages`."""
+    i = np.arange(n, dtype="int64")
+    u1 = (i * _MUL1) % 1000000
+    u2 = (i * _MUL2 + _ADD2) % 1000000
+    base_lat = config.LAT_MIN_UDEG + (u1 * config.LAT_SPAN_UDEG) // 1000000
+    base_lon = config.LON_MIN_UDEG + (u2 * config.LON_SPAN_UDEG) // 1000000
+    mega = (i % 5) == 1
+    outside = (i % 5) == 4
+    lat_udeg = np.where(mega, config.MEGA_LAT_UDEG, base_lat)
+    lon_udeg = np.where(
+        mega,
+        config.MEGA_LON_UDEG,
+        np.where(outside, base_lon + config.OUTSIDE_SHIFT_UDEG, base_lon),
+    )
+    lat = lat_udeg / 1e6
+    lon = lon_udeg / 1e6
+    lang = np.array(LANGS)[i % 6]
+    text = [
+        f"Deterministic page {k} mentions location geo:{la:.6f},{lo:.6f} in "
+        f"{lg} words w{(k * 31) % 997} w{(k * 17) % 991}."
+        for k, la, lo, lg in zip(i, lat, lon, lang)
+    ]
+    return pd.DataFrame(
+        {
+            "url": [f"https://site{k % 1000}.example/p/{k}" for k in i],
+            "warc_ts": pd.to_datetime(1735689600 + i * 137, unit="s"),
+            "html": [f"<html><body>{t}</body></html>".encode() for t in text],
+            "text": text,
+            "lang": lang,
+            "lat": lat,
+            "lon": lon,
+        }
+    )
+
+
+def cell_center(cell) -> tuple[np.ndarray, np.ndarray]:
+    """cell ids -> (lat, lon) of cell centers."""
+    res, ix, iy = grid.cell_decode(cell)
+    n = (2.0**res.astype("float64"))
+    lon = (ix.astype("float64") + 0.5) / n * 360.0 - 180.0
+    lat = (iy.astype("float64") + 0.5) / n * 180.0 - 90.0
+    return lat, lon

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from orthority_spark.geom.dem import DEM_OFFSET, dem_sinusoid
 from orthority_spark.operators.fit import refine_per_image
+from orthority_spark.operators import raster_join
 from orthority_spark.operators.raster_join import sample_dem_z
 from orthority_spark.sources.dem_tiles import fixture_dem
 
@@ -87,7 +88,7 @@ def test_sample_dem_z_drops_out_of_extent(spark):
     assert got == {"in"}
 
 
-def test_sample_dem_z_drops_points_in_a_missing_tile(spark):
+def test_sample_dem_z_drops_points_in_a_missing_tile(spark, monkeypatch):
     """A point inside the DEM grid whose tile the band does not hold is
     dropped by both plans (the broadcast gather once raised KeyError in
     its worker while the cogroup plan dropped the point)."""
@@ -97,7 +98,8 @@ def test_sample_dem_z_drops_points_in_a_missing_tile(spark):
         "url string, px double, py double",
     )
     for max_bytes in (256 << 20, 0):
-        got = sample_dem_z(pts, dem, band=1, max_broadcast_bytes=max_bytes)
+        monkeypatch.setattr(raster_join, "DEM_BROADCAST_MAX_BYTES", max_bytes)
+        got = sample_dem_z(pts, dem, band=1)
         assert {r.url for r in got.collect()} == {"held"}, max_bytes
 
 
@@ -355,9 +357,9 @@ def test_fit_exterior_per_image_spark(spark):
         assert got.rms_px < 1e-4
 
 
-def test_sample_dem_z_broadcast_equals_cogroup(spark):
+def test_sample_dem_z_broadcast_equals_cogroup(spark, monkeypatch):
     """r6: the broadcast-gather default and the cogroup fallback (forced
-    via max_broadcast_bytes=0) must return the identical point->z map,
+    by a 0-byte broadcast guard) must return the identical point->z map,
     bit for bit — including border-stencil fallback and out-of-extent
     drops. Both drop NaN, infinite and NULL points (Spark's floor maps
     NaN to 0, which once put a NaN point on tile 0 in the cogroup
@@ -380,12 +382,8 @@ def test_sample_dem_z_broadcast_equals_cogroup(spark):
         + bad,
         "url string, px double, py double")
     fast = {r.url: r.z for r in sample_dem_z(pts, dem, band=1).collect()}
-    slow = {
-        r.url: r.z
-        for r in sample_dem_z(
-            pts, dem, band=1, max_broadcast_bytes=0
-        ).collect()
-    }
+    monkeypatch.setattr(raster_join, "DEM_BROADCAST_MAX_BYTES", 0)
+    slow = {r.url: r.z for r in sample_dem_z(pts, dem, band=1).collect()}
     assert fast == slow
     assert len(fast) > 100  # in-extent points actually sampled
     assert not set(fast) & {u for u, _, _ in bad}

@@ -2,8 +2,9 @@
 never imports them, no gate holds an executor-side kernel, and the gates
 that run Python on executors work where ``gates`` is not importable — as
 on a cluster, where only the orthority_spark zip ships to the Python
-workers. Every public engine function or class is reached from a
-command, gate, benchmark or script, not only from the tests."""
+workers. Every public engine function, class or module-level constant
+is reached from a command, gate, benchmark or script, not only from the
+tests."""
 
 from __future__ import annotations
 
@@ -25,13 +26,19 @@ EXECUTOR_GATES = ["remap_pixels", "remap_pixels_cubic", "undistort_pixels",
 #: contract, the gates, the benchmark and the scripts
 ENTRY_POINTS = ("orthority_spark/cli.py", "orthority_spark/__main__.py",
                 "__spark_entry__.py", "gates", "perfbench", "scripts")
-#: public engine functions and classes that only the tests reach. This set
-#: may only shrink: route a command or gate through a name, move it into
-#: tests/, or delete it.
+#: public engine names that only the tests reach. This set may only
+#: shrink: route a command or gate through a name, move it into tests/, or
+#: delete it. Each one left ports a reference rule that only a new command
+#: option could reach:
 TEST_ONLY = {
-    "cell_center", "decode_html_text", "exif_ext_param", "exif_int_param",
-    "frame_sample", "mean_latlon_zone", "parent_cell", "probe_z_transform",
-    "resize_features", "synthetic_pages_pandas", "write_tiles_with_checksums",
+    # camera interior parameters read from EXIF/XMP tags (exif.py:101-363)
+    "exif_int_param",
+    # camera exterior pose from EXIF GPS/gimbal tags (param_io.py:195-203)
+    "exif_ext_param",
+    # two-point vertical-datum probe of a job's z transform (ortho.py:144-151)
+    "probe_z_transform",
+    # the auto-UTM-zone rule from mean lat/lon (common.py:156-161)
+    "mean_latlon_zone",
 }
 
 
@@ -107,9 +114,10 @@ def _used_names(node: ast.AST) -> set[str]:
 
 
 def _unreached_engine_names() -> set[str]:
-    """Public top-level functions and classes of ``orthority_spark/`` that
-    no entry point reaches. Names resolve by identifier alone, so a name
-    reached in one module counts as reached in all."""
+    """Public top-level functions, classes and constants of
+    ``orthority_spark/`` that no entry point reaches. Names resolve by
+    identifier alone, so a name reached in one module counts as reached
+    in all."""
     entries = [Path(ROOT, e) for e in ENTRY_POINTS]
     files = [f for e in entries for f in ([e] if e.is_file() else e.rglob("*.py"))]
     seeds = set().union(*(_used_names(ast.parse(f.read_text())) for f in files))
@@ -129,6 +137,8 @@ def _unreached_engine_names() -> set[str]:
                     for n in ast.walk(t):
                         if isinstance(n, ast.Name):
                             defs.setdefault(n.id, []).append(node)
+                            if not n.id.startswith("_"):  # dunders too
+                                public.add(n.id)
             elif not isinstance(node, (ast.Import, ast.ImportFrom)):
                 seeds |= _used_names(node)  # runs at import time
     reached, todo = set(), list(seeds)
@@ -142,7 +152,7 @@ def _unreached_engine_names() -> set[str]:
 
 
 def test_engine_ships_only_reached_code():
-    """An engine function that only tests call is either a test twin (it
+    """An engine name that only tests use is either a test twin (it
     belongs in tests/) or dead code; TEST_ONLY lists the ones left."""
     unreached = _unreached_engine_names()
     assert not unreached - TEST_ONLY, "reached only from tests: " + ", ".join(

@@ -1,5 +1,5 @@
 """Tiling-grid tests: numpy twin == Spark Column == DuckDB SQL, plus
-parent/k-ring/covering semantics."""
+center/k-ring/covering semantics."""
 
 from __future__ import annotations
 
@@ -8,6 +8,8 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from orthority_spark import grid
+
+from builders import cell_center
 
 RNG = np.random.RandomState(7)
 LAT = RNG.uniform(-89.9, 89.9, 500)
@@ -24,15 +26,9 @@ def test_cell_roundtrip_decode():
 
 def test_cell_center_within_cell():
     cells = grid.cell_index(LAT, LON, 15)
-    clat, clon = grid.cell_center(cells)
+    clat, clon = cell_center(cells)
     assert np.abs(clat - LAT).max() < 180.0 / 2**15
     assert np.abs(clon - LON).max() < 360.0 / 2**15
-
-
-def test_parent_contains_child():
-    cells = grid.cell_index(LAT, LON, 20)
-    parents = grid.parent_cell(cells, 16)
-    np.testing.assert_array_equal(parents, grid.cell_index(LAT, LON, 16))
 
 
 def test_k_ring_counts_and_membership():

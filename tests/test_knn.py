@@ -8,7 +8,7 @@ import pytest
 
 from orthority_spark import grid
 from orthority_spark.functions.geotag import with_geotag
-from orthority_spark.operators import tile_join
+from orthority_spark.operators import knn, tile_join
 from orthority_spark.operators.knn import _ring_cells, knn_bruteforce, knn_kring
 from orthority_spark.sources import footprints as fp
 from orthority_spark.sources.pages import synthetic_pages
@@ -59,7 +59,24 @@ def test_empty_catalog_returns_no_rows(spark, inputs):
         assert fields(none) == fields(full)
 
 
-def test_kring_broadcast_guard_withholds_hint(spark, inputs):
+def test_window_plans_equal_literal_plans(spark, inputs, monkeypatch):
+    """With the literal ceiling below the 4-footprint catalog, both
+    operators take their window plans (knn_bruteforce's broadcast cross
+    join, knn_kring's broadcast expanded index) and return the literal
+    plans' rows."""
+    pages, cells, summary = inputs
+    literal = (_rows(knn_bruteforce(pages, summary, k=2)),
+               _rows(knn_kring(pages, cells, summary, k=2, ring=40)))
+    monkeypatch.setattr(knn, "MAX_LITERAL_CATALOG", 3)
+    brute, ring = (knn_bruteforce(pages, summary, k=2),
+                   knn_kring(pages, cells, summary, k=2, ring=40))
+    for df in (brute, ring):
+        assert "Window" in df._jdf.queryExecution().executedPlan().toString()
+    assert (_rows(brute), _rows(ring)) == literal
+    assert len(literal[0]) > 0
+
+
+def test_kring_broadcast_guard_withholds_hint(spark, inputs, monkeypatch):
     """When the (2*ring+1)^2 expansion estimate exceeds the broadcast
     guard, knn_kring must warn, withhold the explicit broadcast hint
     (Spark plans the equi-join itself), and return identical results."""
@@ -67,11 +84,10 @@ def test_kring_broadcast_guard_withholds_hint(spark, inputs):
 
     pages, cells, summary = inputs
     want = _rows(knn_kring(pages, cells, summary, k=2, ring=40))
+    monkeypatch.setattr(knn, "KRING_BROADCAST_MAX_ROWS", 10)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        got = _rows(
-            knn_kring(pages, cells, summary, k=2, ring=40, max_broadcast_rows=10)
-        )
+        got = _rows(knn_kring(pages, cells, summary, k=2, ring=40))
     assert any("broadcast guard" in str(x.message) for x in w)
     assert got == want
 

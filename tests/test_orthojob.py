@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import pytest
+
+from orthority_spark.functions.geotag import with_geotag
 from orthority_spark.plans.job import OrthoJob
 from orthority_spark.sources.pages import synthetic_pages
 
@@ -33,3 +36,14 @@ def test_orthojob_salted_strategy_same_tiles(spark):
     t_s = {r.cell: (r.n_rows, r.checksum)
            for r in OrthoJob(spark, strategy="salted").tiles(pages).collect()}
     assert t_b == t_s and len(t_b) > 50
+
+
+def test_unknown_option_values_raise(spark):
+    """A misspelt geotag token or join strategy raises instead of running
+    another plan (the integer-token parse, which gives every float-token
+    page a NULL lat/lon, or the broadcast join)."""
+    pages = synthetic_pages(spark, 10)
+    with pytest.raises(ValueError, match="token"):
+        with_geotag(pages, token="flaot")
+    with pytest.raises(ValueError, match="strategy"):
+        OrthoJob(spark, strategy="salt")

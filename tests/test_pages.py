@@ -8,7 +8,13 @@ import hashlib
 import numpy as np
 
 from orthority_spark.functions.geotag import with_geotag
-from orthority_spark.sources.pages import synthetic_pages, synthetic_pages_pandas
+from orthority_spark.sources.pages import synthetic_pages
+
+from builders import synthetic_pages_pandas
+
+# the two-group geotag regexes the single-group parsers replaced
+GEO_FLOAT_RE = r"geo:(-?\d+\.\d+),(-?\d+\.\d+)"
+GEO_INT_RE = r"geo:(-?\d+),(-?\d+)"
 
 N = 2000
 
@@ -61,9 +67,7 @@ def test_geotag_single_regex_bit_identical(spark):
     per-group two-regexp extraction bit-for-bit on both token forms."""
     from pyspark.sql import functions as F
 
-    from orthority_spark.functions.geotag import (
-        GEO_FLOAT_RE, GEO_INT_RE, geotag_float, geotag_udeg,
-    )
+    from orthority_spark.functions.geotag import geotag_float, geotag_udeg
     from orthority_spark.sources.pages import synthetic_pages
 
     sp = synthetic_pages(spark, 5000).select("url", "text")

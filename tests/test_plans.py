@@ -68,7 +68,7 @@ def test_salted_join_partitions_by_cell_and_salt(spark):
     plan = _plan(
         tile_join.pip_join_salted(
             pages_cells(spark, SF),
-            fp.footprint_cells_df(spark, recs),
+            fp.footprint_catalog_flat_df(spark, recs),
             fp.footprint_edges_df(spark, recs),
         )
     )
@@ -264,11 +264,11 @@ def test_sample_dem_z_follows_the_dem_object(spark):
     assert z(full) == z_full
 
 
-def test_sample_dem_z_cogroup_nodata_is_null(spark):
-    """The cogroup plan (forced by ``max_broadcast_bytes=0``) gives a
+def test_sample_dem_z_cogroup_nodata_is_null(spark, monkeypatch):
+    """The cogroup plan (forced by a 0-byte broadcast guard) gives a
     point in the partial DEM's NaN triangle a NULL z, as the broadcast
     plan does, and a valid point the broadcast plan's z."""
-    from orthority_spark.operators.raster_join import sample_dem_z
+    from orthority_spark.operators import raster_join
     from orthority_spark.sources.dem_tiles import fixture_dem
 
     pts = spark.createDataFrame(
@@ -276,10 +276,13 @@ def test_sample_dem_z_cogroup_nodata_is_null(spark):
         "url string, px double, py double",
     )
     partial = fixture_dem(spark, partial=True)
-    broadcast, cogroup = (
-        {r.url: r.z for r in sample_dem_z(pts, partial, band=1,
-                                          max_broadcast_bytes=b).collect()}
-        for b in (256 << 20, 0)
-    )
+
+    def z():
+        return {r.url: r.z for r in
+                raster_join.sample_dem_z(pts, partial, band=1).collect()}
+
+    broadcast = z()
+    monkeypatch.setattr(raster_join, "DEM_BROADCAST_MAX_BYTES", 0)
+    cogroup = z()
     assert cogroup == {"nan_corner": None, "valid": broadcast["valid"]}
     assert broadcast["nan_corner"] is None and broadcast["valid"] is not None

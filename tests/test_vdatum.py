@@ -6,7 +6,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from orthority_spark.geom.vdatum import IDENTITY, ZTransform, probe_z_transform
+from orthority_spark.geom.vdatum import ZTransform, probe_z_transform
 from orthority_spark.sources import footprints as fp
 
 
@@ -50,7 +50,7 @@ def test_egm_offset_job_matches_shifted_linear_frame_job():
 
 def test_identity_transform_is_noop():
     models = fp.fixture_models()
-    got = fp.records_for_models(models, z=825.0, ztrans=IDENTITY)
+    got = fp.records_for_models(models, z=825.0, ztrans=ZTransform())
     want = fp.records_for_models(models, z=825.0)
     assert got["summary"] == want["summary"]
 

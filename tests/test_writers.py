@@ -1,15 +1,10 @@
-"""Sink guards + checksum sidecars (S1/S16/S19 semantics)."""
+"""Sink guards and write profiles (S1/S16 semantics)."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from orthority_spark.sources.writers import (
-    create_profile,
-    write_table,
-    write_tiles_with_checksums,
-)
+from orthority_spark.sources.writers import create_profile, write_table
 
 
 def test_overwrite_guard(spark, tmp_path):
@@ -25,17 +20,3 @@ def test_overwrite_guard(spark, tmp_path):
 def test_profile_by_payload():
     assert create_profile("binary")["compression"] == "zstd"
     assert create_profile()["compression"] == "snappy"
-
-
-def test_tiles_with_checksums_roundtrip(spark, tmp_path):
-    tiles = spark.range(100).select(
-        (F.col("id") % 5).alias("cell"), F.col("id").alias("v")
-    )
-    p = str(tmp_path / "tiles")
-    sums = write_tiles_with_checksums(
-        tiles, p, keys=["cell"], hash_cols=["cell", "v"]
-    )
-    back = spark.read.parquet(p)
-    assert back.count() == 100
-    stored = spark.read.parquet(p + "_checksums")
-    assert {tuple(r) for r in stored.collect()} == {tuple(r) for r in sums.collect()}
