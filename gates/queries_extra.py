@@ -104,10 +104,10 @@ def _rm_remap(spark: SparkSession, interp: str) -> DataFrame:
         ii = K[1, 1] * (cy / cz) + K[1, 2]
         return jj, ii
 
-    tiles = tile_windows(spark, _RM_W, _RM_H, tile=64)
+    tiles = tile_windows(spark, _RM_W, _RM_H)
     return _rm_pixels_df(remap_tiles(
         tiles, model, src_array(), TRANSFORM, dem_plane,
-        interp=interp, dilate=1, project_fn=proj,
+        interp=interp, project_fn=proj,
     ))
 
 
@@ -119,7 +119,8 @@ def _rm_src_sql(i: str, j: str) -> str:
 
 
 # the floor cell of each projected pixel, and the remap oracles' shared
-# tail: drop every pixel within 1 px of an invalid one (dilate=1)
+# tail: drop every pixel within 1 px of an invalid one (the remap's
+# one-pixel nodata dilation)
 _RM_ST = """st AS (
   SELECT r, c, jj, ii,
          CAST(FLOOR(jj) AS BIGINT) AS j0, CAST(FLOOR(ii) AS BIGINT) AS i0
@@ -291,10 +292,10 @@ def q_undistort_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # identity pixel 'world': x = 1*(c+0.5) + 0*(r+0.5) - 0.5 = c exactly
     transform = (1.0, 0.0, -0.5, 0.0, 1.0, -0.5)
-    tiles = tile_windows(spark, w, h, tile=64)
+    tiles = tile_windows(spark, w, h)
     out = remap_tiles(
         tiles, m, src_array(), transform, lambda x, y: np.zeros_like(x),
-        dilate=1, project_fn=proj,
+        project_fn=proj,
     )
     return _rm_pixels_df(out, w)
 

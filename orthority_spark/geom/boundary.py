@@ -39,11 +39,10 @@ def pixel_boundary(im_size: tuple[int, int], num_pts: int | None = None) -> np.n
     return np.vstack(segs).T
 
 
-def world_footprint(model, z: float, num_pts: int | None = None) -> np.ndarray:
-    """(2,N) world (x,y) footprint polygon of a camera on the plane z."""
-    ji = pixel_boundary(model.im_size, num_pts)
-    xyz = model.pixel_to_world_z(ji, z)
-    return xyz[:2]
+def world_footprint(model, z: float) -> np.ndarray:
+    """(2,8) world (x,y) footprint polygon of a camera on the plane z:
+    its :func:`pixel_boundary` projected onto the plane."""
+    return model.pixel_to_world_z(pixel_boundary(model.im_size), z)[:2]
 
 
 def polygon_area(xy: np.ndarray) -> float:

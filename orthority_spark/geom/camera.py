@@ -25,6 +25,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
+from .boundary import pixel_boundary
 from .rotation import opk_to_rotation, PATB_TO_CV
 
 
@@ -214,73 +215,10 @@ class FrameModel:
         scales = (z - self.T[2, 0]) / xyz_r[2]
         return xyz_r * scales + self.T
 
-    def distort_pixel(self, ji: np.ndarray, clip: bool = False) -> np.ndarray:
-        """Pixel -> distorted pixel warp (P12, camera.py:882-895)."""
-        x = (np.asarray(ji, dtype="float64")[0] - self.K[0, 2]) / self.K[0, 0]
-        y = (ji[1] - self.K[1, 2]) / self.K[1, 1]
-        out = self._camera_to_pixel(np.vstack([x, y, np.ones_like(x)]))
-        if clip:
-            out = np.clip(
-                out.T, a_min=(0, 0), a_max=np.array(self.im_size) - 1
-            ).T
-        return out
-
-    def undistort_pixel(self, ji: np.ndarray, clip: bool = False) -> np.ndarray:
-        """Distorted pixel -> pixel warp (P12 inverse, camera.py:897-906)."""
-        xyz_ = self._pixel_to_camera(np.asarray(ji, dtype="float64"))
-        out = np.vstack(
-            [
-                self.K[0, 0] * xyz_[0] + self.K[0, 2],
-                self.K[1, 1] * xyz_[1] + self.K[1, 2],
-            ]
-        )
-        if clip:
-            out = np.clip(
-                out.T, a_min=(0, 0), a_max=np.array(self.im_size) - 1
-            ).T
-        return out
-
-    def undistort_intrinsic(self, alpha: float) -> np.ndarray:
-        """New intrinsic matrix for an undistorted same-size image (S4).
-
-        alpha=0 keeps the largest all-valid portion; alpha=1 includes all
-        source pixels. Pure-numpy re-derivation of the inner/outer
-        rectangle method (camera.py:736-787, which mirrors
-        cv2.getOptimalNewCameraMatrix).
-        """
-        w, h = self.im_size[0] - 1, self.im_size[1] - 1
-        n = 9
-        sj, si = np.meshgrid(np.arange(n), np.arange(n))
-        ji = np.vstack([sj.ravel() * w / (n - 1), si.ravel() * h / (n - 1)])
-        xy = self._pixel_to_camera(ji)[:2]
-        # outer rect spans all undistorted points; inner rect is the
-        # largest axis-aligned rect inside (per-edge extrema)
-        outer_min = xy.min(axis=1)
-        outer_max = xy.max(axis=1)
-        grid = xy.reshape(2, n, n)
-        inner_min = np.array([grid[0, :, 0].max(), grid[1, 0, :].max()])
-        inner_max = np.array([grid[0, :, -1].min(), grid[1, -1, :].min()])
-        # interpolate FOCAL/CENTER between the alpha=0 and alpha=1
-        # solutions (the reference/cv2 convention, camera.py:771-777) —
-        # interpolating the rectangle bounds instead and inverting gives
-        # a different K for 0 < alpha < 1 (harmonic vs arithmetic mean)
-        im = np.array(self.im_size, dtype="float64")
-        f0 = (im - 1) / (inner_max - inner_min)
-        c0 = -f0 * inner_min
-        f1 = (im - 1) / (outer_max - outer_min)
-        c1 = -f1 * outer_min
-        f = f0 * (1 - alpha) + f1 * alpha
-        c = c0 * (1 - alpha) + c1 * alpha
-        return np.array([[f[0], 0.0, c[0]], [0.0, f[1], c[1]], [0.0, 0.0, 1.0]])
-
     def horizon_fov(self) -> bool:
         """True if the FOV includes / is above the horizon (abort predicate,
         camera.py:722-734)."""
-        w, h = self.im_size[0] - 1, self.im_size[1] - 1
-        ji = np.array(
-            [[0, 0], [w / 2, 0], [w, 0], [w, h / 2], [w, h], [w / 2, h], [0, h], [0, h / 2]]
-        ).T
-        xyz_r = self.R @ self._pixel_to_camera(ji)
+        xyz_r = self.R @ self._pixel_to_camera(pixel_boundary(self.im_size))
         return bool(np.any(xyz_r[2] >= 0))
 
 
@@ -338,14 +276,15 @@ class RpcModel:
             [j * self.samp_scale + self.samp_off, i * self.line_scale + self.line_off]
         )
 
-    def pixel_to_world_z(self, ji: np.ndarray, z, n_iter: int = 30) -> np.ndarray:
+    def pixel_to_world_z(self, ji: np.ndarray, z) -> np.ndarray:
         """Inverse RPC by damped Gauss–Newton on the forward model.
 
         The reference calls GDAL's iterative RPCTransformer
         (camera.py:491-511); this is a numpy re-derivation: start at the
         offset point, iterate a 2x2 finite-difference Jacobian solve until
-        the reprojected pixel matches ``ji``. Round-trip accuracy is
-        pytest-asserted to <= 1e-6 of scale (tests/test_geom.py).
+        the reprojected pixel matches ``ji``, for at most 30 iterations.
+        Round-trip accuracy is pytest-asserted to <= 1e-6 of scale
+        (tests/test_geom.py).
         """
         ji = np.asarray(ji, dtype="float64")
         z = np.atleast_1d(np.asarray(z, dtype="float64")) * np.ones(ji.shape[1])
@@ -353,7 +292,7 @@ class RpcModel:
         lat = np.full(ji.shape[1], self.lat_off)
         dl = self.long_scale * 1e-6
         dp = self.lat_scale * 1e-6
-        for _ in range(n_iter):
+        for _ in range(30):
             f0 = self.world_to_pixel(np.vstack([lon, lat, z]))
             err = f0 - ji
             fx = (self.world_to_pixel(np.vstack([lon + dl, lat, z])) - f0) / dl

@@ -33,11 +33,6 @@ class ZTransform:
     def to_world(self, z: float) -> float:
         return z * self.scale + self.offset
 
-    def to_datum(self, z: float) -> float:
-        if self.scale == 0.0:
-            raise ValueError("degenerate ZTransform: scale is 0")
-        return (z - self.offset) / self.scale
-
 
 def probe_z_transform(
     datum_to_world: Callable[[float], float], z0: float = 0.0, z1: float = 1.0

@@ -40,21 +40,21 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int, np.ndarray]:
     return width, height, n_channels, feats
 
 
-def image_decode(df: DataFrame, binary_col: str = "html") -> DataFrame:
-    """binary -> typed metadata + feature vector via Arrow batches, decoded
-    by the :func:`_fake_decode` stub (the UDF signature, schema and batch
-    shape are what a real codec would keep)."""
+def image_decode(df: DataFrame) -> DataFrame:
+    """(url, html binary) -> typed metadata + feature vector via Arrow
+    batches, decoded by the :func:`_fake_decode` stub (the UDF signature,
+    schema and batch shape are what a real codec would keep)."""
 
     def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
-            for url, payload in zip(pdf["url"], pdf[binary_col]):
+            for url, payload in zip(pdf["url"], pdf["html"]):
                 w, h, c, f = _fake_decode(bytes(payload))
                 rows.append((url, w, h, c, f.tolist()))
             yield pd.DataFrame(
                 rows, columns=["url", "width", "height", "n_channels", "features"]
             )
 
-    return df.select("url", binary_col).mapInPandas(
+    return df.select("url", "html").mapInPandas(
         decode, schema=IMAGE_META_SCHEMA
     )

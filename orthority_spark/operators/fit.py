@@ -150,7 +150,7 @@ def _pose_params(R_wc: np.ndarray, t: np.ndarray, p0: np.ndarray):
 
 
 def solve_pnp(
-    int_params: dict, ji: np.ndarray, xyz: np.ndarray, n_iter: int = 200
+    int_params: dict, ji: np.ndarray, xyz: np.ndarray
 ) -> dict:
     """Exterior pose from >= 4 GCPs and known interior parameters
     (cv2.solvePnP recast, ref fit.py:299-360).
@@ -158,8 +158,9 @@ def solve_pnp(
     ``int_params``: dict(cam_type, im_size, focal_len[, sensor_size, cx,
     cy, dist]); ``ji`` (2,N) observed pixels; ``xyz`` (3,N) world points.
     Initialises from a planar homography (world z co-planar or near) and
-    refines all 6 pose parameters with Levenberg-Marquardt over the FULL
-    projection model (distortion included). Returns dict(xyz, opk, rms).
+    refines all 6 pose parameters with at most 200 Levenberg-Marquardt
+    steps over the FULL projection model (distortion included). Returns
+    dict(xyz, opk, rms).
     """
     ji = np.asarray(ji, dtype="float64")
     xyz = np.asarray(xyz, dtype="float64")
@@ -183,7 +184,7 @@ def solve_pnp(
     r = residuals(theta)
     cost = float(r @ r)
     eps = np.array([1e-7, 1e-7, 1e-7, 1e-4, 1e-4, 1e-4])
-    for _ in range(n_iter):
+    for _ in range(200):
         J = np.zeros((r.size, 6))
         for k in range(6):
             d = np.zeros(6)

@@ -34,10 +34,11 @@ lacks the zip, so that the workers import the installed pyspark, the
 same probe cost 0.23 -> 1.09 CPU-s, or 0.12 per extra task. Widening
 the stage trades that CPU for wall time.
 
-Nodata semantics follow the reference: out-of-frame pixels get nodata,
-and the nodata mask is dilated by a kernel sized from the GSD ratio
-(camera.py:1102-1115) — dilation is done inside the tile with a halo
-apron so tiling cannot change the result (SURVEY §7 hard part 5).
+Nodata semantics follow the reference: out-of-frame pixels get NaN
+nodata, and the nodata mask is dilated (camera.py:1102-1115, where the
+kernel is sized from the GSD ratio; here by ``_DILATE`` pixels) —
+dilation is done inside the tile with a halo apron so tiling cannot
+change the result (SURVEY §7 hard part 5).
 """
 
 from __future__ import annotations
@@ -47,20 +48,21 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from ..arrow_buffers import float64_array, int32_array
+from ..sources.local import local_table
 
 TILE = 64  # analogue of the reference's 512x512 blocks, scaled to fixtures
+#: nodata pixel value, and the nodata mask's dilation radius in pixels
+_NODATA = float("nan")
+_DILATE = 1
 
 
-def tile_windows(spark: SparkSession, width: int, height: int, tile: int = TILE) -> DataFrame:
-    """Enumerate tile windows covering a (width x height) output grid."""
-    # imported here: it loads pandas, which the remap kernel's workers,
-    # importing this module, do not need
-    from ..sources.local import local_table
-
+def tile_windows(spark: SparkSession, width: int, height: int) -> DataFrame:
+    """Enumerate ``TILE``-sized windows covering a (width x height)
+    output grid."""
     rows = [
-        (f"{r}:{c}", r, c, min(tile, height - r), min(tile, width - c), height, width)
-        for r in range(0, height, tile)
-        for c in range(0, width, tile)
+        (f"{r}:{c}", r, c, min(TILE, height - r), min(TILE, width - c), height, width)
+        for r in range(0, height, TILE)
+        for c in range(0, width, TILE)
     ]
     return local_table(
         spark,
@@ -232,7 +234,7 @@ def _dilate(mask: np.ndarray, k: int) -> np.ndarray:
     return out
 
 
-def _render(project, src, transform, r0, r1, c0, c1, dem_fn, nodata, gather, dilate):
+def _render(project, src, transform, r0, r1, c0, c1, dem_fn, gather):
     """Remap output rows [r0, r1) x cols [c0, c1) and mask the dilated
     nodata pixels; ``project(x, y, z) -> (jj, ii)`` on flat arrays."""
     a, b, c, d, e, f = transform
@@ -243,10 +245,10 @@ def _render(project, src, transform, r0, r1, c0, c1, dem_fn, nodata, gather, dil
     y = d * cols + e * rows + f
     z = dem_fn(x, y)
     jj, ii = project(x.ravel(), y.ravel(), z.ravel())
-    v, valid = gather(src, jj, ii, nodata)
+    v, valid = gather(src, jj, ii, _NODATA)
     shape = (r1 - r0, c1 - c0)
-    mask = _dilate(~valid.reshape(shape), dilate)
-    return np.where(mask, nodata, v.reshape(shape))
+    mask = _dilate(~valid.reshape(shape), _DILATE)
+    return np.where(mask, _NODATA, v.reshape(shape))
 
 
 def _camera_project(model):
@@ -264,15 +266,13 @@ def remap_oracle(
     width: int,
     height: int,
     dem_fn,
-    nodata: float = float("nan"),
     interp: str = "bilinear",
-    dilate: int = 1,
 ) -> np.ndarray:
     """Single-process whole-image remap (the oracle the tiled operator must
     match bit-for-bit — the reference's per_band equivalence recast)."""
     return _render(
         _camera_project(model), src, transform, 0, height, 0, width,
-        dem_fn, nodata, _gather_fn(interp), dilate,
+        dem_fn, _gather_fn(interp),
     )
 
 
@@ -282,9 +282,7 @@ def remap_tiles(
     src: np.ndarray,
     transform: tuple,
     dem_fn,
-    nodata: float = float("nan"),
     interp: str = "bilinear",
-    dilate: int = 1,
     project_fn=None,
 ) -> DataFrame:
     """Tiled distributed remap returning (tile_id, row_off, col_off, block).
@@ -294,11 +292,11 @@ def remap_tiles(
     float64 buffer holding every tile's cropped block (row-major), with
     each NaN pixel — nodata included — as a NULL element.
 
-    Each tile renders with a ``dilate``-pixel halo apron and crops it off,
+    Each tile renders with a ``_DILATE``-pixel halo apron and crops it off,
     so the dilated nodata mask is identical to the whole-image oracle's
     regardless of tiling (halo exchange without any shuffle — the apron is
     recomputed, not communicated; compute is cheaper than network at this
-    kernel's arithmetic intensity). The apron sizes from ``dilate`` only:
+    kernel's arithmetic intensity). The apron sizes from ``_DILATE`` only:
     the gather stencil (up to 8x8 for lanczos) reads the broadcast SOURCE
     image, which every task holds whole, so interpolation order never
     widens the output-grid halo.
@@ -324,11 +322,11 @@ def remap_tiles(
                 # halo apron clamped to the output image: the whole-image
                 # oracle has no pixels (hence no dilation sources) beyond
                 # the image border
-                r0, c0 = max(ro - dilate, 0), max(co - dilate, 0)
-                r1 = min(ro + h0 + dilate, img_h)
-                c1 = min(co + w0 + dilate, img_w)
+                r0, c0 = max(ro - _DILATE, 0), max(co - _DILATE, 0)
+                r1 = min(ro + h0 + _DILATE, img_h)
+                c1 = min(co + w0 + _DILATE, img_w)
                 block = _render(project, src, transform, r0, r1, c0, c1,
-                                dem_fn, nodata, gather, dilate)
+                                dem_fn, gather)
                 vals[offsets[k]:offsets[k + 1]].reshape(h0, w0)[...] = (
                     block[ro - r0:ro - r0 + h0, co - c0:co - c0 + w0]
                 )

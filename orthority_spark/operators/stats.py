@@ -14,7 +14,7 @@ we express it with built-in ``count/avg/covar_samp`` so Catalyst plans
 map-side partials automatically, and verify partition-count invariance to
 1e-6 (the reference's own tolerance, test_pan_sharp.py:310-311). The
 finalize step (weights solve) is driver-side numpy on the tiny covariance
-matrix; the pass-2 transform is a vectorized Arrow UDF.
+matrix; the pass-2 transform is a ``mapInPandas`` over Arrow batches.
 """
 
 from __future__ import annotations

@@ -11,11 +11,11 @@ DataFrames:
                                                    # per-tile checksums
 
 ``process`` is resumable (ledger anti-join) and returns run metrics;
-``tiles()`` exposes the per-tile checksum table; ``metrics()`` the
-per-partition lineage. ``strategy`` names the PIP join plan: the
-caller picks ``"broadcast"`` (the default) or ``"salted"`` (skewed
-mega-cells, :func:`orthority_spark.operators.tile_join.pip_join_salted`);
-any other value raises ``ValueError``.
+``metrics()`` is the per-partition lineage. ``strategy`` names the PIP
+join plan: the caller picks ``"broadcast"`` (the default) or
+``"salted"`` (skewed mega-cells, over ``config.N_SALT`` salts,
+:func:`orthority_spark.operators.tile_join.pip_join_salted`); any other
+value raises ``ValueError``.
 """
 
 from __future__ import annotations
@@ -37,7 +37,6 @@ class OrthoJob:
         footprint_records: dict | None = None,
         res: int = config.GRID_RES,
         strategy: str = "broadcast",
-        n_salt: int = config.N_SALT,
     ):
         if strategy not in ("broadcast", "salted"):
             raise ValueError(
@@ -47,7 +46,7 @@ class OrthoJob:
         self.recs = footprint_records or fp.footprint_records(res)
         self.res = res
         self.strategy = strategy
-        self.n_salt = n_salt
+        self.n_salt = config.N_SALT
         self._catalog = fp.footprint_catalog_flat_df(spark, self.recs)
         # the PIP joins' footprint_edges argument, which they no longer read
         self._edges = fp.footprint_edges_df(spark, self.recs)
@@ -73,14 +72,6 @@ class OrthoJob:
             self.joined(pages),
             checksum.row_hash_fast(F.col("url"), F.col("filename")),
             max_partitions=max_partitions,
-        )
-
-    def tiles(self, pages: DataFrame) -> DataFrame:
-        """Per-tile (n_rows, checksum) without writing (ad-hoc queries)."""
-        return checksum.tile_checksum(
-            self.joined(pages),
-            ["cell"],
-            checksum.row_hash_fast(F.col("url"), F.col("filename")),
         )
 
     def metrics(self) -> DataFrame:

@@ -30,6 +30,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.checksum import tile_checksum
+from ..sources.local import local_table
+
 LEDGER_SCHEMA = (
     "part_key long, run_id string, input_fingerprint long, n_rows long, "
     "checksum long, wall_ms long, finished_at double"
@@ -73,7 +76,8 @@ class LedgerJob:
     def write_meta(self, meta: dict) -> None:
         """Persist job metadata once (string key/value rows — parquet so
         it rides the same Hadoop FS as the ledger on any store)."""
-        self.spark.createDataFrame(
+        local_table(
+            self.spark,
             [(str(k), str(v)) for k, v in meta.items()],
             "key string, value string",
         ).coalesce(1).write.mode("errorifexists").parquet(
@@ -83,7 +87,7 @@ class LedgerJob:
     # -- ledger ------------------------------------------------------------
     def ledger(self) -> DataFrame:
         if not self._exists(self.ledger_dir):
-            return self.spark.createDataFrame([], LEDGER_SCHEMA)
+            return local_table(self.spark, [], LEDGER_SCHEMA)
         return self.spark.read.parquet(self.ledger_dir)
 
     def completed_keys(self) -> DataFrame:
@@ -162,19 +166,18 @@ class LedgerJob:
         # the re-read is partition-PRUNED to this run's keys instead of
         # scanning every row ever written; without pruning, incremental
         # runs would be O(total output), not O(this run).
-        on_disk = self.spark.createDataFrame(
-            [(k,) for k in self._disk_keys()], f"{self.part_col} long"
+        on_disk = local_table(
+            self.spark, [(k,) for k in self._disk_keys()], f"{self.part_col} long"
         )
         new_keys = on_disk.join(done, self.part_col, "left_anti")
         written = self.spark.read.parquet(self.out_dir).join(
             F.broadcast(new_keys), self.part_col, "left_semi"
         )
         ledger_new = (
-            written.withColumn("_h", hash_col)
-            .groupBy(F.col(self.part_col).cast("long").alias("part_key"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("_h").alias("checksum"),
+            tile_checksum(
+                written.withColumn("part_key", F.col(self.part_col).cast("long")),
+                ["part_key"],
+                hash_col,
             )
             .select(
                 "part_key",

@@ -68,7 +68,7 @@ def package_zip(out_path: str | None = None) -> str:
     return path
 
 
-def ensure_on_executors(spark, validate: bool = True) -> None:
+def ensure_on_executors(spark) -> None:
     """addPyFile the package zip once per SparkContext, then verify the
     package (and the Arrow-kernel dependencies) actually import inside
     the executors' Python workers.
@@ -86,18 +86,18 @@ def ensure_on_executors(spark, validate: bool = True) -> None:
         return
     sc.addPyFile(package_zip())
     setattr(sc, _SENTINEL, True)
-    if validate:
-        def _importable(it):
-            import numpy  # noqa: F401 — kernel deps must exist worker-side
-            import pyarrow  # noqa: F401
 
-            import orthority_spark  # noqa: F401 — the shipped zip must import
+    def _importable(it):
+        import numpy  # noqa: F401 — kernel deps must exist worker-side
+        import pyarrow  # noqa: F401
 
-            yield from it
+        import orthority_spark  # noqa: F401 — the shipped zip must import
 
-        n = max(2, sc.defaultParallelism)
-        (
-            spark.range(0, n, 1, n)
-            .mapInArrow(_importable, schema="id bigint")
-            .write.format("noop").mode("overwrite").save()
-        )
+        yield from it
+
+    n = max(2, sc.defaultParallelism)
+    (
+        spark.range(0, n, 1, n)
+        .mapInArrow(_importable, schema="id bigint")
+        .write.format("noop").mode("overwrite").save()
+    )

@@ -264,7 +264,9 @@ def prepared(
       (at most the broadcast guard's worth) and the mask table built
       from them;
     - ``sources.dem_tiles.fixture_dem``: the DEM table itself, rendered
-      on the driver.
+      on the driver;
+    - ``sources.scan.parallel_read``: a parquet path's natural partition
+      count, keyed by the path and its modification time.
 
     Over local tables these reads run no Spark job. A later call with
     the SAME DataFrame objects and equal ``args`` gets the stored value
@@ -276,8 +278,7 @@ def prepared(
     again, even over the same path, since nothing here can see that a
     source changed under a plan. Entries, and the broadcasts they hold,
     live until the application stops; the next entry stored under a new
-    application drops them (as ``sources.scan.parallel_read`` does). A
-    ``build`` that raises stores nothing."""
+    application drops them. A ``build`` that raises stores nothing."""
     app = spark.sparkContext.applicationId
     key = (app, name, tuple(id(f) for f in frames), args)
     hit = _PREPARED.get(key)

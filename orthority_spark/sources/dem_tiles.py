@@ -31,9 +31,10 @@ DEM_SCHEMA = (
 )
 
 
-def dem_transform(x0: float, y1: float, res: float = DEM_RES) -> tuple:
-    """UL-corner affine (a, b, c, d, e, f): x = a*col + c, y = e*row + f."""
-    return (res, 0.0, x0, 0.0, -res, y1)
+def dem_transform(x0: float, y1: float) -> tuple:
+    """UL-corner affine (a, b, c, d, e, f) at ``DEM_RES``: x = a*col + c,
+    y = e*row + f."""
+    return (DEM_RES, 0.0, x0, 0.0, -DEM_RES, y1)
 
 
 def build_dem_tiles(
@@ -43,18 +44,18 @@ def build_dem_tiles(
     n_rows: int,
     n_cols: int,
     partial: bool = False,
-    tile: int = TILE,
 ) -> DataFrame:
-    """DEM tile table covering n_rows x n_cols cells from UL corner (x0, y1),
-    rendered on the driver into a local relation. Nodata cells are float
-    NaN, not NULL (an Arrow table built from numpy keeps NaN)."""
+    """DEM tile table of ``TILE`` x ``TILE`` blocks covering n_rows x
+    n_cols cells from UL corner (x0, y1), rendered on the driver into a
+    local relation. Nodata cells are float NaN, not NULL (an Arrow table
+    built from numpy keeps NaN)."""
     transform = dem_transform(x0, y1)
     a, _, c0, _, e, f0 = transform
     meta = [
-        (band, r, c, min(tile, n_rows - r), min(tile, n_cols - c))
+        (band, r, c, min(TILE, n_rows - r), min(TILE, n_cols - c))
         for band in (1, 2)
-        for r in range(0, n_rows, tile)
-        for c in range(0, n_cols, tile)
+        for r in range(0, n_rows, TILE)
+        for c in range(0, n_cols, TILE)
     ]
     blocks = []
     for band, row_off, col_off, height, width in meta:

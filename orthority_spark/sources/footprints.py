@@ -107,7 +107,16 @@ def records_for_models(
     ``ztrans``: optional :class:`orthority_spark.geom.vdatum.ZTransform`
     when ``z`` is a vertical-datum height rather than world z (the
     reference's per-job z_scale probe, ortho.py:144-151) — applied ONCE
-    here on the driver; the broadcast catalog downstream is unchanged."""
+    here on the driver; the broadcast catalog downstream is unchanged.
+
+    Raises ``ValueError`` naming the image when a camera's field of view
+    includes the horizon: its footprint on a plane is unbounded (the
+    reference's abort, camera.py:722-734)."""
+    for name, m in models.items():
+        if m.horizon_fov():
+            raise ValueError(
+                f"{name}: the camera's field of view includes the horizon, "
+                "so its ground footprint is unbounded")
     if ztrans is not None:
         z = ztrans.to_world(z)
     polys = {name: world_footprint(m, z) for name, m in models.items()}
@@ -223,12 +232,11 @@ def fixture_rpc_model():
     )
 
 
-def rpc_footprint_records(res: int = config.GRID_RES, name: str = "rpc_0000") -> dict:
-    """Catalog records (edges/cells/polygon) for the RPC footprint at the
-    ground plane z = DEM_OFFSET, in world-metre coordinates."""
-    from ..geom.boundary import pixel_boundary, polygon_bbox, polygon_edges
-    from .. import grid as _grid
-
+def rpc_footprint_records() -> dict:
+    """Catalog records (edges/cells/polygon) for the RPC footprint
+    ``rpc_0000`` at the ground plane z = DEM_OFFSET, in world-metre
+    coordinates, covered at ``config.GRID_RES``."""
+    name = "rpc_0000"
     model = fixture_rpc_model()
     ji = pixel_boundary(model.im_size)
     lonlat = model.pixel_to_world_z(ji, DEM_OFFSET)
@@ -247,8 +255,8 @@ def rpc_footprint_records(res: int = config.GRID_RES, name: str = "rpc_0000") ->
     lon1, lat1 = world_to_lonlat(xmax, ymax)
     cells = [
         (name, int(c))
-        for c in _grid.cells_cover_bbox(
-            float(lon0), float(lat0), float(lon1), float(lat1), res
+        for c in grid.cells_cover_bbox(
+            float(lon0), float(lat0), float(lon1), float(lat1), config.GRID_RES
         )
     ]
     return {"edges": edges, "cells": cells, "polygons": {name: poly},

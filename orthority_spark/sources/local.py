@@ -4,7 +4,7 @@
 Python RDD (pickle -> Python worker -> ``applySchemaToPythonRDD``), so
 every session pays a Python-worker round-trip just to build a
 few-hundred-row broadcast side, and the plan carries a
-``Scan ExistingRDD`` node. Building the same rows via pandas + Arrow
+``Scan ExistingRDD`` node. Building the same rows as an Arrow table
 yields a plain ``LocalRelation`` (``LocalTableScan`` in the physical
 plan): no Python worker at broadcast-build time, measured ~2.4x faster
 session-cold build (0.14 s vs 0.33 s for the 554-row flat footprint
@@ -19,8 +19,9 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 
@@ -30,27 +31,13 @@ def local_table(
     """Build a small local DataFrame as an Arrow-backed LocalRelation.
 
     ``schema`` is a DDL string or StructType; column names come from it.
-    Values must already match the declared types (the same contract as
-    ``createDataFrame(rows, ddl)`` for NaN-free input — this is a
-    drop-in replacement for that call shape, minus the Python-RDD scan).
-
-    One deliberate difference from the RDD path: Arrow's pandas
-    conversion reads float NaN as MISSING (SQL NULL), while
-    ``createDataFrame(rows, ddl)`` keeps it as NaN — and this engine's
-    oracle gates are NaN-vs-NULL exact. No builder routed through here
-    produces NaN; rather than silently change row semantics, a NaN in
-    the input fails loudly.
+    Values must already match the declared types: this is a drop-in
+    replacement for ``createDataFrame(rows, ddl)``, minus the Python-RDD
+    scan. As there, a float NaN stays NaN and None is SQL NULL: the
+    Arrow table is built from the Python values, not through pandas,
+    which would read NaN as missing.
     """
-    rows = list(rows)
-    for r in rows:
-        for v in r:
-            if isinstance(v, float) and v != v:
-                raise ValueError(
-                    "local_table: float NaN would silently become SQL "
-                    "NULL under the Arrow path (NaN-vs-NULL semantics "
-                    "differ from createDataFrame(rows, ddl)); use "
-                    "spark.createDataFrame for NaN-bearing tables"
-                )
     st = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
-    pdf = pd.DataFrame(rows, columns=st.names)
-    return spark.createDataFrame(pdf, schema=st)
+    table = pa.Table.from_pylist(
+        [dict(zip(st.names, r)) for r in rows], schema=to_arrow_schema(st))
+    return spark.createDataFrame(table, schema=st)

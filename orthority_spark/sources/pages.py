@@ -99,14 +99,15 @@ def _udeg_cols(key_name: str = "id") -> tuple[Column, Column]:
     return F.expr(lat_sql), F.expr(lon_sql)
 
 
-def synthetic_pages(spark: SparkSession, n: int, num_partitions: int | None = None) -> DataFrame:
-    """Deterministic pages table of ``n`` rows, built from spark.range.
+def synthetic_pages(spark: SparkSession, n: int) -> DataFrame:
+    """Deterministic pages table of ``n`` rows, built from spark.range
+    over ``defaultParallelism`` partitions.
 
     All columns are Column expressions (whole-stage codegen; zero Python) —
     at 100 TB this generator stands in for the Iceberg scan of the real
     pages table, and everything downstream treats it as an opaque source.
     """
-    df = spark.range(0, n, 1, num_partitions or spark.sparkContext.defaultParallelism)
+    df = spark.range(0, n, 1, spark.sparkContext.defaultParallelism)
     key = F.col("id")
     lat_udeg, lon_udeg = _udeg_cols("id")
     lat = (lat_udeg.cast("double") / F.lit(1000000.0)).alias("lat")

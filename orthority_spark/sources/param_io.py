@@ -199,14 +199,12 @@ def read_ext_param_csv(file: str | Path) -> tuple[list[dict], str]:
     return out, fmt
 
 
-def ext_records_to_poses(
-    records: list[dict], fmt: str, radians: bool = False
-) -> list[dict]:
+def ext_records_to_poses(records: list[dict], fmt: str) -> list[dict]:
     """CSV exterior records (any of the 4 formats) -> world poses
     (filename, xyz, opk[, camera]) on the engine's linear world frame.
 
     The reference converts per row in CsvReader._convert
-    (param_io.py:1119-1154): angles default to degrees, lla projects
+    (param_io.py:1119-1154): angles are in degrees, lla projects
     through the job CRS (here the exact equirectangular frame,
     config.py:16), and rpy converts via _rpy_to_opk (param_io.py:753-835
     — geom/rotation.rpy_to_opk here, the north-aligned exact case)."""
@@ -224,14 +222,10 @@ def ext_records_to_poses(
                 rec["altitude"],
             )
         if fmt.endswith("opk"):
-            opk = (rec["omega"], rec["phi"], rec["kappa"])
-            if not radians:
-                opk = tuple(math.radians(v) for v in opk)
+            opk = tuple(math.radians(rec[k]) for k in ("omega", "phi", "kappa"))
         else:
-            rpy = (rec["roll"], rec["pitch"], rec["yaw"])
-            if not radians:
-                rpy = tuple(math.radians(v) for v in rpy)
-            opk = rpy_to_opk(rpy)
+            opk = rpy_to_opk(
+                tuple(math.radians(rec[k]) for k in ("roll", "pitch", "yaw")))
         pose = {"filename": rec["filename"], "xyz": xyz, "opk": tuple(opk)}
         if "camera" in rec:
             pose["camera"] = rec["camera"]
@@ -239,10 +233,9 @@ def ext_records_to_poses(
     return out
 
 
-def read_ext_param_csv_poses(file: str | Path, radians: bool = False) -> list[dict]:
+def read_ext_param_csv_poses(file: str | Path) -> list[dict]:
     """Exterior CSV -> world poses in one step (read + dispatch + convert)."""
-    records, fmt = read_ext_param_csv(file)
-    return ext_records_to_poses(records, fmt, radians=radians)
+    return ext_records_to_poses(*read_ext_param_csv(file))
 
 
 def write_ext_param_csv(file: str | Path, records: list[dict],

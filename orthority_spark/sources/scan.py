@@ -20,19 +20,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-#: (applicationId, path, st_mtime_ns) -> natural scan partition count.
-#: The probe (`.rdd.getNumPartitions()`) costs a full JVM analysis + RDD
-#: conversion (~0.15 s) per call, and the text/vector gate families
-#: re-probe the same fixture path many times per bench sweep. The local
-#: path's modification time is part of the key, so a path rewritten
-#: within a session (a different file count) is probed again; paths
-#: ``os.stat`` cannot see (remote URIs) are never memoized. Only the
-#: current application's entries are kept. This memoizes PLAN METADATA
-#: (how many splits a scan yields), never data or results — the guard
-#: decision is a performance choice and both branches are row-identical
-#: by construction.
-_SCAN_PARTITIONS_MEMO: dict[tuple[str, str, int], int] = {}
+from ..session import prepared
 
 
 def parallel_read(
@@ -41,12 +29,16 @@ def parallel_read(
     """Parquet read whose map stage has at least ``min_partitions``
     tasks (default: the session's defaultParallelism): the scan is
     repartitioned round-robin ONLY when its natural partition count is
-    lower, with the partition-count probe memoized per (session, path,
-    mtime). Values are row-identical — only placement changes. Use it
-    for HEAVY map stages only: the exchange costs a few hundred ms, so a
-    scan feeding one cheap projection + partial agg is faster unguarded
-    (measured: stratified_sample / lang_profile regressed ~2x under a
-    blanket guard, while the shingle+md5 pipeline gained 3.2x)."""
+    lower. The partition-count probe (a JVM analysis and RDD conversion,
+    ~0.15 s) runs once per application, path and modification time
+    (:func:`orthority_spark.session.prepared`), so a path rewritten
+    within a session is probed again; a path ``os.stat`` cannot see (a
+    remote URI) is probed on every call. Values are row-identical — only
+    placement changes. Use it for HEAVY map stages only: the exchange
+    costs a few hundred ms, so a scan feeding one cheap projection +
+    partial agg is faster unguarded (measured: stratified_sample /
+    lang_profile regressed ~2x under a blanket guard, while the
+    shingle+md5 pipeline gained 3.2x)."""
     if min_partitions is None:
         min_partitions = spark.sparkContext.defaultParallelism
     df = spark.read.parquet(path)
@@ -55,12 +47,6 @@ def parallel_read(
     except OSError:
         n = df.rdd.getNumPartitions()
     else:
-        app = spark.sparkContext.applicationId
-        key = (app, path, mtime)
-        n = _SCAN_PARTITIONS_MEMO.get(key)
-        if n is None:
-            n = df.rdd.getNumPartitions()
-            for k in [k for k in _SCAN_PARTITIONS_MEMO if k[0] != app or k[1] == path]:
-                del _SCAN_PARTITIONS_MEMO[k]
-            _SCAN_PARTITIONS_MEMO[key] = n
+        n = prepared(spark, "scan.partitions", (), (path, mtime),
+                     lambda: df.rdd.getNumPartitions())
     return df.repartition(min_partitions) if n < min_partitions else df

@@ -38,9 +38,8 @@ def main() -> None:
 
     spark = SparkSession.builder.appName("orthority-pipeline").getOrCreate()
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # local_table builds dimension tables via pandas+Arrow; without this
-    # conf (default false) createDataFrame(pandas) falls back to the
-    # Python-RDD path and the plan loses its LocalTableScan shape
+    # as get_spark sets it; local_table's Arrow-table LocalTableScan does
+    # not depend on it, since it builds no pandas frame
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
 
     from orthority_spark.plans.job import OrthoJob

@@ -1,8 +1,8 @@
 """Test-data builders and single-process twins that only the tests call:
 the TIFF/EXIF fixture writer, the exterior-parameter and GCP GeoJSON
 writers, the fixture footprint polygons, the batched pixel-ray DEM
-intersection, the pandas twin of the synthetic pages generator and the
-grid-cell centers."""
+intersection, the pandas twin of the synthetic pages generator, the
+grid-cell centers and an OrthoJob's per-tile checksums without a write."""
 
 from __future__ import annotations
 
@@ -13,8 +13,10 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
 
 from orthority_spark import config, grid
+from orthority_spark.functions import checksum
 from orthority_spark.geom.dem import DEM_OFFSET, DEM_RES, ray_march_params
 from orthority_spark.sources.exif import (
     TAG_EXIF_IFD,
@@ -305,3 +307,12 @@ def cell_center(cell) -> tuple[np.ndarray, np.ndarray]:
     lon = (ix.astype("float64") + 0.5) / n * 360.0 - 180.0
     lat = (iy.astype("float64") + 0.5) / n * 180.0 - 90.0
     return lat, lon
+
+
+def job_tiles(job, pages):
+    """Per-tile (cell, n_rows, checksum) of an OrthoJob's join, with the
+    hash its ledger records, computed without writing anything."""
+    return checksum.tile_checksum(
+        job.joined(pages), ["cell"],
+        checksum.row_hash_fast(F.col("url"), F.col("filename")),
+    )

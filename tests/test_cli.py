@@ -32,9 +32,12 @@ def cli_spark(spark, monkeypatch):
 
 def test_cli_pipeline(cli_spark, tmp_path, capsys):
     """`pipeline` runs OrthoJob: its per-cell ledger (n_rows, checksum)
-    equals OrthoJob.tiles, and a rerun finds nothing left to process."""
+    equals the job's per-tile checksums, and a rerun finds nothing left
+    to process."""
     from orthority_spark.plans.job import OrthoJob
     from orthority_spark.sources.pages import synthetic_pages
+
+    from builders import job_tiles
 
     out = str(tmp_path / "job")
     argv = ["pipeline", "--n-pages", "2000", "--out", out]
@@ -44,7 +47,7 @@ def test_cli_pipeline(cli_spark, tmp_path, capsys):
               for r in cli_spark.read.parquet(f"{out}/ledger").collect()}
     pages = synthetic_pages(cli_spark, 2000).select("url", "text")
     tiles = {r.cell: (r.n_rows, r.checksum)
-             for r in OrthoJob(cli_spark).tiles(pages).collect()}
+             for r in job_tiles(OrthoJob(cli_spark), pages).collect()}
     assert ledger == tiles and first["partitions_processed"] == len(tiles) > 0
     assert cli.main(argv) == 0
     assert json.loads(capsys.readouterr().out)["partitions_processed"] == 0
@@ -235,15 +238,17 @@ def _odm_dataset(tmp_path):
     one camera and two nadir-ish shots. Shot xyz is TOPOCENTRIC about
     reference_lla (the real OpenSfM convention); world(ref) lands at
     (19900, 29950, 900) on the engine frame, so the cameras hover above
-    the 825 m DEM plane like the fixture block (t = -R @ local_xyz)."""
+    the 825 m DEM plane like the fixture block (t = -R @ local_xyz). The
+    rotations are about pi around x: OpenSfM's camera z axis is its view
+    direction, so an identity rotation would look straight up."""
     from orthority_spark.geom.rotation import aa_to_rotation
 
     ds = tmp_path / "dataset"
     (ds / "opensfm").mkdir(parents=True)
     shots = {}
     for i, (aa, local) in enumerate([
-        ([0.02, -0.01, 0.05], [0.0, 0.0, 100.0]),
-        ([-0.03, 0.02, -0.1], [150.0, 100.0, 150.0]),
+        ([3.16, -0.01, 0.05], [0.0, 0.0, 100.0]),
+        ([3.11, 0.02, -0.1], [150.0, 100.0, 150.0]),
     ]):
         R = aa_to_rotation(np.array(aa))
         t = (-R @ np.array(local)).tolist()

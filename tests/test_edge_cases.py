@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from orthority_spark import grid
 from orthority_spark.geom.camera import FrameModel
-from orthority_spark.sources.footprints import fixture_models
+from orthority_spark.sources.footprints import fixture_models, records_for_models
 from orthority_spark.sources.param_io import ParamFileError, read_int_param
 
 
@@ -37,6 +37,17 @@ def test_horizon_fov_true_for_tilted_camera():
                        sensor_size=(6.0, 4.5), xyz=(0.0, 0.0, 1000.0),
                        opk=(0.0, 0.0, 0.0), dist={})
     assert nadir.horizon_fov() is False
+
+
+def test_footprint_of_a_camera_seeing_the_horizon_raises():
+    """A camera whose view includes the horizon has no bounded ground
+    footprint: the catalog build names the image (the reference's abort)
+    instead of covering an unbounded box with grid cells."""
+    m = FrameModel(cam_type="pinhole", im_size=(200, 150), focal_len=5.0,
+                   sensor_size=(6.0, 4.5), xyz=(0.0, 0.0, 1000.0),
+                   opk=(np.pi / 2, 0.0, 0.0), dist={})
+    with pytest.raises(ValueError, match="img_horizon"):
+        records_for_models({"img_horizon": m})
 
 
 def test_pixel_to_world_broadcast_one_pixel_many_z():

@@ -1,5 +1,4 @@
-"""Undistort intrinsics/pixel warps (S4/P12), north-aligned RPY->OPK
-(P10), OpenSfM reader (S6/S12)."""
+"""North-aligned RPY->OPK (P10), OpenSfM reader (S6/S12)."""
 
 from __future__ import annotations
 
@@ -9,41 +8,7 @@ import numpy as np
 
 from orthority_spark.geom.camera import FrameModel
 from orthority_spark.geom.rotation import rpy_to_opk, aa_to_rotation
-from orthority_spark.sources.footprints import fixture_models
 from orthority_spark.sources.param_io import read_osfm
-
-RNG = np.random.RandomState(21)
-
-
-def test_distort_undistort_roundtrip():
-    m = fixture_models()["img_0001"]  # brown
-    ji = RNG.rand(2, 300) * np.array([[199], [149]])
-    warped = m.distort_pixel(ji)
-    back = m.undistort_pixel(warped)
-    assert np.abs(back - ji).max() < 0.1
-    clipped = m.distort_pixel(ji, clip=True)
-    assert clipped[0].max() <= 199 and clipped[1].max() <= 149
-    assert clipped.min() >= 0
-
-
-def test_undistort_intrinsic_alpha_monotone():
-    m = fixture_models()["img_0001"]
-    k0 = m.undistort_intrinsic(0.0)
-    k1 = m.undistort_intrinsic(1.0)
-    # alpha=1 includes all source pixels -> wider FOV -> smaller focal
-    assert k1[0, 0] < k0[0, 0] and k1[1, 1] < k0[1, 1]
-    # pinhole: undistorted intrinsic == original K at any alpha
-    pin = fixture_models()["img_0000"]
-    np.testing.assert_allclose(pin.undistort_intrinsic(0.5), pin.K, rtol=1e-9)
-    # mid-alpha interpolates FOCAL/CENTER between the endpoint solutions
-    # (reference/cv2 convention camera.py:771-777), NOT the rect bounds
-    k5 = m.undistort_intrinsic(0.5)
-    np.testing.assert_allclose(
-        np.diag(k5)[:2], 0.5 * (np.diag(k0)[:2] + np.diag(k1)[:2]), rtol=1e-12
-    )
-    np.testing.assert_allclose(
-        k5[:2, 2], 0.5 * (k0[:2, 2] + k1[:2, 2]), rtol=1e-12
-    )
 
 
 def test_rpy_zero_is_nadir():

@@ -11,6 +11,8 @@ from __future__ import annotations
 import contextlib
 import io
 
+from pyspark.sql import functions as F
+
 from orthority_spark.sources.local import local_table
 
 
@@ -60,15 +62,18 @@ def test_local_table_int_columns_stay_int(spark):
     assert df.collect() == [("t", 1, 64)]
 
 
-def test_local_table_rejects_nan_loudly(spark):
-    # Arrow's pandas conversion reads float NaN as SQL NULL, which would
-    # silently diverge from the createDataFrame(rows, ddl) contract this
-    # builder replaces (NaN-vs-NULL exactness matters to the oracle
-    # gates) — a NaN input must fail loudly, never convert
-    import pytest
-
-    with pytest.raises(ValueError, match="NaN"):
-        local_table(spark, [("a", float("nan"))], "name string, v double")
+def test_local_table_keeps_nan_apart_from_null(spark):
+    # as with createDataFrame(rows, ddl), a float NaN stays NaN and None
+    # stays NULL (NaN-vs-NULL exactness matters to the oracle gates)
+    rows = [("a", float("nan")), ("b", None), ("c", 2.0)]
+    ddl = "name string, v double"
+    for df in (local_table(spark, rows, ddl), spark.createDataFrame(rows, ddl)):
+        got = {r.name: r for r in df.select(
+            "name", "v", F.isnan("v").alias("nan"), F.isnull("v").alias("null"),
+        ).collect()}
+        assert (got["a"].nan, got["a"].null) == (True, False)
+        assert (got["b"].nan, got["b"].null) == (False, True)
+        assert got["c"].v == 2.0
 
 
 def test_local_table_none_stays_null(spark):

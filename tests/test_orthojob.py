@@ -1,4 +1,4 @@
-"""OrthoJob user-facing builder: process/resume/tiles/metrics."""
+"""OrthoJob user-facing builder: process/resume/metrics."""
 
 from __future__ import annotations
 
@@ -7,6 +7,8 @@ import pytest
 from orthority_spark.functions.geotag import with_geotag
 from orthority_spark.plans.job import OrthoJob
 from orthority_spark.sources.pages import synthetic_pages
+
+from builders import job_tiles
 
 
 def test_orthojob_process_and_resume(spark, tmp_path):
@@ -23,8 +25,8 @@ def test_orthojob_process_and_resume(spark, tmp_path):
     led = job.metrics().toPandas()
     assert led.part_key.is_unique and (led.n_rows > 0).all()
 
-    # ledger totals == ad-hoc tiles() totals (same deterministic plan)
-    tiles = {r.cell: (r.n_rows, r.checksum) for r in job.tiles(pages).collect()}
+    # ledger totals == ad-hoc per-tile totals (same deterministic plan)
+    tiles = {r.cell: (r.n_rows, r.checksum) for r in job_tiles(job, pages).collect()}
     from_ledger = {r.part_key: (r.n_rows, r.checksum) for r in job.metrics().collect()}
     assert tiles == from_ledger
 
@@ -32,9 +34,9 @@ def test_orthojob_process_and_resume(spark, tmp_path):
 def test_orthojob_salted_strategy_same_tiles(spark):
     pages = synthetic_pages(spark, 5000)
     t_b = {r.cell: (r.n_rows, r.checksum)
-           for r in OrthoJob(spark).tiles(pages).collect()}
+           for r in job_tiles(OrthoJob(spark), pages).collect()}
     t_s = {r.cell: (r.n_rows, r.checksum)
-           for r in OrthoJob(spark, strategy="salted").tiles(pages).collect()}
+           for r in job_tiles(OrthoJob(spark, strategy="salted"), pages).collect()}
     assert t_b == t_s and len(t_b) > 50
 
 

@@ -235,14 +235,15 @@ def test_solve_pnp_recovers_any_pose(o, p, k, h):
 )
 def test_vdatum_probe_recovers_any_linear_map(scale, offset, z):
     """probe_z_transform must reconstruct ANY linear vertical transform
-    from its two-point evaluation, and to_world/to_datum must round-trip
-    (the per-job constant the footprint builder folds in)."""
+    from its two-point evaluation, and to_world must apply it (the
+    per-job constant the footprint builder folds in)."""
     from orthority_spark.geom.vdatum import probe_z_transform
 
     t = probe_z_transform(lambda v: v * scale + offset)
     assert abs(t.scale - scale) <= 1e-9 * max(1.0, abs(scale))
     assert abs(t.offset - offset) <= 1e-6 * max(1.0, abs(offset))
-    assert abs(t.to_datum(t.to_world(z)) - z) <= 1e-6 * max(1.0, abs(z))
+    want = z * scale + offset
+    assert abs(t.to_world(z) - want) <= 1e-6 * max(1.0, abs(want))
 
 
 @settings(max_examples=300, deadline=None)

@@ -33,7 +33,7 @@ def test_tiled_remap_matches_oracle(spark, setup, interp, dem_name):
     dem_fn = dem_plane if dem_name == "plane" else dem_sinusoid
     oracle = remap_oracle(model, src, transform, W, H, dem_fn, interp=interp)
 
-    tiles = tile_windows(spark, W, H, tile=64)
+    tiles = tile_windows(spark, W, H)
     got = remap_tiles(tiles, model, src, transform, dem_fn, interp=interp).collect()
     assembled = np.full((H, W), np.nan)
     for r in got:

@@ -19,7 +19,6 @@ def test_probe_recovers_linear_transform_exactly():
     # the two-point difference reconstructs the slope to float64 rounding
     assert both.scale == pytest.approx(0.3048, abs=1e-12)
     assert both.offset == -12.25
-    assert both.to_datum(both.to_world(825.0)) == pytest.approx(825.0)
 
 
 def test_probe_rejects_degenerate_vertical_crs():

@@ -18,5 +18,4 @@ def test_overwrite_guard(spark, tmp_path):
 
 
 def test_profile_by_payload():
-    assert create_profile("binary")["compression"] == "zstd"
     assert create_profile()["compression"] == "snappy"
